@@ -3,7 +3,6 @@ package graft.operators
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException, IOException, InputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.Channels
-import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +11,6 @@ import org.apache.arrow.vector._
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.FloatingPointPrecision
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Arrow IPC wire protocol of the reference stream operator.
@@ -46,44 +44,6 @@ object ArrowProtocol {
 
   def arrowSchema(schema: StructType): Schema =
     new Schema(schema.fields.map(f => arrowField(f.name, f.dataType)).toList.asJava)
-
-  /** Encode one batch of rows as a length-prefixed single-batch IPC stream. */
-  def writeBatch(out: OutputStream, allocator: BufferAllocator,
-                 schema: StructType, rows: Seq[Row]): Unit = {
-    val root = VectorSchemaRoot.create(arrowSchema(schema), allocator)
-    try {
-      root.allocateNew()
-      var col = 0
-      while (col < schema.length) {
-        val vec = root.getVector(col)
-        val dt = schema.fields(col).dataType
-        var i = 0
-        rows.foreach { row =>
-          if (row.isNullAt(col)) vec.asInstanceOf[FieldVector] match {
-            case v: BigIntVector    => v.setNull(i)
-            case v: IntVector       => v.setNull(i)
-            case v: Float8Vector    => v.setNull(i)
-            case v: VarCharVector   => v.setNull(i)
-            case v: VarBinaryVector => v.setNull(i)
-            case v => throw new IllegalStateException(s"unexpected vector $v")
-          } else vec match {
-            case v: BigIntVector    => v.setSafe(i, row.getLong(col))
-            case v: IntVector       => v.setSafe(i, row.getInt(col))
-            case v: Float8Vector    => v.setSafe(i, row.getDouble(col))
-            case v: VarCharVector   =>
-              v.setSafe(i, row.getString(col).getBytes(StandardCharsets.UTF_8))
-            case v: VarBinaryVector =>
-              v.setSafe(i, row.getAs[Array[Byte]](col))
-            case v => throw new IllegalStateException(s"unexpected vector $v")
-          }
-          i += 1
-        }
-        col += 1
-      }
-      root.setRowCount(rows.length)
-      writeRoot(out, root)
-    } finally root.close()
-  }
 
   /** Encode one batch of `InternalRow`s (the [[graft.plans.StreamExec]]
     * hot path: strings leave as their UTF-8 bytes directly, no
@@ -225,6 +185,30 @@ object ArrowProtocol {
     out.write(b.array())
   }
 
+  /** Read one length-prefixed frame: its payload bytes, or None for a
+    * zero-length frame. The length is an unsigned 64-bit value, so one
+    * with its top bit set reads as negative here and is rejected along
+    * with anything over [[MaxResponseBytes]].
+    */
+  def readFrame(in: InputStream, child: ChildProcess,
+                lastMessage: Boolean): Option[Array[Byte]] = {
+    val len = readLen(in, child, lastMessage)
+    if (len == 0) return None
+    if (len < 0 || len > MaxResponseBytes)
+      throw new IOException("response from child exceeds maximum size")
+    val payload = new Array[Byte](len.toInt)
+    var off = 0
+    while (off < payload.length) {
+      val r = in.read(payload, off, payload.length - off)
+      if (r < 0) {
+        if (!lastMessage) child.throwIfDeadAfter(2000)
+        throw new EOFException("child stdout closed mid-message")
+      }
+      off += r
+    }
+    Some(payload)
+  }
+
   /** Columnar read: return the open ArrowStreamReader positioned on the
     * message's RecordBatch (None for a zero-length frame). The caller
     * owns the reader and must close it after consuming the vectors —
@@ -237,21 +221,9 @@ object ArrowProtocol {
   def readMessageReader(in: InputStream, child: ChildProcess,
                         allocator: BufferAllocator, declared: StructType,
                         lastMessage: Boolean = false): Option[ArrowStreamReader] = {
-    val len = readLen(in, child, lastMessage)
-    if (len == 0) return None
-    if (len > MaxResponseBytes)
-      throw new IOException("response from child exceeds maximum size")
-    val payload = new Array[Byte](len.toInt)
-    var off = 0
-    while (off < payload.length) {
-      val r = in.read(payload, off, payload.length - off)
-      if (r < 0) {
-        if (!lastMessage) child.throwIfDeadAfter(2000)
-        throw new EOFException("child stdout closed mid-message")
-      }
-      off += r
-    }
-    val reader = new ArrowStreamReader(new ByteArrayInputStream(payload), allocator)
+    val frame = readFrame(in, child, lastMessage)
+    if (frame.isEmpty) return None
+    val reader = new ArrowStreamReader(new ByteArrayInputStream(frame.get), allocator)
     try {
       if (!reader.loadNextBatch())
         throw new IOException("Arrow response contained no RecordBatch")
@@ -275,70 +247,6 @@ object ArrowProtocol {
       }
       Some(reader)
     } catch { case t: Throwable => reader.close(); throw t }
-  }
-
-  /** Read one response message. Returns None for a zero-length frame
-    * ("no data right now"), otherwise the decoded rows.
-    */
-  def readMessage(in: InputStream, child: ChildProcess, allocator: BufferAllocator,
-                  declared: StructType, lastMessage: Boolean = false): Option[Seq[Row]] = {
-    val len = readLen(in, child, lastMessage)
-    if (len == 0) return None
-    if (len > MaxResponseBytes)
-      throw new IOException("response from child exceeds maximum size")
-    val payload = new Array[Byte](len.toInt)
-    var off = 0
-    while (off < payload.length) {
-      val r = in.read(payload, off, payload.length - off)
-      if (r < 0) {
-        if (!lastMessage) child.throwIfDeadAfter(2000)
-        throw new EOFException("child stdout closed mid-message")
-      }
-      off += r
-    }
-    val reader = new ArrowStreamReader(new ByteArrayInputStream(payload), allocator)
-    try {
-      if (!reader.loadNextBatch())
-        throw new IOException("Arrow response contained no RecordBatch")
-      val root = reader.getVectorSchemaRoot
-      if (root.getFieldVectors.size() != declared.length)
-        throw new IOException(
-          s"child returned ${root.getFieldVectors.size()} columns; " +
-            s"declared types expect ${declared.length}")
-      val n = root.getRowCount
-      val rows = new Array[Row](n)
-      val vecs = root.getFieldVectors.asScala.toArray
-      var i = 0
-      while (i < n) {
-        val vals = new Array[Any](vecs.length)
-        var c = 0
-        while (c < vecs.length) {
-          vals(c) = readCell(vecs(c), i, declared.fields(c).dataType)
-          c += 1
-        }
-        rows(i) = Row.fromSeq(vals.toIndexedSeq)
-        i += 1
-      }
-      if (reader.loadNextBatch())
-        throw new IOException("expected exactly one RecordBatch per message")
-      Some(rows.toIndexedSeq)
-    } finally reader.close()
-  }
-
-  private def readCell(vec: FieldVector, i: Int, want: DataType): Any = {
-    if (vec.isNull(i)) return null
-    (vec, want) match {
-      case (v: BigIntVector, LongType)       => v.get(i)
-      case (v: IntVector, IntegerType)       => v.get(i)
-      case (v: IntVector, LongType)          => v.get(i).toLong // pandas int32 widening
-      case (v: Float8Vector, DoubleType)     => v.get(i)
-      case (v: VarCharVector, StringType)    =>
-        new String(v.get(i), StandardCharsets.UTF_8)
-      case (v: VarBinaryVector, BinaryType)  => v.get(i)
-      case (v, t) => throw new IOException(
-        s"child column ${v.getName} has Arrow type ${v.getClass.getSimpleName}, " +
-          s"declared type is $t")
-    }
   }
 
   private def readLen(in: InputStream, child: ChildProcess, lastMessage: Boolean): Long = {

@@ -62,29 +62,13 @@ object Stream {
     import org.apache.arrow.vector._
     val spark = df.sparkSession
     checkAllowed(spark, cmd)
-    val sample = df.limit(sampleRows).collect().toIndexedSeq
+    val sample = df.limit(sampleRows).queryExecution.toRdd.map(_.copy()).collect()
     val child = new ChildProcess(cmd, None)
     val allocator = new org.apache.arrow.memory.RootAllocator(Long.MaxValue)
     try {
-      ArrowProtocol.writeBatch(child.stdin, allocator, df.schema, sample)
-      val len = {
-        val b = new Array[Byte](8)
-        var off = 0
-        while (off < 8) {
-          val r = child.stdout.read(b, off, 8 - off)
-          if (r < 0) { child.throwIfDeadAfter(2000); sys.error("no response") }
-          off += r
-        }
-        java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
-      }
-      if (len == 0) sys.error("child returned no data for schema inference")
-      val payload = new Array[Byte](len.toInt)
-      var off = 0
-      while (off < payload.length) {
-        val r = child.stdout.read(payload, off, payload.length - off)
-        if (r < 0) sys.error("child stdout closed mid-frame")
-        off += r
-      }
+      ArrowProtocol.writeBatchInternal(child.stdin, allocator, df.schema, sample)
+      val payload = ArrowProtocol.readFrame(child.stdout, child, lastMessage = false)
+        .getOrElse(sys.error("child returned no data for schema inference"))
       val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
         new java.io.ByteArrayInputStream(payload), allocator)
       try {
@@ -124,8 +108,8 @@ object Stream {
     */
   private def planned(df: DataFrame, side: Option[DataFrame], cmd: String,
                       format: StreamFormat, chunkSize: Int,
-                      outSchema: StructType, sideLocal: Boolean = false,
-                      reuseChildren: Boolean = false): DataFrame = {
+                      outSchema: StructType, sideLocal: Boolean,
+                      reuseChildren: Boolean): DataFrame = {
     val spark = df.sparkSession
     // speculative execution runs DUPLICATE children for slow tasks: for
     // a side-effecting command both copies execute (only one's output is

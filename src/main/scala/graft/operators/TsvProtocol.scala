@@ -3,7 +3,6 @@ package graft.operators
 import java.io.{ByteArrayOutputStream, EOFException, IOException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** TSV wire protocol of the reference stream operator.
@@ -58,22 +57,9 @@ object TsvProtocol {
     sb.toString
   }
 
-  /** Format one cell. Binary is rejected, as in the reference's TSV path. */
-  def formatValue(v: Any): String = v match {
-    case null                          => "\\N"
-    case s: String                     => escape(s)
-    case d: java.lang.Double           => if (d.isNaN) "nan" else d.toString
-    case f: java.lang.Float            => if (f.isNaN) "nan" else f.toString
-    case b: java.lang.Boolean          => if (b) "true" else "false"
-    case b: Array[Byte] =>
-      throw new IllegalArgumentException(
-        "binary attributes are not supported over TSV; use the Arrow format")
-    case other                         => other.toString
-  }
-
-  /** Format one `InternalRow` (the [[graft.plans.StreamExec]] hot path:
-    * no external-Row conversion). Encoding is identical to the
-    * Row-based [[formatRow]] for every wire-supported type.
+  /** Format one `InternalRow` as a TSV line (the
+    * [[graft.plans.StreamExec]] hot path: no external-Row conversion).
+    * Binary is rejected, as in the reference's TSV path.
     */
   def formatInternalRow(row: org.apache.spark.sql.catalyst.InternalRow,
                         schema: StructType): String = {
@@ -110,17 +96,6 @@ object TsvProtocol {
           throw new IllegalArgumentException(
             s"type $other is not supported over the TSV stream format")
       }
-      i += 1
-    }
-    sb.toString
-  }
-
-  def formatRow(row: Row): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < row.length) {
-      if (i > 0) sb.append('\t')
-      sb.append(formatValue(row.get(i)))
       i += 1
     }
     sb.toString

@@ -1,17 +1,21 @@
 package graft.plans
 
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.{BigIntVector, IntVector}
+import org.apache.arrow.vector.{IntVector, ValueVector}
 import org.apache.arrow.vector.ipc.ArrowStreamReader
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{RowToColumnarExec, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -35,6 +39,11 @@ import graft.operators.{ArrowProtocol, ChildProcess, ChildProcessPool, RdfProtoc
   *    rather than collected eagerly on the driver;
   *  - rows are consumed and produced as `InternalRow` — no external-Row
   *    round trip through `df.rdd` / `createDataFrame`.
+  *
+  * Every wire format (TSV, R-DF, Arrow) runs through the same protocol
+  * loop, as in the reference: a format supplies only its frame writers,
+  * its end-of-data writer, its response reader and how one response
+  * becomes rows or a `ColumnarBatch`.
   *
   * The concurrent-writer discipline per exchange is load-bearing: a
   * child that starts answering before consuming the whole chunk would
@@ -86,12 +95,12 @@ case class StreamExec(
     format.isInstanceOf[StreamFormat.Arrow]
 
   /** One half-duplex exchange: `write` runs on a helper thread while the
-    * task thread runs `read` (returning whether the response produced
-    * data). Failure handling mirrors the reference's liveness loop: a
-    * writer failure is surfaced as the root cause, and a dead child gets
-    * the clearer premature-exit diagnostic.
+    * task thread runs `read`, whose result is returned. Failure handling
+    * mirrors the reference's liveness loop: a writer failure is surfaced
+    * as the root cause, and a dead child gets the clearer
+    * premature-exit diagnostic.
     */
-  private def exchange(child: ChildProcess)(write: => Unit)(read: => Unit): Unit = {
+  private def exchange[R](child: ChildProcess)(write: => Unit)(read: => R): R = {
     @volatile var werr: Throwable = null
     val writer = new Thread(() =>
       try write catch { case t: Throwable =>
@@ -100,13 +109,14 @@ case class StreamExec(
       })
     writer.setDaemon(true)
     writer.start()
-    try read
-    catch { case re: Throwable =>
-      writer.join(60000)
-      if (werr != null && !werr.isInstanceOf[java.io.IOException]) throw werr
-      if (werr != null) { child.throwIfDead(); throw werr }
-      throw re
-    }
+    val resp =
+      try read
+      catch { case re: Throwable =>
+        writer.join(60000)
+        if (werr != null && !werr.isInstanceOf[java.io.IOException]) throw werr
+        if (werr != null) { child.throwIfDead(); throw werr }
+        throw re
+      }
     writer.join(60000)
     if (writer.isAlive) {
       // writer still blocked on the child's stdin: starting the next
@@ -116,6 +126,7 @@ case class StreamExec(
       sys.error(s"stream writer stuck >60s feeding child stdin ($cmd); child terminated")
     }
     if (werr != null) { child.throwIfDead(); throw werr }
+    resp
   }
 
   /** Broadcast of the side input. When this operator is columnar, the
@@ -124,10 +135,9 @@ case class StreamExec(
     * RowToColumnarExec, which cannot executeBroadcast; unwrap it and
     * take the broadcast from the exchange itself.
     */
-  private def sideBroadcast(p: SparkPlan): org.apache.spark.broadcast.Broadcast[Array[InternalRow]] =
+  private def sideBroadcast(p: SparkPlan): Broadcast[Array[InternalRow]] =
     p match {
-      case r: org.apache.spark.sql.execution.RowToColumnarExec =>
-        r.child.executeBroadcast[Array[InternalRow]]()
+      case r: RowToColumnarExec => r.child.executeBroadcast[Array[InternalRow]]()
       case other => other.executeBroadcast[Array[InternalRow]]()
     }
 
@@ -136,418 +146,255 @@ case class StreamExec(
     * CHILDREN too (no ColumnarToRow is inserted below), so a columnar
     * child must be consumed via executeColumnar and its batches
     * row-iterated. Rows are only valid until the next batch — callers
-    * copy (Arrow) or format immediately (TSV), as with any row input.
+    * copy (Arrow, R-DF) or format immediately (TSV), as with any row
+    * input.
     */
   private def inputRows(): RDD[InternalRow] =
-    if (input.supportsColumnar) {
-      input.executeColumnar().mapPartitions { batches =>
-        import scala.jdk.CollectionConverters._
-        batches.flatMap(_.rowIterator().asScala)
-      }
-    } else input.execute()
+    if (input.supportsColumnar)
+      input.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala))
+    else input.execute()
 
-  /** Pull-driven protocol iterator: each `advance()` call performs ONE
-    * exchange and yields its response rows, so a partition's output is
-    * never materialized whole — a child with large fan-out streams
-    * through bounded memory (one response message at a time; the 1 GB
-    * per-message cap is the protocol's own bound). Child teardown is
-    * owned by the `TaskContext` completion listener registered in
-    * `ChildProcess`, which also covers downstream early-exit (limit).
+  /** One task's share of the stream: its context (null outside a task),
+    * partition id, child process and the side rows that child sees first.
     */
-  private abstract class ExchangeIterator extends Iterator[InternalRow] {
-    private var batch: Iterator[InternalRow] = Iterator.empty
-    private var finished = false
-    /** Next exchange's rows, or null when the protocol is complete. */
-    protected def advance(): Iterator[InternalRow]
-    final def hasNext: Boolean = {
-      while (!batch.hasNext && !finished) {
-        val b = advance()
-        if (b == null) finished = true else batch = b
+  private case class Task(ctx: TaskContext, pid: Long, child: ChildProcess,
+                          sideRows: IndexedSeq[InternalRow]) {
+    /** Run `f` when the task ends, however it ends; cleanup never fails it. */
+    def onEnd(f: => Unit): Unit =
+      if (ctx != null) ctx.addTaskCompletionListener[Unit] { _ =>
+        try f catch { case _: Throwable => () }
       }
-      batch.hasNext
+  }
+
+  /** Per-task set-up every format shares: the task's child (pooled or
+    * freshly forked — only forks count in `numChildren`) and its side
+    * rows — the whole broadcast table, or in local mode side partition i
+    * zipped to input partition i. The caller aligns the partitionings;
+    * zipPartitions rejects unequal partition counts with a clear error.
+    * The local side plan row-executes even under the columnar transition
+    * rule: RowToColumnarExec.doExecute delegates to its child's rows.
+    */
+  private def perPartition[T: ClassTag, O: ClassTag](in: RDD[T])(
+      body: (Iterator[T], Task) => Iterator[O]): RDD[O] = {
+    val kids = longMetric("numChildren")
+    val sideBc = if (sideLocal) None else side.map(sideBroadcast)
+    def run(it: Iterator[T], sideRows: IndexedSeq[InternalRow]): Iterator[O] = {
+      val ctx = TaskContext.get()
+      val (child, forked) = ChildProcessPool.acquire(cmd, Option(ctx), reuseChildren)
+      if (forked) kids += 1
+      val pid = if (ctx == null) 0L else ctx.partitionId().toLong
+      body(it, Task(ctx, pid, child, sideRows))
     }
-    final def next(): InternalRow = {
-      if (!hasNext) throw new NoSuchElementException("stream exhausted")
-      batch.next()
+    if (sideLocal && side.isDefined)
+      in.zipPartitions(side.get.execute())((it, sit) => run(it, sit.map(_.copy()).toIndexedSeq))
+    else
+      in.mapPartitions(it => run(it, sideBc.map(_.value.toIndexedSeq).getOrElse(IndexedSeq.empty)))
+  }
+
+  /** The protocol loop every format shares. Pull-driven: each exchange
+    * runs only when the consumer needs more output, so a partition's
+    * output is never materialized whole — a child with large fan-out
+    * streams through bounded memory (one response message at a time;
+    * the 1 GB per-message cap is the protocol's own bound).
+    *
+    * Exchanges run in order: the side chunk (only when there are side
+    * rows — O16: no frame is ever empty), one per data frame, then
+    * end-of-data; after that the child goes back to [[ChildProcessPool]].
+    * `read(last)` returns None for the "no data right now" reply;
+    * `decode(response, chunkNo)` turns a data-bearing response into
+    * output, and `chunkNo` counts only those responses. `retire` runs on
+    * the task thread before each exchange starts its writer and before
+    * release. Child teardown on failure or downstream early exit (limit)
+    * is owned by the `TaskContext` completion listener registered in
+    * `ChildProcess`.
+    */
+  private def protocol[R, O](t: Task, sideFrame: IndexedSeq[InternalRow] => () => Unit,
+                             frames: Iterator[() => Unit], eof: () => Unit,
+                             read: Boolean => Option[R], decode: (R, Long) => O,
+                             retire: () => Unit = () => ()): Iterator[O] = {
+    var chunkNo = -1L
+    val writes = Iterator.single(t.sideRows).filter(_.nonEmpty).map(sideFrame) ++ frames
+    (writes.map((_, false)) ++ Iterator.single((eof, true))).flatMap { case (write, last) =>
+      retire()
+      exchange(t.child)(write())(read(last)).map { r => chunkNo += 1; decode(r, chunkNo) }
+    } ++ {
+      retire()
+      ChildProcessPool.release(cmd, t.child, reuseChildren)
+      Iterator.empty
     }
   }
 
   protected override def doExecuteColumnar(): RDD[ColumnarBatch] = {
     val StreamFormat.Arrow(declared) = format: @unchecked
     val outRows = longMetric("numOutputRows")
-    val kids = longMetric("numChildren")
-    val sideBc = if (sideLocal) None else side.map(sideBroadcast)
     val inSchema = input.schema
-    val sideSchema = side.map(_.schema)
-    val command = cmd
+    val sideSchema = side.map(_.schema).orNull
     val chunk = chunkSize
-    val reuse = reuseChildren
-    // Each partition reduces to a sequence of frame-write thunks; the
-    // protocol iterator below is shared by both input shapes. Columnar
-    // children (vectorized parquet scan, an upstream Arrow pipe) encode
-    // column-at-a-time straight from their vectors — no InternalRow
-    // materialization, no per-row copy; a batch's slices are all
-    // exchanged before the next batch is pulled, so buffer reuse by the
-    // scan is safe. Row children keep the copy+group path (the input
-    // iterator may reuse row objects across next() calls).
-    def partitionIterator(frames: Iterator[() => Unit], child: ChildProcess,
-                          allocator: RootAllocator, ctx: TaskContext,
-                          pid: Long,
-                          sideRows: IndexedSeq[InternalRow]): Iterator[ColumnarBatch] = {
-      val out = new Iterator[ColumnarBatch] {
-        private var pendingBatch: ColumnarBatch = null
-        private var pendingReader: ArrowStreamReader = null
-        private var nextReady: ColumnarBatch = null
-        private var chunkNo = 0L
-        private var sentSide = false
-        private var sentEof = false
-        private var finished = false
 
-        if (ctx != null) ctx.addTaskCompletionListener[Unit] { _ =>
-          try closePending() catch { case _: Throwable => () }
-          try allocator.close() catch { case _: Throwable => () }
-        }
-
-        /** A handed-out batch stays valid until the consumer pulls the
-          * next one (the standard columnar-scan contract). Closing is
-          * also where the one-RecordBatch-per-message rule is enforced:
-          * checking earlier would clobber the zero-copied buffers.
-          */
-        private def closePending(): Unit = {
-          if (pendingBatch != null) { pendingBatch.close(); pendingBatch = null }
-          if (pendingReader != null) {
-            val more =
-              try pendingReader.loadNextBatch()
-              catch { case _: Throwable => false }
-            pendingReader.close()
-            pendingReader = null
-            if (more) throw new java.io.IOException(
-              "expected exactly one RecordBatch per message")
-          }
-        }
-
-        private def toBatch(reader: ArrowStreamReader): ColumnarBatch = {
-          val root = reader.getVectorSchemaRoot
-          val n = root.getRowCount
-          val dataCols: Seq[ColumnVector] =
-            root.getFieldVectors.toArray.toSeq.zip(declared.fields).map {
-              // pandas int32 response for a declared int64 column: the
-              // one widening case the row path tolerates — copy those n
-              // values; every exact-match column is wrapped zero-copy
-              case (v: IntVector, f) if f.dataType == LongType =>
-                val c = new OnHeapColumnVector(n, LongType)
-                var i = 0
-                while (i < n) {
-                  if (v.isNull(i)) c.putNull(i) else c.putLong(i, v.get(i).toLong)
-                  i += 1
-                }
-                c
-              case (v, _) =>
-                new ArrowColumnVector(v.asInstanceOf[org.apache.arrow.vector.ValueVector])
+    /** One response as a batch: the child's vectors wrapped zero-copy,
+      * plus the three lineage columns.
+      */
+    def toBatch(reader: ArrowStreamReader, pid: Long, chunkNo: Long): ColumnarBatch = {
+      val root = reader.getVectorSchemaRoot
+      val n = root.getRowCount
+      val dataCols: Seq[ColumnVector] =
+        root.getFieldVectors.asScala.toSeq.zip(declared.fields).map {
+          // pandas int32 response for a declared int64 column: the
+          // one widening case the row path tolerates — copy those n
+          // values; every exact-match column is wrapped zero-copy
+          case (v: IntVector, f) if f.dataType == LongType =>
+            val c = new OnHeapColumnVector(n, LongType)
+            var i = 0
+            while (i < n) {
+              if (v.isNull(i)) c.putNull(i) else c.putLong(i, v.get(i).toLong)
+              i += 1
             }
-          val lineage = (0 until 3).map(_ => new OnHeapColumnVector(math.max(n, 1), LongType))
-          var i = 0
-          while (i < n) {
-            lineage(0).putLong(i, pid)
-            lineage(1).putLong(i, chunkNo)
-            lineage(2).putLong(i, i.toLong)
-            i += 1
-          }
-          chunkNo += 1
-          outRows += n
-          new ColumnarBatch((dataCols ++ lineage).toArray, n)
+            c
+          case (v, _) => new ArrowColumnVector(v: ValueVector)
         }
+      val lineage = (0 until 3).map(_ => new OnHeapColumnVector(math.max(n, 1), LongType))
+      var i = 0
+      while (i < n) {
+        lineage(0).putLong(i, pid)
+        lineage(1).putLong(i, chunkNo)
+        lineage(2).putLong(i, i.toLong)
+        i += 1
+      }
+      outRows += n
+      new ColumnarBatch((dataCols ++ lineage).toArray, n)
+    }
 
-        private def oneExchange(write: => Unit, last: Boolean): Option[ColumnarBatch] = {
-          var resp: Option[ArrowStreamReader] = None
-          exchange(child)(write) {
-            resp = ArrowProtocol.readMessageReader(child.stdout, child, allocator,
-              declared, lastMessage = last)
-          }
-          resp.map { r => pendingReader = r; toBatch(r) }
+    /** The Arrow side of [[protocol]] for one task; `frames` builds the
+      * data frames against the task's allocator.
+      */
+    def arrowPartition(t: Task)(
+        frames: RootAllocator => Iterator[() => Unit]): Iterator[ColumnarBatch] = {
+      val allocator = new RootAllocator(Long.MaxValue)
+      var pendingBatch: ColumnarBatch = null
+      var pendingReader: ArrowStreamReader = null
+      // A handed-out batch stays valid until the consumer pulls the next
+      // one (the standard columnar-scan contract). Closing is also where
+      // the one-RecordBatch-per-message rule is enforced: checking
+      // earlier would clobber the zero-copied buffers.
+      def retire(): Unit = {
+        if (pendingBatch != null) { pendingBatch.close(); pendingBatch = null }
+        if (pendingReader != null) {
+          val more =
+            try pendingReader.loadNextBatch()
+            catch { case _: Throwable => false }
+          pendingReader.close()
+          pendingReader = null
+          if (more) throw new java.io.IOException(
+            "expected exactly one RecordBatch per message")
         }
-
-        private def advance(): Option[ColumnarBatch] = {
-          if (!sentSide) {
-            sentSide = true
-            if (sideRows.nonEmpty) {
-              val b = oneExchange(
-                ArrowProtocol.writeBatchInternal(
-                  child.stdin, allocator, sideSchema.get, sideRows),
-                last = false)
-              if (b.isDefined) return b
-            }
-          }
-          while (frames.hasNext) {
-            val w = frames.next()
-            val b = oneExchange(w(), last = false)
-            if (b.isDefined) return b
-          }
-          if (!sentEof) {
-            sentEof = true
-            val b = oneExchange(ArrowProtocol.writeEof(child.stdin), last = true)
-            if (b.isDefined) return b
-          }
-          // protocol complete: a loop-style child goes back to the pool
-          ChildProcessPool.release(command, child, reuse)
-          None
-        }
-
-        def hasNext: Boolean = {
-          if (nextReady != null) return true
-          if (finished) return false
-          closePending()
-          advance() match {
-            case Some(b) => nextReady = b; true
-            case None    => finished = true; false
-          }
-        }
-
-        def next(): ColumnarBatch = {
-          if (!hasNext) throw new NoSuchElementException("stream exhausted")
-          pendingBatch = nextReady
-          nextReady = null
+      }
+      t.onEnd { try retire() finally allocator.close() }
+      val stdin = t.child.stdin
+      protocol[ArrowStreamReader, ColumnarBatch](t,
+        rows => () => ArrowProtocol.writeBatchInternal(stdin, allocator, sideSchema, rows),
+        frames(allocator),
+        () => ArrowProtocol.writeEof(stdin),
+        last => ArrowProtocol.readMessageReader(t.child.stdout, t.child, allocator,
+          declared, lastMessage = last),
+        (reader, chunkNo) => {
+          pendingReader = reader
+          pendingBatch = toBatch(reader, t.pid, chunkNo)
           pendingBatch
-        }
-      }
-      out
+        },
+        () => retire())
     }
 
-    def columnarPartition(batches: Iterator[ColumnarBatch],
-                          sideRows: IndexedSeq[InternalRow]): Iterator[ColumnarBatch] = {
-      val ctx = TaskContext.get()
-      val pid = if (ctx == null) 0L else ctx.partitionId().toLong
-      val (child, forked) = ChildProcessPool.acquire(command, Option(ctx), reuse)
-      if (forked) kids += 1
-      val allocator = new RootAllocator(Long.MaxValue)
-      val buf = new ArrowProtocol.ColumnarFrameBuffer(inSchema, allocator)
-      // one frame = exactly `chunk` rows (the declared chunk_size),
-      // accumulated across scan batches — `append` copies into the
-      // Arrow builders, so pulling the next (buffer-recycling) scan
-      // batch mid-frame is safe. Filling only happens between
-      // exchanges: the previous frame's writer thread has already
-      // been joined when the protocol loop asks for the next thunk.
-      val frames = new Iterator[() => Unit] {
-        private var cur: ColumnarBatch = null
-        private var off = 0
-        private var ready = false
-        private def fill(): Unit = {
-          while (buf.rowCount < chunk && (cur != null || batches.hasNext)) {
-            if (cur == null) { cur = batches.next(); off = 0 }
-            val take = math.min(chunk - buf.rowCount, cur.numRows - off)
-            if (take > 0) { buf.append(cur, off, take); off += take }
-            if (off >= cur.numRows) cur = null
+    if (input.supportsColumnar) {
+      // Columnar children (vectorized parquet scan, an upstream Arrow
+      // pipe) encode column-at-a-time straight from their vectors — no
+      // InternalRow materialization, no per-row copy.
+      perPartition(input.executeColumnar()) { (batches, t) =>
+        arrowPartition(t) { allocator =>
+          val buf = new ArrowProtocol.ColumnarFrameBuffer(inSchema, allocator)
+          // registered after arrowPartition's allocator-close listener:
+          // completion listeners run LIFO, so the buffer's root closes
+          // before the allocator it was allocated from
+          t.onEnd(buf.close())
+          // one frame = exactly `chunk` rows (the declared chunk_size),
+          // accumulated across scan batches — `append` copies into the
+          // Arrow builders, so pulling the next (buffer-recycling) scan
+          // batch mid-frame is safe. Filling only happens between
+          // exchanges: the loop pulls the next frame only after the
+          // previous frame's writer thread has been joined.
+          var cur: ColumnarBatch = null
+          var off = 0
+          def fill(): Unit =
+            while (buf.rowCount < chunk && (cur != null || batches.hasNext)) {
+              if (cur == null) { cur = batches.next(); off = 0 }
+              val take = math.min(chunk - buf.rowCount, cur.numRows - off)
+              if (take > 0) { buf.append(cur, off, take); off += take }
+              if (off >= cur.numRows) cur = null
+            }
+          Iterator.continually(fill()).takeWhile(_ => buf.rowCount > 0) // O16
+            .map(_ => () => buf.writeAndReset(t.child.stdin))
+        }
+      }
+    } else {
+      // row children: copy before grouping (the input iterator may reuse
+      // row objects across next() calls)
+      perPartition(input.execute()) { (rows, t) =>
+        arrowPartition(t) { allocator =>
+          rows.map(_.copy()).grouped(chunk).map { c =>
+            () => ArrowProtocol.writeBatchInternal(t.child.stdin, allocator, inSchema, c)
           }
         }
-        def hasNext: Boolean = {
-          if (!ready) { fill(); ready = buf.rowCount > 0 } // O16: no empty frames
-          ready
-        }
-        def next(): () => Unit = {
-          if (!hasNext) throw new NoSuchElementException("input exhausted")
-          ready = false
-          () => buf.writeAndReset(child.stdin)
-        }
       }
-      val it = partitionIterator(frames, child, allocator, ctx, pid, sideRows)
-      // registered AFTER partitionIterator's allocator-close listener:
-      // completion listeners run LIFO, so the buffer's root closes
-      // before the allocator it was allocated from
-      if (ctx != null) ctx.addTaskCompletionListener[Unit] { _ =>
-        try buf.close() catch { case _: Throwable => () }
-      }
-      it
     }
-
-    def rowPartition(iter: Iterator[InternalRow],
-                     sideRows: IndexedSeq[InternalRow]): Iterator[ColumnarBatch] = {
-      val ctx = TaskContext.get()
-      val pid = if (ctx == null) 0L else ctx.partitionId().toLong
-      val (child, forked) = ChildProcessPool.acquire(command, Option(ctx), reuse)
-      if (forked) kids += 1
-      val allocator = new RootAllocator(Long.MaxValue)
-      val frames = iter.map(_.copy()).grouped(chunk).map { rows =>
-        () => ArrowProtocol.writeBatchInternal(
-          child.stdin, allocator, inSchema, rows)
-      }
-      partitionIterator(frames, child, allocator, ctx, pid, sideRows)
-    }
-
-    // local mode zips side partition i to input partition i (the side
-    // plan row-executes even under the columnar transition rule:
-    // RowToColumnarExec.doExecute delegates to its child's rows)
-    def withSide[T: scala.reflect.ClassTag](rdd: RDD[T])(
-        f: (Iterator[T], IndexedSeq[InternalRow]) => Iterator[ColumnarBatch]): RDD[ColumnarBatch] =
-      if (sideLocal && side.isDefined)
-        rdd.zipPartitions(side.get.execute()) { (it, sit) =>
-          f(it, sit.map(_.copy()).toIndexedSeq)
-        }
-      else rdd.mapPartitions { it =>
-        f(it, sideBc.map(_.value.toIndexedSeq).getOrElse(IndexedSeq.empty))
-      }
-
-    if (input.supportsColumnar)
-      withSide(input.executeColumnar())(columnarPartition)
-    else
-      withSide(input.execute())(rowPartition)
   }
 
   protected override def doExecute(): RDD[InternalRow] = {
     val outRows = longMetric("numOutputRows")
-    val kids = longMetric("numChildren")
-    val sideBc = if (sideLocal) None else side.map(sideBroadcast)
     val inSchema = input.schema
-    val sideSchema = side.map(_.schema)
-    val outSchema = StructType(output.map(a =>
-      org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable)))
-    val command = cmd
+    val sideSchema = side.map(_.schema).orNull
+    val outSchema = StructType(output.map(a => StructField(a.name, a.dataType, a.nullable)))
     val chunk = chunkSize
-    val reuse = reuseChildren
-    format match {
+    val rows: RDD[InternalRow] = format match {
       case StreamFormat.Tsv =>
-        // one child per task regardless of side mode; `sideLines` is the
-        // pre-formatted side chunk this child sees first (whole table in
-        // broadcast mode, its aligned partition in local mode)
-        def tsvPartition(iter: Iterator[InternalRow],
-                         sideLines: Array[String]): Iterator[InternalRow] = {
-          val ctx = TaskContext.get()
-          val pid = if (ctx == null) 0L else ctx.partitionId().toLong
-          val (child, forked) = ChildProcessPool.acquire(command, Option(ctx), reuse)
-          if (forked) kids += 1
+        // each response message becomes one string row
+        perPartition(inputRows()) { (in, t) =>
+          val stdin = t.child.stdin
+          def frame(lines: Seq[String]): () => Unit =
+            () => TsvProtocol.writeChunk(stdin, lines.iterator, lines.size)
           // format before grouping: the input iterator may reuse row
           // objects, but formatted strings are immutable
-          val lineChunks = iter.map(TsvProtocol.formatInternalRow(_, inSchema))
-            .grouped(chunk)
-          val proj = UnsafeProjection.create(outSchema)
-          val out = new ExchangeIterator {
-            private var chunkNo = 0L
-            private var sentSide = false
-            private var sentEof = false
-            private def oneExchange(lines: Iterator[String], n: Int,
-                                    last: Boolean): Iterator[InternalRow] = {
-              var resp: String = null
-              exchange(child) {
-                if (last) TsvProtocol.writeEof(child.stdin)
-                else TsvProtocol.writeChunk(child.stdin, lines, n)
-              } {
-                resp = TsvProtocol.readMessage(child.stdout, child, lastMessage = last)
-              }
-              // null = the protocol's "no data right now"; an empty
-              // string is a real one-empty-line response and keeps its row
-              if (resp != null) {
-                val r = new GenericInternalRow(
-                  Array[Any](pid, chunkNo, UTF8String.fromString(resp)))
-                chunkNo += 1
-                Iterator.single(r)
-              } else Iterator.empty
-            }
-            protected def advance(): Iterator[InternalRow] = {
-              if (!sentSide) {
-                sentSide = true
-                if (sideLines.nonEmpty) // O16: never send empty mid-stream chunks
-                  return oneExchange(sideLines.iterator, sideLines.length, last = false)
-              }
-              if (lineChunks.hasNext) {
-                val ls = lineChunks.next()
-                return oneExchange(ls.iterator, ls.size, last = false)
-              }
-              if (!sentEof) {
-                sentEof = true
-                return oneExchange(Iterator.empty, 0, last = true)
-              }
-              // protocol complete: a loop-style child goes back to the pool
-              ChildProcessPool.release(command, child, reuse)
-              null
-            }
-          }
-          out.map { r => outRows += 1; proj(r) }
-        }
-        if (sideLocal && side.isDefined) {
-          val sSchema = sideSchema.get
-          // side partition i feeds input partition i's child — the
-          // caller aligns partitionings; zipPartitions rejects unequal
-          // partition counts with a clear error
-          inputRows().zipPartitions(side.get.execute()) { (iter, sit) =>
-            tsvPartition(iter,
-              sit.map(TsvProtocol.formatInternalRow(_, sSchema)).toArray)
-          }
-        } else {
-          inputRows().mapPartitions { iter =>
-            val sideLines = sideBc.map(_.value.map(
-              TsvProtocol.formatInternalRow(_, sideSchema.get)))
-              .getOrElse(Array.empty[String])
-            tsvPartition(iter, sideLines)
-          }
+          protocol[String, Iterator[InternalRow]](t,
+            side => frame(side.map(TsvProtocol.formatInternalRow(_, sideSchema))),
+            in.map(TsvProtocol.formatInternalRow(_, inSchema)).grouped(chunk).map(frame),
+            () => TsvProtocol.writeEof(stdin),
+            // null = the protocol's "no data right now"; an empty string
+            // is a real one-empty-line response and keeps its row
+            last => Option(TsvProtocol.readMessage(t.child.stdout, t.child, lastMessage = last)),
+            (resp, chunkNo) => {
+              outRows += 1
+              Iterator.single(new GenericInternalRow(
+                Array[Any](t.pid, chunkNo, UTF8String.fromString(resp))))
+            }).flatten
         }
 
       case StreamFormat.Rdf(declared) =>
-        // R-DF exchange loop: same half-duplex shape as TSV, but the
-        // response is a typed column set (decoded rows + lineage)
-        // rather than one opaque string row per message
-        def rdfPartition(iter: Iterator[InternalRow],
-                         sideRows: IndexedSeq[InternalRow]): Iterator[InternalRow] = {
-          val ctx = TaskContext.get()
-          val pid = if (ctx == null) 0L else ctx.partitionId().toLong
-          val (child, forked) = ChildProcessPool.acquire(command, Option(ctx), reuse)
-          if (forked) kids += 1
+        // a response is a typed column set: decoded rows + lineage
+        perPartition(inputRows()) { (in, t) =>
+          val stdin = t.child.stdin
           // copy before grouping: the input iterator may reuse row
           // objects, and the column-major encoder traverses each chunk
           // once per column
-          val rowChunks = iter.map(_.copy()).grouped(chunk)
-          val proj = UnsafeProjection.create(outSchema)
-          val out = new ExchangeIterator {
-            private var chunkNo = 0L
-            private var sentSide = false
-            private var sentEof = false
-            private def oneExchange(write: => Unit,
-                                    last: Boolean): Iterator[InternalRow] = {
-              var resp: Array[InternalRow] = null
-              exchange(child)(write) {
-                resp = RdfProtocol.readMessage(child.stdout, child, declared,
-                  lastMessage = last)
-              }
-              if (resp != null) {
-                val cn = chunkNo
-                chunkNo += 1
-                Iterator.tabulate(resp.length) { j =>
-                  new org.apache.spark.sql.catalyst.expressions.JoinedRow(
-                    resp(j), new GenericInternalRow(Array[Any](pid, cn, j.toLong)))
-                }
-              } else Iterator.empty
-            }
-            protected def advance(): Iterator[InternalRow] = {
-              if (!sentSide) {
-                sentSide = true
-                if (sideRows.nonEmpty) // O16: never send empty mid-stream chunks
-                  return oneExchange(
-                    RdfProtocol.writeChunk(child.stdin, sideRows, sideSchema.get),
-                    last = false)
-              }
-              if (rowChunks.hasNext) {
-                val rows = rowChunks.next().toIndexedSeq
-                return oneExchange(
-                  RdfProtocol.writeChunk(child.stdin, rows, inSchema), last = false)
-              }
-              if (!sentEof) {
-                sentEof = true
-                return oneExchange(RdfProtocol.writeEof(child.stdin), last = true)
-              }
-              // protocol complete: a loop-style child goes back to the pool
-              ChildProcessPool.release(command, child, reuse)
-              null
-            }
-          }
-          out.map { r => outRows += 1; proj(r) }
-        }
-        if (sideLocal && side.isDefined) {
-          inputRows().zipPartitions(side.get.execute()) { (iter, sit) =>
-            rdfPartition(iter, sit.map(_.copy()).toIndexedSeq)
-          }
-        } else {
-          inputRows().mapPartitions { iter =>
-            rdfPartition(iter,
-              sideBc.map(_.value.toIndexedSeq).getOrElse(IndexedSeq.empty))
-          }
+          protocol[Array[InternalRow], Iterator[InternalRow]](t,
+            side => () => RdfProtocol.writeChunk(stdin, side, sideSchema),
+            in.map(_.copy()).grouped(chunk).map { c =>
+              () => RdfProtocol.writeChunk(stdin, c.toIndexedSeq, inSchema)
+            },
+            () => RdfProtocol.writeEof(stdin),
+            last => Option(RdfProtocol.readMessage(t.child.stdout, t.child, declared,
+              lastMessage = last)),
+            (resp, chunkNo) => Iterator.tabulate(resp.length) { j =>
+              outRows += 1
+              new JoinedRow(resp(j), new GenericInternalRow(Array[Any](t.pid, chunkNo, j.toLong)))
+            }).flatten
         }
 
       case StreamFormat.Arrow(_) =>
@@ -555,11 +402,11 @@ case class StreamExec(
         // (supportsRowBased = !supportsColumnar, so a ColumnarToRowExec
         // is always inserted above); keep a thin delegating fallback
         // instead of a second, drift-prone copy of the protocol loop
-        doExecuteColumnar().mapPartitions { batches =>
-          import scala.jdk.CollectionConverters._
-          val proj = UnsafeProjection.create(outSchema)
-          batches.flatMap(_.rowIterator().asScala.map(proj))
-        }
+        doExecuteColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala))
+    }
+    rows.mapPartitions { it =>
+      val proj = UnsafeProjection.create(outSchema)
+      it.map(proj)
     }
   }
 }

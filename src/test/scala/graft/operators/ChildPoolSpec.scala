@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.SparkSpec
+import graft.operators.clients.JvmChild
 
 /** Child-process pooling (r18 verdict directive 3): a loop-style child
   * that answers the end-of-data handshake and then waits for the next
@@ -89,5 +91,33 @@ class ChildPoolSpec extends SparkSpec {
       assert(reused == (0L until 100L).sum)
       assert(ChildProcessPool.idleCount(loopEcho) == 1)
     } finally ChildProcessPool.drain()
+  }
+
+  /** Two runs through a loop-style JVM echo child: the children of the
+    * first run are pooled and serve the second without the pool growing.
+    */
+  private def pooledTwice(cmd: String, run: () => Long, expected: Long): Unit =
+    try {
+      assert(run() == expected)
+      val pooled = ChildProcessPool.idleCount(cmd)
+      assert(pooled >= 1 && pooled <= 4, s"pooled=$pooled")
+      assert(run() == expected)
+      assert(ChildProcessPool.idleCount(cmd) <= pooled.max(4))
+    } finally ChildProcessPool.drain()
+
+  test("loop-style Arrow children are pooled and reused across runs") {
+    val cmd = JvmChild.command("graft.operators.clients.ArrowEchoChild")
+    val df = spark.range(0, 1000).repartition(4).select($"id")
+    val declared = StructType(Seq(StructField("id", LongType)))
+    val out = Stream.arrow(df, cmd, declared, chunkSize = 100, reuseChildren = true)
+    pooledTwice(cmd, () => out.agg(sum($"id")).head.getLong(0), (0L until 1000L).sum)
+  }
+
+  test("loop-style R-DF children are pooled and reused across runs") {
+    val cmd = JvmChild.command("graft.operators.clients.RdfEchoChild")
+    val df = spark.range(0, 1000).repartition(4).select($"id".cast("int").as("i"))
+    val declared = StructType(Seq(StructField("i", IntegerType)))
+    val out = Stream.df(df, cmd, declared, chunkSize = 100, reuseChildren = true)
+    pooledTwice(cmd, () => out.agg(sum($"i")).head.getLong(0), (0L until 1000L).sum)
   }
 }

@@ -68,6 +68,39 @@ class StreamArrowSpec extends SparkSpec {
     assert(Stream.arrow(df, echoCmd, declared).count() == 3)
   }
 
+  test("child that exits early fails the query with the child diagnosis") {
+    val df = spark.range(0, 10).coalesce(1).select($"id")
+    val declared = StructType(Seq(StructField("id", LongType)))
+    val e = intercept[Exception] { Stream.arrow(df, "exit 3", declared).count() }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("exited prematurely")), msgs(e).mkString(" | "))
+  }
+
+  test("frame lengths past the cap or with the top bit set are rejected") {
+    // uint64 lengths 2^63+16 and 2^64-1 read as negative longs; 2^30+1
+    // is one byte over the 1 GiB cap. None may be trusted as a length.
+    def frame(len: Long): java.io.InputStream = {
+      val b = java.nio.ByteBuffer.allocate(8 + 16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.putLong(len)
+      new java.io.ByteArrayInputStream(b.array())
+    }
+    val allocator = new org.apache.arrow.memory.RootAllocator(Long.MaxValue)
+    try {
+      for (len <- Seq(Long.MinValue + 16, -1L, (1L << 30) + 1)) {
+        val e1 = intercept[java.io.IOException] {
+          ArrowProtocol.readFrame(frame(len), null, lastMessage = false)
+        }
+        assert(e1.getMessage.contains("exceeds maximum size"), s"len=$len")
+        val e2 = intercept[java.io.IOException] {
+          ArrowProtocol.readMessageReader(frame(len), null, allocator,
+            StructType(Seq(StructField("id", LongType))))
+        }
+        assert(e2.getMessage.contains("exceeds maximum size"), s"len=$len")
+      }
+    } finally allocator.close()
+  }
+
   test("inferSchema reads the child's response schema from a sample") {
     val df = spark.range(0, 100)
       .select($"id", ($"id" * 1.5).as("d"), concat(lit("s"), $"id").as("s"))

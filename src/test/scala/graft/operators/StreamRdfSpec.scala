@@ -68,6 +68,29 @@ class StreamRdfSpec extends SparkSpec {
     assert(out.count() == 104)
   }
 
+  test("sideLocal delivers each side partition to exactly one child") {
+    // non-replicated ARRAY2 on the R-DF path: echo child, total rows =
+    // main + side (each side row exactly once), side rows in chunk 0
+    val main = spark.range(0, 30).repartition(3).select($"id".cast("int").as("i"))
+    val side = spark.range(100, 106).repartition(3).select($"id".cast("int").as("i"))
+    val declared = StructType(Seq(StructField("i", IntegerType)))
+    val out = Stream.df(main, echoCmd, declared, chunkSize = 100,
+      side = Some(side), sideLocal = true).collect()
+    assert(out.length == 36)
+    val sideEcho = out.filter(_.getInt(0) >= 100)
+    assert(sideEcho.map(_.getInt(0)).sorted.toSeq == (100 until 106))
+    assert(sideEcho.forall(_.getAs[Long]("chunk_no") == 0L))
+    val plan = Stream.df(main, echoCmd, declared, side = Some(side), sideLocal = true)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange"), plan)
+  }
+
+  test("empty partitions still complete the EOF handshake") {
+    val df = spark.range(0, 3).repartition(8).select($"id".cast("int").as("i"))
+    val declared = StructType(Seq(StructField("i", IntegerType)))
+    assert(Stream.df(df, echoCmd, declared).count() == 3)
+  }
+
   test("child that exits early fails the query with the child diagnosis") {
     val e = intercept[Exception] {
       Stream.df(inputDf, "exit 3", declared).count()

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.SparkException
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -123,6 +122,27 @@ class StreamTsvSpec extends SparkSpec {
     }
     assert(e.getMessage != null && e.getMessage.toLowerCase.contains("partition"),
       e.getMessage)
+  }
+
+  test("empty partitions still complete the EOF handshake") {
+    val df = spark.range(0, 3).repartition(8).select($"id")
+    val out = Stream.tsv(df, awkEcho).collect()
+    assert(out.flatMap(_.getString(2).split("\n")).map(_.stripPrefix("ok\t").toLong)
+      .sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("chunk_no counts only data-bearing responses") {
+    // the child answers "no data right now" to every other chunk: the
+    // responses that do carry data still number 0..k-1 with no gaps
+    val alternating =
+      """awk -W interactive 'BEGIN{n=-1; c=0}
+        |{ if (n<0) { n=$0+0; if (n==0) { print 0; fflush(); exit }; next }
+        |  if (--n==0) { if (c%2==0) printf "1\nc%d\n", c; else print 0;
+        |                fflush(); c++; n=-1 } }'""".stripMargin.replace("\n", " ")
+    val df = spark.range(0, 6).coalesce(1).select($"id")
+    val out = Stream.tsv(df, alternating, chunkSize = 1).collect()
+      .map(r => r.getAs[Long]("chunk_no") -> r.getString(2)).sortBy(_._1)
+    assert(out.toSeq == Seq(0L -> "c0", 1L -> "c2", 2L -> "c4"))
   }
 
   test("child that exits early fails the query") {

@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Arbitrary, Gen}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,18 +32,26 @@ class TsvPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("formatValue distinguishes null vs empty vs value") {
-    assert(TsvProtocol.formatValue(null) == "\\N")
-    assert(TsvProtocol.formatValue("") == "")
-    assert(TsvProtocol.formatValue("\\N") == "\\\\N")
-    assert(TsvProtocol.formatValue(Double.NaN) == "nan")
-    assert(TsvProtocol.formatValue(java.lang.Boolean.TRUE) == "true")
+  /** One single-column row formatted for the wire. */
+  private def cell(v: Any, dt: DataType): String =
+    TsvProtocol.formatInternalRow(new GenericInternalRow(Array[Any](v)),
+      StructType(Seq(StructField("c", dt))))
+
+  test("formatInternalRow distinguishes null vs empty vs value") {
+    assert(cell(null, StringType) == "\\N")
+    assert(cell(UTF8String.fromString(""), StringType) == "")
+    assert(cell(UTF8String.fromString("\\N"), StringType) == "\\\\N")
+    assert(cell(Double.NaN, DoubleType) == "nan")
+    assert(cell(true, BooleanType) == "true")
   }
 
   test("row formatting joins with single tabs regardless of content") {
+    val schema = StructType(Seq(StructField("a", StringType), StructField("b", StringType)))
     samples(Gen.zip(Arbitrary.arbitrary[String], Arbitrary.arbitrary[String]), 300)
       .foreach { case (a, b) =>
-        val cells = TsvProtocol.formatRow(org.apache.spark.sql.Row(a, b)).split("\t", -1)
+        val row = new GenericInternalRow(
+          Array[Any](UTF8String.fromString(a), UTF8String.fromString(b)))
+        val cells = TsvProtocol.formatInternalRow(row, schema).split("\t", -1)
         assert(cells.length == 2)
         assert(TsvProtocol.unescape(cells(0)) == a && TsvProtocol.unescape(cells(1)) == b)
       }
