@@ -3,7 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfIndex, Similarity}
@@ -32,15 +31,7 @@ object AnnCurves {
     val sfDir = if (args.nonEmpty) args(0) else "testdata_sf1"
     val outFile = if (args.length > 1) args(1) else "ANN_RECALL.md"
     val nQueries = if (args.length > 2) args(2).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-curves")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.local()
 
     val emb = Tables.load(spark, sfDir, "embeddings").cache()
     val n = emb.count()
@@ -356,7 +347,7 @@ object AnnCurves {
       |  path) instead of product-quantizing.
       |- Text IVF-flat seed-vs-trained columns must be read against the
       |  PROBED-ROW fraction, not nProbe/nLists: the seeded geometry is
-      |  skewed (graft.tools.TextIvfSkew, sf0.1: seed top-1 list holds
+      |  skewed (`IvfIndex.listSkewStats`, sf0.1: seed top-1 list holds
       |  27.7% of the corpus vs trained 14.1%; at nProbe=8 seed probes
       |  52.2% of rows vs trained 45.4%, at nProbe=1 10.3% vs 6.4%), so
       |  seed's higher recall at equal nProbe is bought with more

@@ -2,18 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON metrics line.
-  *
-  * Every query runs TWICE: an untimed warm pass (janino/whole-stage
-  * codegen compilation is a one-time JVM cost — measured 6-10 s on the
-  * heaviest plans, pure compiler time that a long-lived cluster pays
-  * once, not per query) and then the timed pass, so reported numbers
-  * are steady-state. Data caches are cleared between the passes so the
-  * warm pass never pre-materializes input for the timed one; the
-  * cold-pass total is still emitted as "cold_sec" for transparency.
-  * Queries run in sorted name order for stable output.
-  */
 /** Per-query scheduler counters for SPARK_GRAFT_PROFILE mode. */
 private[graft] class ProfCounters {
   import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
@@ -26,8 +14,25 @@ private[graft] class ProfCounters {
     taskMs.set(0); schedDelayMs.set(0) }
 }
 
+/** Benchmark main: runs every SparkEntry query against
+  * SPARK_GRAFT_SF_DIR and prints one JSON metrics line.
+  *
+  * Every query runs TWICE: an untimed warm pass (janino/whole-stage
+  * codegen compilation is a one-time JVM cost — measured 6-10 s on the
+  * heaviest plans, pure compiler time that a long-lived cluster pays
+  * once, not per query) and then the timed pass, so reported numbers
+  * are steady-state. Data caches are cleared between the passes so the
+  * warm pass never pre-materializes input for the timed one; the
+  * cold-pass total is still emitted as "cold_sec" for transparency.
+  * Queries run in sorted name order for stable output.
+  *
+  * Profiling one query: `SPARK_GRAFT_ONLY=<q> SPARK_GRAFT_REPS=<n>
+  * SPARK_GRAFT_PROFILE=1` gives the cold run, n timed runs and a
+  * per-run `[profile]` build/plan/exec split on stderr; `Plans` dumps
+  * the query's formatted plan.
+  */
 object Bench {
-  // round stamp for the default artifact name, DERIVED so it can
+  // round stamp for the default artifact names, DERIVED so it can
   // never go stale: the driver commits BENCH_r{N}.json at each round
   // close, so the current round is max(N)+1 — a hardcoded constant
   // would let one forgotten bump silently overwrite the previous
@@ -37,10 +42,9 @@ object Bench {
   // yields None — the writer then falls back to an unstamped name and
   // says so, instead of silently stamping a wrong round from a stray
   // working directory (r15 advice).
-  private lazy val Round: Option[Int] = {
-    val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO", "."))
+  private[graft] def round(repoDir: String): Option[Int] = {
     val re = "BENCH_r(\\d+)\\.json".r
-    val seen = Option(dir.listFiles()).getOrElse(Array())
+    val seen = Option(new java.io.File(repoDir).listFiles()).getOrElse(Array())
       .flatMap(f => f.getName match {
         case re(n) => Some(n.toInt)
         case _ => None
@@ -48,35 +52,26 @@ object Bench {
     if (seen.isEmpty) None else Some(seen.max + 1)
   }
 
+  /** Default file name of a bench sidecar (`stem` = "spread" or
+    * "bench_out"). Only a clean full-suite run is stamped, by round and
+    * core count, so a c8 run never overwrites c32 evidence; a filtered
+    * (SPARK_GRAFT_ONLY) or failed run lands in `<stem>_partial.json`,
+    * and a clean run with no derivable round in `<stem>_unstamped.json`.
+    */
+  private[graft] def sidecarName(stem: String, round: Option[Int], cpus: Int,
+      filtered: Boolean, failed: Boolean): String =
+    if (filtered || failed) s"${stem}_partial.json"
+    else round.fold(s"${stem}_unstamped.json")(r => s"${stem}_r${r}_c$cpus.json")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Static conf, default 100: the generated-class cache is keyed by
-      // source text, and this suite has far more codegen units than 100
-      // (110 queries x several whole-stage/aggregate units each), so at
-      // the default every timed pass evicts and Janino-recompiles
-      // what the warm pass just compiled — profiled at ~0.2-0.3 s of
-      // the per-query floor. A long-lived cluster sizes this cache to
-      // its workload; 10k entries of bytecode is a few hundred MB at
-      // worst and turns repeat plans into cache hits.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    // ad-hoc config experiments: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.defaultCpus
+    val spark = LocalSession.local(cpus)
     // warmup: one small aggregate through the whole stack
     Tables.load(spark, sfDir, "lineitem").selectExpr("sum(l_orderkey)").collect()
     val profile = sys.env.contains("SPARK_GRAFT_PROFILE")
     // profile mode: a listener splits each query's wall time into
-    // scheduled work (sum of task run time / 32-way parallelism) vs
+    // scheduled work (sum of task run time / cpus-way parallelism) vs
     // driver-side floor (planning, AQE re-optimization, job/stage
     // submission gaps) — the split that decides whether floor work
     // should target the plans or the session
@@ -179,8 +174,17 @@ object Bench {
     val spread = results.map { case (k, med, mn, mx, cold) =>
       "\"" + k + s"""":{"median":${fmt(med)},"min":${fmt(mn)},"max":${fmt(mx)},"cold":${fmt(cold)}}"""
     }.mkString("{", ",", "}")
+    val repoDir = sys.env.getOrElse("SPARK_GRAFT_REPO", ".")
+    val stamp = round(repoDir)
+    if (stamp.isEmpty && failed.isEmpty && only.isEmpty)
+      System.err.println("[bench] no BENCH_r*.json found in " +
+        s"'$repoDir' — cannot derive the round; writing *_unstamped.json " +
+        "(set SPARK_GRAFT_REPO to the repo root, or SPARK_GRAFT_BENCH_OUT " +
+        "and SPARK_GRAFT_SPREAD_OUT explicitly)")
+    def sidecar(stem: String) =
+      sidecarName(stem, stamp, cpus, only.nonEmpty, failed.nonEmpty)
     try {
-      val p = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_SPREAD_OUT", "BENCH_SPREAD.json"))
+      val p = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_SPREAD_OUT", sidecar("spread")))
       java.nio.file.Files.write(p, s"""{"reps":$reps,"sf":"$sfDir","spread":$spread}""".getBytes("UTF-8"))
     } catch { case e: Exception => System.err.println(s"[bench] spread write failed: ${e.getMessage}") }
     val total = results.map(_._2).sum
@@ -194,38 +198,23 @@ object Bench {
     // so it can NEVER be recovered from the tail no matter where it is
     // printed), so a file is the machine-readable artifact and stdout
     // is just the human echo. Two files:
-    //  - the round-stamped bench_out_r{N}.json (audit history), and
+    //  - the round- and core-stamped bench_out_r{N}_c{cpus}.json (audit
+    //    history; see sidecarName), and
     //  - the FIXED-PATH bench_out.json in the repo root, rewritten on
     //    every full-suite run — the stable name a comparator can read
     //    without knowing the round number.
-    // Artifact hygiene (r14 verdict directive 2): the round-stamped
-    // default name only ever receives CLEAN FULL-SUITE runs — a
-    // filtered (SPARK_GRAFT_ONLY) or partially-failed run lands in
-    // bench_out_partial.json instead, so investigation debris can
-    // never masquerade as the round's headline artifact. The fixed
-    // path accepts any FULL-SUITE run (a run with failures still
-    // carries its "failed" list inside the line, so a reader can tell)
-    // but never a filtered one.
+    // Artifact hygiene (r14 verdict directive 2): the stamped default
+    // name only ever receives CLEAN FULL-SUITE runs, so investigation
+    // debris can never masquerade as the round's headline artifact.
+    // The fixed path accepts any FULL-SUITE run (a run with failures
+    // still carries its "failed" list inside the line, so a reader can
+    // tell) but never a filtered one.
     def writeLine(p: java.nio.file.Path): Unit =
       try java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
       catch { case e: Exception =>
         System.err.println(s"[bench] bench_out write to $p failed: ${e.getMessage}") }
-    val repoDir = sys.env.getOrElse("SPARK_GRAFT_REPO", ".")
-    val clean = failed.isEmpty && only.isEmpty
-    val default =
-      if (!clean) "bench_out_partial.json"
-      else Round match {
-        case Some(r) => s"bench_out_r$r.json"
-        case None =>
-          System.err.println("[bench] no BENCH_r*.json found in " +
-            s"'$repoDir' — cannot " +
-            "derive the round; writing bench_out_unstamped.json (set " +
-            "SPARK_GRAFT_REPO to the repo root or SPARK_GRAFT_BENCH_OUT " +
-            "explicitly)")
-          "bench_out_unstamped.json"
-      }
     writeLine(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", default)))
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", sidecar("bench_out"))))
     if (only.isEmpty)
       writeLine(java.nio.file.Paths.get(repoDir, "bench_out.json"))
     // stop the session BEFORE the stdout echo so the one-line JSON is

@@ -3,13 +3,20 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dump `explain("formatted")` for a representative query per plan
-  * family into PLANS.md — the plan-shape evidence behind the scale
-  * claims (what PlanQualitySpec asserts, in reviewable form).
-  * `runMain graft.Plans [sfDir] [outFile]`
+/** Dump `explain("formatted")` plans, in one of two forms:
+  *  - `runMain graft.Plans [sfDir] [outFile]` writes a representative
+  *    query per plan family into PLANS.md — the plan-shape evidence
+  *    behind the scale claims (what PlanQualitySpec asserts, in
+  *    reviewable form);
+  *  - `runMain graft.Plans <sfDir> <outDir> <suffix> <q1,q2,...>`
+  *    writes `<outDir>/<query>_<suffix>.txt` for each query matching a
+  *    name prefix (like SPARK_GRAFT_ONLY) — the before/after plan
+  *    evidence for optimization rounds. The session is Bench's, so the
+  *    dumped plan is the one the bench executes (modulo AQE's runtime
+  *    re-optimization, which explain shows as isFinalPlan=false).
   */
 object Plans {
   private val Showcase: Seq[(String, String)] = Seq(
@@ -52,26 +59,45 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    if (args.length > 4 || args.length == 3) {
+      System.err.println("usage: graft.Plans [sfDir] [outFile]\n" +
+        "       graft.Plans <sfDir> <outDir> <suffix> <q1,q2,...>")
+      sys.exit(2)
+    }
+    val spark = LocalSession.local()
+    if (args.length == 4) dump(spark, sfDir, args(1), args(2), args(3).split(",").toSeq)
+    else showcase(spark, sfDir, args.lift(1).getOrElse("PLANS.md"))
+    spark.stop()
+  }
+
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  def showcase(spark: SparkSession, sfDir: String, outFile: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plan shapes of representative queries\n\n")
     sb.append("Generated by `runMain graft.Plans` (explain mode `formatted`, ")
     sb.append(s"data `$sfDir`). These are the shapes `PlanQualitySpec` locks in.\n")
     Showcase.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val plan = explain(SparkEntry.queries(name)(spark, sfDir))
       sb.append(s"\n## $name — $why\n\n```\n$plan```\n")
     }
     Files.write(Paths.get(outFile), sb.toString.getBytes(StandardCharsets.UTF_8))
     println(s"[plans] wrote $outFile")
-    spark.stop()
+  }
+
+  /** One `<outDir>/<query>_<suffix>.txt` per query starting with any of
+    * `prefixes`. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, suffix: String,
+      prefixes: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
+         if prefixes.exists(name.startsWith)) {
+      spark.sparkContext.setJobDescription(s"plan: $name")
+      val out = Paths.get(outDir, s"${name}_$suffix.txt")
+      Files.write(out, explain(fn(spark, sfDir)).getBytes(StandardCharsets.UTF_8))
+      println(s"[plans] wrote $out")
+      Tables.releaseOperatorCaches(spark)
+    }
   }
 }

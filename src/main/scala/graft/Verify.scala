@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,17 +12,7 @@ object Verify {
     // comma-separated name-prefix filter, same semantics as Bench's
     // SPARK_GRAFT_ONLY (a query runs if it starts with ANY prefix)
     val only = args.lift(2).map(_.split(",").toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: the default 100-entry codegen class cache thrashes
-      // under a 110-query suite
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.local()
     new java.io.File(outDir).mkdirs()
     val summary = scala.collection.mutable.LinkedHashMap.empty[String, (Boolean, Double, String)]
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

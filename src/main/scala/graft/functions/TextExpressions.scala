@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}

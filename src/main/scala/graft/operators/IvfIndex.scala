@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExpressions
 
@@ -241,7 +241,7 @@ object IvfIndex {
   //
   // [[writeIndex]] fixes the centroid geometry forever — fine between
   // retrains, but a drifting corpus degrades assignment quality (and
-  // the measured list skew of seed geometries — tools/TextIvfSkew: the
+  // the measured list skew of seed geometries — ANN_RECALL.md: the
   // seed top-1 list holds 27.7% of the corpus vs 14.1% trained — makes
   // a rebalance path a correctness-of-scale feature, not a nicety).
   // The lifecycle is the substring index's version-pointer protocol
@@ -369,8 +369,8 @@ object IvfIndex {
   }
 
   /** Per-list occupancy of the index at `path` — the measurement half
-    * of the retrain decision (tools/TextIvfSkew made it offline; this
-    * makes it an operator): `(list_id, n, share)` for every populated
+    * of the retrain decision (the list-skew figures in ANN_RECALL.md,
+    * as an operator): `(list_id, n, share)` for every populated
     * list, share = n / total. Reads ONLY the partition column (no
     * payload pages), so it costs footer reads — run it per maintenance
     * window, not per batch.
@@ -388,8 +388,8 @@ object IvfIndex {
   /** The decision rule on [[listSkewStats]]: retrain when the hottest
     * list holds more than `maxTopShare` of the corpus (the skew level
     * at which one list is a straggler task and a floor on pruning —
-    * tools/TextIvfSkew measured 27.7% for seed geometry vs 14.1%
-    * trained at nLists = 8). A ≤ k-row driver pull.
+    * ANN_RECALL.md records 27.7% for seed geometry vs 14.1% trained
+    * at nLists = 8). A ≤ k-row driver pull.
     */
   def needsRetrain(spark: org.apache.spark.sql.SparkSession, path: String,
                    maxTopShare: Double = 0.25): Boolean =
@@ -425,8 +425,8 @@ object IvfIndex {
     *
     * `maxListN` is the HOT-CELL guard (the `maxClusterN`/`maxBandFreq`
     * discipline its batch siblings carry): without it, one hot Voronoi
-    * list — which seed geometries produce by default (tools/
-    * TextIvfSkew: 27.7% of the corpus in the top-1 seed list) — makes
+    * list — which seed geometries produce by default (ANN_RECALL.md,
+    * `listSkewStats`: 27.7% of the corpus in the top-1 seed list) — makes
     * per-batch probe I/O and join work ∝ corpus/k with no error. With
     * the cap, index lists holding MORE than `maxListN` vectors
     * contribute no pairs: their batch vectors are reported fresh

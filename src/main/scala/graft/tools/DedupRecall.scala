@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measured acceptance evidence for the MinHash+LSH near-dup miner:
   * emit the verified pair set at several thresholds so
   * tools/dedup_recall.py can score RECALL against the exact
@@ -18,13 +16,7 @@ object DedupRecall {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val ts = if (args.length > 1) args(1).split(",").map(_.toDouble).toSeq
              else Seq(0.5, 0.6, 0.7, 0.8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.local()
     val docs = graft.Tables.load(spark, sfDir, "documents")
     for (t <- ts) {
       val pairs = graft.operators.TextDedup.minhashLshPairs(docs, t)

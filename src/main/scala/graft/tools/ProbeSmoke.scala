@@ -3,10 +3,10 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{LocalSession, Tables}
 import graft.operators.{TextAnalysis, TextDedup}
 
 /** Standing-index probe flatness smoke (r15 verdict directive 1):
@@ -30,7 +30,7 @@ import graft.operators.{TextAnalysis, TextDedup}
   * `[probe-smoke] family t1x=… t10x=… ratio=… verdict=…`. The two
   * history dirs default to /root/testdata/sf0.1 and ./testdata_sf1
   * and are overridable by args 2/3 or SPARK_GRAFT_SMOKE_1X_DIR /
-  * SPARK_GRAFT_SMOKE_10X_DIR (the Bench/Profile parameterization
+  * SPARK_GRAFT_SMOKE_10X_DIR (the Bench parameterization
   * convention), so the smoke runs on any machine layout.
   */
 object ProbeSmoke {
@@ -42,18 +42,11 @@ object ProbeSmoke {
     val dir10x = args.lift(2)
       .orElse(sys.env.get("SPARK_GRAFT_SMOKE_10X_DIR"))
       .getOrElse("testdata_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the smoke's indexes are deliberately small — force the
-      // pruning machinery on so the mechanism is what gets graded
-      .config(graft.operators.IndexLayout.PruneMinBytesKey, "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = LocalSession.defaultCpus
+    val spark = LocalSession.local(cpus)
+    // the smoke's indexes are deliberately small — force the
+    // pruning machinery on so the mechanism is what gets graded
+    spark.conf.set(graft.operators.IndexLayout.PruneMinBytesKey, "0")
 
     val small = Tables.load(spark, dir1x, "documents")
       .select(col("doc_id"), col("text"))

@@ -1,0 +1,51 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+/** The launcher code behind the mains, exercised on the shared session
+  * (never through a `main`, which would stop it): Bench's sidecar
+  * naming and the per-query form of Plans.
+  */
+class LauncherSpec extends SparkSpec {
+  private def names(dir: String, filtered: Boolean, failed: Boolean) =
+    Seq("spread", "bench_out").map(stem =>
+      Bench.sidecarName(stem, Bench.round(dir), 8, filtered, failed))
+
+  test("clean full-suite runs are stamped by the next round and the core count") {
+    val dir = tempDir("graft_launcher_")
+    Files.write(Paths.get(dir, "BENCH_r7.json"), "{}".getBytes("UTF-8"))
+    Files.write(Paths.get(dir, "BENCH_r6_c8.json"), "{}".getBytes("UTF-8"))
+    assert(Bench.round(dir) == Some(8))
+    assert(names(dir, filtered = false, failed = false) ==
+      Seq("spread_r8_c8.json", "bench_out_r8_c8.json"))
+  }
+
+  test("filtered or failed runs land in the partial sidecars, stamped or not") {
+    val stamped = tempDir("graft_launcher_")
+    Files.write(Paths.get(stamped, "BENCH_r7.json"), "{}".getBytes("UTF-8"))
+    val bare = tempDir("graft_launcher_")
+    val partial = Seq("spread_partial.json", "bench_out_partial.json")
+    for (dir <- Seq(stamped, bare);
+         (filtered, failed) <- Seq((true, false), (false, true), (true, true)))
+      assert(names(dir, filtered, failed) == partial, s"$dir $filtered $failed")
+  }
+
+  test("a clean run with no BENCH_r*.json in the repo dir is unstamped") {
+    val bare = tempDir("graft_launcher_")
+    assert(Bench.round(bare).isEmpty)
+    assert(Bench.round(bare + "/missing").isEmpty)
+    assert(names(bare, filtered = false, failed = false) ==
+      Seq("spread_unstamped.json", "bench_out_unstamped.json"))
+  }
+
+  test("Plans.dump writes one formatted plan per prefix-matched query") {
+    val out = tempDir("graft_plans_")
+    Plans.dump(spark, sf, out, "before", Seq("q01_", "q40_"))
+    assert(new java.io.File(out).list().sorted.toSeq ==
+      Seq("q01_agg_before.txt", "q40_pipe_echo_before.txt"))
+    val q40 = Files.readString(Paths.get(out, "q40_pipe_echo_before.txt"))
+    // formatted explain names StreamExec by its nodeName, "Stream"
+    assert("""(?m)^\(\d+\) Stream$""".r.findFirstIn(q40).isDefined, q40)
+    assert(Files.readString(Paths.get(out, "q01_agg_before.txt")).contains("== Physical Plan =="))
+  }
+}

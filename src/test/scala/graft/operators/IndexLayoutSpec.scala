@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The bucketed standing-index layout's probe contract: every
   * key-restriction tier (literal IN-list ≤ MaxKeyPushdown, broadcast

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Ranking semantics beyond the oracle gates (q98/q99 hash-gate the

@@ -238,7 +238,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("fimSplit: cuts tile the doc, prefix never empty, pass-throughs whole") {
-    import org.apache.spark.sql.functions.col
     val t = (1L to 200L).map(i => (i, 5L + i % 40L)).toDF("doc_id", "n_tokens")
       .union(Seq((999L, 1L)).toDF("doc_id", "n_tokens")) // sub-2-token doc
     val out = Sampling.fimSplit(t, "doc_id", "n_tokens")

@@ -10,8 +10,6 @@ import graft.{SparkSpec, Tables}
   * one-pass multi-set probe equals the inline per-set scans.
   */
 class SubstringIndexSetsSpec extends SparkSpec {
-  import spark.implicits._
-
   private lazy val docs = Tables.load(spark, sf, "documents")
   private def setTagged(src: String, id: Int) =
     docs.filter(col("source") === src).withColumn("eval_set_id", lit(id))

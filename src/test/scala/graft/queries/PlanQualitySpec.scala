@@ -374,7 +374,6 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("cms estimates are a narrow projection over the literal counter matrix") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = Tables.load(spark, sf, "documents")
     val bi = graft.operators.NgramLm.bigrams(docs, "doc_id", "text").select($"bg")
