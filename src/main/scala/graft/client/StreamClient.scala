@@ -1,7 +1,8 @@
 package graft.client
 
 import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
-import java.nio.charset.StandardCharsets
+
+import graft.operators.TsvProtocol
 
 /** Child-side client library for writing stream children on the JVM —
   * the Scala analog of the reference's Python `scidbstrm` package
@@ -28,46 +29,22 @@ object StreamClient {
 
   type TsvRow = Seq[String]
 
+  /** The TSV framing is [[graft.operators.TsvProtocol]]'s; this adds only
+    * the split into rows and cells (limit −1, so trailing empty cells
+    * keep their column slot).
+    */
   final class Channel(in: InputStream, out: OutputStream) {
     private val bin = new BufferedInputStream(in, 1 << 20)
     private val bout = new BufferedOutputStream(out, 1 << 20)
 
     /** Read one message; None when the parent signals end-of-data. */
-    def read(): Option[Seq[TsvRow]] = {
-      val header = new StringBuilder
-      var c = bin.read()
-      if (c < 0) sys.error("parent closed pipe before message")
-      while (c != '\n') { header.append(c.toChar); c = bin.read()
-        if (c < 0) sys.error("parent closed pipe mid-header") }
-      val n = header.toString.trim.toLong
-      if (n == 0) return None
-      val rows = Seq.newBuilder[TsvRow]
-      var i = 0L
-      // accumulate raw bytes per line and decode as UTF-8 (write() encodes
-      // UTF-8; per-byte toChar would decode Latin-1 and corrupt non-ASCII);
-      // split with limit -1 so trailing empty cells keep their column slot
-      val line = new java.io.ByteArrayOutputStream(256)
-      while (i < n) {
-        val b = bin.read()
-        if (b < 0) sys.error("parent closed pipe mid-message")
-        if (b == '\n') {
-          val s = new String(line.toByteArray, StandardCharsets.UTF_8)
-          rows += s.split("\t", -1).toSeq
-          line.reset(); i += 1
-        } else line.write(b)
-      }
-      Some(rows.result())
-    }
+    def read(): Option[Seq[TsvRow]] =
+      Option(TsvProtocol.readMessage(bin, null, lastMessage = true))
+        .map(_.split("\n", -1).toSeq.map(_.split("\t", -1).toSeq))
 
     /** Write one response message (empty Seq → `0\n`, "no data now"). */
-    def write(rows: Seq[TsvRow]): Unit = {
-      bout.write((rows.size.toString + "\n").getBytes(StandardCharsets.UTF_8))
-      rows.foreach { r =>
-        bout.write(r.mkString("\t").getBytes(StandardCharsets.UTF_8))
-        bout.write('\n')
-      }
-      bout.flush()
-    }
+    def write(rows: Seq[TsvRow]): Unit =
+      TsvProtocol.writeChunk(bout, rows.iterator.map(_.mkString("\t")), rows.size)
   }
 
   def channel(): Channel = new Channel(System.in, System.out)

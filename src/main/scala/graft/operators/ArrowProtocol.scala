@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException, IOException, InputStream, OutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException, InputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.Channels
 
@@ -26,7 +26,6 @@ import org.apache.spark.sql.types._
   * nulls travel as Arrow validity bitmaps.
   */
 object ArrowProtocol {
-  val MaxResponseBytes: Long = 1L << 30
 
   def arrowField(name: String, dt: DataType): Field = {
     val t: ArrowType = dt match {
@@ -40,6 +39,18 @@ object ArrowProtocol {
           "(supported: long, int, double, string, binary)")
     }
     new Field(name, FieldType.nullable(t), java.util.Collections.emptyList())
+  }
+
+  /** The inverse of [[arrowField]]: the Spark type a response vector
+    * decodes to, or None for a vector type the format does not carry.
+    */
+  private[operators] def sparkType(v: FieldVector): Option[DataType] = v match {
+    case _: BigIntVector    => Some(LongType)
+    case _: IntVector       => Some(IntegerType)
+    case _: Float8Vector    => Some(DoubleType)
+    case _: VarCharVector   => Some(StringType)
+    case _: VarBinaryVector => Some(BinaryType)
+    case _                  => None
   }
 
   def arrowSchema(schema: StructType): Schema =
@@ -166,7 +177,7 @@ object ArrowProtocol {
   }
 
   /** Frame one filled root as a length-prefixed single-batch IPC stream. */
-  private def writeRoot(out: OutputStream, root: VectorSchemaRoot): Unit = {
+  private[operators] def writeRoot(out: OutputStream, root: VectorSchemaRoot): Unit = {
     val baos = new ByteArrayOutputStream(1 << 12)
     val writer = new ArrowStreamWriter(root, null, Channels.newChannel(baos))
     writer.start(); writer.writeBatch(); writer.end(); writer.close()
@@ -188,25 +199,16 @@ object ArrowProtocol {
   /** Read one length-prefixed frame: its payload bytes, or None for a
     * zero-length frame. The length is an unsigned 64-bit value, so one
     * with its top bit set reads as negative here and is rejected along
-    * with anything over [[MaxResponseBytes]].
+    * with anything over [[ChildProcess.MaxMessageBytes]].
     */
   def readFrame(in: InputStream, child: ChildProcess,
                 lastMessage: Boolean): Option[Array[Byte]] = {
-    val len = readLen(in, child, lastMessage)
+    val len = ByteBuffer.wrap(ChildProcess.readFully(in, new Array[Byte](8), child,
+      lastMessage, "before message length")).order(ByteOrder.LITTLE_ENDIAN).getLong
     if (len == 0) return None
-    if (len < 0 || len > MaxResponseBytes)
+    if (len < 0 || len > ChildProcess.MaxMessageBytes)
       throw new IOException("response from child exceeds maximum size")
-    val payload = new Array[Byte](len.toInt)
-    var off = 0
-    while (off < payload.length) {
-      val r = in.read(payload, off, payload.length - off)
-      if (r < 0) {
-        if (!lastMessage) child.throwIfDeadAfter(2000)
-        throw new EOFException("child stdout closed mid-message")
-      }
-      off += r
-    }
-    Some(payload)
+    Some(ChildProcess.readFully(in, new Array[Byte](len.toInt), child, lastMessage))
   }
 
   /** Columnar read: return the open ArrowStreamReader positioned on the
@@ -220,46 +222,34 @@ object ArrowProtocol {
     */
   def readMessageReader(in: InputStream, child: ChildProcess,
                         allocator: BufferAllocator, declared: StructType,
-                        lastMessage: Boolean = false): Option[ArrowStreamReader] = {
-    val frame = readFrame(in, child, lastMessage)
-    if (frame.isEmpty) return None
-    val reader = new ArrowStreamReader(new ByteArrayInputStream(frame.get), allocator)
-    try {
-      if (!reader.loadNextBatch())
-        throw new IOException("Arrow response contained no RecordBatch")
-      val root = reader.getVectorSchemaRoot
+                        lastMessage: Boolean = false): Option[ArrowStreamReader] =
+    readFrame(in, child, lastMessage).map(loadBatch(_, allocator, { root =>
       if (root.getFieldVectors.size() != declared.length)
         throw new IOException(
           s"child returned ${root.getFieldVectors.size()} columns; " +
             s"declared types expect ${declared.length}")
       root.getFieldVectors.asScala.zip(declared.fields).foreach { case (v, f) =>
-        (v, f.dataType) match {
-          case (_: BigIntVector, LongType)       => ()
-          case (_: IntVector, IntegerType)       => ()
-          case (_: IntVector, LongType)          => () // pandas int32 widening
-          case (_: Float8Vector, DoubleType)     => ()
-          case (_: VarCharVector, StringType)    => ()
-          case (_: VarBinaryVector, BinaryType)  => ()
-          case (vec, t) => throw new IOException(
-            s"child column ${vec.getName} has Arrow type ${vec.getClass.getSimpleName}, " +
-              s"declared type is $t")
+        sparkType(v) match {
+          case Some(t) if t == f.dataType => ()
+          case Some(IntegerType) if f.dataType == LongType => () // pandas int32 widening
+          case _ => throw new IOException(
+            s"child column ${v.getName} has Arrow type ${v.getClass.getSimpleName}, " +
+              s"declared type is ${f.dataType}")
         }
       }
-      Some(reader)
-    } catch { case t: Throwable => reader.close(); throw t }
-  }
+    }))
 
-  private def readLen(in: InputStream, child: ChildProcess, lastMessage: Boolean): Long = {
-    val b = new Array[Byte](8)
-    var off = 0
-    while (off < 8) {
-      val r = in.read(b, off, 8 - off)
-      if (r < 0) {
-        if (!lastMessage) child.throwIfDeadAfter(2000)
-        throw new EOFException("child stdout closed before message length")
-      }
-      off += r
-    }
-    ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getLong
+  /** Open one frame's IPC stream positioned on its RecordBatch and run
+    * `check` on it; the caller owns (and closes) the returned reader.
+    */
+  private[operators] def loadBatch(payload: Array[Byte], allocator: BufferAllocator,
+                                   check: VectorSchemaRoot => Unit = _ => ()): ArrowStreamReader = {
+    val reader = new ArrowStreamReader(new ByteArrayInputStream(payload), allocator)
+    try {
+      if (!reader.loadNextBatch())
+        throw new IOException("Arrow response contained no RecordBatch")
+      check(reader.getVectorSchemaRoot)
+      reader
+    } catch { case t: Throwable => reader.close(); throw t }
   }
 }

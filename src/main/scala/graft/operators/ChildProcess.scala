@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.io.{BufferedInputStream, BufferedOutputStream, IOException}
+import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, IOException, InputStream}
 import java.util.concurrent.TimeUnit
 import java.util.concurrent.atomic.AtomicBoolean
 
@@ -111,7 +111,7 @@ final class ChildProcess(cmd: String, ctx: Option[TaskContext]) {
     * exit status to be reaped — EOF on the pipe can be observable a
     * moment before `isAlive` flips.
     */
-  def throwIfDeadAfter(graceMillis: Long): Unit = {
+  private def throwIfDeadAfter(graceMillis: Long): Unit = {
     proc.waitFor(graceMillis, TimeUnit.MILLISECONDS)
     throwIfDead()
   }
@@ -130,7 +130,47 @@ final class ChildProcess(cmd: String, ctx: Option[TaskContext]) {
     try Runtime.getRuntime.removeShutdownHook(shutdownHook)
     catch { case _: IllegalStateException => () }
   }
+}
 
-  /** Orderly wait after the final protocol message. */
-  def waitFor(millis: Long): Boolean = proc.waitFor(millis, TimeUnit.MILLISECONDS)
+/** What every wire format's decoder shares: the message size cap and
+  * the end-of-stream rule.
+  */
+object ChildProcess {
+
+  /** Largest message any wire format accepts from a child, 1 GiB
+    * (reference `src/TSVInterface.h:102`).
+    */
+  private[operators] val MaxMessageBytes: Long = 1L << 30
+
+  /** Fill `buf` from a child's stdout, or fail when it ends first. */
+  private[operators] def readFully(in: InputStream, buf: Array[Byte],
+                                   child: ChildProcess, lastMessage: Boolean,
+                                   where: String = "mid-message"): Array[Byte] = {
+    var off = 0
+    while (off < buf.length) {
+      val r = in.read(buf, off, buf.length - off)
+      if (r < 0) closed(child, lastMessage, where)
+      off += r
+    }
+    buf
+  }
+
+  /** One byte of a child's stdout (TSV's line scanner), or fail at its end. */
+  private[operators] def readByte(in: InputStream, child: ChildProcess,
+                                  lastMessage: Boolean): Int = {
+    val b = in.read()
+    if (b < 0) closed(child, lastMessage, "mid-message")
+    b
+  }
+
+  /** Stdout ended before the bytes a message promised. A live child
+    * that has since died gets the premature-exit diagnosis; after
+    * end-of-data a child may exit right after its last write, but the
+    * final message must still be complete. With no child — an in-memory
+    * decode — the EOF is the whole story.
+    */
+  private def closed(child: ChildProcess, lastMessage: Boolean, where: String): Nothing = {
+    if (!lastMessage && child != null) child.throwIfDeadAfter(2000)
+    throw new EOFException(s"child stdout closed $where")
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.io.{EOFException, IOException, InputStream, OutputStream}
+import java.io.{IOException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -47,6 +47,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * refuses, `src/StreamSettings.h` allows types=double,string,int32).
   */
 object RdfProtocol {
+  import ChildProcess.readFully
 
   /** `"B\n"` + version 2 + R 3.2.0 writer + R 2.3.0 min reader, the
     * exact bytes of `serialize(..., xdr=FALSE, version=2)` output and
@@ -75,9 +76,6 @@ object RdfProtocol {
   /** Raw bit pattern of R's NA_real_ (low word 1954 — the year). */
   val NaRealBits: Long = 0x7ff00000000007a2L
 
-  /** Per-message size cap, matching the other wire formats' bound. */
-  val MaxMessageBytes: Long = 1L << 30
-
   def supported(dt: DataType): Boolean = dt match {
     case IntegerType | ShortType | DoubleType | StringType => true
     case _ => false
@@ -92,8 +90,8 @@ object RdfProtocol {
       f.dataType match {
         case IntegerType | DoubleType | StringType => ()
         case other => throw new IllegalArgumentException(
-          s"declared output column '${f.name}' has type ${other.simpleString}; " +
-            "the R df format can only return int/double/string")
+          s"declared output column '${f.name}' has type ${other.simpleString}, " +
+            "not supported over the R df stream format (it returns int/double/string only)")
       }
     }
 
@@ -234,6 +232,26 @@ object RdfProtocol {
     */
   def readMessage(in: InputStream, child: ChildProcess, declared: StructType,
                   lastMessage: Boolean = false): Array[InternalRow] = {
+    val m = decode(in, child, Some(declared), lastMessage)
+    if (m == null) null else m._2
+  }
+
+  /** Child-side / schema-agnostic decode: infer each column's Spark
+    * type from its SXP tag and the field names from the `names`
+    * attribute — the JVM analog of R's `data.frame(unserialize(con))`.
+    * Returns null for the empty end-of-data message. Used by the JVM
+    * test clients (and usable for `format=df` schema inference).
+    */
+  def readDynamic(in: InputStream): (StructType, Array[InternalRow]) =
+    decode(in, null, None, lastMessage = true)
+
+  /** The one message decoder: header, list flags, the columns, then
+    * the `names` pairlist. With a `declared` schema the column count and
+    * each column's SEXP are checked before that column's values are
+    * read; without one the types come from the SEXP tags.
+    */
+  private def decode(in: InputStream, child: ChildProcess, declared: Option[StructType],
+                     lastMessage: Boolean): (StructType, Array[InternalRow]) = {
     val head = readFully(in, new Array[Byte](Header.length), child, lastMessage)
     if (head(0) != 'B' || head(1) != '\n' || readIntAt(head, 2) != 2) {
       val printable = head.take(3).map(b => if (b >= 32 && b < 127) b.toChar.toString else "·").mkString
@@ -247,35 +265,43 @@ object RdfProtocol {
       throw new IOException(f"expected an R list response, got SEXP flags 0x$flags%08x")
     val numCols = readInt(in, child, lastMessage)
     if (numCols == 0) return null
-    if (numCols != declared.length)
-      throw new IOException(
-        s"received incorrect number of columns: $numCols (declared ${declared.length})")
+    declared.foreach { d =>
+      if (numCols != d.length)
+        throw new IOException(
+          s"received incorrect number of columns: $numCols (declared ${d.length})")
+    }
     var numRows = -1
+    val types = new Array[DataType](numCols)
     val cols = new Array[Array[Any]](numCols)
     var c = 0
     while (c < numCols) {
-      val colFlags = readInt(in, child, lastMessage)
-      val sxp = colFlags & 0xff
-      val expected = declared.fields(c).dataType match {
-        case StringType => STRSXP
-        case DoubleType => REALSXP
-        case IntegerType => INTSXP
-        case other => throw new IllegalArgumentException(
-          s"declared type $other is not supported over the R df stream format")
+      val sxp = readInt(in, child, lastMessage) & 0xff
+      val t = sxp match {
+        case INTSXP => IntegerType
+        case REALSXP => DoubleType
+        case STRSXP => StringType
+        case _ => null
       }
-      if (sxp != expected)
-        throw new IOException(
-          f"column '${declared.fields(c).name}' arrived as SEXP 0x$sxp%02x, " +
-            f"declared ${declared.fields(c).dataType.simpleString}")
+      declared match {
+        case Some(d) if t != d.fields(c).dataType =>
+          throw new IOException(
+            f"column '${d.fields(c).name}' arrived as SEXP 0x$sxp%02x, " +
+              f"declared ${d.fields(c).dataType.simpleString}")
+        case None if t == null =>
+          throw new IOException(f"unsupported column SEXP 0x$sxp%02x in R df message")
+        case _ => ()
+      }
+      types(c) = t
       val n = readInt(in, child, lastMessage)
       if (c == 0) {
         if (n < 0) throw new IOException("received negative number of rows")
         numRows = n
       } else if (n != numRows)
         throw new IOException(s"received lists of different sizes ($n vs $numRows)")
-      checkSize(declared.fields(c).dataType, n)
+      if ((if (t == DoubleType) 8L else 4L) * n > ChildProcess.MaxMessageBytes)
+        throw new IOException("response from child exceeds maximum size")
       val vals = new Array[Any](n)
-      declared.fields(c).dataType match {
+      t match {
         case DoubleType =>
           val buf = readFully(in, new Array[Byte](8 * n), child, lastMessage)
           var j = 0
@@ -293,106 +319,11 @@ object RdfProtocol {
             vals(j) = if (v == NaInt) null else v
             j += 1
           }
-        case StringType =>
-          var j = 0
-          while (j < n) {
-            val elFlags = readInt(in, child, lastMessage)
-            if ((elFlags & 0xff) != CHARSXP)
-              throw new IOException(
-                f"expected CHARSXP inside a string column, got 0x$elFlags%08x")
-            val len = readInt(in, child, lastMessage)
-            if (len < -1 || len > MaxMessageBytes)
-              throw new IOException(s"error reading string size ($len)")
-            vals(j) =
-              if (len == -1) null
-              else UTF8String.fromBytes(
-                readFully(in, new Array[Byte](len), child, lastMessage))
-            j += 1
-          }
-        case _ => () // unreachable: validated above
-      }
-      cols(c) = vals
-      c += 1
-    }
-    if ((flags & HasAttrBit) != 0) readNames(in, child, numCols, lastMessage)
-    val out = new Array[InternalRow](numRows)
-    var j = 0
-    while (j < numRows) {
-      val fields = new Array[Any](numCols)
-      var i = 0
-      while (i < numCols) { fields(i) = cols(i)(j); i += 1 }
-      out(j) = new GenericInternalRow(fields)
-      j += 1
-    }
-    out
-  }
-
-  /** Child-side / schema-agnostic decode: infer each column's Spark
-    * type from its SXP tag and the field names from the `names`
-    * attribute — the JVM analog of R's `data.frame(unserialize(con))`.
-    * Returns null for the empty end-of-data message. Used by the JVM
-    * test clients (and usable for `format=df` schema inference).
-    */
-  def readDynamic(in: InputStream): (StructType, Array[InternalRow]) = {
-    val head = readFully(in, new Array[Byte](Header.length), null, lastMessage = true)
-    if (head(0) != 'B' || head(1) != '\n' || readIntAt(head, 2) != 2)
-      throw new IOException("malformed R serialization header")
-    val flags = readInt(in, null, lastMessage = true)
-    if ((flags & 0xff) != VECSXP)
-      throw new IOException(f"expected an R list, got SEXP flags 0x$flags%08x")
-    val numCols = readInt(in, null, lastMessage = true)
-    if (numCols == 0) return null
-    var numRows = -1
-    val types = new Array[DataType](numCols)
-    val cols = new Array[Array[Any]](numCols)
-    var c = 0
-    while (c < numCols) {
-      val colFlags = readInt(in, null, lastMessage = true)
-      types(c) = (colFlags & 0xff) match {
-        case INTSXP => IntegerType
-        case REALSXP => DoubleType
-        case STRSXP => StringType
-        case other => throw new IOException(
-          f"unsupported column SEXP 0x$other%02x in R df message")
-      }
-      val n = readInt(in, null, lastMessage = true)
-      if (c == 0) {
-        if (n < 0) throw new IOException("received negative number of rows")
-        numRows = n
-      } else if (n != numRows)
-        throw new IOException(s"received lists of different sizes ($n vs $numRows)")
-      val vals = new Array[Any](n)
-      types(c) match {
-        case DoubleType =>
-          val buf = readFully(in, new Array[Byte](8 * n), null, lastMessage = true)
-          var j = 0
-          while (j < n) {
-            val bits = readLongAt(buf, 8 * j)
-            vals(j) = if (bits == NaRealBits) null
-                      else java.lang.Double.longBitsToDouble(bits)
-            j += 1
-          }
-        case IntegerType =>
-          val buf = readFully(in, new Array[Byte](4 * n), null, lastMessage = true)
-          var j = 0
-          while (j < n) {
-            val v = readIntAt(buf, 4 * j)
-            vals(j) = if (v == NaInt) null else v
-            j += 1
-          }
         case _ =>
           var j = 0
           while (j < n) {
-            val elFlags = readInt(in, null, lastMessage = true)
-            if ((elFlags & 0xff) != CHARSXP)
-              throw new IOException(f"expected CHARSXP, got 0x$elFlags%08x")
-            val len = readInt(in, null, lastMessage = true)
-            if (len < -1 || len > MaxMessageBytes)
-              throw new IOException(s"error reading string size ($len)")
-            vals(j) =
-              if (len == -1) null
-              else UTF8String.fromBytes(
-                readFully(in, new Array[Byte](len), null, lastMessage = true))
+            val bytes = readCharsxp(in, child, lastMessage)
+            vals(j) = if (bytes == null) null else UTF8String.fromBytes(bytes)
             j += 1
           }
       }
@@ -400,7 +331,7 @@ object RdfProtocol {
       c += 1
     }
     val names =
-      if ((flags & HasAttrBit) != 0) readNamesDynamic(in, numCols)
+      if ((flags & HasAttrBit) != 0) readNames(in, child, numCols, lastMessage)
       else Array.tabulate(numCols)(i => s"c$i")
     val rows = new Array[InternalRow](numRows)
     var j = 0
@@ -415,97 +346,44 @@ object RdfProtocol {
       StructField(nm, t, nullable = true) }), rows)
   }
 
-  private def readNamesDynamic(in: InputStream, numCols: Int): Array[String] = {
-    val listFlags = readInt(in, null, lastMessage = true)
-    if ((listFlags & 0xff) != LISTSXP || (listFlags & HasTagBit) == 0)
-      throw new IOException(f"expected a names pairlist, got 0x$listFlags%08x")
-    val symFlags = readInt(in, null, lastMessage = true)
-    if ((symFlags & 0xff) != SYMSXP)
-      throw new IOException(f"expected the names symbol, got 0x$symFlags%08x")
-    skipCharsxp(in, null, lastMessage = true)
-    val strFlags = readInt(in, null, lastMessage = true)
-    if ((strFlags & 0xff) != STRSXP)
-      throw new IOException(f"expected a names vector, got 0x$strFlags%08x")
-    val n = readInt(in, null, lastMessage = true)
-    if (n != numCols)
-      throw new IOException(s"names vector has $n entries for $numCols columns")
-    val names = new Array[String](n)
-    var i = 0
-    while (i < n) {
-      val elFlags = readInt(in, null, lastMessage = true)
-      if ((elFlags & 0xff) != CHARSXP)
-        throw new IOException(f"expected CHARSXP, got 0x$elFlags%08x")
-      val len = readInt(in, null, lastMessage = true)
-      if (len < 0 || len > MaxMessageBytes)
-        throw new IOException(s"error reading string size ($len)")
-      names(i) = new String(
-        readFully(in, new Array[Byte](len), null, lastMessage = true),
-        StandardCharsets.UTF_8)
-      i += 1
-    }
-    val tail = readInt(in, null, lastMessage = true)
-    if ((tail & 0xff) != NILVALUE)
-      throw new IOException(f"expected pairlist terminator, got 0x$tail%08x")
-    names
-  }
-
-  /** Read and discard the `names` attribute pairlist, validating its
-    * shape (the reference reads it by fixed sizes, `readDF:438-446`).
+  /** The `names` attribute pairlist (reference `R_TAIL_HDR` + name
+    * STRSXP + `R_TAIL`, read by fixed sizes at `readDF:438-446`).
     */
   private def readNames(in: InputStream, child: ChildProcess, numCols: Int,
-                        lastMessage: Boolean): Unit = {
+                        lastMessage: Boolean): Array[String] = {
     val listFlags = readInt(in, child, lastMessage)
     if ((listFlags & 0xff) != LISTSXP || (listFlags & HasTagBit) == 0)
       throw new IOException(f"expected a names pairlist, got flags 0x$listFlags%08x")
     val symFlags = readInt(in, child, lastMessage)
     if ((symFlags & 0xff) != SYMSXP)
       throw new IOException(f"expected the names symbol, got flags 0x$symFlags%08x")
-    skipCharsxp(in, child, lastMessage)
+    readCharsxp(in, child, lastMessage)
     val strFlags = readInt(in, child, lastMessage)
     if ((strFlags & 0xff) != STRSXP)
       throw new IOException(f"expected a names vector, got flags 0x$strFlags%08x")
     val n = readInt(in, child, lastMessage)
     if (n != numCols)
       throw new IOException(s"names vector has $n entries for $numCols columns")
-    var i = 0
-    while (i < n) { skipCharsxp(in, child, lastMessage); i += 1 }
+    val names = Array.fill(n) {
+      val bytes = readCharsxp(in, child, lastMessage)
+      if (bytes == null) "NA" else new String(bytes, StandardCharsets.UTF_8)
+    }
     val tail = readInt(in, child, lastMessage)
     if ((tail & 0xff) != NILVALUE)
       throw new IOException(f"expected pairlist terminator, got flags 0x$tail%08x")
+    names
   }
 
-  private def skipCharsxp(in: InputStream, child: ChildProcess,
-                          lastMessage: Boolean): Unit = {
+  /** One CHARSXP's bytes, or null for NA (length −1). */
+  private def readCharsxp(in: InputStream, child: ChildProcess,
+                          lastMessage: Boolean): Array[Byte] = {
     val flags = readInt(in, child, lastMessage)
     if ((flags & 0xff) != CHARSXP)
       throw new IOException(f"expected CHARSXP, got flags 0x$flags%08x")
     val len = readInt(in, child, lastMessage)
-    if (len < -1 || len > MaxMessageBytes)
+    if (len < -1 || len > ChildProcess.MaxMessageBytes)
       throw new IOException(s"error reading string size ($len)")
-    if (len > 0) readFully(in, new Array[Byte](len), child, lastMessage)
-  }
-
-  private def checkSize(dt: DataType, n: Int): Unit = {
-    val bytes = dt match {
-      case DoubleType => 8L * n
-      case _ => 4L * n
-    }
-    if (bytes > MaxMessageBytes)
-      throw new IOException("response from child exceeds maximum size")
-  }
-
-  private def readFully(in: InputStream, buf: Array[Byte], child: ChildProcess,
-                        lastMessage: Boolean): Array[Byte] = {
-    var off = 0
-    while (off < buf.length) {
-      val r = in.read(buf, off, buf.length - off)
-      if (r < 0) {
-        if (!lastMessage && child != null) child.throwIfDeadAfter(2000)
-        throw new EOFException("child stdout closed mid-message")
-      }
-      off += r
-    }
-    buf
+    if (len == -1) null else readFully(in, new Array[Byte](len), child, lastMessage)
   }
 
   private def readInt(in: InputStream, child: ChildProcess,

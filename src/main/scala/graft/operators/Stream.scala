@@ -59,7 +59,6 @@ object Stream {
     * Arrow protocol and read the declared types off the response frame.
     */
   def inferSchema(df: DataFrame, cmd: String, sampleRows: Int = 32): StructType = {
-    import org.apache.arrow.vector._
     val spark = df.sparkSession
     checkAllowed(spark, cmd)
     val sample = df.limit(sampleRows).queryExecution.toRdd.map(_.copy()).collect()
@@ -69,20 +68,13 @@ object Stream {
       ArrowProtocol.writeBatchInternal(child.stdin, allocator, df.schema, sample)
       val payload = ArrowProtocol.readFrame(child.stdout, child, lastMessage = false)
         .getOrElse(sys.error("child returned no data for schema inference"))
-      val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
-        new java.io.ByteArrayInputStream(payload), allocator)
-      try {
-        if (!reader.loadNextBatch()) sys.error("empty IPC frame")
-        StructType(reader.getVectorSchemaRoot.getFieldVectors.asScala.toSeq.map {
-          case v: BigIntVector    => StructField(v.getName, LongType)
-          case v: IntVector       => StructField(v.getName, IntegerType)
-          case v: Float8Vector    => StructField(v.getName, DoubleType)
-          case v: VarCharVector   => StructField(v.getName, StringType)
-          case v: VarBinaryVector => StructField(v.getName, BinaryType)
-          case v => throw new IllegalArgumentException(
-            s"unsupported child column type ${v.getClass.getSimpleName}")
-        })
-      } finally reader.close()
+      val reader = ArrowProtocol.loadBatch(payload, allocator)
+      try StructType(reader.getVectorSchemaRoot.getFieldVectors.asScala.toSeq.map { v =>
+        StructField(v.getName, ArrowProtocol.sparkType(v).getOrElse(
+          throw new IllegalArgumentException(
+            s"unsupported child column type ${v.getClass.getSimpleName}")))
+      })
+      finally reader.close()
     } finally {
       child.terminate()
       allocator.close()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.io.{ByteArrayOutputStream, EOFException, IOException, InputStream, OutputStream}
+import java.io.{ByteArrayOutputStream, IOException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.types._
@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * booleans `true`/`false`; numerics in round-trip decimal form.
   */
 object TsvProtocol {
-  val MaxResponseBytes: Long = 1L << 30 // reference src/TSVInterface.h:102
+  import ChildProcess.readByte
 
   def escape(s: String): String = {
     val sb = new StringBuilder(s.length)
@@ -141,24 +141,10 @@ object TsvProtocol {
       val b = readByte(in, child, lastMessage)
       if (b == '\n') newlines += 1
       buf.write(b)
-      if (buf.size() > MaxResponseBytes)
+      if (buf.size() > ChildProcess.MaxMessageBytes)
         throw new IOException("response from child exceeds maximum size")
     }
     val s = buf.toString(StandardCharsets.UTF_8.name())
     s.substring(0, s.length - 1) // strip final newline, as the reference does
-  }
-
-  private def readByte(in: InputStream, child: ChildProcess,
-                       lastMessage: Boolean): Int = {
-    val b = in.read()
-    if (b < 0) {
-      // After EOF was sent, a child may exit right after its last write;
-      // reaching stream-end there is still an error because the final
-      // message must be complete (reference reads it with liveness checks
-      // disabled but still requires the bytes).
-      if (!lastMessage) child.throwIfDeadAfter(2000)
-      throw new EOFException("child stdout closed mid-message")
-    }
-    b
   }
 }

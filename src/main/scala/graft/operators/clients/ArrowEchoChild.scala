@@ -1,12 +1,10 @@
 package graft.operators.clients
 
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, EOFException}
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.channels.Channels
+import java.io.{BufferedInputStream, BufferedOutputStream, PushbackInputStream}
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.VectorSchemaRoot
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
+
+import graft.operators.ArrowProtocol
 
 /** Child-side Arrow protocol client: echoes every batch back verbatim.
   *
@@ -21,60 +19,31 @@ import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
   * client waits for the NEXT stream's first frame instead of exiting —
   * exactly the reference clients' shape, whose `map(f)` loop only ends
   * when the parent closes the pipe. EOF *between* streams is therefore
-  * the one clean exit; EOF mid-frame is still a protocol error.
+  * the one clean exit; EOF mid-frame is still a protocol error (inside
+  * `readFrame`), told apart by peeking the frame's first byte.
   */
 object ArrowEchoChild {
   def main(args: Array[String]): Unit = {
-    val in = new BufferedInputStream(System.in, 1 << 20)
+    val in = new PushbackInputStream(new BufferedInputStream(System.in, 1 << 20), 1)
     val out = new BufferedOutputStream(System.out, 1 << 20)
     val allocator = new RootAllocator(Long.MaxValue)
-    // -1 = parent closed the pipe at a stream boundary (clean shutdown)
-    def readLenOrEof(): Long = {
-      val b = new Array[Byte](8)
-      var off = 0
-      while (off < 8) {
-        val r = in.read(b, off, 8 - off)
-        if (r < 0) {
-          if (off == 0) return -1L
-          throw new EOFException("parent closed pipe mid-header")
-        }
-        off += r
-      }
-      ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getLong
-    }
-    def writeLen(n: Long): Unit = {
-      val b = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-      b.putLong(n)
-      out.write(b.array())
-    }
     var done = false
     while (!done) {
-      val len = readLenOrEof()
-      if (len < 0) {
+      val first = in.read()
+      if (first < 0) {
         done = true // pool shutdown: pipe closed between streams
-      } else if (len == 0) {
-        writeLen(0); out.flush() // final message: no data; await next stream
       } else {
-        val payload = new Array[Byte](len.toInt)
-        var off = 0
-        while (off < payload.length) {
-          val r = in.read(payload, off, payload.length - off)
-          if (r < 0) throw new EOFException("parent closed pipe mid-frame")
-          off += r
+        in.unread(first)
+        ArrowProtocol.readFrame(in, null, lastMessage = true) match {
+          case None =>
+            ArrowProtocol.writeEof(out) // final message: no data; await next stream
+          case Some(payload) =>
+            // Decode and re-encode (rather than byte-copy) so the test also
+            // proves the frames are valid single-batch IPC streams.
+            val reader = ArrowProtocol.loadBatch(payload, allocator)
+            try ArrowProtocol.writeRoot(out, reader.getVectorSchemaRoot)
+            finally reader.close()
         }
-        // Decode and re-encode (rather than byte-copy) so the test also
-        // proves the frames are valid single-batch IPC streams.
-        val reader = new ArrowStreamReader(new ByteArrayInputStream(payload), allocator)
-        if (!reader.loadNextBatch()) throw new EOFException("empty IPC frame")
-        val root: VectorSchemaRoot = reader.getVectorSchemaRoot
-        val baos = new ByteArrayOutputStream()
-        val writer = new ArrowStreamWriter(root, null, Channels.newChannel(baos))
-        writer.start(); writer.writeBatch(); writer.end(); writer.close()
-        reader.close()
-        val bytes = baos.toByteArray
-        writeLen(bytes.length.toLong)
-        out.write(bytes)
-        out.flush()
       }
     }
   }

@@ -141,13 +141,11 @@ case class StreamExec(
       case other => other.executeBroadcast[Array[InternalRow]]()
     }
 
-  /** Input rows regardless of the child's chosen format: when this
-    * operator declares columnar support, the planner hands it columnar
-    * CHILDREN too (no ColumnarToRow is inserted below), so a columnar
-    * child must be consumed via executeColumnar and its batches
+  /** Input rows for the row formats (TSV, R-DF), whatever the child's
+    * chosen format: a child that also runs columnar (a cached table's
+    * scan) is consumed via executeColumnar and its batches
     * row-iterated. Rows are only valid until the next batch — callers
-    * copy (Arrow, R-DF) or format immediately (TSV), as with any row
-    * input.
+    * copy (R-DF) or format immediately (TSV), as with any row input.
     */
   private def inputRows(): RDD[InternalRow] =
     if (input.supportsColumnar)
@@ -264,11 +262,12 @@ case class StreamExec(
       new ColumnarBatch((dataCols ++ lineage).toArray, n)
     }
 
-    /** The Arrow side of [[protocol]] for one task; `frames` builds the
-      * data frames against the task's allocator.
-      */
-    def arrowPartition(t: Task)(
-        frames: RootAllocator => Iterator[() => Unit]): Iterator[ColumnarBatch] = {
+    // The input is always columnar: the planner's transition rule wraps
+    // a row child in RowToColumnarExec, and columnar children (a
+    // vectorized parquet scan, a cached table, an upstream Arrow pipe)
+    // encode column-at-a-time straight from their vectors — no
+    // InternalRow materialization, no per-row copy.
+    perPartition(input.executeColumnar()) { (batches, t) =>
       val allocator = new RootAllocator(Long.MaxValue)
       var pendingBatch: ColumnarBatch = null
       var pendingReader: ArrowStreamReader = null
@@ -289,10 +288,31 @@ case class StreamExec(
         }
       }
       t.onEnd { try retire() finally allocator.close() }
+      val buf = new ArrowProtocol.ColumnarFrameBuffer(inSchema, allocator)
+      // registered after the allocator-close listener: completion
+      // listeners run LIFO, so the buffer's root closes before the
+      // allocator it was allocated from
+      t.onEnd(buf.close())
+      // one frame = exactly `chunk` rows (the declared chunk_size),
+      // accumulated across scan batches — `append` copies into the
+      // Arrow builders, so pulling the next (buffer-recycling) scan
+      // batch mid-frame is safe. Filling only happens between
+      // exchanges: the loop pulls the next frame only after the
+      // previous frame's writer thread has been joined.
+      var cur: ColumnarBatch = null
+      var off = 0
+      def fill(): Unit =
+        while (buf.rowCount < chunk && (cur != null || batches.hasNext)) {
+          if (cur == null) { cur = batches.next(); off = 0 }
+          val take = math.min(chunk - buf.rowCount, cur.numRows - off)
+          if (take > 0) { buf.append(cur, off, take); off += take }
+          if (off >= cur.numRows) cur = null
+        }
       val stdin = t.child.stdin
       protocol[ArrowStreamReader, ColumnarBatch](t,
         rows => () => ArrowProtocol.writeBatchInternal(stdin, allocator, sideSchema, rows),
-        frames(allocator),
+        Iterator.continually(fill()).takeWhile(_ => buf.rowCount > 0) // O16
+          .map(_ => () => buf.writeAndReset(stdin)),
         () => ArrowProtocol.writeEof(stdin),
         last => ArrowProtocol.readMessageReader(t.child.stdout, t.child, allocator,
           declared, lastMessage = last),
@@ -302,48 +322,6 @@ case class StreamExec(
           pendingBatch
         },
         () => retire())
-    }
-
-    if (input.supportsColumnar) {
-      // Columnar children (vectorized parquet scan, an upstream Arrow
-      // pipe) encode column-at-a-time straight from their vectors — no
-      // InternalRow materialization, no per-row copy.
-      perPartition(input.executeColumnar()) { (batches, t) =>
-        arrowPartition(t) { allocator =>
-          val buf = new ArrowProtocol.ColumnarFrameBuffer(inSchema, allocator)
-          // registered after arrowPartition's allocator-close listener:
-          // completion listeners run LIFO, so the buffer's root closes
-          // before the allocator it was allocated from
-          t.onEnd(buf.close())
-          // one frame = exactly `chunk` rows (the declared chunk_size),
-          // accumulated across scan batches — `append` copies into the
-          // Arrow builders, so pulling the next (buffer-recycling) scan
-          // batch mid-frame is safe. Filling only happens between
-          // exchanges: the loop pulls the next frame only after the
-          // previous frame's writer thread has been joined.
-          var cur: ColumnarBatch = null
-          var off = 0
-          def fill(): Unit =
-            while (buf.rowCount < chunk && (cur != null || batches.hasNext)) {
-              if (cur == null) { cur = batches.next(); off = 0 }
-              val take = math.min(chunk - buf.rowCount, cur.numRows - off)
-              if (take > 0) { buf.append(cur, off, take); off += take }
-              if (off >= cur.numRows) cur = null
-            }
-          Iterator.continually(fill()).takeWhile(_ => buf.rowCount > 0) // O16
-            .map(_ => () => buf.writeAndReset(t.child.stdin))
-        }
-      }
-    } else {
-      // row children: copy before grouping (the input iterator may reuse
-      // row objects across next() calls)
-      perPartition(input.execute()) { (rows, t) =>
-        arrowPartition(t) { allocator =>
-          rows.map(_.copy()).grouped(chunk).map { c =>
-            () => ArrowProtocol.writeBatchInternal(t.child.stdin, allocator, inSchema, c)
-          }
-        }
-      }
     }
   }
 

@@ -1,9 +1,10 @@
 package graft.sql
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ExpressionInfo, Multiply, Sqrt}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import graft.functions.DotProduct
 import graft.operators.Stream
 
@@ -123,70 +124,38 @@ object GraftExtensions {
       .queryExecution.logical
   }
 
-  /** SQL table function `graft_stream_arrow('<view>', '<cmd>',
-    * '<types csv>', '<names csv>'[, chunk_size])` — the reference's
-    * `stream(A, 'cmd', format:'feather', types:…, names:…)`
+  /** SQL table functions `graft_stream_arrow('<view>', '<cmd>',
+    * '<types csv>', '<names csv>'[, chunk_size])` and `graft_stream_df`
+    * (same arguments) — the reference's `stream(A, 'cmd',
+    * format:'feather'|'df', types:…, names:…)`
     * (`src/StreamSettings.h:97-116`) callable from plain SQL; the
     * declared types/names lists fix the output schema at analysis time
-    * exactly as the mandatory keywords do.
+    * exactly as the mandatory keywords do. `build` is `Stream.arrow` or
+    * `Stream.df`, which reject the types their format cannot carry.
     */
-  private def streamArrowPlan(args: Seq[Expression]): LogicalPlan = {
+  private def declaredStreamPlan(fn: String, format: String,
+                                 build: (DataFrame, String, StructType, Int) => DataFrame)(
+                                 args: Seq[Expression]): LogicalPlan = {
     require(args.length == 4 || args.length == 5,
-      "graft_stream_arrow expects (table_name, command, types_csv, names_csv[, chunk_size]) literals")
-    val str = lit("graft_stream_arrow") _
+      s"$fn expects (table_name, command, types_csv, names_csv[, chunk_size]) literals")
+    val str = lit(fn) _
     val types = str(args(2)).split(',').map(_.trim.toLowerCase)
     val names = str(args(3)).split(',').map(_.trim)
     require(types.length == names.length,
       s"types (${types.length}) and names (${names.length}) must have equal arity")
-    val fields = names.zip(types).map { case (n, t) =>
-      val dt = t match {
-        case "int64" | "long" | "bigint" => org.apache.spark.sql.types.LongType
-        case "int32" | "int"             => org.apache.spark.sql.types.IntegerType
-        case "double" | "float64"        => org.apache.spark.sql.types.DoubleType
-        case "string"                    => org.apache.spark.sql.types.StringType
-        case "binary"                    => org.apache.spark.sql.types.BinaryType
+    val declared = StructType(names.zip(types).toSeq.map { case (n, t) =>
+      StructField(n, t match {
+        case "int64" | "long" | "bigint" => LongType
+        case "int32" | "int"             => IntegerType
+        case "double" | "float64"        => DoubleType
+        case "string"                    => StringType
+        case "binary"                    => BinaryType
         case other => throw new IllegalArgumentException(
-          s"type $other not supported over the Arrow stream format " +
-            "(supported: int64, int32, double, string, binary)")
-      }
-      org.apache.spark.sql.types.StructField(n, dt)
-    }
+          s"type $other not supported over the $format stream format")
+      })
+    })
     val chunkSize = if (args.length == 5) str(args(4)).toInt else 10000
-    val spark = SparkSession.active
-    Stream.arrow(spark.table(str(args.head)), str(args(1)),
-      org.apache.spark.sql.types.StructType(fields.toSeq), chunkSize)
-      .queryExecution.logical
-  }
-
-  /** SQL table function `graft_stream_df('<view>', '<cmd>',
-    * '<types csv>', '<names csv>'[, chunk_size])` — the reference's
-    * `stream(A, 'cmd', format:'df', types:…, names:…)` callable from
-    * plain SQL; same mandatory declared-schema rule as the Arrow form,
-    * restricted to the R data-frame type triple.
-    */
-  private def streamDfPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.length == 4 || args.length == 5,
-      "graft_stream_df expects (table_name, command, types_csv, names_csv[, chunk_size]) literals")
-    val str = lit("graft_stream_df") _
-    val types = str(args(2)).split(',').map(_.trim.toLowerCase)
-    val names = str(args(3)).split(',').map(_.trim)
-    require(types.length == names.length,
-      s"types (${types.length}) and names (${names.length}) must have equal arity")
-    val fields = names.zip(types).map { case (n, t) =>
-      val dt = t match {
-        case "int32" | "int"      => org.apache.spark.sql.types.IntegerType
-        case "double" | "float64" => org.apache.spark.sql.types.DoubleType
-        case "string"             => org.apache.spark.sql.types.StringType
-        case other => throw new IllegalArgumentException(
-          s"type $other not supported over the R df stream format " +
-            "(supported: int32, double, string)")
-      }
-      org.apache.spark.sql.types.StructField(n, dt)
-    }
-    val chunkSize = if (args.length == 5) str(args(4)).toInt else 10000
-    val spark = SparkSession.active
-    Stream.df(spark.table(str(args.head)), str(args(1)),
-      org.apache.spark.sql.types.StructType(fields.toSeq), chunkSize)
+    build(SparkSession.active.table(str(args.head)), str(args(1)), declared, chunkSize)
       .queryExecution.logical
   }
 
@@ -680,10 +649,12 @@ object GraftExtensions {
       streamTsvPlan _),
     "graft_stream_arrow" -> (
       new ExpressionInfo(Stream.getClass.getName, "graft_stream_arrow"),
-      streamArrowPlan _),
+      declaredStreamPlan("graft_stream_arrow", "Arrow",
+        Stream.arrow(_, _, _, _)) _),
     "graft_stream_df" -> (
       new ExpressionInfo(Stream.getClass.getName, "graft_stream_df"),
-      streamDfPlan _),
+      declaredStreamPlan("graft_stream_df", "R df",
+        Stream.df(_, _, _, _)) _),
     "graft_fuzzy_pairs" -> (
       new ExpressionInfo(graft.operators.FuzzyMatch.getClass.getName, "graft_fuzzy_pairs"),
       fuzzyPairsPlan _),

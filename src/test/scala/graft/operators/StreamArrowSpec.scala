@@ -98,6 +98,15 @@ class StreamArrowSpec extends SparkSpec {
         }
         assert(e2.getMessage.contains("exceeds maximum size"), s"len=$len")
       }
+      // a truncated length prefix or payload with no child process (an
+      // in-memory decode) is a plain EOF, not a NullPointerException
+      intercept[java.io.EOFException] {
+        ArrowProtocol.readFrame(
+          new java.io.ByteArrayInputStream(Array[Byte](8, 0, 0)), null, lastMessage = false)
+      }
+      intercept[java.io.EOFException] { // 64 bytes promised, 16 follow
+        ArrowProtocol.readFrame(frame(64), null, lastMessage = false)
+      }
     } finally allocator.close()
   }
 
@@ -118,11 +127,18 @@ class StreamArrowSpec extends SparkSpec {
     val df = spark.range(0, 10).coalesce(1).select($"id")
     val side = spark.range(100, 103).select($"id")
     val declared = StructType(Seq(StructField("id", LongType)))
-    val out = Stream.arrow(df, echoCmd, declared, side = Some(side)).collect()
+    val plan = Stream.arrow(df, echoCmd, declared, side = Some(side))
+    val out = plan.collect()
     assert(out.length == 13)
     val firstChunk = out.filter(_.getAs[Long]("chunk_no") == 0L).map(_.getLong(0)).sorted
     assert(firstChunk.toSeq == Seq(100L, 101L, 102L))
     assert(out.map(_.getLong(0)).sum == (0L until 10L).sum + 100 + 101 + 102)
+    // the row input reaches the operator through the planner's
+    // RowToColumnarExec: the columnar input path is StreamExec's only one
+    val stream = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectFirst(plan.queryExecution.executedPlan) { case s: graft.plans.StreamExec => s }.get
+    assert(stream.input.isInstanceOf[org.apache.spark.sql.execution.RowToColumnarExec],
+      s"expected RowToColumnarExec under StreamExec, got:\n${stream.input}")
   }
 
   test("a one-line empty TSV response keeps its row ('1\\n\\n' is not 'no data')") {

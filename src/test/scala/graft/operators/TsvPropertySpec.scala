@@ -45,6 +45,15 @@ class TsvPropertySpec extends AnyFunSuite {
     assert(cell(true, BooleanType) == "true")
   }
 
+  test("a truncated message with no child process is a plain EOF") {
+    // an in-memory decode has no child to diagnose: "3 lines" promised,
+    // one delivered
+    intercept[java.io.EOFException] {
+      TsvProtocol.readMessage(
+        new java.io.ByteArrayInputStream("3\na\n".getBytes("UTF-8")), null, lastMessage = false)
+    }
+  }
+
   test("row formatting joins with single tabs regardless of content") {
     val schema = StructType(Seq(StructField("a", StringType), StructField("b", StringType)))
     samples(Gen.zip(Arbitrary.arbitrary[String], Arbitrary.arbitrary[String]), 300)
