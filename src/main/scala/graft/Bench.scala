@@ -152,8 +152,7 @@ object Bench {
     // speedup in the totals (the sf1 smoke's q144 overflow hid this
     // way). The JSON line carries the failed set so no reader has to
     // scrape stderr.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+    val results = Verify.selected(SparkEntry.queries, only).toSeq.sortBy(_._1)
       .map { case (name, fn) =>
         val cold = once(name, fn)
         val timed = Seq.fill(reps)(once(name, fn)).sorted

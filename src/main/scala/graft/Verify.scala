@@ -3,6 +3,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The entries of `m` a run filtered by `only` covers: all of them
+    * with no filter, else those whose name starts with ANY prefix — so
+    * the dumped queries and the oracle SQL written beside them are the
+    * same names.
+    */
+  def selected[V](m: Map[String, V], only: Option[Seq[String]]): Map[String, V] =
+    m.filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 2 || args.length > 3) {
       System.err.println("usage: graft.Verify <sfDir> <outDir> [onlyQueryPrefix]")
@@ -41,8 +49,7 @@ object Verify {
       }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/verify_summary.json"), sjson)
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+    selected(SparkEntry.queries, only)
       .foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         try {
@@ -71,7 +78,7 @@ object Verify {
         writeSummary()
         graft.Tables.releaseOperatorCaches(spark)
       }
-    val json = SparkEntry.oracleSql
+    val json = selected(SparkEntry.oracleSql, only)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -162,7 +162,10 @@ object AhoCorasick {
     new GenericArrayData(a.count(text.toString).map(v => v: Any))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ac_count", exprs => AhoCorasickCounts(exprs(0), exprs(1)), "built-in")
+  /** The multi-pattern counter's SQL function, declared once. */
+  val functions: Seq[graft.sql.FunctionTable.Entry[Expression]] = Seq(
+    graft.sql.FunctionTable.kernel[AhoCorasickCounts]("graft_ac_count")(
+      a => AhoCorasickCounts(a(0), a(1))))
+
+  def register(spark: SparkSession): Unit = graft.sql.FunctionTable.register(spark, functions)
 }

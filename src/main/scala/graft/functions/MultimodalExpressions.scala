@@ -4,7 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -2137,46 +2137,22 @@ case class GrftFrames(first: Expression, second: Expression, third: Expression)
 }
 
 object MultimodalExpressions {
-  val builders: Map[String, (ExpressionInfo, Seq[Expression] => Expression)] = Map(
-    "graft_meta" -> (
-      new ExpressionInfo(classOf[GrftMeta].getName, "graft_meta"),
-      (args: Seq[Expression]) => GrftMeta(args.head)),
-    "graft_stats" -> (
-      new ExpressionInfo(classOf[GrftStats].getName, "graft_stats"),
-      (args: Seq[Expression]) => GrftStats(args.head)),
-    "graft_pixels" -> (
-      new ExpressionInfo(classOf[GrftPixels].getName, "graft_pixels"),
-      (args: Seq[Expression]) => GrftPixels(args.head)),
-    "graft_samples" -> (
-      new ExpressionInfo(classOf[GrftSamples].getName, "graft_samples"),
-      (args: Seq[Expression]) => GrftSamples(args.head)),
-    "graft_video" -> (
-      new ExpressionInfo(classOf[GrftVideo].getName, "graft_video"),
-      (args: Seq[Expression]) => GrftVideo(args.head)),
-    "graft_ahash" -> (
-      new ExpressionInfo(classOf[GrftAHash].getName, "graft_ahash"),
-      (args: Seq[Expression]) => GrftAHash(args.head)),
-    "graft_afp" -> (
-      new ExpressionInfo(classOf[GrftAudioFp].getName, "graft_afp"),
-      (args: Seq[Expression]) => GrftAudioFp(args.head)),
-    "graft_aenv" -> (
-      new ExpressionInfo(classOf[GrftAudioEnv].getName, "graft_aenv"),
-      (args: Seq[Expression]) => GrftAudioEnv(args.head)),
-    "graft_vhash" -> (
-      new ExpressionInfo(classOf[GrftVideoHash].getName, "graft_vhash"),
-      (args: Seq[Expression]) => GrftVideoHash(args.head)),
-    "graft_resize" -> (
-      new ExpressionInfo(classOf[GrftResize].getName, "graft_resize"),
-      (args: Seq[Expression]) => GrftResize(args(0), args(1), args(2))),
-    "graft_frames" -> (
-      new ExpressionInfo(classOf[GrftFrames].getName, "graft_frames"),
-      (args: Seq[Expression]) => GrftFrames(args(0), args(1), args(2)))
-  )
+  import graft.sql.FunctionTable.kernel
+
+  /** The GRFT media kernels' SQL functions, declared once. */
+  val functions: Seq[graft.sql.FunctionTable.Entry[Expression]] = Seq(
+    kernel[GrftMeta]("graft_meta")(a => GrftMeta(a.head)),
+    kernel[GrftStats]("graft_stats")(a => GrftStats(a.head)),
+    kernel[GrftPixels]("graft_pixels")(a => GrftPixels(a.head)),
+    kernel[GrftSamples]("graft_samples")(a => GrftSamples(a.head)),
+    kernel[GrftVideo]("graft_video")(a => GrftVideo(a.head)),
+    kernel[GrftAHash]("graft_ahash")(a => GrftAHash(a.head)),
+    kernel[GrftAudioFp]("graft_afp")(a => GrftAudioFp(a.head)),
+    kernel[GrftAudioEnv]("graft_aenv")(a => GrftAudioEnv(a.head)),
+    kernel[GrftVideoHash]("graft_vhash")(a => GrftVideoHash(a.head)),
+    kernel[GrftResize]("graft_resize")(a => GrftResize(a(0), a(1), a(2))),
+    kernel[GrftFrames]("graft_frames")(a => GrftFrames(a(0), a(1), a(2))))
 
   /** Register the GRFT functions in the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, (_, builder)) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
+  def register(spark: SparkSession): Unit = graft.sql.FunctionTable.register(spark, functions)
 }

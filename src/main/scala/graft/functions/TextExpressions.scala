@@ -964,33 +964,24 @@ case class CdcByteCuts(bin: Expression, w: Expression, d: Expression)
 }
 
 object TextExpressions {
+  import graft.sql.FunctionTable.kernel
+
+  /** The text kernels' SQL functions, declared once. */
+  val functions: Seq[graft.sql.FunctionTable.Entry[Expression]] = Seq(
+    kernel[WordShingles]("graft_shingles")(a => WordShingles(a(0), a(1))),
+    kernel[WordSimHash]("graft_simhash")(a => WordSimHash(a(0), a(1))),
+    kernel[MinHashAgg]("graft_minhash")(a => MinHashAgg(a(0), a(1), a(2))),
+    kernel[WordSpans]("graft_spans")(a => WordSpans(a(0), a(1))),
+    kernel[WordGrams]("graft_grams")(a => WordGrams(a(0), a(1))),
+    kernel[WinnowFingerprints]("graft_winnow")(a => WinnowFingerprints(a(0), a(1), a(2))),
+    kernel[CdcCuts]("graft_cdc")(a => CdcCuts(a(0), a(1), a(2))),
+    kernel[CdcByteCuts]("graft_cdc_bytes")(a => CdcByteCuts(a(0), a(1), a(2))),
+    kernel[FeatureHash]("graft_fhash")(a => FeatureHash(a(0), a(1))),
+    kernel[CharWindows]("graft_char_windows")(a => CharWindows(a(0), a(1))),
+    kernel[GramHashes]("graft_gram_hashes")(a => GramHashes(a(0), a(1), a(2))))
+
   /** Register the text kernels in the session's function registry
     * (idempotent), for the DataFrame API and SQL alike.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => WordShingles(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => WordSimHash(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashAgg(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_spans", exprs => WordSpans(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_grams", exprs => WordGrams(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow", exprs => WinnowFingerprints(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc", exprs => CdcCuts(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc_bytes", exprs => CdcByteCuts(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fhash", exprs => FeatureHash(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_windows", exprs => CharWindows(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_hashes",
-      exprs => GramHashes(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
+  def register(spark: SparkSession): Unit = graft.sql.FunctionTable.register(spark, functions)
 }

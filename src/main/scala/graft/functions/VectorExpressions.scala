@@ -1001,33 +1001,22 @@ case class PqAssignInt(v: Expression, gmx: Expression, cents: Expression,
 }
 
 object VectorExpressions {
+  import graft.sql.FunctionTable.kernel
+
+  /** The vector kernels' SQL functions, declared once. */
+  val functions: Seq[graft.sql.FunctionTable.Entry[Expression]] = Seq(
+    kernel[DotProduct]("graft_dot")(a => DotProduct(a(0), a(1))),
+    kernel[HyperplaneCodes]("graft_hyperplane")(a => HyperplaneCodes(a(0), a(1), a(2), a(3))),
+    kernel[ArgMaxCosine]("graft_argmax_cos")(a => ArgMaxCosine(a(0), a(1), a(2))),
+    kernel[Quantize8]("graft_quantize8")(a => Quantize8(a(0))),
+    kernel[Quantize8Arr]("graft_quantize8_arr")(a => Quantize8Arr(a(0))),
+    kernel[Dot8]("graft_dot8")(a => Dot8(a(0), a(1))),
+    kernel[PqEncode]("graft_pq_encode")(a => PqEncode(a(0), a(1), a(2), a(3))),
+    kernel[PqAssignInt]("graft_pq_assign")(a => PqAssignInt(a(0), a(1), a(2), a(3), a(4))),
+    kernel[RotateGivens]("graft_rotate")(a => RotateGivens(a(0), a(1), a(2), a(3))))
+
   /** Register the vector kernels in the session's function registry
     * (idempotent), for the DataFrame API (via `expr`) and SQL alike.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hyperplane",
-      exprs => HyperplaneCodes(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_argmax_cos",
-      exprs => ArgMaxCosine(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quantize8", exprs => Quantize8(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quantize8_arr", exprs => Quantize8Arr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot8", exprs => Dot8(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode",
-      exprs => PqEncode(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_assign",
-      exprs => PqAssignInt(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rotate",
-      exprs => RotateGivens(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-  }
+  def register(spark: SparkSession): Unit = graft.sql.FunctionTable.register(spark, functions)
 }

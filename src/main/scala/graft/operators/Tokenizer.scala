@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -173,7 +173,8 @@ object Tokenizer {
         .limit(1).collect() // ONE row crosses to the driver per round
       top.headOption match {
         case None => exhausted = true // no pairs left to merge
-        case Some(Row(left: String, right: String, n: Long)) =>
+        case Some(best) =>
+          val (left, right, n) = (best.getString(0), best.getString(1), best.getLong(2))
           merges += ((rank, left, right, left + right, n))
           syms = syms.withColumn("syms",
             applyMerge(left, right)(col("syms"))).localCheckpoint(true)

@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming flavor of the engine (SURVEY.md §7.2 M8).
   *
@@ -154,7 +156,7 @@ object StreamingOps {
     * higher-order array folds over the row's own words — narrow, no
     * shuffle, no state.
     */
-  def simhash64Col(textCol: String): org.apache.spark.sql.Column =
+  def simhash64Col(textCol: String): Column =
     expr(
       s"""aggregate(sequence(0, 63), cast(0 as bigint), (acc, j) ->
          |  acc + IF(aggregate(
@@ -243,6 +245,63 @@ object StreamingOps {
         col(s"r.$rightTs") <= col(s"l.$leftTs") + expr(s"INTERVAL $within"))
   }
 
+  private type Sink = (DataFrame, Long) => Unit
+
+  /** The one per-batch adapter: `each` runs on every micro-batch of
+    * `input` (append mode, foreachBatch) — the same batch operator
+    * serving the stream through one Dataset entry point.
+    */
+  private def perBatch(input: DataFrame)(each: Sink): StreamingQuery =
+    input.writeStream.outputMode(OutputMode.Append).foreachBatch(each).start()
+
+  /** `each`, then release the operator caches its probes tracked
+    * (`graft.Tables.trackOperatorCache`), so a long-running stream
+    * never accumulates them.
+    */
+  private def releasing(each: Sink): Sink = (batch, batchId) =>
+    try each(batch, batchId)
+    finally graft.Tables.releaseTrackedCaches(batch.sparkSession)
+
+  /** Hand `probe` to the sink; with `appendAfterProbe`, pin it first
+    * (persist + count) so the `append` of the batch to the standing
+    * index cannot leak into a sink that evaluates lazily, and release
+    * the pinned blocks once the append is done.
+    */
+  private def probeThenAppend(probe: DataFrame, batchId: Long, sink: Sink,
+                              appendAfterProbe: Boolean)(append: => Unit): Unit =
+    if (appendAfterProbe) {
+      val pinned = probe.persist()
+      try {
+        pinned.count() // break the probe->index dependency NOW
+        sink(pinned, batchId)
+        append
+      } finally pinned.unpersist(blocking = false)
+    } else sink(probe, batchId)
+
+  /** `batch` grouped by `key` and aggregated by `agg`, collected: at
+    * most [[MaxDriverGroups]] groups (the `limit(n+1)` means the driver
+    * never receives more), or the stream fails loudly.
+    */
+  private def driverGroups(batch: DataFrame, key: String, agg: Column,
+                           fn: String, held: String): Array[Row] = {
+    val groups = batch.groupBy(col(key)).agg(agg).limit(MaxDriverGroups + 1).collect()
+    require(groups.length <= MaxDriverGroups,
+      s"$fn: > $MaxDriverGroups distinct $key values in one batch — the driver-held $held")
+    groups
+  }
+
+  /** Fold one batch's per-score `agg` into the driver-held cumulative
+    * distribution `cum` of a bounded integer score.
+    */
+  private def foldScores(cum: mutable.Map[Long, Long], batch: DataFrame,
+                         scoreCol: String, agg: Column, fn: String): Unit = {
+    driverGroups(batch, scoreCol, agg, fn, "distribution assumes a bounded " +
+      "integer score (bucket/round the score upstream)")
+      .foreach(r => cum(r.getLong(0)) = cum.getOrElse(r.getLong(0), 0L) + r.getLong(1))
+    require(cum.size <= MaxDriverGroups,
+      s"$fn: cumulative distribution exceeded $MaxDriverGroups distinct scores")
+  }
+
   /** Run ANY batch DataFrame transform per micro-batch — the
     * foreachBatch adapter that lets every stateless batch operator
     * (decontamination probes against a standing index, fingerprints,
@@ -252,27 +311,16 @@ object StreamingOps {
     * watermark-free.
     */
   def transformPerBatch(input: DataFrame, f: DataFrame => DataFrame,
-                        sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    input.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(f(batch), batchId)
-      }
-      .start()
+                        sink: (DataFrame, Long) => Unit): StreamingQuery =
+    perBatch(input)((batch, batchId) => sink(f(batch), batchId))
 
   /** Run the pipe operator on each micro-batch of a stream: the
     * streaming flavor of `Stream.tsv` (reference chunk-sequence model
     * mapped onto micro-batches).
     */
-  def pipePerBatch(input: DataFrame, cmd: String, sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    input.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.Stream.tsv(batch, cmd), batchId)
-      }
-      .start()
+  def pipePerBatch(input: DataFrame, cmd: String,
+                   sink: (DataFrame, Long) => Unit): StreamingQuery =
+    transformPerBatch(input, graft.operators.Stream.tsv(_, cmd), sink)
 
   /** Incremental CCNet-style perplexity bucketing over a stream of
     * ALREADY-SCORED documents `(id, lm_mean)` (the scoring LM is a
@@ -292,33 +340,19 @@ object StreamingOps {
     */
   def pplBucketsPerBatch(scored: DataFrame, scoreCol: String = "lm_mean",
                          nBuckets: Int = 3, sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    val cum = scala.collection.mutable.Map.empty[Long, Long]
-    scored.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val perScore = batch.groupBy(col(scoreCol)).agg(count(lit(1)).as("cnt"))
-          .limit(MaxDriverGroups + 1) // driver never receives more
-          .collect()
-        require(perScore.length <= MaxDriverGroups,
-          s"pplBucketsPerBatch: > $MaxDriverGroups distinct $scoreCol values " +
-            "in one batch — the driver-held distribution assumes a bounded " +
-            "integer score (bucket/round the score upstream)")
-        perScore
-          .foreach(r => cum(r.getLong(0)) = cum.getOrElse(r.getLong(0), 0L) + r.getLong(1))
-        require(cum.size <= MaxDriverGroups,
-          s"pplBucketsPerBatch: cumulative distribution exceeded " +
-            s"$MaxDriverGroups distinct scores")
-        // bucketThresholds' distribution contract is the (lm_mean, cnt)
-        // schema; rename on the way in and out so any scoreCol works
-        val dist = cum.toSeq.toDF("lm_mean", "cnt")
-        val thresholds = graft.operators.NgramLm.bucketThresholds(dist, nBuckets)
-          .withColumnRenamed("lm_mean", scoreCol)
-        sink(batch.join(broadcast(thresholds), Seq(scoreCol)), batchId)
-      }
-      .start()
+  : StreamingQuery = {
+    val cum = mutable.Map.empty[Long, Long]
+    perBatch(scored) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      foldScores(cum, batch, scoreCol, count(lit(1)).as("cnt"), "pplBucketsPerBatch")
+      // bucketThresholds' distribution contract is the (lm_mean, cnt)
+      // schema; rename on the way in and out so any scoreCol works
+      val thresholds = graft.operators.NgramLm
+        .bucketThresholds(cum.toSeq.toDF("lm_mean", "cnt"), nBuckets)
+        .withColumnRenamed("lm_mean", scoreCol)
+      sink(batch.join(broadcast(thresholds), Seq(scoreCol)), batchId)
+    }
   }
 
   /** Incremental token-budget admission over a stream of scored docs
@@ -336,33 +370,17 @@ object StreamingOps {
     */
   def tokenBudgetPerBatch(scored: DataFrame, idCol: String, scoreCol: String,
                           tokensCol: String, budgetNum: Long, budgetDen: Long,
-                          sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    val cum = scala.collection.mutable.Map.empty[Long, Long]
-    scored.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val perScore = batch.groupBy(col(scoreCol)).agg(sum(col(tokensCol)).as("st"))
-          .limit(MaxDriverGroups + 1) // driver never receives more
-          .collect()
-        require(perScore.length <= MaxDriverGroups,
-          s"tokenBudgetPerBatch: > $MaxDriverGroups distinct $scoreCol values " +
-            "in one batch — the driver-held distribution assumes a bounded " +
-            "integer score (bucket/round the score upstream)")
-        perScore
-          .foreach(r => cum(r.getLong(0)) = cum.getOrElse(r.getLong(0), 0L) + r.getLong(1))
-        require(cum.size <= MaxDriverGroups,
-          s"tokenBudgetPerBatch: cumulative distribution exceeded " +
-            s"$MaxDriverGroups distinct scores")
-        val dist = cum.toSeq.toDF("s", "st")
-        val groups = graft.operators.Sampling
-          .tokenBudgetGroups(dist, budgetNum, budgetDen)
-        sink(graft.operators.Sampling
-          .tokenBudgetApply(batch, idCol, scoreCol, tokensCol, groups), batchId)
-      }
-      .start()
+                          sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val cum = mutable.Map.empty[Long, Long]
+    perBatch(scored) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      foldScores(cum, batch, scoreCol, sum(col(tokensCol)).as("st"), "tokenBudgetPerBatch")
+      val groups = graft.operators.Sampling
+        .tokenBudgetGroups(cum.toSeq.toDF("s", "st"), budgetNum, budgetDen)
+      sink(graft.operators.Sampling
+        .tokenBudgetApply(batch, idCol, scoreCol, tokensCol, groups), batchId)
+    }
   }
 
   /** The full q150 incremental-ingest verdict chain per micro-batch:
@@ -385,41 +403,35 @@ object StreamingOps {
     * snapshot: 'removed' keys are what the full diff of the final
     * snapshot says, not a per-batch notion, so only added/changed
     * flow through — the at-ingestion admission flavor, like the other
-    * per-batch operators.
+    * per-batch operators. The index probe caches its batch signatures
+    * and candidates (tracked); they are released per micro-batch.
     */
   def ingestVerdictPerBatch(newDocs: DataFrame, oldSnap: DataFrame,
                             sigIndexPath: String, bench: DataFrame,
                             threshold: Double = 0.8, windowChars: Int = 40,
-                            sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fpNew = batch.withColumn("fp", md5(col("text").cast("binary")))
-        val delta = graft.operators.SnapshotDiff
-          .delta(oldSnap, fpNew, "doc_id", "fp")
-          .select(col("doc_id"), col("text"))
-        val dups = graft.operators.TextDedup
-          .nearDupsAgainstIndex(delta, sigIndexPath, threshold)
-          .select(col("doc_id")).distinct()
-        val survivors = delta.join(dups, Seq("doc_id"), "left_anti")
-        val contaminated = graft.operators.TextDedup
-          .substringMatches(survivors, bench, windowChars)
-          .select(col("doc_id")).distinct()
-        try sink(delta
-          .join(dups.withColumn("is_dup", lit(true)), Seq("doc_id"), "left")
-          .join(contaminated.withColumn("is_cont", lit(true)),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("is_dup"), lit("dup"))
-              .when(col("is_cont"), lit("contaminated"))
-              .otherwise(lit("kept")).as("status"),
-            length(col("text")).cast("long").as("n_chars")), batchId)
-        // the index probe caches its batch signatures + candidates
-        // (tracked): release per micro-batch
-        finally graft.Tables.releaseTrackedCaches(batch.sparkSession)
-      }
-      .start()
+                            sink: (DataFrame, Long) => Unit): StreamingQuery =
+    perBatch(newDocs)(releasing { (batch, batchId) =>
+      val fpNew = batch.withColumn("fp", md5(col("text").cast("binary")))
+      val delta = graft.operators.SnapshotDiff
+        .delta(oldSnap, fpNew, "doc_id", "fp")
+        .select(col("doc_id"), col("text"))
+      val dups = graft.operators.TextDedup
+        .nearDupsAgainstIndex(delta, sigIndexPath, threshold)
+        .select(col("doc_id")).distinct()
+      val survivors = delta.join(dups, Seq("doc_id"), "left_anti")
+      val contaminated = graft.operators.TextDedup
+        .substringMatches(survivors, bench, windowChars)
+        .select(col("doc_id")).distinct()
+      sink(delta
+        .join(dups.withColumn("is_dup", lit(true)), Seq("doc_id"), "left")
+        .join(contaminated.withColumn("is_cont", lit(true)),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("is_dup"), lit("dup"))
+            .when(col("is_cont"), lit("contaminated"))
+            .otherwise(lit("kept")).as("status"),
+          length(col("text")).cast("long").as("n_chars")), batchId)
+    })
 
   /** The UNIFIED multimodal admission chain per micro-batch: each
     * arriving batch of candidate-new `(doc_id, text, blob)` docs is
@@ -437,34 +449,29 @@ object StreamingOps {
     * benchmark), so each doc's verdict is a pure function of (doc,
     * standing state) and any batching yields the union of the batch
     * verdicts — single-batch ≡ the q166 batch chain bit-for-bit
-    * (the StreamingOpsSpec parity pin).
+    * (the StreamingOpsSpec parity pin). The media probe inside the
+    * verdict caches its keyed batch (tracked); it is released per
+    * micro-batch.
     */
   def multimodalIngestPerBatch(newDocs: DataFrame, oldSnap: DataFrame,
-                               mediaSig: org.apache.spark.sql.Column,
+                               mediaSig: Column,
                                sigIndexPath: String, hashIndexPath: String,
                                bench: DataFrame,
                                threshold: Double = 0.8, windowChars: Int = 40,
                                maxHamming: Int = 3,
                                maxBandFreq: Option[Long] = None,
-                               sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fpNew = batch.withColumn("fp",
-          concat(md5(col("text").cast("binary")), lit(":"),
-            coalesce(mediaSig.cast("string"), lit("none"))))
-        val delta = graft.operators.SnapshotDiff
-          .delta(oldSnap, fpNew, "doc_id", "fp")
-          .select(col("doc_id"), col("text"), col("blob"))
-        try sink(graft.operators.Curation.multimodalIngestVerdict(delta,
-          mediaSig, sigIndexPath, hashIndexPath, bench,
-          threshold, windowChars, maxHamming, maxBandFreq), batchId)
-        // the media probe inside the verdict caches its keyed batch
-        // (tracked): release per micro-batch
-        finally graft.Tables.releaseTrackedCaches(batch.sparkSession)
-      }
-      .start()
+                               sink: (DataFrame, Long) => Unit): StreamingQuery =
+    perBatch(newDocs)(releasing { (batch, batchId) =>
+      val fpNew = batch.withColumn("fp",
+        concat(md5(col("text").cast("binary")), lit(":"),
+          coalesce(mediaSig.cast("string"), lit("none"))))
+      val delta = graft.operators.SnapshotDiff
+        .delta(oldSnap, fpNew, "doc_id", "fp")
+        .select(col("doc_id"), col("text"), col("blob"))
+      sink(graft.operators.Curation.multimodalIngestVerdict(delta,
+        mediaSig, sigIndexPath, hashIndexPath, bench,
+        threshold, windowChars, maxHamming, maxBandFreq), batchId)
+    })
 
   /** Per-batch MEDIA ingest dedup: each micro-batch of `(doc_id,
     * simhash)` signatures (any modality's 64-bit perceptual hash)
@@ -474,23 +481,17 @@ object StreamingOps {
     * same per-batch-vs-standing-state shape as
     * [[ingestVerdictPerBatch]]). Each batch's hit set is a pure
     * function of (batch, index), so any batching yields the union of
-    * batch results — the StreamingOpsSpec parity pin.
+    * batch results — the StreamingOpsSpec parity pin. The probe caches
+    * the keyed batch (tracked); it is released per micro-batch.
     */
   def mediaDedupPerBatch(sigs: DataFrame, indexPath: String,
                          maxHamming: Int = 3,
                          maxBandFreq: Option[Long] = None,
-                         sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    sigs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try sink(graft.operators.TextDedup.nearDupsAgainstHashIndex(
-          batch, indexPath, maxHamming, maxBandFreq), batchId)
-        // the probe caches the keyed batch (tracked): release it per
-        // micro-batch so a long-running stream never accumulates
-        finally graft.Tables.releaseTrackedCaches(batch.sparkSession)
-      }
-      .start()
+                         sink: (DataFrame, Long) => Unit): StreamingQuery =
+    perBatch(sigs)(releasing { (batch, batchId) =>
+      sink(graft.operators.TextDedup.nearDupsAgainstHashIndex(
+        batch, indexPath, maxHamming, maxBandFreq), batchId)
+    })
 
   /** Per-batch SEMANTIC ingest dedup: each micro-batch of `(vec_id,
     * embedding)` vectors probes the standing
@@ -508,33 +509,21 @@ object StreamingOps {
     * hot-cell guard through (q179 semantics: over-budget index lists
     * are skipped, their batch vectors reported fresh with `hot` =
     * true) — on a long-running stream the cap is what keeps a
-    * skew-accumulating index from inflating every future batch.
+    * skew-accumulating index from inflating every future batch. The
+    * probe caches its assigned batch (tracked); it is released per
+    * micro-batch.
     */
   def semanticDedupPerBatch(emb: DataFrame, indexPath: String,
                             threshold: Double,
                             maxListN: Option[Long] = None,
                             appendAfterProbe: Boolean = false,
-                            sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the probe caches its assigned batch (tracked): release per
-        // micro-batch so a long-running stream never accumulates
-        try {
-          val probe = graft.operators.IvfIndex.semanticDedupAgainstIndex(
-            batch, indexPath, threshold, maxListN)
-          if (appendAfterProbe) {
-            val pinned = probe.persist()
-            try {
-              pinned.count() // break the probe->index dependency NOW
-              sink(pinned, batchId)
-              graft.operators.IvfIndex.appendToIndex(batch, indexPath)
-            } finally pinned.unpersist(blocking = false)
-          } else sink(probe, batchId)
-        } finally graft.Tables.releaseTrackedCaches(batch.sparkSession)
+                            sink: (DataFrame, Long) => Unit): StreamingQuery =
+    perBatch(emb)(releasing { (batch, batchId) =>
+      probeThenAppend(graft.operators.IvfIndex.semanticDedupAgainstIndex(
+          batch, indexPath, threshold, maxListN), batchId, sink, appendAfterProbe) {
+        graft.operators.IvfIndex.appendToIndex(batch, indexPath)
       }
-      .start()
+    })
 
   /** Per-batch SUB-DOCUMENT ingest dedup: each micro-batch of
     * `(doc_id, text)` docs is CDC-chunked (batch-only kernel pass) and
@@ -565,23 +554,13 @@ object StreamingOps {
   def cdcProbePerBatch(docs: DataFrame, indexPath: String,
                        w: Int = 8, d: Int = 32,
                        appendAfterProbe: Boolean = false,
-                       sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val probe = graft.operators.TextDedup.cdcProbeAgainstChunkIndex(
-          batch, indexPath, w, d)
-        if (appendAfterProbe) {
-          val pinned = probe.persist()
-          try {
-            pinned.count() // break the probe->index dependency NOW
-            sink(pinned, batchId)
-            graft.operators.TextDedup.appendToChunkIndex(batch, indexPath, w, d)
-          } finally pinned.unpersist(blocking = false)
-        } else sink(probe, batchId)
+                       sink: (DataFrame, Long) => Unit): StreamingQuery =
+    perBatch(docs) { (batch, batchId) =>
+      probeThenAppend(graft.operators.TextDedup.cdcProbeAgainstChunkIndex(
+          batch, indexPath, w, d), batchId, sink, appendAfterProbe) {
+        graft.operators.TextDedup.appendToChunkIndex(batch, indexPath, w, d)
       }
-      .start()
+    }
 
   /** Incremental cross-source KMV set-operation estimates over a
     * stream of `(groupCol, uCol)` rows: each micro-batch is sketched
@@ -595,44 +574,29 @@ object StreamingOps {
     * concatenated input — the parity StreamingOpsSpec pins.
     */
   def kmvSetOpsPerBatch(rows: DataFrame, groupCol: String, uCol: String,
-                        k: Int, sink: (DataFrame, Long) => Unit)
-  : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.Row
+                        k: Int, sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
     // keyed by the group column's NATIVE value, so any type the batch
     // operator Sketches.kmvSetOps accepts (string source ids, int
     // shard ids, …) streams identically
-    val states = scala.collection.mutable.LinkedHashMap.empty[Any, graft.operators.Sketches.KmvState]
-    rows.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val keyField = batch.schema(groupCol)
-        val perSource = batch.groupBy(col(groupCol))
-          .agg(graft.operators.Sketches.kmvValues(col(uCol), k).as("vals"))
-          .limit(MaxDriverGroups + 1) // driver never receives more
-          .collect()
-        require(perSource.length <= MaxDriverGroups,
-          s"kmvSetOpsPerBatch: > $MaxDriverGroups distinct $groupCol values " +
-            "in one batch — the driver-held sketch map assumes a bounded " +
-            "source/group cardinality")
-        perSource
-          .foreach { r =>
-            val src = r.get(0)
-            val incoming = graft.operators.Sketches.KmvState(
-              k, r.getSeq[Double](1).toArray)
-            states(src) = states.get(src)
-              .map(_ merge incoming).getOrElse(incoming)
-          }
-        require(states.size <= MaxDriverGroups,
-          s"kmvSetOpsPerBatch: cumulative source map exceeded $MaxDriverGroups")
-        val sk = spark.createDataFrame(
-          java.util.Arrays.asList(states.toSeq.map { case (s, st) =>
-            Row(s, st.values.toSeq) }: _*),
-          StructType(Seq(keyField.copy(name = groupCol),
-            StructField("vals", ArrayType(DoubleType)))))
-        sink(graft.operators.Sketches.kmvCombinePairs(sk, groupCol, k), batchId)
-      }
-      .start()
+    val states = mutable.LinkedHashMap.empty[Any, graft.operators.Sketches.KmvState]
+    perBatch(rows) { (batch, batchId) =>
+      driverGroups(batch, groupCol,
+        graft.operators.Sketches.kmvValues(col(uCol), k).as("vals"),
+        "kmvSetOpsPerBatch", "sketch map assumes a bounded source/group cardinality")
+        .foreach { r =>
+          val src = r.get(0)
+          val incoming = graft.operators.Sketches.KmvState(k, r.getSeq[Double](1).toArray)
+          states(src) = states.get(src).map(_ merge incoming).getOrElse(incoming)
+        }
+      require(states.size <= MaxDriverGroups,
+        s"kmvSetOpsPerBatch: cumulative source map exceeded $MaxDriverGroups")
+      val sk = batch.sparkSession.createDataFrame(
+        java.util.Arrays.asList(states.toSeq.map { case (s, st) =>
+          Row(s, st.values.toSeq) }: _*),
+        StructType(Seq(batch.schema(groupCol).copy(name = groupCol),
+          StructField("vals", ArrayType(DoubleType)))))
+      sink(graft.operators.Sketches.kmvCombinePairs(sk, groupCol, k), batchId)
+    }
   }
 }

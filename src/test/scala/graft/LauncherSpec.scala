@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 /** The launcher code behind the mains, exercised on the shared session
   * (never through a `main`, which would stop it): Bench's sidecar
-  * naming and the per-query form of Plans.
+  * naming, Verify's query filter and the per-query form of Plans.
   */
 class LauncherSpec extends SparkSpec {
   private def names(dir: String, filtered: Boolean, failed: Boolean) =
@@ -36,6 +36,16 @@ class LauncherSpec extends SparkSpec {
     assert(Bench.round(bare + "/missing").isEmpty)
     assert(names(bare, filtered = false, failed = false) ==
       Seq("spread_unstamped.json", "bench_out_unstamped.json"))
+  }
+
+  test("a Verify prefix filter selects the same names from the queries and the oracle SQL") {
+    val only = Some(Seq("q39_", "q40_", "q41_", "q42_", "q43_", "q79_"))
+    val dumped = Verify.selected(SparkEntry.queries, only).keySet
+    assert(dumped.size == 6 && dumped.forall(n => only.get.exists(n.startsWith)), dumped)
+    assert(Verify.selected(SparkEntry.oracleSql, only).keySet == dumped)
+    // an unfiltered run still dumps and writes every query
+    assert(Verify.selected(SparkEntry.queries, None).size == 179)
+    assert(Verify.selected(SparkEntry.oracleSql, None).size == 179)
   }
 
   test("Plans.dump writes one formatted plan per prefix-matched query") {

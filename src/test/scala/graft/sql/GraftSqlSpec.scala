@@ -582,6 +582,47 @@ class GraftSqlSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("not supported over the Arrow stream format"),
       e3.getMessage)
+    // every table function owns the same arity check: nine literals
+    // are more than any of them accepts
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Literal}
+    val nine = Seq.fill(9)(Literal("tvf_bad"))
+    assert(GraftExtensions.tableBuilders.size == 31)
+    GraftExtensions.tableBuilders.foreach { case (name, (_, build)) =>
+      val e = intercept[IllegalArgumentException](build(nine))
+      assert(e.getMessage.contains(s"$name expects"), e.getMessage)
+    }
+    // and the same literal rule: a column reference is not an argument
+    val (_, buildTsv) = GraftExtensions.tableBuilders("graft_stream_tsv")
+    val e4 = intercept[IllegalArgumentException] {
+      buildTsv(Seq(Literal("tvf_bad"),
+        AttributeReference("cmd", org.apache.spark.sql.types.StringType)()))
+    }
+    assert(e4.getMessage.contains("graft_stream_tsv arguments must be literals"),
+      e4.getMessage)
+  }
+
+  test("GraftExtensions.register alone gives a fresh session every scalar kernel") {
+    // a fresh session sees none of the kernels the operators registered
+    // on the shared one; only the extension's own table registers here
+    val fresh = spark.newSession()
+    GraftExtensions.register(fresh)
+    val tables = Seq(graft.functions.TextExpressions.functions,
+      graft.functions.VectorExpressions.functions,
+      graft.functions.AhoCorasick.functions,
+      graft.functions.MultimodalExpressions.functions)
+    // each name is declared in exactly one table; graft_cosine is the
+    // extension's own
+    assert(GraftExtensions.builders.size == tables.map(_.size).sum + 1)
+    assert(GraftExtensions.builders.size == 33)
+    GraftExtensions.builders.keys.foreach { name =>
+      assert(fresh.catalog.functionExists(name), name)
+    }
+    val r = fresh.sql(
+      "SELECT graft_cdc('a b c d', 2, 1) AS cuts, graft_char_windows('abcd', 2) AS w, " +
+        "graft_quantize8_arr(array(0.0D, 127.0D)) AS q").head
+    assert(r.getSeq[Int](0) == Seq(1, 2, 3))
+    assert(r.getSeq[String](1) == Seq("ab", "bc", "cd"))
+    assert(r.getSeq[Double](2) == Seq(0.0, 127.0))
   }
 
   test("graft_cosine equals the Similarity column API on real embeddings") {
