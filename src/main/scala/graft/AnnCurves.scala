@@ -35,7 +35,7 @@ object AnnCurves {
 
     val emb = Tables.load(spark, sfDir, "embeddings").cache()
     val n = emb.count()
-    val dim = emb.select(size(col("embedding"))).head.getInt(0)
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
     // deterministic query ids, clear of the vec_id < 32 seed rows any
     // kCode <= 32 codebook uses
     val qids = (0 until nQueries).map(i => 32L + i * ((n - 32) / nQueries))
@@ -64,7 +64,7 @@ object AnnCurves {
     val qvs: Map[Long, Seq[Double]] = qids.map { q =>
       q -> emb.filter(col("vec_id") === q)
         .select(transform(col("embedding"), x => x.cast("double")))
-        .head.getSeq[Double](0).toSeq
+        .head().getSeq[Double](0).toSeq
     }.toMap
 
     // IVF-flat over the partition-pruned materialised layout
@@ -171,7 +171,7 @@ object AnnCurves {
     val qvs2: Map[Long, Seq[Double]] = qids2.map { q =>
       q -> emb2.filter(col("vec_id") === q)
         .select(transform(col("embedding"), x => x.cast("double")))
-        .head.getSeq[Double](0).toSeq
+        .head().getSeq[Double](0).toSeq
     }.toMap
     val cbT = IvfIndex.trainPqCodebooksIntRaw(emb2, 8, 16, rounds = 2)
     val adcSeedDir = Files.createTempDirectory("graft_ann_adc_s_").toString
@@ -241,7 +241,7 @@ object AnnCurves {
     val qvsT: Map[Long, Seq[Double]] = qidsT.map { q =>
       q -> tvecs.filter(col("vec_id") === q)
         .select(transform(col("embedding"), x => x.cast("double")))
-        .head.getSeq[Double](0).toSeq
+        .head().getSeq[Double](0).toSeq
     }.toMap
     sb.append(s"\n## Text-IVF tier — `$declonedDir` documents hashed to ")
     sb.append(s"256-d integer vectors ($nT docs): seed vs trained\n\n")

@@ -15,7 +15,9 @@ private[graft] class ProfCounters {
 }
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON metrics line.
+  * SPARK_GRAFT_SF_DIR, writes one JSON line with the per-query medians
+  * to the bench_out artifact and prints a compact summary of it as the
+  * last stdout line (see [[Bench.summaryLine]]).
   *
   * Every query runs TWICE: an untimed warm pass (janino/whole-stage
   * codegen compilation is a one-time JVM cost — measured 6-10 s on the
@@ -62,6 +64,31 @@ object Bench {
       filtered: Boolean, failed: Boolean): String =
     if (filtered || failed) s"${stem}_partial.json"
     else round.fold(s"${stem}_unstamped.json")(r => s"${stem}_r${r}_c$cpus.json")
+
+  // Locale.ROOT: the f-interpolator formats with the JVM default
+  // locale, and a comma-decimal locale (de_DE, ...) would turn the
+  // bench line into invalid JSON ("0,123456").
+  private def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+
+  private def quote(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** Longest final stdout line: the driver keeps a 2,000-char tail. */
+  private[graft] val MaxSummaryChars = 2000
+
+  /** The run's last stdout line: totals, the query and failure counts,
+    * as many failed names as fit in [[MaxSummaryChars]], and the path of
+    * the artifact that holds the per-query map.
+    */
+  private[graft] def summaryLine(total: Double, coldTotal: Double, geomean: Double,
+      reps: Int, queries: Int, failed: Seq[String], sf: String, artifact: String): String = {
+    def line(names: Seq[String]) =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_sec":${fmt(coldTotal)},""" +
+        s""""geomean_sec":${fmt(geomean)},"reps":$reps,"queries":$queries,""" +
+        s""""failed_count":${failed.size},"failed":${names.map(quote).mkString("[", ",", "]")},""" +
+        s""""sf":${quote(sf)},"artifact":${quote(artifact)}}"""
+    (failed.size to 1 by -1).iterator.map(n => line(failed.take(n)))
+      .find(_.length <= MaxSummaryChars).getOrElse(line(Nil))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -158,10 +185,6 @@ object Bench {
         val timed = Seq.fill(reps)(once(name, fn)).sorted
         (name, timed(timed.size / 2), timed.head, timed.last, cold)
       }
-    // Locale.ROOT: the f-interpolator formats with the JVM default
-    // locale, and a comma-decimal locale (de_DE, ...) would turn the
-    // bench line into invalid JSON ("0,123456").
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     val qs = results.map { case (k, med, _, _, _) => "\"" + k + "\":" + fmt(med) }
       .mkString("{", ",", "}")
     // Per-query min/max spread goes to a sidecar file, NOT the stdout
@@ -191,12 +214,10 @@ object Bench {
     val failedJson = if (failed.isEmpty) ""
       else failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cold_sec":${fmt(coldTotal)},"reps":$reps,"queries":$qs$failedJson,"sf":"$sfDir"}"""
-    // the line ALSO lands in files (r10 verdict directive 5, r18
-    // verdict directive 2): the driver tails a BOUNDED window of stdout
-    // (2000 chars in the r18 artifacts — the 179-query line is ~5 KB,
-    // so it can NEVER be recovered from the tail no matter where it is
-    // printed), so a file is the machine-readable artifact and stdout
-    // is just the human echo. Two files:
+    // the full line, with the per-query map, lands in files: the
+    // driver tails a BOUNDED window of stdout (2000 chars) and the
+    // 179-query line is ~5 KB, so stdout gets only the summary line,
+    // which names the artifact. Two files:
     //  - the round- and core-stamped bench_out_r{N}_c{cpus}.json (audit
     //    history; see sidecarName), and
     //  - the FIXED-PATH bench_out.json in the repo root, rewritten on
@@ -212,15 +233,21 @@ object Bench {
       try java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
       catch { case e: Exception =>
         System.err.println(s"[bench] bench_out write to $p failed: ${e.getMessage}") }
-    writeLine(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", sidecar("bench_out"))))
+    val artifact = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", sidecar("bench_out"))).toAbsolutePath
+    writeLine(artifact)
     if (only.isEmpty)
       writeLine(java.nio.file.Paths.get(repoDir, "bench_out.json"))
-    // stop the session BEFORE the stdout echo so the one-line JSON is
-    // the process's final stdout line (nothing from Spark shutdown can
-    // land after it) — the best the stdout channel can do given the
-    // bounded tail.
+    // geometric mean of the per-query medians (floored at the 0.1 ms
+    // resolution of the map, so a zero time cannot sink it)
+    val geomean = if (results.isEmpty) 0.0
+      else math.exp(results.map(r => math.log(r._2.max(1e-4))).sum / results.size)
+    // stop the session BEFORE the stdout echo so the summary is the
+    // process's final stdout line (nothing from Spark shutdown can land
+    // after it) — the best the stdout channel can do given the bounded
+    // tail.
     spark.stop()
-    println(line)
+    println(summaryLine(total, coldTotal, geomean, reps, results.size, failed.toSeq, sfDir,
+      artifact.toString))
   }
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Multi-pattern substring counting — `graft_ac_count(text, patterns)`.
@@ -27,38 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics a brute-force `substr(text, i, len(p)) = p` scan
   * replays position by position).
   */
-case class AhoCorasickCounts(text: Expression, patterns: Expression)
-  extends BinaryExpression {
-
-  override def left: Expression = text
-  override def right: Expression = patterns
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_ac_count"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || patterns.dataType != StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_ac_count expects (string, string), got " +
-          s"(${text.dataType.simpleString}, ${patterns.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, p: Any): Any =
-    AhoCorasick.counts(t.asInstanceOf[UTF8String], p.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, p) => {
-      s"""
-         |${ev.value} = graft.functions.AhoCorasick.counts($t, $p);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(text = newLeft, patterns = newRight)
-}
+case class AhoCorasickCounts(text: Expression, patterns: Expression) extends StaticKernel(
+  "graft_ac_count", Seq(ArgType.string, ArgType.string),
+  ArrayType(LongType, containsNull = false), AhoCorasick, "counts")
 
 object AhoCorasick {
   val Delimiter = '\u0001'

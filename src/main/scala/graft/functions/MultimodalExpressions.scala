@@ -4,11 +4,10 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import graft.functions.ArgType.{binary, integral, literal}
 
 /** GRFT binary-container codec as static helpers callable from
   * whole-stage-generated Java (top-level Scala objects compile with
@@ -1821,319 +1820,118 @@ object GrftCodec {
   }
 }
 
-/** Base for the GRFT expressions: binary in, static-helper call out.
-  * The generated code is a single call into [[GrftCodec]], so the
+/** `graft_meta(bin)` → header metadata struct (never null; corrupt
+  * containers yield `valid = false` with null fields).
+  *
+  * Each GRFT kernel is one static call into [[GrftCodec]], so the
   * 14-byte header parse (a pure projection) stays inside
   * WholeStageCodegen instead of round-tripping every row through
   * `df.rdd` + external Rows — the difference between a narrow
-  * columnar scan and a full deserialize at 100 TB.
+  * columnar scan and a full deserialize at 100 TB. A null blob reaches
+  * the codec, which treats it as undecodable media.
   */
-private[graft] trait GrftExpression { self: Expression =>
-  protected def codecCall(argExprs: String*): String =
-    s"graft.functions.GrftCodec.${codecMethod}(${argExprs.mkString(", ")})"
-  protected def codecMethod: String
-}
-
-/** `graft_meta(bin)` → header metadata struct (never null; corrupt
-  * containers yield `valid = false` with null fields).
-  */
-case class GrftMeta(child: Expression)
-  extends UnaryExpression with GrftExpression {
-  override def dataType: DataType = GrftCodec.metaSchema
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_meta"
-  override protected def codecMethod: String = "meta"
-
-  override def eval(input: InternalRow): Any =
-    GrftCodec.meta(child.eval(input).asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val jt = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      |${c.code}
-      |$jt ${ev.value} = ${codecCall(s"${c.isNull} ? null : ${c.value}")};
-      """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class GrftMeta(child: Expression) extends StaticKernel(
+  "graft_meta", Seq(binary), GrftCodec.metaSchema, GrftCodec, "meta", Nulls.NeverNull)
 
 /** `graft_stats(bin)` → payload stats struct (never null; corrupt
   * containers yield null fields).
   */
-case class GrftStats(child: Expression)
-  extends UnaryExpression with GrftExpression {
-  override def dataType: DataType = GrftCodec.statsSchema
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_stats"
-  override protected def codecMethod: String = "stats"
-
-  override def eval(input: InternalRow): Any =
-    GrftCodec.stats(child.eval(input).asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val jt = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      |${c.code}
-      |$jt ${ev.value} = ${codecCall(s"${c.isNull} ? null : ${c.value}")};
-      """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class GrftStats(child: Expression) extends StaticKernel(
+  "graft_stats", Seq(binary), GrftCodec.statsSchema, GrftCodec, "stats", Nulls.NeverNull)
 
 /** `graft_pixels(bin)` → REAL decoded-raster statistics for a kind=0
   * GRFT container holding a PNM (P5/P6) image — width/height/channels
   * from the image header, checksum and mean over the actual pixels.
   * Undecodable input yields all-null fields (never an error).
   */
-case class GrftPixels(child: Expression)
-  extends UnaryExpression with GrftExpression {
-  override def dataType: DataType = GrftCodec.imageSchema
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_pixels"
-  override protected def codecMethod: String = "pixels"
-
-  override def eval(input: InternalRow): Any =
-    GrftCodec.pixels(child.eval(input).asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val jt = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      |${c.code}
-      |$jt ${ev.value} = ${codecCall(s"${c.isNull} ? null : ${c.value}")};
-      """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Base for the nullable-Long perceptual-hash expressions
-  * (`graft_ahash`/`graft_afp`/`graft_vhash`): one implementation of
-  * the boxed-Long eval and codegen (null when the kernel declines the
-  * payload), so the null/boxing handling can never diverge between
-  * modalities. Subclasses supply `codecMethod` + the kernel call.
-  */
-abstract class GrftLongHash extends UnaryExpression with GrftExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
-  protected def kernel(bytes: Array[Byte]): Any
-
-  override def eval(input: InternalRow): Any =
-    kernel(child.eval(input).asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val tmp = ctx.freshName(prettyName.stripPrefix("graft_"))
-    ev.copy(code = code"""
-      |${c.code}
-      |Object $tmp = ${codecCall(s"${c.isNull} ? null : ${c.value}")};
-      |boolean ${ev.isNull} = $tmp == null;
-      |long ${ev.value} = ${ev.isNull} ? -1L : ((java.lang.Long) $tmp).longValue();
-      """.stripMargin)
-  }
-}
+case class GrftPixels(child: Expression) extends StaticKernel(
+  "graft_pixels", Seq(binary), GrftCodec.imageSchema, GrftCodec, "pixels", Nulls.NeverNull)
 
 /** `graft_ahash(bin)` → 64-bit perceptual average-hash of the decoded
   * raster (see [[GrftCodec.ahash]]); null when undecodable.
   */
-case class GrftAHash(child: Expression) extends GrftLongHash {
-  override def prettyName: String = "graft_ahash"
-  override protected def codecMethod: String = "ahash"
-  override protected def kernel(bytes: Array[Byte]): Any = GrftCodec.ahash(bytes)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class GrftAHash(child: Expression) extends StaticKernel(
+  "graft_ahash", Seq(binary), LongType, GrftCodec, "ahash", Nulls.Passed)
 
 /** `graft_vhash(bin)` → 64-bit perceptual hash of the center frame of
   * a kind=2 AVI container (see [[GrftCodec.vhash]]); null when
   * undecodable.
   */
-case class GrftVideoHash(child: Expression) extends GrftLongHash {
-  override def prettyName: String = "graft_vhash"
-  override protected def codecMethod: String = "vhash"
-  override protected def kernel(bytes: Array[Byte]): Any = GrftCodec.vhash(bytes)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class GrftVideoHash(child: Expression) extends StaticKernel(
+  "graft_vhash", Seq(binary), LongType, GrftCodec, "vhash", Nulls.Passed)
 
 /** `graft_afp(bin)` → 64-bit sign-of-derivative audio fingerprint of
   * the decoded samples (see [[GrftCodec.afp]]); null when undecodable.
   */
-case class GrftAudioFp(child: Expression) extends GrftLongHash {
-  override def prettyName: String = "graft_afp"
-  override protected def codecMethod: String = "afp"
-  override protected def kernel(bytes: Array[Byte]): Any = GrftCodec.afp(bytes)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class GrftAudioFp(child: Expression) extends StaticKernel(
+  "graft_afp", Seq(binary), LongType, GrftCodec, "afp", Nulls.Passed)
 
 /** `graft_aenv(bin)` → 64-bit envelope (mean-compare) hash of the
   * decoded samples (see [[GrftCodec.aenv]]) — the audio MINING hash,
   * banding-friendly where `graft_afp`'s derivative signs are not;
   * null when undecodable.
   */
-case class GrftAudioEnv(child: Expression) extends GrftLongHash {
-  override def prettyName: String = "graft_aenv"
-  override protected def codecMethod: String = "aenv"
-  override protected def kernel(bytes: Array[Byte]): Any = GrftCodec.aenv(bytes)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class GrftAudioEnv(child: Expression) extends StaticKernel(
+  "graft_aenv", Seq(binary), LongType, GrftCodec, "aenv", Nulls.Passed)
 
 /** `graft_samples(bin)` → REAL decoded-audio statistics for a kind=1
   * GRFT container holding a PCM WAV — rate/channels from the fmt
   * chunk, checksum/mean/peak over the actual 16-bit samples.
   * Undecodable input yields all-null fields (never an error).
   */
-case class GrftSamples(child: Expression)
-  extends UnaryExpression with GrftExpression {
-  override def dataType: DataType = GrftCodec.audioSchema
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_samples"
-  override protected def codecMethod: String = "samples"
-
-  override def eval(input: InternalRow): Any =
-    GrftCodec.samples(child.eval(input).asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val jt = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      |${c.code}
-      |$jt ${ev.value} = ${codecCall(s"${c.isNull} ? null : ${c.value}")};
-      """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class GrftSamples(child: Expression) extends StaticKernel(
+  "graft_samples", Seq(binary), GrftCodec.audioSchema, GrftCodec, "samples", Nulls.NeverNull)
 
 /** `graft_video(bin)` → REAL all-frame pixel statistics of a kind=2
   * AVI container (all-null fields when undecodable).
   */
-case class GrftVideo(child: Expression)
-  extends UnaryExpression with GrftExpression {
-  override def dataType: DataType = GrftCodec.videoSchema
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_video"
-  override protected def codecMethod: String = "video"
-
-  override def eval(input: InternalRow): Any =
-    GrftCodec.video(child.eval(input).asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val jt = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      |${c.code}
-      |$jt ${ev.value} = ${codecCall(s"${c.isNull} ? null : ${c.value}")};
-      """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
+case class GrftVideo(child: Expression) extends StaticKernel(
+  "graft_video", Seq(binary), GrftCodec.videoSchema, GrftCodec, "video", Nulls.NeverNull)
 
 private[graft] object GrftArgs {
   /** Fold a literal int argument at plan time (the output raster dims /
     * frame geometry are operator options, not per-row data — exactly
     * like the reference's mandatory stream settings).
     */
-  def foldInt(e: Expression, fn: String, name: String): Int = {
-    require(e.foldable, s"$fn: $name must be a literal, got $e")
-    e.eval(null) match {
-      case i: Int   => i
-      case l: Long  => l.toInt
-      case s: Short => s.toInt
-      case b: Byte  => b.toInt
-      case other => throw new IllegalArgumentException(
-        s"$fn: $name must be an integer literal, got $other")
-    }
+  def foldInt(e: Expression, fn: String, name: String): Int = e.eval(null) match {
+    case n: Number => n.intValue // the type check admits integral literals only
+    case other => throw new IllegalArgumentException(
+      s"$fn: $name must be an integer literal, got $other")
   }
 }
 
 /** `graft_resize(bin, out_width, out_height)` → resized GRFT container
   * (null for corrupt input — invalid media stays data, not an error).
+  * The output dims are literals, folded at plan time.
   */
 case class GrftResize(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with GrftExpression {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_resize"
-  override protected def codecMethod: String = "resize"
-
-  private lazy val outW = GrftArgs.foldInt(second, prettyName, "out_width")
-  private lazy val outH = GrftArgs.foldInt(third, prettyName, "out_height")
-  private def checkDims(): Unit =
+  extends StaticKernel("graft_resize", Seq(binary, literal(integral), literal(integral)),
+    BinaryType, GrftCodec, "resize", Nulls.Passed) {
+  override protected def callArgs: Seq[Any] = {
+    val outW = GrftArgs.foldInt(second, prettyName, "out_width")
+    val outH = GrftArgs.foldInt(third, prettyName, "out_height")
     require(outW > 0 && outH > 0, s"$prettyName: output dims must be positive, got ${outW}x$outH")
-
-  override def eval(input: InternalRow): Any = {
-    checkDims()
-    GrftCodec.resize(first.eval(input).asInstanceOf[Array[Byte]], outW, outH)
+    Seq(first, outW, outH)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    checkDims()
-    val c = first.genCode(ctx)
-    val jt = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      |${c.code}
-      |$jt ${ev.value} =
-      |  ${codecCall(s"${c.isNull} ? null : ${c.value}", outW.toString, outH.toString)};
-      |boolean ${ev.isNull} = ${ev.value} == null;
-      """.stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /** `graft_frames(bin, frame_size, stride)` → array of every stride-th
   * frame of the payload (element i = frame number i*stride; empty array
   * when there is no payload). Compose with `posexplode` for the
   * row-per-frame view — the explode is Catalyst's, so frame sampling
-  * needs no RDD drop-down at all.
+  * needs no RDD drop-down at all. The geometry is literal, folded at
+  * plan time.
   */
 case class GrftFrames(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with GrftExpression {
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_frames"
-  override protected def codecMethod: String = "frames"
-
-  private lazy val frameSize = GrftArgs.foldInt(second, prettyName, "frame_size")
-  private lazy val stride = GrftArgs.foldInt(third, prettyName, "stride")
-  private def checkGeom(): Unit =
+  extends StaticKernel("graft_frames", Seq(binary, literal(integral), literal(integral)),
+    ArrayType(BinaryType, containsNull = false), GrftCodec, "frames", Nulls.NeverNull) {
+  override protected def callArgs: Seq[Any] = {
+    val frameSize = GrftArgs.foldInt(second, prettyName, "frame_size")
+    val stride = GrftArgs.foldInt(third, prettyName, "stride")
     require(frameSize > 0 && stride > 0,
       s"$prettyName: frame_size and stride must be positive, got $frameSize/$stride")
-
-  override def eval(input: InternalRow): Any = {
-    checkGeom()
-    GrftCodec.frames(first.eval(input).asInstanceOf[Array[Byte]], frameSize, stride)
+    Seq(first, frameSize, stride)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    checkGeom()
-    val c = first.genCode(ctx)
-    val jt = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      |${c.code}
-      |$jt ${ev.value} =
-      |  ${codecCall(s"${c.isNull} ? null : ${c.value}", frameSize.toString, stride.toString)};
-      """.stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 object MultimodalExpressions {

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.ArgType.{arrayOf, binary, int, string}
 
 /** Native Catalyst expression for word k-gram shingling — the hot
   * primitive of every text-dedup / contamination / boilerplate
@@ -28,38 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * old `size(w) >= k` pre-filter dropped — yields NULL so callers
   * filter `isNotNull` instead.
   */
-case class WordShingles(text: Expression, k: Expression)
-  extends BinaryExpression {
-
-  override def left: Expression = text
-  override def right: Expression = k
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_shingles"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || k.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_shingles expects (string, int), got " +
-          s"(${text.dataType.simpleString}, ${k.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, kk: Any): Any =
-    TextShingling.shingles(t.asInstanceOf[UTF8String], kk.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, kk) => {
-      s"""
-         |${ev.value} = graft.functions.TextShingling.shingles($t, $kk);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(text = newLeft, k = newRight)
-}
+case class WordShingles(text: Expression, k: Expression) extends StaticKernel(
+  "graft_shingles", Seq(string, int), ArrayType(StringType, containsNull = false),
+  TextShingling, "shingles")
 
 /** Multiset k-grams with multiplicity — `graft_grams(text, k)`. Same
   * tokenization contract as [[WordShingles]] but WITHOUT the distinct:
@@ -67,38 +38,9 @@ case class WordShingles(text: Expression, k: Expression)
   * training/scoring, CMS feeds) where multiplicity is the point. Null
   * for texts with fewer than k words.
   */
-case class WordGrams(text: Expression, k: Expression)
-  extends BinaryExpression {
-
-  override def left: Expression = text
-  override def right: Expression = k
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_grams"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || k.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_grams expects (string, int), got " +
-          s"(${text.dataType.simpleString}, ${k.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, kk: Any): Any =
-    TextShingling.grams(t.asInstanceOf[UTF8String], kk.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, kk) => {
-      s"""
-         |${ev.value} = graft.functions.TextShingling.grams($t, $kk);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(text = newLeft, k = newRight)
-}
+case class WordGrams(text: Expression, k: Expression) extends StaticKernel(
+  "graft_grams", Seq(string, int), ArrayType(StringType, containsNull = false),
+  TextShingling, "grams")
 
 /** Static shingling kernel, shared by interpreted eval and codegen. */
 object TextShingling {
@@ -518,122 +460,34 @@ object TextShingling {
   }
 }
 
-/** Consecutive `spanWords`-word spans of a text (trailing partial span
-  * kept, duplicates kept, document order) — the span-dedup chopper.
-  * Identical to `transform(sequence(0, ceil(n/sw)-1), i ->
-  * array_join(slice(w, i*sw+1, sw), ' '))` over `w = split(text, ' ')`
-  * without the interpreted per-span lambda.
-  */
 /** md5-prefix hash per consecutive k-word gram (see
   * [[TextShingling.gramHashes]]) — `graft_gram_hashes(text, k,
   * hexDigits)` → array<long>, the fused form of `transform(
   * graft_grams(text, k), g -> conv(substring(md5(g), 1, hexDigits),
   * 16, 10))`.
   */
-case class GramHashes(text: Expression, k: Expression, hexDigits: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def first: Expression = text
-  override def second: Expression = k
-  override def third: Expression = hexDigits
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gram_hashes"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || k.dataType != IntegerType ||
-        hexDigits.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_gram_hashes expects (string, int, int), got " +
-          s"(${text.dataType.simpleString}, ${k.dataType.simpleString}, " +
-          s"${hexDigits.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, kk: Any, hd: Any): Any =
-    TextShingling.gramHashes(t.asInstanceOf[UTF8String],
-      kk.asInstanceOf[Int], hd.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, kk, hd) => {
-      s"""
-         |${ev.value} = graft.functions.TextShingling.gramHashes($t, $kk, $hd);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(text = newFirst, k = newSecond, hexDigits = newThird)
-}
+case class GramHashes(text: Expression, k: Expression, hexDigits: Expression) extends StaticKernel(
+  "graft_gram_hashes", Seq(string, int, int),
+  ArrayType(LongType, containsNull = false), TextShingling, "gramHashes")
 
 /** All `w`-char windows of a text in position order (see
   * [[TextShingling.charWindows]]) — `graft_char_windows(text, w)`;
   * callers pair it with `posexplode` (0-based pos + 1 = the old
   * 1-based `sequence` position).
   */
-case class CharWindows(text: Expression, w: Expression)
-  extends BinaryExpression {
+case class CharWindows(text: Expression, w: Expression) extends StaticKernel(
+  "graft_char_windows", Seq(string, int), ArrayType(StringType, containsNull = false),
+  TextShingling, "charWindows")
 
-  override def left: Expression = text
-  override def right: Expression = w
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_char_windows"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || w.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_char_windows expects (string, int), got " +
-          s"(${text.dataType.simpleString}, ${w.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, ww: Any): Any =
-    TextShingling.charWindows(t.asInstanceOf[UTF8String], ww.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, ww) => {
-      s"""
-         |${ev.value} = graft.functions.TextShingling.charWindows($t, $ww);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(text = newLeft, w = newRight)
-}
-
-case class WordSpans(text: Expression, spanWords: Expression)
-  extends BinaryExpression {
-
-  override def left: Expression = text
-  override def right: Expression = spanWords
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_spans"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || spanWords.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_spans expects (string, int), got " +
-          s"(${text.dataType.simpleString}, ${spanWords.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, sw: Any): Any =
-    TextShingling.spans(t.asInstanceOf[UTF8String], sw.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, sw) =>
-      s"${ev.value} = graft.functions.TextShingling.spans($t, $sw);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(text = newLeft, spanWords = newRight)
-}
+/** Consecutive `spanWords`-word spans of a text (trailing partial span
+  * kept, duplicates kept, document order) — the span-dedup chopper.
+  * Identical to `transform(sequence(0, ceil(n/sw)-1), i ->
+  * array_join(slice(w, i*sw+1, sw), ' '))` over `w = split(text, ' ')`
+  * without the interpreted per-span lambda.
+  */
+case class WordSpans(text: Expression, spanWords: Expression) extends StaticKernel(
+  "graft_spans", Seq(string, int), ArrayType(StringType, containsNull = false),
+  TextShingling, "spans")
 
 /** Native per-document SimHash — one narrow pass over the text instead
   * of the explode + 16/64-bit-sum groupBy the declarative form needs.
@@ -650,34 +504,9 @@ case class WordSpans(text: Expression, spanWords: Expression)
   *  - 16-bit: signature bit j set from the same signed vote on bit
   *    (j%4) of md5 hex DIGIT j/4 (digit 2i = high nibble of byte i).
   */
-case class WordSimHash(text: Expression, bits: Expression)
-  extends BinaryExpression {
-
-  override def left: Expression = text
-  override def right: Expression = bits
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_simhash"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || bits.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_simhash expects (string, int), got " +
-          s"(${text.dataType.simpleString}, ${bits.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, b: Any): Any =
-    TextShingling.simhash(t.asInstanceOf[UTF8String], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, b) =>
-      s"${ev.value} = graft.functions.TextShingling.simhash($t, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(text = newLeft, bits = newRight)
-}
+case class WordSimHash(text: Expression, bits: Expression) extends StaticKernel(
+  "graft_simhash", Seq(string, int), LongType,
+  TextShingling, "simhash")
 
 /** Hashing-trick featurization (`graft_fhash(text, dim)`): the
   * text→vector bridge that needs no trained embedding model — one
@@ -690,35 +519,9 @@ case class WordSimHash(text: Expression, bits: Expression)
   * as real embeddings: cosine kNN, LSH, semantic dedup, IVF — with
   * exact integer dot products.
   */
-case class FeatureHash(text: Expression, dim: Expression)
-  extends BinaryExpression {
-
-  override def left: Expression = text
-  override def right: Expression = dim
-  override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType,
-    containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_fhash"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || dim.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_fhash expects (string, int), got " +
-          s"(${text.dataType.simpleString}, ${dim.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, d: Any): Any =
-    TextShingling.featureHash(t.asInstanceOf[UTF8String], d.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, d) =>
-      s"${ev.value} = graft.functions.TextShingling.featureHash($t, $d);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(text = newLeft, dim = newRight)
-}
+case class FeatureHash(text: Expression, dim: Expression) extends StaticKernel(
+  "graft_fhash", Seq(string, int),
+  ArrayType(LongType, containsNull = false), TextShingling, "featureHash")
 
 /** Per-document MinHash over a distinct-shingle array, in one narrow
   * codegen'd pass: the declarative form exploded every shingle of the
@@ -737,48 +540,9 @@ case class FeatureHash(text: Expression, dim: Expression)
   * Null or empty input yields null (the exploded aggregation simply
   * had no row for such docs).
   */
-case class MinHashAgg(set: Expression, numHashes: Expression, mode: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def first: Expression = set
-  override def second: Expression = numHashes
-  override def third: Expression = mode
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_minhash"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = set.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (!ok || numHashes.dataType != IntegerType || mode.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_minhash expects (array<string>, int, int), got " +
-          s"(${set.dataType.simpleString}, ${numHashes.dataType.simpleString}, " +
-          s"${mode.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(s: Any, n: Any, m: Any): Any =
-    TextShingling.minhash(
-      s.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      n.asInstanceOf[Int], m.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, n, m) => {
-      s"""
-         |${ev.value} = graft.functions.TextShingling.minhash($s, $n, $m);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(set = newFirst, numHashes = newSecond, mode = newThird)
-}
+case class MinHashAgg(set: Expression, numHashes: Expression, mode: Expression) extends StaticKernel(
+  "graft_minhash", Seq(arrayOf(StringType), int, int),
+  ArrayType(LongType, containsNull = false), TextShingling, "minhash")
 
 /** Winnowing fingerprints — `graft_winnow(text, k, w)`.
   *
@@ -806,43 +570,9 @@ case class MinHashAgg(set: Expression, numHashes: Expression, mode: Expression)
   * winnowing-based matcher is the fingerprint equi-join, whose size is
   * the sketch, not the corpus).
   */
-case class WinnowFingerprints(text: Expression, k: Expression, w: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def first: Expression = text
-  override def second: Expression = k
-  override def third: Expression = w
-  override def dataType: DataType = WinnowFingerprints.OutType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_winnow"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || k.dataType != IntegerType ||
-        w.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_winnow expects (string, int, int), got " +
-          s"(${text.dataType.simpleString}, ${k.dataType.simpleString}, " +
-          s"${w.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, kk: Any, ww: Any): Any =
-    TextShingling.winnow(t.asInstanceOf[UTF8String],
-      kk.asInstanceOf[Int], ww.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, kk, ww) => {
-      s"""
-         |${ev.value} = graft.functions.TextShingling.winnow($t, $kk, $ww);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(text = newFirst, k = newSecond, w = newThird)
-}
+case class WinnowFingerprints(text: Expression, k: Expression, w: Expression) extends StaticKernel(
+  "graft_winnow", Seq(string, int, int),
+  WinnowFingerprints.OutType, TextShingling, "winnow")
 
 object WinnowFingerprints {
   val OutType: DataType = ArrayType(
@@ -874,43 +604,9 @@ object WinnowFingerprints {
   * pass next to the scan — the only shuffle in a CDC dedup is the
   * chunk-hash equi-join, sized by chunks, not the corpus.
   */
-case class CdcCuts(text: Expression, w: Expression, d: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def first: Expression = text
-  override def second: Expression = w
-  override def third: Expression = d
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_cdc"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (text.dataType != StringType || w.dataType != IntegerType ||
-        d.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_cdc expects (string, int, int), got " +
-          s"(${text.dataType.simpleString}, ${w.dataType.simpleString}, " +
-          s"${d.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(t: Any, ww: Any, dd: Any): Any =
-    TextShingling.cdcCuts(t.asInstanceOf[UTF8String],
-      ww.asInstanceOf[Int], dd.asInstanceOf[Int].toLong)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, ww, dd) => {
-      s"""
-         |${ev.value} = graft.functions.TextShingling.cdcCuts($t, $ww, (long) $dd);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(text = newFirst, w = newSecond, d = newThird)
-}
+case class CdcCuts(text: Expression, w: Expression, d: Expression) extends StaticKernel(
+  "graft_cdc", Seq(string, int, int),
+  ArrayType(IntegerType, containsNull = false), TextShingling, "cdcCuts")
 
 /** Byte-level content-defined chunk boundaries —
   * `graft_cdc_bytes(bin, w, d)`: the [[CdcCuts]] gear over a BINARY
@@ -925,43 +621,9 @@ case class CdcCuts(text: Expression, w: Expression, d: Expression)
   * `array<int>` of 0-based chunk-end offsets; null/empty input →
   * null. One narrow codegen'd pass.
   */
-case class CdcByteCuts(bin: Expression, w: Expression, d: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def first: Expression = bin
-  override def second: Expression = w
-  override def third: Expression = d
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_cdc_bytes"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (bin.dataType != org.apache.spark.sql.types.BinaryType ||
-        w.dataType != IntegerType || d.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_cdc_bytes expects (binary, int, int), got " +
-          s"(${bin.dataType.simpleString}, ${w.dataType.simpleString}, " +
-          s"${d.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def nullSafeEval(b: Any, ww: Any, dd: Any): Any =
-    TextShingling.cdcCutsBytes(b.asInstanceOf[Array[Byte]],
-      ww.asInstanceOf[Int], dd.asInstanceOf[Int].toLong)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, ww, dd) => {
-      s"""
-         |${ev.value} = graft.functions.TextShingling.cdcCutsBytes($b, $ww, (long) $dd);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(bin = newFirst, w = newSecond, d = newThird)
-}
+case class CdcByteCuts(bin: Expression, w: Expression, d: Expression) extends StaticKernel(
+  "graft_cdc_bytes", Seq(binary, int, int),
+  ArrayType(IntegerType, containsNull = false), TextShingling, "cdcCutsBytes")
 
 object TextExpressions {
   import graft.sql.FunctionTable.kernel

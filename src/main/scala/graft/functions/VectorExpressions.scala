@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, IntegerType, LongType, StructField, StructType}
+import graft.functions.ArgType.{arrayOf, binary, double, int, literal, strictArrayOf, vector}
 
 /** Native Catalyst expressions for vector math over `array<float>` /
   * `array<double>`.
@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * product in the ANN hot path. `DotProduct` reads both element types
   * directly (each element widened to double exactly like an explicit
   * per-element cast, so results are bit-identical to the
-  * cast-then-multiply formulation the DuckDB oracles use) and generates
-  * a tight loop, so a brute-force scan over 100 TB of vectors stays
-  * inside WholeStageCodegen with no array copies.
+  * cast-then-multiply formulation the DuckDB oracles use) in one static
+  * loop ([[DotKernel.dot]]), so a brute-force scan over 100 TB of
+  * vectors stays inside WholeStageCodegen with no array copies.
   *
   * Null semantics match the `zip_with`/`aggregate` higher-order
   * formulation exactly: a length mismatch or a null element in either
@@ -25,63 +25,42 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * number) — a dimension bug upstream surfaces as missing scores, not
   * plausible wrong ones.
   */
-case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
+case class DotProduct(left: Expression, right: Expression) extends StaticKernel(
+  "graft_dot", Seq(vector, vector), DoubleType, DotKernel, "dot") {
+  override protected def callArgs: Seq[Any] =
+    Seq(left, floatInput(left), right, floatInput(right))
+}
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot"
-
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"graft_dot expects array<float> or array<double>, got $other")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (fx, fy) = (isFloat(left), isFloat(right))
+/** Static dot-product kernels shared by interpreted eval and codegen. */
+object DotKernel {
+  /** [[DotProduct]]: each element widened to double, summed in index
+    * order; null on a length mismatch or a null element.
+    */
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var s = 0.0
     var i = 0
     while (i < n) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = if (fx) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (fy) y.getFloat(i).toDouble else y.getDouble(i)
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
       s += xv * yv
       i += 1
     }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val getX = if (isFloat(left)) s"(double) $x.getFloat($i)" else s"$x.getDouble($i)"
-      val getY = if (isFloat(right)) s"(double) $y.getFloat($i)" else s"$y.getDouble($i)"
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += $getX * $getY;
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** [[Dot8]]: exact integer dot of two int8 vectors; null on a length
+    * mismatch.
+    */
+  def dot8(x: Array[Byte], y: Array[Byte]): java.lang.Long = {
+    if (x.length != y.length) return null
+    var s = 0L
+    var i = 0
+    while (i < x.length) { s += x(i).toLong * y(i); i += 1 }
+    s
+  }
 }
 
 /** All `tables` hyperplane-LSH bucket codes of a vector in ONE kernel
@@ -99,73 +78,10 @@ case class DotProduct(left: Expression, right: Expression)
   * null-projection `otherwise(0)` bits it replaces.
   */
 case class HyperplaneCodes(v: Expression, bits: Expression, tables: Expression,
-                           dim: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def first: Expression = v
-  override def second: Expression = bits
-  override def third: Expression = tables
-  override def fourth: Expression = dim
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_hyperplane"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val vOk = v.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (!vOk || bits.dataType != IntegerType || tables.dataType != IntegerType ||
-        dim.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_hyperplane expects (array<float>|array<double>, int, int, int), got " +
-          s"(${v.dataType.simpleString}, ${bits.dataType.simpleString}, " +
-          s"${tables.dataType.simpleString}, ${dim.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  private lazy val floatInput: Boolean = v.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"graft_hyperplane expects array<float> or array<double>, got $other")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vv = v.eval(input)
-    HyperplaneKernel.codes(vv.asInstanceOf[ArrayData], floatInput,
-      bits.eval(input).asInstanceOf[Int], tables.eval(input).asInstanceOf[Int],
-      dim.eval(input).asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val vCode = v.genCode(ctx)
-    val bCode = bits.genCode(ctx)
-    val tCode = tables.genCode(ctx)
-    val dCode = dim.genCode(ctx)
-    val vArg = ctx.freshName("hpVec")
-    ev.copy(
-      code = code"""
-        |${vCode.code}
-        |${bCode.code}
-        |${tCode.code}
-        |${dCode.code}
-        |org.apache.spark.sql.catalyst.util.ArrayData $vArg =
-        |  ${vCode.isNull} ? null : ${vCode.value};
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        |  graft.functions.HyperplaneKernel.codes(
-        |    $vArg, $floatInput, ${bCode.value}, ${tCode.value}, ${dCode.value});
-        |""".stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression,
-      newFourth: Expression): Expression =
-    copy(v = newFirst, bits = newSecond, tables = newThird, dim = newFourth)
+                           dim: Expression) extends StaticKernel(
+  "graft_hyperplane", Seq(vector, int, int, int), ArrayType(LongType, containsNull = false),
+  HyperplaneKernel, "codes", Nulls.NeverNull) {
+  override protected def callArgs: Seq[Any] = Seq(v, floatInput(v), bits, tables, dim)
 }
 
 /** Static hyperplane kernel shared by interpreted eval and codegen. */
@@ -239,44 +155,15 @@ object HyperplaneKernel {
   * null/mismatched-dim vector or an empty matrix yields a null
   * struct — bad geometry is missing data, not a plausible score.
   */
-case class ArgMaxCosine(v: Expression, ids: Expression, mat: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
+case class ArgMaxCosine(v: Expression, ids: Expression, mat: Expression) extends StaticKernel(
+  "graft_argmax_cos",
+  Seq(vector, literal(strictArrayOf(LongType)), literal(arrayOf(DoubleType))),
+  StructType(Seq(StructField("bench_id", LongType, nullable = false),
+    StructField("cos", DoubleType, nullable = false))),
+  ArgMaxCosState, "argmax") {
 
-  override def first: Expression = v
-  override def second: Expression = ids
-  override def third: Expression = mat
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("bench_id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("cos", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_argmax_cos"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val vOk = v.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    val idsOk = ids.foldable && ids.dataType == ArrayType(
-      org.apache.spark.sql.types.LongType, containsNull = false)
-    val matOk = mat.foldable && (mat.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (!vOk || !idsOk || !matOk)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_argmax_cos expects (array<float>|array<double>, " +
-          "literal array<bigint>, literal array<double>), got " +
-          s"(${v.dataType.simpleString}, ${ids.dataType.simpleString}, " +
-          s"${mat.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  private lazy val floatInput: Boolean = v.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
+  // the reference matrix, built once per expression and passed to the
+  // kernel by reference
   private lazy val state: ArgMaxCosState = {
     val idArr = ids.eval(null).asInstanceOf[ArrayData].toLongArray()
     val matArr = mat.eval(null).asInstanceOf[ArrayData].toDoubleArray()
@@ -287,31 +174,10 @@ case class ArgMaxCosine(v: Expression, ids: Expression, mat: Expression)
         s"${idArr.length} reference rows")
     require(idArr.indices.tail.forall(i => idArr(i - 1) < idArr(i)),
       "graft_argmax_cos: ids must be strictly ascending (tie order)")
-    new ArgMaxCosState(idArr, matArr, floatInput)
+    new ArgMaxCosState(idArr, matArr, floatInput(v))
   }
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vv = v.eval(input)
-    if (vv == null) null
-    else state.eval(vv.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val stateRef = ctx.addReferenceObj("argmaxCosState", state,
-      classOf[ArgMaxCosState].getName)
-    val vCode = v.genCode(ctx)
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    ev.copy(code = code"""
-      |${vCode.code}
-      |InternalRow ${ev.value} = ${vCode.isNull} ? null
-      |  : $stateRef.eval(${vCode.value});
-      |boolean ${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(v = newFirst, ids = newSecond, mat = newThird)
+  override protected def callArgs: Seq[Any] = Seq(v, state)
 }
 
 /** Precomputed reference matrix shared by interpreted eval and codegen
@@ -360,6 +226,12 @@ final class ArgMaxCosState(ids: Array[Long], mat: Array[Double],
   }
 }
 
+object ArgMaxCosState {
+  /** [[ArgMaxCosine]]'s static call. */
+  def argmax(v: ArrayData, state: ArgMaxCosState): org.apache.spark.sql.catalyst.InternalRow =
+    state.eval(v)
+}
+
 /** `graft_quantize8(v)` → struct(scale, q): symmetric int8 vector
   * quantization — `scale = max|v_i| / 127`, `q_i = floor(v_i / scale
   * + 0.5)` packed as one signed byte per dimension in a BINARY column.
@@ -373,42 +245,12 @@ final class ArgMaxCosState(ids: Array[Long], mat: Array[Double],
   * zero/null/empty vector quantizes to scale 0 with all-zero bytes
   * (never a crash); a null element yields a null struct.
   */
-case class Quantize8(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("scale", DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("q",
-      org.apache.spark.sql.types.BinaryType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_quantize8"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_quantize8 expects array<float> or array<double>, got " +
-            other.simpleString)
-    }
-
-  private lazy val floatInput: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Quantize8Kernel.quantize(input.asInstanceOf[ArrayData], floatInput)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => s"""
-      |${ev.value} = graft.functions.Quantize8Kernel.quantize($v, $floatInput);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class Quantize8(child: Expression) extends StaticKernel(
+  "graft_quantize8", Seq(vector),
+  StructType(Seq(StructField("scale", DoubleType, nullable = false),
+    StructField("q", BinaryType, nullable = false))),
+  Quantize8Kernel, "quantize") {
+  override protected def callArgs: Seq[Any] = Seq(child, floatInput(child))
 }
 
 /** `graft_quantize8_arr(v)` → array<double>: the [[Quantize8]]
@@ -421,39 +263,10 @@ case class Quantize8(child: Expression)
   * transform/array_max HOF chain costs ~0.2 ms/row interpreted and
   * gets re-inlined by CollapseProject into every reference.
   */
-case class Quantize8Arr(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_quantize8_arr"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_quantize8_arr expects array<float> or array<double>, got " +
-            other.simpleString)
-    }
-
-  private lazy val floatInput: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Quantize8Kernel.quantizeArr(input.asInstanceOf[ArrayData], floatInput)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => s"""
-      |${ev.value} = graft.functions.Quantize8Kernel.quantizeArr($v, $floatInput);
-      |${ev.isNull} = ${ev.value} == null;
-      |""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+case class Quantize8Arr(child: Expression) extends StaticKernel(
+  "graft_quantize8_arr", Seq(vector), ArrayType(DoubleType, containsNull = false),
+  Quantize8Kernel, "quantizeArr") {
+  override protected def callArgs: Seq[Any] = Seq(child, floatInput(child))
 }
 
 object Quantize8Kernel {
@@ -520,50 +333,8 @@ object Quantize8Kernel {
   * because it is integer-exact, quantized rankings are bit-identical
   * in every engine. Length mismatch or null → null, like graft_dot.
   */
-case class Dot8(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot8"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == org.apache.spark.sql.types.BinaryType &&
-        right.dataType == org.apache.spark.sql.types.BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_dot8 expects (binary, binary), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    if (x.length != y.length) return null
-    var s = 0L
-    var i = 0
-    while (i < x.length) { s += x(i).toLong * y(i); i += 1 }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |if ($x.length != $y.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $s = 0L;
-         |  for (int $i = 0; $i < $x.length; $i++) {
-         |    $s += ((long) $x[$i]) * $y[$i];
-         |  }
-         |  ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
+case class Dot8(left: Expression, right: Expression) extends StaticKernel(
+  "graft_dot8", Seq(binary, binary), LongType, DotKernel, "dot8")
 
 /** Product-quantization encode — `graft_pq_encode(vec, centroids, m, k)`.
   *
@@ -580,75 +351,10 @@ case class Dot8(left: Expression, right: Expression) extends BinaryExpression {
   * no shuffle. Null when the input is null or not divisible by `m`.
   */
 case class PqEncode(v: Expression, cents: Expression, m: Expression,
-                    k: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def first: Expression = v
-  override def second: Expression = cents
-  override def third: Expression = m
-  override def fourth: Expression = k
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_pq_encode"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val vOk = v.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    val cOk = cents.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (!vOk || !cOk || m.dataType != IntegerType || k.dataType != IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_pq_encode expects (array<float>|array<double>, array<double>, int, int), got " +
-          s"(${v.dataType.simpleString}, ${cents.dataType.simpleString}, " +
-          s"${m.dataType.simpleString}, ${k.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  private lazy val floatInput: Boolean = v.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vv = v.eval(input)
-    val cc = cents.eval(input)
-    val mm = m.eval(input)
-    val kk = k.eval(input)
-    if (vv == null || cc == null || mm == null || kk == null) null
-    else PqKernel.encode(vv.asInstanceOf[ArrayData], floatInput,
-      cc.asInstanceOf[ArrayData],
-      mm.asInstanceOf[Int], kk.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val vCode = v.genCode(ctx)
-    val cCode = cents.genCode(ctx)
-    val mCode = m.genCode(ctx)
-    val kCode = k.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${vCode.code}
-        |${cCode.code}
-        |${mCode.code}
-        |${kCode.code}
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        |  (${vCode.isNull} || ${cCode.isNull} || ${mCode.isNull} ||
-        |   ${kCode.isNull}) ? null :
-        |  graft.functions.PqKernel.encode(${vCode.value}, $floatInput,
-        |    ${cCode.value}, ${mCode.value}, ${kCode.value});
-        |boolean ${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression,
-      newFourth: Expression): Expression =
-    copy(v = newFirst, cents = newSecond, m = newThird, k = newFourth)
+                    k: Expression) extends StaticKernel(
+  "graft_pq_encode", Seq(vector, arrayOf(DoubleType), int, int),
+  ArrayType(IntegerType, containsNull = false), PqKernel, "encode") {
+  override protected def callArgs: Seq[Any] = Seq(v, floatInput(v), cents, m, k)
 }
 
 /** Exact Givens rotation chain (`graft_rotate(v, pairs, c, s)`): apply
@@ -664,72 +370,10 @@ case class PqEncode(v: Expression, cents: Expression, m: Expression,
   * (i = j) pairs.
   */
 case class RotateGivens(v: Expression, pairs: Expression, c: Expression,
-                        s: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def first: Expression = v
-  override def second: Expression = pairs
-  override def third: Expression = c
-  override def fourth: Expression = s
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_rotate"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val vOk = v.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    val pOk = pairs.dataType match {
-      case ArrayType(IntegerType, _) => true
-      case _ => false
-    }
-    if (!vOk || !pOk || c.dataType != DoubleType || s.dataType != DoubleType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_rotate expects (array<float>|array<double>, array<int>, double, double), got " +
-          s"(${v.dataType.simpleString}, ${pairs.dataType.simpleString}, " +
-          s"${c.dataType.simpleString}, ${s.dataType.simpleString})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  private lazy val floatInput: Boolean = v.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vv = v.eval(input)
-    val pp = pairs.eval(input)
-    val cc = c.eval(input)
-    val ss = s.eval(input)
-    if (vv == null || pp == null || cc == null || ss == null) null
-    else RotateKernel.rotate(vv.asInstanceOf[ArrayData], floatInput,
-      pp.asInstanceOf[ArrayData],
-      cc.asInstanceOf[Double], ss.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val vC = v.genCode(ctx); val pC = pairs.genCode(ctx)
-    val cC = c.genCode(ctx); val sC = s.genCode(ctx)
-    ev.copy(code = code"""
-      ${vC.code}
-      ${pC.code}
-      ${cC.code}
-      ${sC.code}
-      boolean ${ev.isNull} = ${vC.isNull} || ${pC.isNull} || ${cC.isNull} || ${sC.isNull};
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.functions.RotateKernel.rotate(
-          ${vC.value}, $floatInput, ${pC.value}, ${cC.value}, ${sC.value});
-        ${ev.isNull} = ${ev.value} == null;
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression,
-      newFourth: Expression): Expression =
-    copy(v = newFirst, pairs = newSecond, c = newThird, s = newFourth)
+                        s: Expression) extends StaticKernel(
+  "graft_rotate", Seq(vector, arrayOf(IntegerType), double, double),
+  ArrayType(DoubleType, containsNull = false), RotateKernel, "rotate") {
+  override protected def callArgs: Seq[Any] = Seq(v, floatInput(v), pairs, c, s)
 }
 
 /** Static rotation kernel shared by interpreted eval and codegen. */
@@ -927,77 +571,14 @@ object PqKernel {
   * array literal instead of m·k slice/dot subtrees.
   */
 case class PqAssignInt(v: Expression, gmx: Expression, cents: Expression,
-                       m: Expression, k: Expression) extends Expression {
-
-  override def children: Seq[Expression] = Seq(v, gmx, cents, m, k)
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("m_sub", org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("code", org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("d2", org.apache.spark.sql.types.LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_pq_assign"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val vOk = v.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    val ok = vOk && gmx.dataType == DoubleType &&
-      cents.dataType == ArrayType(DoubleType, containsNull = false) &&
-      m.dataType == IntegerType && k.dataType == IntegerType
-    if (!ok)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"graft_pq_assign expects (array<float>|array<double>, double, " +
-          s"array<double>, int, int), got (${children.map(_.dataType.simpleString).mkString(", ")})")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
-
-  private lazy val floatInput: Boolean = v.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vv = v.eval(input)
-    val g = gmx.eval(input)
-    val cc = cents.eval(input)
-    val mm = m.eval(input)
-    val kk = k.eval(input)
-    if (vv == null || g == null || cc == null || mm == null || kk == null) null
-    else PqKernel.assignInt(vv.asInstanceOf[ArrayData], floatInput,
-      g.asInstanceOf[Double], cc.asInstanceOf[ArrayData],
-      mm.asInstanceOf[Int], kk.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val vCode = v.genCode(ctx)
-    val gCode = gmx.genCode(ctx)
-    val cCode = cents.genCode(ctx)
-    val mCode = m.genCode(ctx)
-    val kCode = k.genCode(ctx)
-    ev.copy(
-      code = code"""
-        |${vCode.code}
-        |${gCode.code}
-        |${cCode.code}
-        |${mCode.code}
-        |${kCode.code}
-        |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        |  (${vCode.isNull} || ${gCode.isNull} || ${cCode.isNull} ||
-        |   ${mCode.isNull} || ${kCode.isNull}) ? null :
-        |  graft.functions.PqKernel.assignInt(${vCode.value}, $floatInput,
-        |    ${gCode.value}, ${cCode.value}, ${mCode.value}, ${kCode.value});
-        |boolean ${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(v = newChildren(0), gmx = newChildren(1), cents = newChildren(2),
-      m = newChildren(3), k = newChildren(4))
+                       m: Expression, k: Expression) extends StaticKernel(
+  "graft_pq_assign", Seq(vector, double, strictArrayOf(DoubleType), int, int),
+  ArrayType(StructType(Seq(
+    StructField("m_sub", LongType, nullable = false),
+    StructField("code", LongType, nullable = false),
+    StructField("d2", LongType, nullable = false))), containsNull = false),
+  PqKernel, "assignInt") {
+  override protected def callArgs: Seq[Any] = Seq(v, floatInput(v), gmx, cents, m, k)
 }
 
 object VectorExpressions {

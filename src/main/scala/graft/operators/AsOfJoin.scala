@@ -32,7 +32,7 @@ object AsOfJoin {
     require(direction == "backward" || direction == "forward",
       s"direction must be backward or forward, got $direction")
     val backward = direction == "backward"
-    val leftCols = left.columns
+    val leftCols = left.columns.toIndexedSeq
     val keep = Set(key, time) ++ tieBreaker
     // both directions use the RUNNING frame (unboundedPreceding..current
     // row) so WindowExec streams each key group in O(n); forward is the
@@ -84,7 +84,7 @@ object AsOfJoin {
     */
   def joinNearest(left: DataFrame, right: DataFrame, key: String, time: String,
                   valueCols: Seq[String], tieBreaker: Option[String] = None): DataFrame = {
-    val leftCols = left.columns
+    val leftCols = left.columns.toIndexedSeq
     val carry = (time +: valueCols).distinct
     def renamed(df: DataFrame, pfx: String): DataFrame =
       carry.foldLeft(df)((d, c) => d.withColumnRenamed(s"asof_$c", s"$pfx$c"))

@@ -48,7 +48,7 @@ object Curation {
     val benchGrams = TextDedup.wordShingles(bench, contaminationNgram)
       .select(col("sh")).distinct()
     val wordBound = Option(
-      bench.agg(sum(size(split(col("text"), " ")))).head.get(0))
+      bench.agg(sum(size(split(col("text"), " ")))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     val benchSide =
       if (wordBound <= maxBroadcastGrams) broadcast(benchGrams) else benchGrams

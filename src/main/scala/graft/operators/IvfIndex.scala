@@ -129,7 +129,7 @@ object IvfIndex {
            k: Int = 20, nProbe: Int = 2): DataFrame = {
     val indexed = assign(emb, centroids).cache()
     val qRow = indexed.filter(col("vec_id") === queryVecId)
-      .select(col("v")).head.getSeq[Double](0).toSeq
+      .select(col("v")).head().getSeq[Double](0).toSeq
     val probeLists = nearestLists(centroids, qRow, nProbe)
     scoreAgainst(
       indexed.filter(col("vec_id") =!= queryVecId && col("list_id").isin(probeLists: _*)),
@@ -394,7 +394,7 @@ object IvfIndex {
   def needsRetrain(spark: org.apache.spark.sql.SparkSession, path: String,
                    maxTopShare: Double = 0.25): Boolean =
     listSkewStats(spark, path)
-      .agg(max(col("share"))).head.getDouble(0) > maxTopShare
+      .agg(max(col("share"))).head().getDouble(0) > maxTopShare
 
   /** Ingest-time SEMANTIC dedup probe against a standing [[writeIndex]]
     * tree — the embedding-level member of the incremental-ingest
@@ -528,7 +528,7 @@ object IvfIndex {
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
     val lists = spark.read.parquet(s"$path/lists")
     val q = lists.filter(col("vec_id") === queryVecId)
-      .select(col("qvec"), col("scale")).head
+      .select(col("qvec"), col("scale")).head()
     val qBytes = q.getAs[Array[Byte]](0)
     val qScale = q.getDouble(1)
     val probeLists = nearestLists(centroids,
@@ -637,7 +637,7 @@ object IvfIndex {
                      excludeVecId: Long = -1L): DataFrame = {
     val centroids = spark.read.parquet(s"$path/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val cb = spark.read.parquet(s"$path/codebook").head
+    val cb = spark.read.parquet(s"$path/codebook").head()
     val (m, kCode, sub) = (cb.getInt(0), cb.getInt(1), cb.getInt(2))
     val flat = cb.getSeq[Double](3)
     require(queryVec.length == m * sub,
@@ -791,7 +791,7 @@ object IvfIndex {
     VectorExpressions.register(emb.sparkSession)
     val gmx = emb.select(max(expr(
       "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))")))
-      .head.getDouble(0)
+      .head().getDouble(0)
     require(gmx > 0, "all-zero embedding corpus cannot seed a codebook")
     val q = emb.select(col("vec_id"), expr(
         s"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) / " +
@@ -946,7 +946,7 @@ object IvfIndex {
     VectorExpressions.register(spark)
     val centroids = spark.read.parquet(s"$path/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val cb = spark.read.parquet(s"$path/codebook").head
+    val cb = spark.read.parquet(s"$path/codebook").head()
     val (m, kCode) = (cb.getInt(0), cb.getInt(1))
     val flat = cb.getSeq[Double](3)
     assign(newEmb, centroids).withColumn("r", residualCol(centroids))
@@ -975,7 +975,7 @@ object IvfIndex {
                              excludeVecId: Long = -1L): DataFrame = {
     val centroids = spark.read.parquet(s"$path/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val cb = spark.read.parquet(s"$path/codebook").head
+    val cb = spark.read.parquet(s"$path/codebook").head()
     val (m, kCode, sub) = (cb.getInt(0), cb.getInt(1), cb.getInt(2))
     val flat = cb.getSeq[Double](3)
     require(queryVec.length == m * sub,
@@ -1018,7 +1018,7 @@ object IvfIndex {
     val centroids = readCentroids(spark, dir)
     val lists = spark.read.parquet(s"$dir/lists")
     val qRow = lists.filter(col("vec_id") === queryVecId)
-      .select(col("v")).head.getSeq[Double](0).toSeq
+      .select(col("v")).head().getSeq[Double](0).toSeq
     val probeLists = nearestLists(centroids, qRow, nProbe)
     scoreAgainst(
       lists.filter(col("list_id").isin(probeLists: _*)) // partition pruning

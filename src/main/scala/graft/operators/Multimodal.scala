@@ -189,7 +189,7 @@ object Multimodal {
                    stride: Int): DataFrame = {
     require(frameSize > 0 && stride > 0)
     MultimodalExpressions.register(df.sparkSession)
-    val orig = df.columns.map(col)
+    val orig = df.columns.toIndexedSeq.map(col)
     df.withColumn("_grft_frames",
         call_function("graft_frames", col(binCol), lit(frameSize), lit(stride)))
       .select(orig :+ posexplode(col("_grft_frames")).as(Seq("_grft_pos", "frame")): _*)

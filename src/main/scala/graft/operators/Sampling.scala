@@ -387,7 +387,7 @@ object Sampling {
     // left unspent (the mixture says what fraction each source GETS,
     // not how to redistribute a missing source's share); filter the
     // weights table first if redistribution is wanted.
-    val denRow = w1.agg(sum(col("_w"))).head
+    val denRow = w1.agg(sum(col("_w"))).head()
     require(!denRow.isNullAt(0) && denRow.getLong(0) > 0,
       "epochRepeats needs a non-empty weights table with positive total weight")
     val den = w1.agg(sum(col("_w")).as("_den"))

@@ -775,7 +775,7 @@ object Similarity {
     def d2to(sv: org.apache.spark.sql.Column) =
       dot(col("v"), col("v")) - lit(2.0) * dot(col("v"), sv) + dot(sv, sv)
     val startVec = e.filter(col("vec_id") === startId).select(col("v"))
-      .head.getSeq[Float](0)
+      .head().getSeq[Float](0)
     val picks = scala.collection.mutable.ArrayBuffer[(Int, Long, Double)]((1, startId, 0.0))
     // per-point state (vec_id, v, dmin): ONE narrow pass per round, and
     // the checkpoint keeps every round's plan constant-sized

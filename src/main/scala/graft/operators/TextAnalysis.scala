@@ -293,7 +293,7 @@ object TextAnalysis {
     val benchGrams = TextDedup.wordShingles(bench, n)
       .select(col("sh")).distinct()
     val wordBound = Option(
-      bench.agg(sum(size(split(col("text"), " ")))).head.get(0))
+      bench.agg(sum(size(split(col("text"), " ")))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     val benchSide =
       if (wordBound <= maxBroadcastGrams) broadcast(benchGrams)

@@ -311,7 +311,7 @@ object TextDedup {
                              maxShingleFreq: Option[Long]): DataFrame =
     maxShingleFreq match {
       case Some(cap) =>
-        val others = setsRaw.columns.filterNot(_ == "set").map(col)
+        val others = setsRaw.columns.toIndexedSeq.filterNot(_ == "set").map(col)
         val exploded = setsRaw.select(others :+ explode(col("set")).as("sh"): _*)
         val hot = exploded.groupBy(col("sh")).agg(count(lit(1)).as("f"))
           .filter(col("f") > cap)
@@ -319,7 +319,7 @@ object TextDedup {
         exploded.join(hot, Seq("sh"), "left_anti")
           .groupBy(others: _*)
           .agg(collect_list(col("sh")).as("set"))
-          .select(setsRaw.columns.map(col): _*) // original column order
+          .select(setsRaw.columns.toIndexedSeq.map(col): _*) // original column order
       case None => setsRaw
     }
 
@@ -1108,7 +1108,7 @@ object TextDedup {
                               maxBroadcastChars: Long): DataFrame = {
     val benchGrams = charWindows(bench, windowChars).select(col("g")).distinct()
     val benchChars = Option(
-      bench.agg(sum(length(col("text")))).head.get(0))
+      bench.agg(sum(length(col("text")))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     if (benchChars * windowChars <= maxBroadcastChars) broadcast(benchGrams)
     else benchGrams
@@ -1584,7 +1584,7 @@ object TextDedup {
     val shared = ch.groupBy(col("chunk_hash"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
     ch.join(shared, Seq("chunk_hash"))
-      .select(ch.columns.map(col) :+ col("n_docs"): _*)
+      .select(ch.columns.toIndexedSeq.map(col) :+ col("n_docs"): _*)
   }
 
   /** First-occurrence chunk selection + gap-and-island merge — the

@@ -37,7 +37,7 @@ object DataPipeline {
       // [off, 2·off) and punct variants [2·off, 3·off) — disjoint from
       // the corpus and from each other, and the original (smallest id)
       // stays each group's keeper
-      val off = docs.agg(max($"doc_id")).head.getLong(0) + 1L
+      val off = docs.agg(max($"doc_id")).head().getLong(0) + 1L
       val caseVar = docs.filter($"doc_id" % 7 === 0)
         .select(($"doc_id" + off).as("doc_id"),
           concat(upper($"text"), lit("!!!")).as("text"))
@@ -59,7 +59,7 @@ object DataPipeline {
       val path = SharedArtifacts.normHashIndexPath(s, dir,
         buildAt = 200L, splitAt = 350L)
       // variant ids above the real range at every SF (see q169)
-      val off = docs.agg(max($"doc_id")).head.getLong(0) + 1L
+      val off = docs.agg(max($"doc_id")).head().getLong(0) + 1L
       val batch = docs.filter($"doc_id" >= 350)
         .unionByName(docs.filter($"doc_id" < 350 && $"doc_id" % 7 === 0)
           .select(($"doc_id" + off).as("doc_id"),
@@ -351,7 +351,7 @@ object DataPipeline {
       val qv = Tables.load(s, dir, "embeddings")
         .filter(col("vec_id") === 0L)
         .select(transform(col("embedding"), x => x.cast("double")))
-        .head.getSeq[Double](0)
+        .head().getSeq[Double](0)
       graft.operators.IvfIndex.topKAdcIndexed(s, path, qv, k = 20,
         nProbe = 8, excludeVecId = 0L)
     },
@@ -390,7 +390,7 @@ object DataPipeline {
       val emb = Tables.load(s, dir, "embeddings")
       val qv = emb.filter(col("vec_id") === 0L)
         .select(transform(col("embedding"), x => x.cast("double")))
-        .head.getSeq[Double](0)
+        .head().getSeq[Double](0)
       graft.operators.IvfIndex.topKAdcRerankIndexed(s, path, emb, qv,
         k = 20, nProbe = 8, cand = 60, excludeVecId = 0L)
     },
@@ -400,7 +400,7 @@ object DataPipeline {
       val qv = Tables.load(s, dir, "embeddings")
         .filter(col("vec_id") === 0L)
         .select(transform(col("embedding"), x => x.cast("double")))
-        .head.getSeq[Double](0)
+        .head().getSeq[Double](0)
       graft.operators.IvfIndex.topKResidualAdcIndexed(s, path, qv, k = 20,
         nProbe = 8, excludeVecId = 0L)
     },

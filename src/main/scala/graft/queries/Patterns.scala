@@ -136,7 +136,7 @@ object Patterns {
           size(split($"text", " ")).cast("long").as("n_tokens"))
       val weights = docs.select($"source").distinct()
         .withColumn("weight", expr("cast(substr(source, 4) as int) % 3 + 1"))
-      val budget = 3L * docs.agg(sum($"n_tokens")).head.getLong(0)
+      val budget = 3L * docs.agg(sum($"n_tokens")).head().getLong(0)
       graft.operators.Sampling.epochRepeats(docs, "doc_id", "source",
           "n_tokens", weights, budget)
         .orderBy($"doc_id")
@@ -154,7 +154,7 @@ object Patterns {
           size(split($"text", " ")).cast("long").as("n_tokens"))
       val weights = docs.select($"source").distinct()
         .withColumn("weight", expr("cast(substr(source, 4) as int) % 3 + 1"))
-      val budget = 3L * docs.agg(sum($"n_tokens")).head.getLong(0)
+      val budget = 3L * docs.agg(sum($"n_tokens")).head().getLong(0)
       val schedule = graft.operators.Sampling.epochRepeats(docs, "doc_id",
         "source", "n_tokens", weights, budget)
       graft.operators.Sampling.trainOrder(schedule, "doc_id", nShards = 8)
@@ -213,7 +213,7 @@ object Patterns {
           size(split($"text", " ")).cast("long").as("n_tokens"))
       val weights = docs.select($"source").distinct()
         .withColumn("weight", expr("cast(substr(source, 4) as int) % 3 + 1"))
-      val budget = 3L * docs.agg(sum($"n_tokens")).head.getLong(0)
+      val budget = 3L * docs.agg(sum($"n_tokens")).head().getLong(0)
       val order = graft.operators.Sampling.trainOrder(
         graft.operators.Sampling.epochRepeats(docs, "doc_id", "source",
           "n_tokens", weights, budget),
@@ -278,7 +278,7 @@ object Patterns {
       val ev = Tables.load(s, dir, "events")
         .select($"event_id", $"user_id", unix_timestamp($"ts").as("tsec"))
       val mm = ev.agg(min($"user_id"), max($"user_id"),
-        min($"tsec"), max($"tsec")).head
+        min($"tsec"), max($"tsec")).head()
       ev.select($"event_id",
           Layout.zvalue(
             Layout.gridBucket($"user_id", mm.getLong(0), mm.getLong(1)),

@@ -242,7 +242,7 @@ object Relational {
       val a = t(s, dir, "part").select($"p_partkey".as("key"))
       val b = t(s, dir, "lineitem").select($"l_partkey".as("key"))
       val ni = a.intersect(b).agg(count(lit(1)).as("n_intersect"))
-      val nu = a.union(b).distinct.agg(count(lit(1)).as("n_union"))
+      val nu = a.union(b).distinct().agg(count(lit(1)).as("n_union"))
       ni.crossJoin(nu)
     },
 

@@ -103,7 +103,7 @@ object StreamingOps {
               // must stay above the current watermark or Spark rejects it
               state.setTimeoutTimestamp(math.max(
                 (st.lastSec + gapSeconds) * 1000 + 1,
-                state.getCurrentWatermarkMs + 1))
+                state.getCurrentWatermarkMs() + 1))
             } else state.remove()
             closed.result().iterator
           }

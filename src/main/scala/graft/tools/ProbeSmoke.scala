@@ -165,7 +165,7 @@ object ProbeSmoke {
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toSeq)).toSeq
     val listCap = graft.operators.IvfIndex.assign(embSmall, seedCents)
       .groupBy(col("list_id")).count()
-      .agg(max(col("count"))).head.getLong(0)
+      .agg(max(col("count"))).head().getLong(0)
     val embBatch = embSmall.filter(col("vec_id") >= 4800)
       .select((col("vec_id") + 100000L).as("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE) + 0.005D)")

@@ -30,6 +30,22 @@ class LauncherSpec extends SparkSpec {
       assert(names(dir, filtered, failed) == partial, s"$dir $filtered $failed")
   }
 
+  test("the summary line of a 179-query run with every query failed fits 2000 chars") {
+    val failed = (1 to 179).map(i => f"q$i%03d_some_long_query_name")
+    val line = Bench.summaryLine(123.4567, 234.5678, 0.6123, 3, 179, failed,
+      "/root/testdata/sf0.1", "/repo/bench_out_partial.json")
+    assert(line.length <= Bench.MaxSummaryChars, line.length)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("value").asDouble == 123.4567 && json.get("cold_sec").asDouble == 234.5678)
+    assert(json.get("geomean_sec").asDouble == 0.6123 && json.get("reps").asInt == 3)
+    assert(json.get("queries").asInt == 179 && json.get("failed_count").asInt == 179)
+    val named = json.get("failed")
+    assert(named.size > 0 && named.size < 179)
+    assert((0 until named.size).map(named.get(_).asText) == failed.take(named.size))
+    assert(json.get("sf").asText == "/root/testdata/sf0.1")
+    assert(json.get("artifact").asText == "/repo/bench_out_partial.json")
+  }
+
   test("a clean run with no BENCH_r*.json in the repo dir is unstamped") {
     val bare = tempDir("graft_launcher_")
     assert(Bench.round(bare).isEmpty)

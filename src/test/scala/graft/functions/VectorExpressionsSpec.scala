@@ -42,14 +42,8 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("interpreted eval path agrees with codegen on mismatch/null") {
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
     def arr(xs: Seq[Any]) = Literal.create(xs, ArrayType(DoubleType))
-    def ev(a: Seq[Any], b: Seq[Any]): Any = {
-      val e = DotProduct(arr(a), arr(b))
-      e.nullSafeEval(
-        ArrayData.toArrayData(a.toArray),
-        ArrayData.toArrayData(b.toArray))
-    }
+    def ev(a: Seq[Any], b: Seq[Any]): Any = DotProduct(arr(a), arr(b)).eval()
     assert(ev(Seq(1.0, 2.0), Seq(3.0, 4.0)) == 11.0)
     assert(ev(Seq(1.0, 2.0), Seq(3.0)) == null)
     assert(ev(Seq(1.0, null), Seq(3.0, 4.0)) == null)

@@ -625,6 +625,23 @@ class GraftSqlSpec extends SparkSpec {
     assert(r.getSeq[Double](2) == Seq(0.0, 127.0))
   }
 
+  test("every scalar kernel rejects wrong-typed arguments at analysis") {
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    GraftExtensions.register(spark)
+    // graft_cosine is graft_dot's composition, so its errors name graft_dot
+    val kernels = GraftExtensions.builders.keys.toSeq.filterNot(_ == "graft_cosine").sorted
+    assert(kernels.size == 32)
+    // no kernel takes a boolean anywhere; the arity is what the builder reads
+    val accepted = kernels.filterNot { name =>
+      val arity = GraftExtensions.builders(name)._2(Seq.fill(5)(Literal(true))).children.size
+      val call = s"SELECT $name(${Seq.fill(arity)("true").mkString(", ")})"
+      try { spark.sql(call); false }
+      catch { case e: AnalysisException => e.getMessage.contains(s"$name expects") }
+    }
+    assert(accepted.isEmpty, s"analyzed with wrong-typed arguments: $accepted")
+  }
+
   test("graft_cosine equals the Similarity column API on real embeddings") {
     GraftExtensions.register(spark)
     val emb = Tables.load(spark, sf, "embeddings").limit(10)

@@ -298,7 +298,9 @@ def run_bench(sf_dir):
     out = subprocess.run(JAVA + ["graft.Bench"], env=env, cwd=REPO,
                          capture_output=True, text=True, check=True)
     line = [l for l in out.stdout.splitlines() if l.startswith('{"metric"')][-1]
-    parsed = json.loads(line)
+    # the stdout line is a summary; the per-query map is in its artifact
+    with open(json.loads(line)["artifact"]) as f:
+        parsed = json.load(f)
     with open(spread_path) as f:
         spread = json.load(f)["spread"]
     parsed["mins"] = {k: v["min"] for k, v in spread.items()}
