@@ -132,7 +132,7 @@ object Bench {
       // final UnsafeRow projection writes them all) with no pruning —
       // and, unlike a noop-sink write, adds no V2 write wrapper (the
       // wrapper measured a flat ~+0.6 s/query on 1-row outputs).
-      try {
+      try LocalSession.inJobGroup(spark, name) {
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
         val rdd = df.queryExecution.toRdd // forces analysis + physical plan

@@ -36,4 +36,13 @@ object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with every Spark job it starts in the job group `name`
+    * (`spark.jobGroup.id`, also the job description), then clear the
+    * group: the mains attribute each query's jobs to its name this way.
+    */
+  def inJobGroup[T](spark: SparkSession, name: String)(body: => T): T = {
+    spark.sparkContext.setJobGroup(name, name)
+    try body finally spark.sparkContext.clearJobGroup()
+  }
 }

@@ -52,7 +52,7 @@ object Verify {
     selected(SparkEntry.queries, only)
       .foreach { case (name, fn) =>
         val t0 = System.nanoTime()
-        try {
+        try LocalSession.inJobGroup(spark, name) {
           val df = fn(spark, sfDir)
           // The driver's pandas comparator hashes cells; array/struct/map
           // cells are unhashable and null out the whole row (q119, r9).

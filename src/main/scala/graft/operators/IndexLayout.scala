@@ -3,14 +3,29 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Hash-bucketed parquet layout for STANDING ingest indexes (r15
-  * verdict directive 1): every index a per-batch probe reads
-  * (chunk-hash q163, 64-bit media hash q161, MinHash signatures
-  * q150/q77, substring windows q139/q142, norm-hash q175) is written
-  * `partitionBy(bucket)` with `bucket = pmod(xxhash64(key), B)`, and
-  * the probe prunes its scan to the buckets — and, when the batch's
-  * key set is small enough to ship as a literal, the keys — actually
-  * present in the batch.
+/** The lifecycle of every STANDING ingest index — the one module that
+  * knows how those trees are written, stamped, versioned and probed.
+  *
+  * Trees: the hash-bucketed ones (chunk-hash q163, 64-bit media bands
+  * q161, MinHash docs/bands q150/q77, substring windows q139 and the
+  * versioned eval-set windows q142, norm-hash q175, distinct grams
+  * q151) and the versioned IVF trees of [[IvfIndex]] (q178–q180).
+  *
+  * Policies it alone decides:
+  *  - the bucket count of a write ([[writeBucketed]]): the session
+  *    conf on overwrite, the tree's own B on append;
+  *  - when `_graft_index_meta.json` is stamped (overwrite, or an
+  *    append to a pre-meta tree — never on a routine append);
+  *  - how the next version is built and `_current` flipped
+  *    ([[publishVersion]], [[publishNextVersion]]);
+  *  - whether a probe broadcasts the index or prunes it
+  *    ([[probeScan]], [[prunedScan]]).
+  *
+  * Bucketed layout (r15 verdict directive 1): a tree is written
+  * `partitionBy(<leading cols>, bucket)` with `bucket =
+  * pmod(xxhash64(key), B)`, and the probe prunes its scan to the
+  * buckets — and, when the batch's key set is small enough to ship as
+  * a literal, the keys — actually present in the batch.
   *
   * Why this matters: the probes advertise O(batch + collisions), but
   * over a flat layout every micro-batch scans the WHOLE index — at a
@@ -57,7 +72,7 @@ object IndexLayout {
     */
   val NumBucketsKey = "spark.graft.indexNumBuckets"
 
-  private[operators] def confNumBuckets(spark: SparkSession): Int =
+  private def confNumBuckets(spark: SparkSession): Int =
     spark.conf.getOption(NumBucketsKey).map(_.toInt).getOrElse(NumBuckets)
 
   private val MetaFile = "_graft_index_meta.json"
@@ -65,8 +80,7 @@ object IndexLayout {
   private def metaPath(path: String) =
     new org.apache.hadoop.fs.Path(path, MetaFile)
 
-  private[operators] def metaExists(spark: SparkSession,
-                                    path: String): Boolean = {
+  private def metaExists(spark: SparkSession, path: String): Boolean = {
     val p = metaPath(path)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
@@ -102,20 +116,8 @@ object IndexLayout {
     * B = 16) whenever the bucket directories prove the tree was
     * written wider.
     */
-  private[operators] def writeMeta(spark: SparkSession, path: String,
-                                   b: Int): Unit =
-    writeMetaBody(spark, path, s"""{"numBuckets": $b}""")
-
-  private def writeMetaBody(spark: SparkSession, path: String,
-                            body: String): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(path, MetaFile + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8"))
-    finally out.close()
-    atomicReplace(spark, tmp, p)
-  }
+  private def writeMeta(spark: SparkSession, path: String, b: Int): Unit =
+    upsertMetaLong(spark, path, "numBuckets", b)
 
   private def readMetaBody(spark: SparkSession,
                            path: String): Option[String] = {
@@ -129,8 +131,8 @@ object IndexLayout {
   }
 
   /** One integer field of the tree's meta file, or None when the meta
-    * (or the key) is absent. Read to EOF like [[indexNumBuckets]] — a
-    * truncated read must never parse a shorter number.
+    * (or the key) is absent. Read to EOF — a truncated read must never
+    * parse a shorter number (a smaller B would mis-bucket every probe).
     */
   private[operators] def readMetaLong(spark: SparkSession, path: String,
                                       key: String): Option[Long] =
@@ -142,9 +144,9 @@ object IndexLayout {
   /** Upsert one integer field into the tree's meta file, preserving
     * every other integer field (the meta is a flat string→integer
     * object by construction — both writers here only ever store
-    * counts). Same temp-write + atomic-replace discipline as
-    * [[writeMeta]], and the single-writer maintenance model the index
-    * lifecycle already assumes makes read-merge-write safe.
+    * counts). Written to a temp name and atomically renamed over the
+    * meta ([[writeMeta]]), and the single-writer maintenance model the
+    * index lifecycle already assumes makes read-merge-write safe.
     */
   private[operators] def upsertMetaLong(spark: SparkSession, path: String,
                                         key: String, value: Long): Unit = {
@@ -153,8 +155,13 @@ object IndexLayout {
     readMetaBody(spark, path).foreach(b =>
       kvRe.findAllMatchIn(b).foreach(m => kvs(m.group(1)) = m.group(2).toLong))
     kvs(key) = value
-    writeMetaBody(spark, path,
-      kvs.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
+    val p = metaPath(path)
+    val tmp = new org.apache.hadoop.fs.Path(path, MetaFile + ".tmp")
+    val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(tmp, true)
+    try out.write(kvs.map { case (k, v) => s""""$k": $v""" }
+      .mkString("{", ", ", "}").getBytes("UTF-8"))
+    finally out.close()
+    atomicReplace(spark, tmp, p)
   }
 
   /** The bucket count the tree at `path` was written with: its meta
@@ -179,16 +186,10 @@ object IndexLayout {
     * a one-line file, version it / restore it from the build config
     * rather than relying on inference.
     */
-  def indexNumBuckets(spark: SparkSession, path: String): Int = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      """"numBuckets"\s*:\s*(\d+)""".r.findFirstMatchIn(body)
-        .map(_.group(1).toInt).getOrElse(NumBuckets)
-    } else {
+  def indexNumBuckets(spark: SparkSession, path: String): Int =
+    readMetaLong(spark, path, "numBuckets").map(_.toInt).getOrElse {
       val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       val bucketRe = """bucket=(\d+)""".r
       val maxBucket =
         if (!fs.exists(root)) -1
@@ -204,7 +205,6 @@ object IndexLayout {
             "the meta file; assuming the default would silently mis-bucket.")
       NumBuckets
     }
-  }
 
   /** Max distinct batch keys shipped as a literal IN-list into the
     * scan (beyond bucket pruning). MEASURED crossover
@@ -267,8 +267,7 @@ object IndexLayout {
       .getOrElse(PruneMinBytesDefault)
 
   /** On-disk size of an index tree (driver-side filesystem metadata —
-    * the [[graft.operators.TextDedup.substringMatchesIndexed]]
-    * decision reads the same summary).
+    * no Spark job): the input of every probe-sizing decision here.
     */
   def indexBytes(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -281,6 +280,32 @@ object IndexLayout {
     */
   def shouldPrune(spark: SparkSession, path: String): Boolean =
     indexBytes(spark, path) >= pruneMinBytes(spark)
+
+  /** Conservative decoded-rows-to-on-disk ratio for snappy-parquet
+    * window/string tables (measured 3-10× on the documents corpus; the
+    * high end budgets for UTF-16 `String` payloads plus row overhead).
+    */
+  final val BroadcastExpansionFactor = 5L
+
+  /** The sizing rule of a probe that may ship the whole index: an index
+    * whose DECODED size (on-disk bytes × [[BroadcastExpansionFactor]]
+    * — snappy-parquet short strings expand ~3-10× into JVM rows) fits
+    * `maxBroadcastBytes` is read whole, without its bucket column, and
+    * the second field is true: the caller broadcasts it (pruning can't
+    * beat a hash relation that already fits). Otherwise the first
+    * field is [[prunedScan]] of `batchKeys` and the second is false.
+    * The size is one filesystem summary (free metadata), never a
+    * `count()` — a per-probe count would double every batch's index
+    * read.
+    */
+  private[operators] def probeScan(spark: SparkSession, path: String,
+                                   keyCol: String, batchKeys: => DataFrame,
+                                   maxBroadcastBytes: Long): (DataFrame, Boolean) = {
+    val bytes = indexBytes(spark, path)
+    if (bytes * BroadcastExpansionFactor <= maxBroadcastBytes)
+      (spark.read.parquet(path).drop("bucket"), true)
+    else (sizedScan(spark, path, keyCol, batchKeys, bytes), false)
+  }
 
   def bucketOf(key: Column, b: Int = NumBuckets): Column =
     pmod(xxhash64(key), lit(b)).cast("int")
@@ -306,6 +331,10 @@ object IndexLayout {
     * deployment with TB-sized buckets raises the output parallelism
     * (repartition(N, bucket)) instead.
     *
+    * `partitionCols` lead the bucket in the directory layout
+    * (`band=j/bucket=i`, `eval_set_id=s/bucket=i`): the hash-band and
+    * eval-set trees prune on them first.
+    *
     * Appends detect the EXISTING tree's layout first: appending
     * bucket directories into a pre-bucketing flat tree would mix
     * root-level data files with `bucket=*` dirs and break partition
@@ -315,19 +344,21 @@ object IndexLayout {
     * unpruned); rebuilding with mode=overwrite migrates it.
     */
   def writeBucketed(df: DataFrame, keyCol: String, path: String,
-                    mode: String): Unit = {
+                    mode: String, partitionCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
-    val existing = existingLayoutBucketed(spark, path)
-    val legacyAppend = mode == "append" && existing.contains(false)
-    if (legacyAppend) { df.write.mode("append").parquet(path); return }
+    lazy val existing = existingLayoutBucketed(spark, path)
+    if (mode == "append" && existing.contains(false)) {
+      df.write.mode("append").parquet(path); return
+    }
     // appends use the TREE's bucket count (a key's bucket must never
     // depend on the writing session); new/overwritten trees take the
     // session conf
     val append = mode == "append" && existing.contains(true)
     val b = if (append) indexNumBuckets(spark, path) else confNumBuckets(spark)
+    val parts = partitionCols :+ "bucket"
     df.withColumn("bucket", bucketOf(col(keyCol), b))
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(path)
+      .repartition(parts.map(col): _*)
+      .write.mode(mode).partitionBy(parts: _*).parquet(path)
     // the meta is a property of the TREE and appends read (not choose)
     // B, so an append whose tree already carries meta must not touch
     // it — even an atomic rewrite of the same value is a pointless
@@ -379,10 +410,14 @@ object IndexLayout {
     * frame WITHOUT the bucket column.
     */
   def prunedScan(spark: SparkSession, path: String, keyCol: String,
-                 batchKeys: DataFrame): DataFrame = {
+                 batchKeys: DataFrame): DataFrame =
+    sizedScan(spark, path, keyCol, batchKeys, indexBytes(spark, path))
+
+  private def sizedScan(spark: SparkSession, path: String, keyCol: String,
+                        batchKeys: DataFrame, bytes: => Long): DataFrame = {
     val idx = spark.read.parquet(path)
     if (!idx.columns.contains("bucket")) idx // legacy flat layout
-    else if (!shouldPrune(spark, path)) idx.drop("bucket")
+    else if (bytes < pruneMinBytes(spark)) idx.drop("bucket")
     else restrictToBatchKeys(idx, keyCol, batchKeys,
       indexNumBuckets(spark, path))
   }
@@ -486,6 +521,31 @@ object IndexLayout {
     val p = pointerPath(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p)) versionDir(path, currentVersion(spark, path)) else path
+  }
+
+  /** Build version `version` of the versioned tree at `path` — `build`
+    * writes its directory completely — then flip `_current` to it: the
+    * one place a pointer moves, so no reader can ever resolve a
+    * half-built version. Returns `version`.
+    */
+  private[operators] def publishVersion(spark: SparkSession, path: String,
+                                        version: Int)(build: String => Unit): Int = {
+    build(versionDir(path, version))
+    flipVersion(spark, path, version)
+    version
+  }
+
+  /** The version bump of every versioned tree (compaction, retrain):
+    * `build(live, next)` writes the next version directory from the
+    * live one, then the pointer flips. A pre-versioning flat tree (no
+    * pointer; live = `path` itself) migrates to v1 in place — its root
+    * data stays for in-flight readers. Returns the new version.
+    */
+  private[operators] def publishNextVersion(spark: SparkSession, path: String)(
+      build: (String, String) => Unit): Int = {
+    val live = resolveVersionDir(spark, path)
+    val next = if (live == path) 1 else currentVersion(spark, path) + 1
+    publishVersion(spark, path, next)(build(live, _))
   }
 
   /** The retention half of the version protocol: delete every `v<N>`

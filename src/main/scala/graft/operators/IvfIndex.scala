@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExpressions
 
@@ -28,10 +28,10 @@ object IvfIndex {
     * geometry (semantic dedup, prototypicality): argmin cluster id for
     * the `v` column against a literal centroid table.
     */
-  private[operators] def argmin(centroids: Seq[(Int, Seq[Double])]): org.apache.spark.sql.Column =
+  private[operators] def argmin(centroids: Seq[(Int, Seq[Double])]): Column =
     centroidArgmin(centroids)
 
-  private def centroidArgmin(centroids: Seq[(Int, Seq[Double])]): org.apache.spark.sql.Column = {
+  private def centroidArgmin(centroids: Seq[(Int, Seq[Double])]): Column = {
     // squared L2 distance to each centroid; the vector norm term is
     // constant per row, so argmin over (||c||² - 2 v·c) suffices
     val scored = centroids.map { case (cid, c) =>
@@ -136,43 +136,73 @@ object IvfIndex {
       qRow, k)
   }
 
-  /** Shared driver-artifact writers: every index layout persists its
-    * centroid table the same way, and the ADC layouts also persist the
-    * flat codebook — one implementation so the artifact schema can
-    * never drift between index variants.
+  /** One resolved IVF tree: the live version directory behind `path`
+    * (the `_current` pointer's target, or `path` itself for a flat
+    * tree). Every reader and appender opens the tree here, so none can
+    * miss the pointer; the centroid table and the ADC codebook are
+    * each read at most once per call.
     */
-  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
-                             path: String,
-                             centroids: Seq[(Int, Seq[Double])]): Unit = {
-    import spark.implicits._
-    centroids.map { case (cid, c) => (cid, c) }
-      .toDF("cid", "centroid")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
+  private final class Tree(spark: SparkSession, path: String) {
+    val dir: String = IndexLayout.resolveVersionDir(spark, path)
+    def lists: DataFrame = spark.read.parquet(s"$dir/lists")
+    lazy val centroids: Seq[(Int, Seq[Double])] =
+      spark.read.parquet(s"$dir/centroids")
+        .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
+    lazy val codebook: Codebook = {
+      val r = spark.read.parquet(s"$dir/codebook").head()
+      Codebook(r.getInt(0), r.getInt(1), r.getInt(2), r.getSeq[Double](3))
+    }
   }
 
-  private def writeCodebook(spark: org.apache.spark.sql.SparkSession,
-                            path: String, m: Int, kCode: Int, sub: Int,
-                            flat: Seq[Double]): Unit = {
-    import spark.implicits._
-    Seq((m, kCode, sub, flat))
-      .toDF("m", "k", "sub", "flat")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/codebook")
+  /** A flat `m·kCode·sub` PQ codebook and its shape. */
+  private final case class Codebook(m: Int, kCode: Int, sub: Int,
+                                    flat: Seq[Double]) {
+    /** `(vec_id, codes, list_id)`: `vec` PQ-encoded against this
+      * codebook — the ONE narrow codegen'd projection of
+      * [[Similarity.pqEncodeAdc]].
+      */
+    def encode(assigned: DataFrame, vec: Column): DataFrame =
+      assigned.select(col("vec_id"),
+        call_function("graft_pq_encode", vec,
+          typedLit(flat), lit(m), lit(kCode)).as("codes"),
+        col("list_id"))
+
+    /** A row's integer ADC estimate: `m` lookups into the micro-unit
+      * cell table `qd` plus an order-free integer sum.
+      */
+    def adc(qd: Seq[Long]): Column = {
+      val qdLit = typedLit(qd)
+      (0 until m).map(ms =>
+          element_at(qdLit, lit(ms * kCode) + element_at(col("codes"), ms + 1) + 1))
+        .reduce(_ + _)
+    }
   }
 
-  /** Materialise the IVF-flat layout: the assigned corpus written as
-    * parquet partitioned by `list_id` (one directory per inverted
-    * list), plus the centroid table. At 100 TB this is the layout that
-    * makes probing cheap: a query's `nProbe` lists become partition
-    * filters, so the scan touches only `nProbe/nLists` of the data —
-    * verified by the partition-pruning assertion in `AnnRecallSpec`.
+  /** The codebook an ADC build encodes with: the explicit (trained)
+    * `codebook`, length-checked, or the replayable seed convention —
+    * the subvectors of the first `kCode` rows of `seedRows`, a
+    * `(vec_id, vector)` frame of raw vectors or residuals. An explicit
+    * codebook needs no seed rows: the seed collect only runs on the
+    * default path.
     */
-  def writeIndex(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
-                 path: String): Unit = {
-    val spark = emb.sparkSession
-    assign(emb, centroids).write
-      .partitionBy("list_id").mode("overwrite").parquet(s"$path/lists")
-    writeCentroids(spark, path, centroids)
-    stampRowCount(spark, path)
+  private def adcCodebook(codebook: Option[Seq[Double]], seedRows: => DataFrame,
+                          dim: Int, m: Int, kCode: Int): Codebook = {
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    val sub = dim / m
+    val flat = codebook.map { cb =>
+      require(cb.length == m * kCode * sub,
+        s"codebook length ${cb.length} != ${m * kCode * sub}")
+      cb
+    }.getOrElse {
+      val seeds = seedRows.filter(col("vec_id") < kCode)
+        .collect().sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
+      require(seeds.length == kCode, s"need $kCode seed vectors, got ${seeds.length}")
+      IndexedSeq.tabulate(m * kCode * sub) { idx =>
+        val ms = idx / (kCode * sub); val kk = idx / sub % kCode; val i = idx % sub
+        seeds(kk)(ms * sub + i)
+      }
+    }
+    Codebook(m, kCode, sub, flat)
   }
 
   /** Meta key holding the tree's total indexed-vector count — stamped
@@ -184,14 +214,56 @@ object IvfIndex {
     */
   private val RowsMetaKey = "numRows"
 
-  /** (Re)count the tree's rows from parquet row-group statistics (a
-    * `count()` over the lists reads footers only, no payload pages) and
-    * persist the result in the tree's meta. Build-time cost.
+  /** The one writer of a tree's `lists` directory (one parquet
+    * directory per inverted list) and of its [[RowsMetaKey]] stamp,
+    * for builds and appends alike. An append adds the batch's own count
+    * (its lineage is micro-batch-sized by contract) to the stored total
+    * — never a recount of the standing tree; an overwrite, or an
+    * append to a pre-stamp tree, counts the written lists from parquet
+    * row-group statistics (footers only, no payload pages).
     */
-  private def stampRowCount(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Unit =
+  private def writeLists(rows: DataFrame, dir: String, mode: String): Unit = {
+    val spark = rows.sparkSession
+    val stamped =
+      if (mode == "append")
+        IndexLayout.readMetaLong(spark, dir, RowsMetaKey).map(_ + rows.count())
+      else None
+    rows.write.partitionBy("list_id").mode(mode).parquet(s"$dir/lists")
     IndexLayout.upsertMetaLong(spark, dir, RowsMetaKey,
-      spark.read.parquet(s"$dir/lists").count())
+      stamped.getOrElse(spark.read.parquet(s"$dir/lists").count()))
+  }
+
+  /** Driver artifacts: the centroid table (every layout) and the flat
+    * codebook (ADC layouts), each one parquet file beside `lists`, so
+    * the artifact schema can never drift between index variants.
+    */
+  private def writeCentroids(spark: SparkSession, dir: String,
+                             centroids: Seq[(Int, Seq[Double])]): Unit = {
+    import spark.implicits._
+    centroids.toDF("cid", "centroid")
+      .repartition(1).write.mode("overwrite").parquet(s"$dir/centroids")
+  }
+
+  private def writeCodebook(spark: SparkSession, dir: String,
+                            cb: Codebook): Unit = {
+    import spark.implicits._
+    Seq((cb.m, cb.kCode, cb.sub, cb.flat))
+      .toDF("m", "k", "sub", "flat")
+      .repartition(1).write.mode("overwrite").parquet(s"$dir/codebook")
+  }
+
+  /** Materialise the IVF-flat layout: the assigned corpus written as
+    * parquet partitioned by `list_id` (one directory per inverted
+    * list), plus the centroid table. At 100 TB this is the layout that
+    * makes probing cheap: a query's `nProbe` lists become partition
+    * filters, so the scan touches only `nProbe/nLists` of the data —
+    * verified by the partition-pruning assertion in `AnnRecallSpec`.
+    */
+  def writeIndex(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
+                 path: String): Unit = {
+    writeLists(assign(emb, centroids), path, "overwrite")
+    writeCentroids(emb.sparkSession, path, centroids)
+  }
 
   /** Number of vectors in the index at `path` (the current version):
     * the meta stamp, or — for trees that predate it — one parquet
@@ -199,11 +271,10 @@ object IvfIndex {
     * stamped tree: no Spark job, no corpus scan, history-size-
     * independent.
     */
-  def indexedVectorCount(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Long = {
-    val dir = IndexLayout.resolveVersionDir(spark, path)
-    IndexLayout.readMetaLong(spark, dir, RowsMetaKey)
-      .getOrElse(spark.read.parquet(s"$dir/lists").count())
+  def indexedVectorCount(spark: SparkSession, path: String): Long = {
+    val tree = new Tree(spark, path)
+    IndexLayout.readMetaLong(spark, tree.dir, RowsMetaKey)
+      .getOrElse(tree.lists.count())
   }
 
   /** Incrementally add vectors to a materialised index: assignment
@@ -215,27 +286,9 @@ object IvfIndex {
     * broadcast argmin — and the historical corpus is never rewritten.
     */
   def appendToIndex(newEmb: DataFrame, path: String): Unit = {
-    val spark = newEmb.sparkSession
-    val dir = IndexLayout.resolveVersionDir(spark, path)
-    val centroids = readCentroids(spark, dir)
-    // the count stamp stays O(batch) on append: one count over the
-    // batch (its lineage is micro-batch-sized by contract) added to
-    // the stored total — never a recount of the standing tree. A
-    // pre-stamp tree (no meta) pays one footer-only recount here and
-    // is stamped from then on.
-    val prev = IndexLayout.readMetaLong(spark, dir, RowsMetaKey)
-    val batchN = newEmb.count()
-    assign(newEmb, centroids).write
-      .partitionBy("list_id").mode("append").parquet(s"$dir/lists")
-    IndexLayout.upsertMetaLong(spark, dir, RowsMetaKey,
-      prev.getOrElse(
-        spark.read.parquet(s"$dir/lists").count() - batchN) + batchN)
+    val tree = new Tree(newEmb.sparkSession, path)
+    writeLists(assign(newEmb, tree.centroids), tree.dir, "append")
   }
-
-  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Seq[(Int, Seq[Double])] =
-    spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
 
   // ---- standing-index lifecycle (versioned IVF-flat) ----------------
   //
@@ -245,12 +298,12 @@ object IvfIndex {
   // seed top-1 list holds 27.7% of the corpus vs 14.1% trained — makes
   // a rebalance path a correctness-of-scale feature, not a nicety).
   // The lifecycle is the substring index's version-pointer protocol
-  // (IndexLayout.flipVersion): versions are immutable `v<N>` sibling
-  // dirs, `_current` names the live one, probes resolve the pointer
-  // once per batch, and retrain builds the NEXT version completely
-  // before the flip — in-flight probes keep their snapshot, and a
-  // pre-versioning flat tree migrates in place (its root data stays
-  // for in-flight readers; new readers follow the pointer).
+  // (IndexLayout.publishNextVersion): versions are immutable `v<N>`
+  // sibling dirs, `_current` names the live one, probes resolve the
+  // pointer once per batch, and retrain builds the NEXT version
+  // completely before the flip — in-flight probes keep their snapshot,
+  // and a pre-versioning flat tree migrates in place (its root data
+  // stays for in-flight readers; new readers follow the pointer).
 
   /** Build version 0 of a VERSIONED IVF-flat index: [[writeIndex]]
     * into `path/v0` plus the `_current` pointer. Probes and appends
@@ -258,10 +311,9 @@ object IvfIndex {
     * identical to the flat layout.
     */
   def writeVersionedIndex(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
-                          path: String): Unit = {
-    writeIndex(emb, centroids, IndexLayout.versionDir(path, 0))
-    IndexLayout.flipVersion(emb.sparkSession, path, 0)
-  }
+                          path: String): Unit =
+    IndexLayout.publishVersion(emb.sparkSession, path, 0)(
+      writeIndex(emb, centroids, _))
 
   /** Re-center the standing index at `path` around EXPLICIT new
     * centroids: the current version's vectors are re-assigned (one
@@ -272,19 +324,17 @@ object IvfIndex {
     * horizon). Centroid ids need not match the old geometry — the new
     * version is self-contained.
     */
-  def retrainIndexVersionWith(spark: org.apache.spark.sql.SparkSession,
-                              path: String,
-                              centroids: Seq[(Int, Seq[Double])]): Int = {
-    val curDir = IndexLayout.resolveVersionDir(spark, path)
-    val next =
-      if (curDir == path) 1 // migrating a pre-versioning flat tree
-      else IndexLayout.currentVersion(spark, path) + 1
-    val corpus = spark.read.parquet(s"$curDir/lists")
-      .select(col("vec_id"), col("v").as("embedding"))
-    writeIndex(corpus, centroids, IndexLayout.versionDir(path, next))
-    IndexLayout.flipVersion(spark, path, next)
-    next
-  }
+  def retrainIndexVersionWith(spark: SparkSession, path: String,
+                              centroids: Seq[(Int, Seq[Double])]): Int =
+    IndexLayout.publishNextVersion(spark, path) { (live, next) =>
+      writeIndex(storedCorpus(spark.read.parquet(s"$live/lists")), centroids, next)
+    }
+
+  /** The stored vectors of a flat-layout `lists` frame, back in the
+    * `(vec_id, embedding)` input shape of the build path.
+    */
+  private def storedCorpus(lists: DataFrame): DataFrame =
+    lists.select(col("vec_id"), col("v").as("embedding"))
 
   /** [[retrainIndexVersionWith]] with centroids TRAINED on the
     * index's own current corpus ([[train]]'s deterministic-init Lloyd
@@ -302,15 +352,11 @@ object IvfIndex {
     * RNG), so a retrain is replayable; the re-assignment that builds
     * the new version still covers every stored vector.
     */
-  def retrainIndexVersion(spark: org.apache.spark.sql.SparkSession,
-                          path: String, nLists: Int = 8,
-                          iters: Int = 3,
-                          sampleFraction: Double = 1.0): Int = {
+  def retrainIndexVersion(spark: SparkSession, path: String, nLists: Int = 8,
+                          iters: Int = 3, sampleFraction: Double = 1.0): Int = {
     require(sampleFraction > 0.0 && sampleFraction <= 1.0,
       s"sampleFraction must be in (0, 1]; got $sampleFraction")
-    val curDir = IndexLayout.resolveVersionDir(spark, path)
-    val corpus = spark.read.parquet(s"$curDir/lists")
-      .select(col("vec_id"), col("v").as("embedding"))
+    val corpus = storedCorpus(new Tree(spark, path).lists)
     val trainSet =
       if (sampleFraction >= 1.0) corpus
       else corpus.filter(
@@ -333,40 +379,28 @@ object IvfIndex {
     * table unchanged, then flips the pointer — same snapshot
     * semantics as retrain, in-flight readers keep the old version.
     * Mirrors the substring index's versioned compaction
-    * (`TextDedup.compactDecontamIndex`). Returns the new version.
+    * ([[TextDedup.compactSubstringIndexSets]]). Returns the new version.
     *
     * Like retrain, this assumes the single-writer maintenance model
     * (one compaction/retrain job at a time, appends quiesced during
     * the copy): an append that lands in the OLD version after the
     * rewrite's snapshot read would not be carried into the new one.
     */
-  def compactIndexVersion(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Int = {
-    val curDir = IndexLayout.resolveVersionDir(spark, path)
-    val next =
-      if (curDir == path) 1 // migrating a pre-versioning flat tree
-      else IndexLayout.currentVersion(spark, path) + 1
-    val nd = IndexLayout.versionDir(path, next)
-    spark.read.parquet(s"$curDir/lists")
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(s"$nd/lists")
-    // carry every non-lists sibling artifact unchanged (centroids
-    // always; a codebook when the tree is ADC-shaped) — compaction
-    // must never strip an artifact a probe needs
-    for (side <- Seq("centroids", "codebook")) {
-      val sp = new org.apache.hadoop.fs.Path(s"$curDir/$side")
-      if (sp.getFileSystem(spark.sessionState.newHadoopConf()).exists(sp))
-        spark.read.parquet(s"$curDir/$side")
-          .repartition(1).write.mode("overwrite").parquet(s"$nd/$side")
+  def compactIndexVersion(spark: SparkSession, path: String): Int =
+    IndexLayout.publishNextVersion(spark, path) { (live, next) =>
+      // one shuffle by partition key → ~one file per list
+      writeLists(spark.read.parquet(s"$live/lists").repartition(col("list_id")),
+        next, "overwrite")
+      // carry every non-lists sibling artifact unchanged (centroids
+      // always; a codebook when the tree is ADC-shaped) — compaction
+      // must never strip an artifact a probe needs
+      for (side <- Seq("centroids", "codebook")) {
+        val sp = new org.apache.hadoop.fs.Path(s"$live/$side")
+        if (sp.getFileSystem(spark.sessionState.newHadoopConf()).exists(sp))
+          spark.read.parquet(s"$live/$side")
+            .repartition(1).write.mode("overwrite").parquet(s"$next/$side")
+      }
     }
-    // compaction moves rows, never adds or drops them — carry the count
-    // stamp (recounting only for pre-stamp trees)
-    IndexLayout.upsertMetaLong(spark, nd, RowsMetaKey,
-      IndexLayout.readMetaLong(spark, curDir, RowsMetaKey)
-        .getOrElse(spark.read.parquet(s"$nd/lists").count()))
-    IndexLayout.flipVersion(spark, path, next)
-    next
-  }
 
   /** Per-list occupancy of the index at `path` — the measurement half
     * of the retrain decision (the list-skew figures in ANN_RECALL.md,
@@ -375,15 +409,11 @@ object IvfIndex {
     * payload pages), so it costs footer reads — run it per maintenance
     * window, not per batch.
     */
-  def listSkewStats(spark: org.apache.spark.sql.SparkSession,
-                    path: String): DataFrame = {
-    val dir = IndexLayout.resolveVersionDir(spark, path)
-    val counts = spark.read.parquet(s"$dir/lists")
+  def listSkewStats(spark: SparkSession, path: String): DataFrame =
+    new Tree(spark, path).lists
       .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
-    counts.withColumn("share",
-      col("n") / sum(col("n")).over(
+      .withColumn("share", col("n") / sum(col("n")).over(
         org.apache.spark.sql.expressions.Window.partitionBy()))
-  }
 
   /** The decision rule on [[listSkewStats]]: retrain when the hottest
     * list holds more than `maxTopShare` of the corpus (the skew level
@@ -391,7 +421,7 @@ object IvfIndex {
     * ANN_RECALL.md records 27.7% for seed geometry vs 14.1% trained
     * at nLists = 8). A ≤ k-row driver pull.
     */
-  def needsRetrain(spark: org.apache.spark.sql.SparkSession, path: String,
+  def needsRetrain(spark: SparkSession, path: String,
                    maxTopShare: Double = 0.25): Boolean =
     listSkewStats(spark, path)
       .agg(max(col("share"))).head().getDouble(0) > maxTopShare
@@ -445,20 +475,19 @@ object IvfIndex {
                                 maxListN: Option[Long] = None): DataFrame = {
     val spark = newEmb.sparkSession
     VectorExpressions.register(spark)
-    val dir = IndexLayout.resolveVersionDir(spark, path)
-    val centroids = readCentroids(spark, dir)
+    val tree = new Tree(spark, path)
     // ONE assignment pass per batch: the assigned frame feeds the
     // touched-list collect, the hits join AND the final left join —
     // cached + tracked like every other per-batch probe (r17 verdict
     // #2); query callers release via releaseOperatorCaches, per-batch
     // callers (semanticDedupPerBatch) via releaseTrackedCaches.
     val batch = graft.Tables.trackOperatorCache(
-      assign(newEmb, centroids).cache())
+      assign(newEmb, tree.centroids).cache())
     // the touched cells: bounded by k (the centroid count), so the
     // collect is a ≤ k-row driver pull, never batch-sized
     val touched = batch.select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val inTouched = spark.read.parquet(s"$dir/lists")
+    val inTouched = tree.lists
       .filter(col("list_id").isin(touched: _*)) // partition pruning
     // hot lists: a count over the partition column only (no payload
     // read), ≤ k rows collected; hot directories never reach the scan
@@ -500,14 +529,12 @@ object IvfIndex {
     */
   def writeQuantizedIndex(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
                           path: String): Unit = {
-    val spark = emb.sparkSession
-    assign(emb, centroids)
+    writeLists(assign(emb, centroids)
       .select(col("vec_id"), col("list_id"),
         call_function("graft_quantize8", col("v")).as("m"))
       .select(col("vec_id"), col("m.scale").as("scale"),
-        col("m.q").as("qvec"), col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/lists")
-    writeCentroids(spark, path, centroids)
+        col("m.q").as("qvec"), col("list_id")), path, "overwrite")
+    writeCentroids(emb.sparkSession, path, centroids)
   }
 
   /** Top-k search against a materialised QUANTIZED index, ranked by
@@ -521,17 +548,16 @@ object IvfIndex {
     * (the q110 gate). Probed lists arrive as a partition-column filter
     * (directory pruning, asserted in AnnRecallSpec).
     */
-  def topKQuantizedIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def topKQuantizedIndexed(spark: SparkSession, path: String,
                            queryVecId: Long, k: Int = 20, nProbe: Int = 2): DataFrame = {
     VectorExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val lists = spark.read.parquet(s"$path/lists")
+    val tree = new Tree(spark, path)
+    val lists = tree.lists
     val q = lists.filter(col("vec_id") === queryVecId)
       .select(col("qvec"), col("scale")).head()
     val qBytes = q.getAs[Array[Byte]](0)
     val qScale = q.getDouble(1)
-    val probeLists = nearestLists(centroids,
+    val probeLists = nearestLists(tree.centroids,
       qBytes.toSeq.map(_.toDouble * qScale), nProbe)
     // |dot8| ≤ 127²·dim and qaa·qbb ≤ (127²·dim)² < 2^53 at dim ≤ 558:
     // every value is exactly representable, so rounding and order match
@@ -570,39 +596,23 @@ object IvfIndex {
   def writeAdcIndex(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
                     path: String, m: Int = 8, kCode: Int = 16,
                     codebook: Option[Seq[Double]] = None): Unit = {
-    val spark = emb.sparkSession
-    VectorExpressions.register(spark)
-    // an explicit (trained — [[trainPqCodebooksIntRaw]]) codebook
-    // needs no seed rows; the seed collect only runs on the default
-    // replayable-seed path
-    val flat: Array[Double] = codebook.map { cb =>
-      val dim = centroids.head._2.length
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      require(cb.length == m * kCode * (dim / m),
-        s"codebook length ${cb.length} != ${m * kCode * (dim / m)}")
-      cb.toArray
-    }.getOrElse {
-      val seeds = emb.filter(col("vec_id") < kCode)
-        .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-        .collect().sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
-      require(seeds.length == kCode, s"need $kCode seed vectors, got ${seeds.length}")
-      val dim = seeds.head.length
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      val sub = dim / m
-      Array.tabulate(m * kCode * sub) { idx =>
-        val ms = idx / (kCode * sub); val kk = idx / sub % kCode; val i = idx % sub
-        seeds(kk)(ms * sub + i)
-      }
-    }
-    val sub = centroids.head._2.length / m
-    assign(emb, centroids)
-      .select(col("vec_id"),
-        call_function("graft_pq_encode", col("v"),
-          typedLit(flat.toSeq), lit(m), lit(kCode)).as("codes"),
-        col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/lists")
-    writeCentroids(spark, path, centroids)
-    writeCodebook(spark, path, m, kCode, sub, flat.toSeq)
+    VectorExpressions.register(emb.sparkSession)
+    writeAdcTree(assign(emb, centroids), col("v"), centroids, path,
+      adcCodebook(codebook,
+        emb.select(col("vec_id"), transform(col("embedding"), x => x.cast("double"))),
+        centroids.head._2.length, m, kCode))
+  }
+
+  /** The build half shared by both ADC layouts: `assigned` rows with
+    * `vec` (raw vectors or residuals) PQ-encoded against `cb`, plus the
+    * centroid table and the codebook.
+    */
+  private def writeAdcTree(assigned: DataFrame, vec: Column,
+                           centroids: Seq[(Int, Seq[Double])], path: String,
+                           cb: Codebook): Unit = {
+    writeLists(cb.encode(assigned, vec), path, "overwrite")
+    writeCentroids(assigned.sparkSession, path, centroids)
+    writeCodebook(assigned.sparkSession, path, cb)
   }
 
   /** [[writeAdcIndex]] with a TRAINED codebook — the production build
@@ -632,27 +642,20 @@ object IvfIndex {
     * pruning); at `nProbe` = `nLists` the ranking equals the q121
     * integer-ADC brute force (the q122 gate).
     */
-  def topKAdcIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def topKAdcIndexed(spark: SparkSession, path: String,
                      queryVec: Seq[Double], k: Int = 20, nProbe: Int = 2,
                      excludeVecId: Long = -1L): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val cb = spark.read.parquet(s"$path/codebook").head()
-    val (m, kCode, sub) = (cb.getInt(0), cb.getInt(1), cb.getInt(2))
-    val flat = cb.getSeq[Double](3)
-    require(queryVec.length == m * sub,
-      s"query dim ${queryVec.length} != index dim ${m * sub}")
+    val tree = new Tree(spark, path)
+    val cb = tree.codebook
+    require(queryVec.length == cb.m * cb.sub,
+      s"query dim ${queryVec.length} != index dim ${cb.m * cb.sub}")
     val qd = graft.functions.PqKernel.adcCellTable(
-      queryVec.toIndexedSeq, flat.toIndexedSeq, m, kCode, sub)
-    val probeLists = nearestLists(centroids, queryVec, nProbe)
-    val qdLit = typedLit(qd.toSeq)
-    val adc = (0 until m).map(ms =>
-        element_at(qdLit, lit(ms * kCode) + element_at(col("codes"), ms + 1) + 1))
-      .reduce(_ + _)
-    spark.read.parquet(s"$path/lists")
+      queryVec.toIndexedSeq, cb.flat.toIndexedSeq, cb.m, cb.kCode, cb.sub)
+    val probeLists = nearestLists(tree.centroids, queryVec, nProbe)
+    tree.lists
       .filter(col("list_id").isin(probeLists: _*)) // partition pruning
       .filter(col("vec_id") =!= excludeVecId)
-      .select(col("vec_id"), adc.as("adc"))
+      .select(col("vec_id"), cb.adc(qd.toSeq).as("adc"))
       .orderBy(col("adc").asc, col("vec_id").asc)
       .limit(k)
   }
@@ -691,10 +694,9 @@ object IvfIndex {
     * defaults to 3·k — the c where the measured recall plateau lifts;
     * extra stage cost is one bounded broadcast semi-join.
     */
-  def topKAdcRerankIndexed(spark: org.apache.spark.sql.SparkSession,
-                           path: String, emb: DataFrame, queryVec: Seq[Double],
-                           k: Int = 20, nProbe: Int = 2, cand: Int = 0,
-                           excludeVecId: Long = -1L): DataFrame = {
+  def topKAdcRerankIndexed(spark: SparkSession, path: String, emb: DataFrame,
+                           queryVec: Seq[Double], k: Int = 20, nProbe: Int = 2,
+                           cand: Int = 0, excludeVecId: Long = -1L): DataFrame = {
     val c = if (cand > 0) cand else 3 * k
     require(c >= k, s"candidate pool $c smaller than k=$k")
     exactRerank(emb.filter(col("vec_id") =!= excludeVecId),
@@ -703,8 +705,7 @@ object IvfIndex {
   }
 
   /** [[topKAdcRerankIndexed]] over the residual-IVFADC layout. */
-  def topKResidualAdcRerankIndexed(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, emb: DataFrame,
+  def topKResidualAdcRerankIndexed(spark: SparkSession, path: String, emb: DataFrame,
                                    queryVec: Seq[Double], k: Int = 20,
                                    nProbe: Int = 2, cand: Int = 0,
                                    excludeVecId: Long = -1L): DataFrame = {
@@ -719,7 +720,7 @@ object IvfIndex {
     * `zip_with` over a CASE chain of centroid literals (`nLists`
     * dim-sized arrays — a bounded plan artifact like the codebook).
     */
-  private def residualCol(centroids: Seq[(Int, Seq[Double])]): org.apache.spark.sql.Column = {
+  private def residualCol(centroids: Seq[(Int, Seq[Double])]): Column = {
     val cent = centroids.tail.foldLeft(
       when(col("list_id") === centroids.head._1, typedLit(centroids.head._2))) {
       case (acc, (cid, c)) => acc.when(col("list_id") === cid, typedLit(c))
@@ -902,35 +903,11 @@ object IvfIndex {
   def writeResidualAdcIndex(emb: DataFrame, centroids: Seq[(Int, Seq[Double])],
                             path: String, m: Int = 8, kCode: Int = 16,
                             codebook: Option[Seq[Double]] = None): Unit = {
-    val spark = emb.sparkSession
-    VectorExpressions.register(spark)
-    val withRes = assign(emb, centroids).withColumn("r", residualCol(centroids))
-    val dim = centroids.head._2.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    // an explicit (trained) codebook needs no seed rows at all — the
-    // seed collect only runs on the default replayable-seed path
-    val flat = codebook.map { cb =>
-      require(cb.length == m * kCode * sub,
-        s"codebook length ${cb.length} != ${m * kCode * sub}")
-      cb.toArray
-    }.getOrElse {
-      val seeds = withRes.filter(col("vec_id") < kCode)
-        .select(col("vec_id"), col("r"))
-        .collect().sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
-      require(seeds.length == kCode, s"need $kCode seed vectors, got ${seeds.length}")
-      Array.tabulate(m * kCode * sub) { idx =>
-        val ms = idx / (kCode * sub); val kk = idx / sub % kCode; val i = idx % sub
-        seeds(kk)(ms * sub + i)
-      }
-    }
-    withRes.select(col("vec_id"),
-        call_function("graft_pq_encode", col("r"),
-          typedLit(flat.toSeq), lit(m), lit(kCode)).as("codes"),
-        col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/lists")
-    writeCentroids(spark, path, centroids)
-    writeCodebook(spark, path, m, kCode, sub, flat.toSeq)
+    VectorExpressions.register(emb.sparkSession)
+    val assigned = assign(emb, centroids).withColumn("r", residualCol(centroids))
+    writeAdcTree(assigned, col("r"), centroids, path,
+      adcCodebook(codebook, assigned.select(col("vec_id"), col("r")),
+        centroids.head._2.length, m, kCode))
   }
 
   /** Incrementally add vectors to a RESIDUAL IVFADC index: assignment,
@@ -942,19 +919,11 @@ object IvfIndex {
     * broadcast argmin + the encode projection.
     */
   def appendToResidualAdcIndex(newEmb: DataFrame, path: String): Unit = {
-    val spark = newEmb.sparkSession
-    VectorExpressions.register(spark)
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val cb = spark.read.parquet(s"$path/codebook").head()
-    val (m, kCode) = (cb.getInt(0), cb.getInt(1))
-    val flat = cb.getSeq[Double](3)
-    assign(newEmb, centroids).withColumn("r", residualCol(centroids))
-      .select(col("vec_id"),
-        call_function("graft_pq_encode", col("r"),
-          typedLit(flat), lit(m), lit(kCode)).as("codes"),
-        col("list_id"))
-      .write.partitionBy("list_id").mode("append").parquet(s"$path/lists")
+    VectorExpressions.register(newEmb.sparkSession)
+    val tree = new Tree(newEmb.sparkSession, path)
+    val assigned = assign(newEmb, tree.centroids)
+      .withColumn("r", residualCol(tree.centroids))
+    writeLists(tree.codebook.encode(assigned, col("r")), tree.dir, "append")
   }
 
   /** Top-k search against a RESIDUAL IVFADC index by ascending integer
@@ -970,35 +939,26 @@ object IvfIndex {
     * replays assignment, residuals, codebook, codes, every per-list
     * cell and the final pick end-to-end.
     */
-  def topKResidualAdcIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def topKResidualAdcIndexed(spark: SparkSession, path: String,
                              queryVec: Seq[Double], k: Int = 20, nProbe: Int = 2,
                              excludeVecId: Long = -1L): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val cb = spark.read.parquet(s"$path/codebook").head()
-    val (m, kCode, sub) = (cb.getInt(0), cb.getInt(1), cb.getInt(2))
-    val flat = cb.getSeq[Double](3)
-    require(queryVec.length == m * sub,
-      s"query dim ${queryVec.length} != index dim ${m * sub}")
-    val probeLists = nearestLists(centroids, queryVec, nProbe)
-    val centById = centroids.toMap
-    def cellTable(lid: Int): Seq[Long] = {
+    val tree = new Tree(spark, path)
+    val cb = tree.codebook
+    require(queryVec.length == cb.m * cb.sub,
+      s"query dim ${queryVec.length} != index dim ${cb.m * cb.sub}")
+    val probeLists = nearestLists(tree.centroids, queryVec, nProbe)
+    val centById = tree.centroids.toMap
+    def cellAdc(lid: Int): Column = {
       val c = centById(lid)
       val qr = IndexedSeq.tabulate(queryVec.length)(i => queryVec(i) - c(i))
-      graft.functions.PqKernel.adcCellTable(qr, flat.toIndexedSeq,
-        m, kCode, sub).toSeq
-    }
-    def lookupSum(qd: Seq[Long]): org.apache.spark.sql.Column = {
-      val qdLit = typedLit(qd)
-      (0 until m).map(ms =>
-          element_at(qdLit, lit(ms * kCode) + element_at(col("codes"), ms + 1) + 1))
-        .reduce(_ + _)
+      cb.adc(graft.functions.PqKernel.adcCellTable(qr, cb.flat.toIndexedSeq,
+        cb.m, cb.kCode, cb.sub).toSeq)
     }
     val adc = probeLists.tail.foldLeft(
-      when(col("list_id") === probeLists.head, lookupSum(cellTable(probeLists.head)))) {
-      case (acc, lid) => acc.when(col("list_id") === lid, lookupSum(cellTable(lid)))
+      when(col("list_id") === probeLists.head, cellAdc(probeLists.head))) {
+      case (acc, lid) => acc.when(col("list_id") === lid, cellAdc(lid))
     }
-    spark.read.parquet(s"$path/lists")
+    tree.lists
       .filter(col("list_id").isin(probeLists: _*)) // partition pruning
       .filter(col("vec_id") =!= excludeVecId)
       .select(col("vec_id"), adc.as("adc"))
@@ -1011,15 +971,14 @@ object IvfIndex {
     * scanned, and the single scoring pass reuses the collected query
     * vector as a literal (no second scan, no cross join).
     */
-  def topKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
+  def topKIndexed(spark: SparkSession, path: String,
                   queryVecId: Long, k: Int = 20, nProbe: Int = 2): DataFrame = {
     VectorExpressions.register(spark)
-    val dir = IndexLayout.resolveVersionDir(spark, path)
-    val centroids = readCentroids(spark, dir)
-    val lists = spark.read.parquet(s"$dir/lists")
+    val tree = new Tree(spark, path)
+    val lists = tree.lists
     val qRow = lists.filter(col("vec_id") === queryVecId)
       .select(col("v")).head().getSeq[Double](0).toSeq
-    val probeLists = nearestLists(centroids, qRow, nProbe)
+    val probeLists = nearestLists(tree.centroids, qRow, nProbe)
     scoreAgainst(
       lists.filter(col("list_id").isin(probeLists: _*)) // partition pruning
         .filter(col("vec_id") =!= queryVecId),

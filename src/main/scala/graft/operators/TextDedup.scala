@@ -513,40 +513,22 @@ object TextDedup {
     writeHashIndexMode(sigs, path, "append")
 
   private def writeHashIndexMode(sigs: DataFrame, path: String,
-                                 mode: String): Unit = {
-    // appending band/bucket dirs into a pre-bucketing flat tree would
-    // break partition discovery (the IndexLayout.writeBucketed
-    // contract): a legacy (doc_id, simhash) tree gets a flat append
-    // and keeps riding the probe's legacy fallback
-    val spark = sigs.sparkSession
-    val existingBanded: Option[Boolean] =
-      try Some(spark.read.parquet(path).columns.contains("band"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    if (mode == "append" && existingBanded.contains(false)) {
-      sigs.select(col("doc_id"), col("simhash"))
-        .write.mode("append").parquet(path)
-      return
-    }
-    // appends use the TREE's bucket count; new/overwritten trees take
-    // the session conf (IndexLayout.NumBucketsKey)
-    val b =
-      if (mode == "append" && existingBanded.contains(true))
-        IndexLayout.indexNumBuckets(spark, path)
-      else IndexLayout.confNumBuckets(spark)
-    sigs.select(col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map(j =>
-          struct(lit(j).as("band"),
-            expr(s"shiftrightunsigned(simhash, ${j * 16}) & 65535")
-              .as("bkey"))): _*)).as("e"))
-      .select(col("e.band").as("band"), col("e.bkey").as("bkey"),
-        col("doc_id"), col("simhash"))
-      .withColumn("bucket", IndexLayout.bucketOf(col("bkey"), b))
-      // one task per (band, bucket) → ~1 file per touched directory
-      // per write (see IndexLayout.writeBucketed)
-      .repartition(col("band"), col("bucket"))
-      .write.mode(mode).partitionBy("band", "bucket").parquet(path)
-    IndexLayout.writeMeta(spark, path, b)
-  }
+                                 mode: String): Unit =
+    // a legacy (doc_id, simhash) flat tree gets a flat append and keeps
+    // riding the probe's legacy fallback (the IndexLayout.writeBucketed
+    // contract — its own legacy branch would append the band rows)
+    if (mode == "append" &&
+        IndexLayout.existingLayoutBucketed(sigs.sparkSession, path).contains(false))
+      sigs.select(col("doc_id"), col("simhash")).write.mode("append").parquet(path)
+    else IndexLayout.writeBucketed(
+      sigs.select(col("doc_id"), col("simhash"),
+          explode(array((0 until 4).map(j =>
+            struct(lit(j).as("band"),
+              expr(s"shiftrightunsigned(simhash, ${j * 16}) & 65535")
+                .as("bkey"))): _*)).as("e"))
+        .select(col("e.band").as("band"), col("e.bkey").as("bkey"),
+          col("doc_id"), col("simhash")),
+      "bkey", path, mode, partitionCols = Seq("band"))
 
   /** Incremental banded near-dup probe against [[writeHashIndex]]
     * state: which NEW signatures are within `maxHamming` of an indexed
@@ -1330,9 +1312,9 @@ object TextDedup {
     * filesystem (free metadata), not a `count()` scan — a per-probe
     * count would double the index read cost of every batch.
     *
-    * `maxBroadcastBytes` is an ON-DISK bound: snappy-parquet short
+    * `maxBroadcastBytes` bounds the DECODED index: snappy-parquet short
     * strings expand ~3-10× when decoded to JVM rows, so the decision
-    * applies [[TextDedup.BroadcastExpansionFactor]] before comparing —
+    * applies [[BroadcastExpansionFactor]] before comparing —
     * the default 64 MB therefore admits ≈ 64 MB of in-memory hash
     * relation (~13 MB on disk), in line with executor-memory budgets,
     * instead of the up-to-640 MB relation the raw on-disk compare
@@ -1341,30 +1323,21 @@ object TextDedup {
   def substringMatchesIndexed(docs: DataFrame, path: String,
                               windowChars: Int = 40,
                               maxBroadcastBytes: Long = 64L << 20): DataFrame = {
-    val spark = docs.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val bytes = p.getFileSystem(spark.sessionState.newHadoopConf())
-      .getContentSummary(p).getLength
-    // small index: broadcast the whole thing (pruning can't beat a
-    // hash relation that already fits). Oversized index: prune the
-    // scan to the batch's window buckets ([[IndexLayout.prunedScan]]
-    // — one extra batch-sized window pass buys a history-independent
-    // index read; a batch's window universe almost always exceeds the
-    // key-pushdown cap, so this is normally bucket pruning).
-    val idx =
-      if (bytes * BroadcastExpansionFactor <= maxBroadcastBytes)
-        broadcast(spark.read.parquet(path).drop("bucket"))
-      else
-        IndexLayout.prunedScan(spark, path, "g",
-          charWindows(docs, windowChars).select(col("g")))
-    substringMatchesIndexedDf(docs, idx, windowChars)
+    // small index: broadcast the whole thing. Oversized index: prune
+    // the scan to the batch's window buckets — one extra batch-sized
+    // window pass buys a history-independent index read; a batch's
+    // window universe almost always exceeds the key-pushdown cap, so
+    // this is normally bucket pruning ([[IndexLayout.probeScan]])
+    val (idx, small) = IndexLayout.probeScan(docs.sparkSession, path, "g",
+      charWindows(docs, windowChars).select(col("g")), maxBroadcastBytes)
+    substringMatchesIndexedDf(docs, if (small) broadcast(idx) else idx,
+      windowChars)
   }
 
-  /** Conservative decoded-rows-to-on-disk ratio for snappy-parquet
-    * window/string tables (measured 3-10× on the documents corpus; the
-    * high end budgets for UTF-16 `String` payloads plus row overhead).
+  /** [[IndexLayout.BroadcastExpansionFactor]], the on-disk-to-decoded
+    * ratio behind the `maxBroadcastBytes` bound of the indexed probes.
     */
-  final val BroadcastExpansionFactor = 5L
+  final val BroadcastExpansionFactor = IndexLayout.BroadcastExpansionFactor
 
   /** The probe stage of [[substringMatchesIndexed]] over an ALREADY
     * LOADED (and broadcast-decided) index frame — per-micro-batch
@@ -1384,7 +1357,8 @@ object TextDedup {
 
   // ---- versioned multi-eval-set decontamination index ----------------
   //
-  // Layout: <root>/v<N>/eval_set_id=<id>/part-*.parquet plus a tiny
+  // Layout: <root>/v<N>/eval_set_id=<id>/bucket=<b>/part-*.parquet
+  // (IndexLayout.writeBucketed, eval_set_id leading) plus a tiny
   // `_current` pointer file naming the active version. Production keeps
   // ONE standing index for many benchmark suites: new benchmark batches
   // append in O(batch) into the current version's partition, and
@@ -1394,35 +1368,20 @@ object TextDedup {
   // rebuild (the index is a distinct-window SET; see
   // SubstringIndexSetsSpec).
 
-  // pointer read/flip delegate to the shared version-pointer protocol
-  // (IndexLayout) — one implementation for every versioned layout
-  private def currentIndexVersion(spark: org.apache.spark.sql.SparkSession,
-                                  path: String): Int =
-    IndexLayout.currentVersion(spark, path)
-
-  private def flipIndexVersion(spark: org.apache.spark.sql.SparkSession,
-                               path: String, version: Int): Unit =
-    IndexLayout.flipVersion(spark, path, version)
-
   /** Build version 0 of a multi-eval-set window index: `benchSets`
     * carries (eval_set_id, doc_id, text); distinct windows are written
     * partitioned by eval_set_id, so a probe against a subset of suites
     * is a partition-pruned scan.
     */
   def writeSubstringIndexSets(benchSets: DataFrame, path: String,
-                              windowChars: Int = 40): Unit = {
-    val spark = benchSets.sparkSession
-    val b = IndexLayout.confNumBuckets(spark)
-    charWindows(benchSets.select(col("doc_id"), col("text")), windowChars)
-      .join(benchSets.select(col("doc_id"), col("eval_set_id")), Seq("doc_id"))
-      .select(col("g"), col("eval_set_id")).distinct()
-      .withColumn("bucket", IndexLayout.bucketOf(col("g"), b))
-      .repartition(col("eval_set_id"), col("bucket"))
-      .write.mode("overwrite").partitionBy("eval_set_id", "bucket")
-      .parquet(s"$path/v0")
-    IndexLayout.writeMeta(spark, s"$path/v0", b)
-    flipIndexVersion(spark, path, 0)
-  }
+                              windowChars: Int = 40): Unit =
+    IndexLayout.publishVersion(benchSets.sparkSession, path, 0) { v0 =>
+      IndexLayout.writeBucketed(
+        charWindows(benchSets.select(col("doc_id"), col("text")), windowChars)
+          .join(benchSets.select(col("doc_id"), col("eval_set_id")), Seq("doc_id"))
+          .select(col("g"), col("eval_set_id")).distinct(),
+        "g", v0, "overwrite", partitionCols = Seq("eval_set_id"))
+    }
 
   /** O(new batch) append of one benchmark batch into `evalSetId`'s
     * partition of the CURRENT version: existing files are never
@@ -1431,73 +1390,48 @@ object TextDedup {
     * removes them physically.
     */
   def appendToSubstringIndexSets(newBench: DataFrame, evalSetId: Int,
-                                 path: String, windowChars: Int = 40): Unit = {
-    val v = currentIndexVersion(newBench.sparkSession, path)
-    // the TREE's bucket count, never the session's (see IndexLayout)
-    val b = IndexLayout.indexNumBuckets(newBench.sparkSession, s"$path/v$v")
-    charWindows(newBench, windowChars).select(col("g")).distinct()
-      .withColumn("eval_set_id", lit(evalSetId))
-      .withColumn("bucket", IndexLayout.bucketOf(col("g"), b))
-      .repartition(col("eval_set_id"), col("bucket"))
-      .write.mode("append").partitionBy("eval_set_id", "bucket")
-      .parquet(s"$path/v$v")
-  }
+                                 path: String, windowChars: Int = 40): Unit =
+    IndexLayout.writeBucketed(
+      charWindows(newBench, windowChars).select(col("g")).distinct()
+        .withColumn("eval_set_id", lit(evalSetId)),
+      "g", IndexLayout.resolveVersionDir(newBench.sparkSession, path), "append",
+      partitionCols = Seq("eval_set_id"))
 
   /** Compact the current version into version N+1 (per-set distinct —
     * appended duplicate windows collapse, file counts reset) and flip
-    * the pointer. Returns the new version number; the old directory is
-    * left for in-flight readers (a retention job deletes versions
-    * older than the read horizon).
+    * the pointer. Compaction is a rebuild, so it takes the session's
+    * bucket count (the natural place to grow B as the index grows).
+    * Returns the new version number; the old directory is left for
+    * in-flight readers (a retention job deletes versions older than
+    * the read horizon).
     */
   def compactSubstringIndexSets(spark: org.apache.spark.sql.SparkSession,
-                                path: String): Int = {
-    val cur = currentIndexVersion(spark, path)
-    val next = cur + 1
-    // compaction is a rebuild: it may resize to the session conf (the
-    // natural place to grow B as the index grows)
-    val b = IndexLayout.confNumBuckets(spark)
-    spark.read.parquet(s"$path/v$cur")
-      .select(col("g"), col("eval_set_id")).distinct()
-      .withColumn("bucket", IndexLayout.bucketOf(col("g"), b))
-      .repartition(col("eval_set_id"), col("bucket"))
-      .write.mode("overwrite").partitionBy("eval_set_id", "bucket")
-      .parquet(s"$path/v$next")
-    IndexLayout.writeMeta(spark, s"$path/v$next", b)
-    flipIndexVersion(spark, path, next)
-    next
-  }
+                                path: String): Int =
+    IndexLayout.publishNextVersion(spark, path) { (live, next) =>
+      IndexLayout.writeBucketed(
+        spark.read.parquet(live).select(col("g"), col("eval_set_id")).distinct(),
+        "g", next, "overwrite", partitionCols = Seq("eval_set_id"))
+    }
 
   /** Probe an ingest batch against EVERY eval set of the current index
     * version in one pass: per-(doc, eval set) hit stats, the q101
     * aggregate keyed by suite. The index side dedups (g, eval_set_id)
     * so un-compacted appends cannot inflate n_hits; small indexes ride
-    * a broadcast under the same expansion-factor rule as
+    * a broadcast under the same sizing rule as
     * [[substringMatchesIndexed]].
     */
   def substringMatchesIndexedSets(docs: DataFrame, path: String,
                                   windowChars: Int = 40,
                                   maxBroadcastBytes: Long = 64L << 20): DataFrame = {
     val spark = docs.sparkSession
-    val v = currentIndexVersion(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/v$v")
-    val bytes = p.getFileSystem(spark.sessionState.newHadoopConf())
-      .getContentSummary(p).getLength
-    // broadcast when small; bucket-pruned scan when not (see
-    // [[substringMatchesIndexed]] — same decision, versioned tree)
-    val scan =
-      if (bytes * BroadcastExpansionFactor <= maxBroadcastBytes)
-        spark.read.parquet(s"$path/v$v").drop("bucket")
-      else
-        IndexLayout.prunedScan(spark, s"$path/v$v", "g",
-          charWindows(docs, windowChars).select(col("g")))
+    val (scan, small) = IndexLayout.probeScan(spark,
+      IndexLayout.resolveVersionDir(spark, path), "g",
+      charWindows(docs, windowChars).select(col("g")), maxBroadcastBytes)
     val idx = scan
       .select(col("g"), col("eval_set_id").cast("long").as("eval_set_id"))
       .distinct()
-    val idxSide =
-      if (bytes * BroadcastExpansionFactor <= maxBroadcastBytes) broadcast(idx)
-      else idx
     charWindows(docs, windowChars)
-      .join(idxSide, Seq("g"))
+      .join(if (small) broadcast(idx) else idx, Seq("g"))
       .groupBy(col("doc_id"), col("eval_set_id"))
       .agg(count(lit(1)).as("n_hits"),
         countDistinct(col("g")).as("n_grams"),

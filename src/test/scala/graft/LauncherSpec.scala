@@ -74,4 +74,41 @@ class LauncherSpec extends SparkSpec {
     assert("""(?m)^\(\d+\) Stream$""".r.findFirstIn(q40).isDefined, q40)
     assert(Files.readString(Paths.get(out, "q01_agg_before.txt")).contains("== Physical Plan =="))
   }
+
+  test("inJobGroup tags every job of a query with its name and clears the group after") {
+    val sc = spark.sparkContext
+    // (job group, description) of every job this thread starts — the
+    // marker property keeps other threads' jobs out of the record
+    val marker = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).filter(_.getProperty("graft.test.marker") == marker)
+          .foreach(p => seen.add((p.getProperty("spark.jobGroup.id"),
+            p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.marker", marker)
+    try {
+      val rows = LocalSession.inJobGroup(spark, "q01_agg") {
+        SparkEntry.queries("q01_agg")(spark, sf).collect().length
+      }
+      assert(rows > 0)
+      sc.setJobDescription("sentinel")
+      spark.range(1).count()
+      sc.setJobDescription(null)
+      // the listener bus is asynchronous and delivers in order: once the
+      // sentinel arrived, every job of the query has too
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.toArray.exists(_ == ((null, "sentinel"))) &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+      val jobs = seen.toArray(Array.empty[(String, String)]).toSeq
+      val (sentinel, queryJobs) = jobs.partition(_._2 == "sentinel")
+      assert(sentinel.nonEmpty && sentinel.forall(_._1 == null), jobs)
+      assert(queryJobs.nonEmpty && queryJobs.forall(_._1 == "q01_agg"), jobs)
+    } finally {
+      sc.setLocalProperty("graft.test.marker", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

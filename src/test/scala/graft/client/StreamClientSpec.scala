@@ -34,13 +34,13 @@ class StreamClientSpec extends SparkSpec {
     val vals = out.select(explode(split($"response", "\n")).as("l"))
       .select(split($"l", "\t").getItem(1).cast("long").as("v"))
     assert(vals.count() == 200)
-    assert(vals.agg(sum($"v")).head.getLong(0) == (0L until 200L).sum)
+    assert(vals.agg(sum($"v")).head().getLong(0) == (0L until 200L).sum)
   }
 
   test("TsvSumChild aggregates per partition via map+finalize") {
     val df = spark.range(1, 101).repartition(4).select($"id")
     val out = Stream.tsv(df, jvmChild("graft.client.TsvSumChild"))
-    val total = out.agg(sum($"response".cast("long"))).head.getLong(0)
+    val total = out.agg(sum($"response".cast("long"))).head().getLong(0)
     assert(total == 5050)
   }
 

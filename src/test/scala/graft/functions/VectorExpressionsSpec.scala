@@ -71,7 +71,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val bad = Seq((9L, Seq(1.0, 2.0, 3.0))).toDF("vec_id", "v")
       .select(call_function("graft_argmax_cos", col("v"),
         typedLit(ids), typedLit(mat)).as("m"))
-    assert(bad.head.isNullAt(0))
+    assert(bad.head().isNullAt(0))
   }
 
   test("graft_quantize8 / graft_dot8: exact bytes, zero vector, mismatch") {
@@ -92,11 +92,11 @@ class VectorExpressionsSpec extends SparkSpec {
     // integer dot of the quantized payloads: 0·0 + (-63)·(-63) + 127·127
     val d = Seq((Array[Byte](0, -63, 127), Array[Byte](0, -63, 127)))
       .toDF("a", "b")
-      .select(call_function("graft_dot8", col("a"), col("b"))).head
+      .select(call_function("graft_dot8", col("a"), col("b"))).head()
     assert(d.getLong(0) == 63L * 63 + 127L * 127)
     val mm = Seq((Array[Byte](1, 2), Array[Byte](1)))
       .toDF("a", "b")
-      .select(call_function("graft_dot8", col("a"), col("b"))).head
+      .select(call_function("graft_dot8", col("a"), col("b"))).head()
     assert(mm.isNullAt(0))
   }
 }

@@ -110,7 +110,7 @@ class AnnRecallSpec extends SparkSpec {
     val qv = emb.filter(col("vec_id") === 0L)
       .select(org.apache.spark.sql.functions
         .transform(col("embedding"), x => x.cast("double")))
-      .head.getSeq[Double](0)
+      .head().getSeq[Double](0)
     // all-probes ADC ranking ≡ the q121 kernel's integer-ADC brute
     // force over the same codes (assignment lost nothing, the literal
     // cell table matches the kernel's exact arithmetic)
@@ -154,7 +154,7 @@ class AnnRecallSpec extends SparkSpec {
     val qv = emb.filter(col("vec_id") === 0L)
       .select(org.apache.spark.sql.functions
         .transform(col("embedding"), x => x.cast("double")))
-      .head.getSeq[Double](0)
+      .head().getSeq[Double](0)
     val residIds = ids(IvfIndex.topKResidualAdcIndexed(spark, dirR, qv, k = 20,
       nProbe = 4, excludeVecId = 0L))
     val residRecall = (residIds & exact).size / 20.0
@@ -369,7 +369,7 @@ class AnnRecallSpec extends SparkSpec {
     val qvs = qids.map(q => q -> emb01.filter(col("vec_id") === q)
       .select(org.apache.spark.sql.functions
         .transform(col("embedding"), x => x.cast("double")))
-      .head.getSeq[Double](0)).toMap
+      .head().getSeq[Double](0)).toMap
     val exactK = qids.map(q =>
       q -> ids(Similarity.bruteForceTopK(emb01, q, k))).toMap
     def recall(f: Long => Set[Long]) =
@@ -474,7 +474,7 @@ class AnnRecallSpec extends SparkSpec {
     val qvs = qids.map(q => q -> emb01.filter(col("vec_id") === q)
       .select(org.apache.spark.sql.functions
         .transform(col("embedding"), x => x.cast("double")))
-      .head.getSeq[Double](0)).toMap
+      .head().getSeq[Double](0)).toMap
     val cb8 = IvfIndex.trainPqCodebooksIntRaw(emb01, 8, 16, rounds = 2)
     val seedDir = tempDir("graft_adc_seedcb")
     val trainedDir = tempDir("graft_adc_traincb")
@@ -507,7 +507,7 @@ class AnnRecallSpec extends SparkSpec {
     val qvs = qids.map(q => q -> emb01.filter(col("vec_id") === q)
       .select(org.apache.spark.sql.functions
         .transform(col("embedding"), x => x.cast("double")))
-      .head.getSeq[Double](0)).toMap
+      .head().getSeq[Double](0)).toMap
     val dir = tempDir("graft_adc_trained_prod")
     IvfIndex.writeTrainedAdcIndex(emb01, centroids, dir, m = 16,
       kCode = 32, rounds = 4)
@@ -554,7 +554,7 @@ class AnnRecallSpec extends SparkSpec {
         q -> ids(Similarity.bruteForceTopK(tvecs, q, k))).toMap
       val qvs = qids.map(q => q -> tvecs.filter(col("vec_id") === q)
         .select(transform(col("embedding"), x => x.cast("double")))
-        .head.getSeq[Double](0)).toMap
+        .head().getSeq[Double](0)).toMap
       val centroids = IvfIndex.train(tvecs, nLists = 4, iters = 2)
       // 1. trained IVF-flat
       val flatDir = tempDir("graft_text_ivf_flat")

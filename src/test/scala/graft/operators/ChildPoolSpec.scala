@@ -38,7 +38,7 @@ class ChildPoolSpec extends SparkSpec {
   private def sumEcho(df: org.apache.spark.sql.DataFrame): Long =
     df.select(explode(split($"response", "\n")).as("l"))
       .select(split($"l", "\t").getItem(1).cast("long").as("v"))
-      .agg(sum($"v")).head.getLong(0)
+      .agg(sum($"v")).head().getLong(0)
 
   test("loop-style children are pooled and reused across runs") {
     try {
@@ -110,7 +110,7 @@ class ChildPoolSpec extends SparkSpec {
     val df = spark.range(0, 1000).repartition(4).select($"id")
     val declared = StructType(Seq(StructField("id", LongType)))
     val out = Stream.arrow(df, cmd, declared, chunkSize = 100, reuseChildren = true)
-    pooledTwice(cmd, () => out.agg(sum($"id")).head.getLong(0), (0L until 1000L).sum)
+    pooledTwice(cmd, () => out.agg(sum($"id")).head().getLong(0), (0L until 1000L).sum)
   }
 
   test("loop-style R-DF children are pooled and reused across runs") {
@@ -118,6 +118,6 @@ class ChildPoolSpec extends SparkSpec {
     val df = spark.range(0, 1000).repartition(4).select($"id".cast("int").as("i"))
     val declared = StructType(Seq(StructField("i", IntegerType)))
     val out = Stream.df(df, cmd, declared, chunkSize = 100, reuseChildren = true)
-    pooledTwice(cmd, () => out.agg(sum($"i")).head.getLong(0), (0L until 1000L).sum)
+    pooledTwice(cmd, () => out.agg(sum($"i")).head().getLong(0), (0L until 1000L).sum)
   }
 }

@@ -77,7 +77,7 @@ class ComponentsSpec extends SparkSpec {
     val out = Components.connectedComponents(
       (1L until 40L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b")
     assert(out.count() == 40)
-    val pinned = sc.getPersistentRDDs.keySet -- before
+    val pinned = sc.getPersistentRDDs.keySet.toSet -- before
     // at most the final round's checkpoint remains (edge table + all
     // superseded rounds were unpersisted inside the loop)
     assert(pinned.size <= 1, s"leaked checkpoint RDDs: $pinned")

@@ -50,41 +50,75 @@ class IndexLayoutSpec extends SparkSpec {
     // the production sizing rule (B ≈ index_bytes / 128 MB) made
     // usable: overwrite writes take the session conf and persist B in
     // the tree's meta; appends and probes always use the TREE's B —
-    // a key's bucket must never depend on who is asking
-    val dir = tempDir("graft_idxlayout_b64")
-    spark.conf.set(IndexLayout.NumBucketsKey, "64")
+    // a key's bucket must never depend on who is asking. The same
+    // holds for every bucketed writer: the generic layout, the banded
+    // hash index (band=j/bucket=i) and the versioned eval-set window
+    // index (v0/eval_set_id=s/bucket=i).
+    val kv = (from: Long, until: Long) =>
+      (from until until).map(i => (i, i * 3L)).toDF("k", "v")
+    val sigs = (from: Long, until: Long) =>
+      (from until until).map(i => (i, i * 0x9E3779B97F4A7C15L)).toDF("doc_id", "simhash")
+    val bench = (from: Long, until: Long) => (from until until)
+      .map(i => (1, i, (0 until 12).map(j => s"w${i}x$j").mkString(" ")))
+      .toDF("eval_set_id", "doc_id", "text")
+    // (input, overwrite build, append, the tree directory holding B)
+    val inputs: Seq[(String, String => Unit, String => Unit, String => String)] = Seq(
+      ("writeBucketed",
+        IndexLayout.writeBucketed(kv(0L, 5000L), "k", _, "overwrite"),
+        IndexLayout.writeBucketed(kv(5000L, 6000L), "k", _, "append"),
+        identity),
+      ("hash index",
+        TextDedup.writeHashIndex(sigs(0L, 2000L), _),
+        TextDedup.appendToHashIndex(sigs(2000L, 2500L), _),
+        identity),
+      ("substring index sets",
+        TextDedup.writeSubstringIndexSets(bench(0L, 100L), _),
+        TextDedup.appendToSubstringIndexSets(bench(100L, 120L), 1, _),
+        d => s"$d/v0"))
+    val dirs = for ((name, build, append, treeOf) <- inputs) yield {
+      val dir = tempDir("graft_idxlayout_b64")
+      val tree = treeOf(dir)
+      spark.conf.set(IndexLayout.NumBucketsKey, "64")
+      try {
+        build(dir)
+        assert(IndexLayout.indexNumBuckets(spark, tree) == 64, name)
+        def bucketDirs(f: java.io.File): Seq[String] = f.listFiles().toSeq
+          .filter(_.isDirectory).flatMap(d =>
+            if (d.getName.startsWith("bucket=")) Seq(d.getName) else bucketDirs(d))
+        val buckets = bucketDirs(new java.io.File(tree)).toSet
+        assert(buckets.size > IndexLayout.NumBuckets && buckets.size <= 64,
+          s"$name: ${buckets.size}")
+        // an append from a session with a DIFFERENT conf still lands in
+        // the tree's 64-bucket geometry — and does NOT touch the meta
+        // file at all (appends read B, they don't choose it; rewriting
+        // even the same value per ingest batch is a pointless failure
+        // surface, and mtime pins that no rewrite happens)
+        val meta = new java.io.File(tree, "_graft_index_meta.json")
+        val metaStamp = meta.lastModified()
+        spark.conf.set(IndexLayout.NumBucketsKey, "4")
+        append(dir)
+        assert(IndexLayout.indexNumBuckets(spark, tree) == 64, name)
+        assert(meta.lastModified() == metaStamp, name)
+        assert(bucketDirs(new java.io.File(tree)).forall(b =>
+          b.stripPrefix("bucket=").toInt < 64), name)
+      } finally spark.conf.unset(IndexLayout.NumBucketsKey)
+      dir
+    }
+    // probe correctness under forced pruning at the tree's B
+    spark.conf.set(IndexLayout.PruneMinBytesKey, "0")
     try {
-      IndexLayout.writeBucketed(
-        (0L until 5000L).map(i => (i, i * 3L)).toDF("k", "v"),
-        "k", dir, "overwrite")
-      assert(IndexLayout.indexNumBuckets(spark, dir) == 64)
-      val dirs = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("bucket=")).map(_.getName).toSet
-      assert(dirs.size > IndexLayout.NumBuckets && dirs.size <= 64, dirs.size)
-      // an append from a session with a DIFFERENT conf still lands in
-      // the tree's 64-bucket geometry — and does NOT touch the meta
-      // file at all (appends read B, they don't choose it; rewriting
-      // even the same value per ingest batch is a pointless failure
-      // surface, and mtime pins that no rewrite happens)
-      val meta = new java.io.File(dir, "_graft_index_meta.json")
-      val metaStamp = meta.lastModified()
-      spark.conf.set(IndexLayout.NumBucketsKey, "4")
-      IndexLayout.writeBucketed(
-        (5000L until 6000L).map(i => (i, i * 3L)).toDF("k", "v"),
-        "k", dir, "append")
-      assert(IndexLayout.indexNumBuckets(spark, dir) == 64)
-      assert(meta.lastModified() == metaStamp)
-      // probe correctness under forced pruning at the tree's B
-      spark.conf.set(IndexLayout.PruneMinBytesKey, "0")
       val batch = Seq(10L, 4999L, 5500L, 123456L).toDF("k")
-      val got = IndexLayout.prunedScan(spark, dir, "k", batch)
+      val got = IndexLayout.prunedScan(spark, dirs.head, "k", batch)
         .join(batch, Seq("k")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == Set((10L, 30L), (4999L, 14997L), (5500L, 16500L)), got)
-    } finally {
-      spark.conf.unset(IndexLayout.NumBucketsKey)
-      spark.conf.unset(IndexLayout.PruneMinBytesKey)
-    }
+      // the banded probe finds a historical and an appended signature
+      val probe = sigs(0L, 2500L).filter($"doc_id".isin(7L, 2222L))
+        .select(($"doc_id" + 10000L).as("doc_id"), $"simhash")
+      val hits = TextDedup.nearDupsAgainstHashIndex(probe, dirs(1))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(hits == Seq((10007L, 7L), (12222L, 2222L)), hits)
+    } finally spark.conf.unset(IndexLayout.PruneMinBytesKey)
   }
 
   test("missing meta: wide trees fail loudly, default-width trees stay legacy") {

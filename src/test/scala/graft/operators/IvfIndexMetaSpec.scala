@@ -48,4 +48,33 @@ class IvfIndexMetaSpec extends SparkSpec {
     IvfIndex.compactIndexVersion(spark, path)
     assert(IvfIndex.indexedVectorCount(spark, path) == 30L)
   }
+
+  test("ADC readers and appenders follow the version pointer through compaction") {
+    // residual-ADC tree of 150 vectors, compacted (flat root → v1), a
+    // 50-vector batch appended, compacted again (v1 → v2): after every
+    // step the meta stamp, the list occupancy and an all-lists probe
+    // must all see the same live version — history + batch
+    val dir = java.nio.file.Files.createTempDirectory("ivf_meta_adc_").toString
+    val path = s"$dir/idx"
+    val vecs = (from: Long, until: Long) =>
+      spark.range(from, until).select($"id".as("vec_id"),
+        array(($"id" % 13).cast("double"), ($"id" % 7).cast("double"),
+          lit(1.0), ($"id" % 3).cast("double")).as("embedding"))
+    val cents4 = Seq((0, Seq(0.0, 0.0, 1.0, 0.0)), (1, Seq(12.0, 6.0, 1.0, 2.0)))
+    def seen(expected: Long, step: String): Unit = {
+      assert(IvfIndex.indexedVectorCount(spark, path) == expected, step)
+      assert(IvfIndex.listSkewStats(spark, path).agg(sum($"n")).head().getLong(0)
+        == expected, step)
+      assert(IvfIndex.topKResidualAdcIndexed(spark, path, Seq(1.0, 1.0, 1.0, 1.0),
+        k = 1000, nProbe = cents4.size).count() == expected, step)
+    }
+    IvfIndex.writeResidualAdcIndex(vecs(0L, 150L), cents4, path, m = 2, kCode = 4)
+    seen(150L, "build")
+    assert(IvfIndex.compactIndexVersion(spark, path) == 1)
+    seen(150L, "first compaction")
+    IvfIndex.appendToResidualAdcIndex(vecs(150L, 200L), path)
+    seen(200L, "append")
+    assert(IvfIndex.compactIndexVersion(spark, path) == 2)
+    seen(200L, "second compaction")
+  }
 }

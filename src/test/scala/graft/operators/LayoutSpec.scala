@@ -39,7 +39,7 @@ class LayoutSpec extends SparkSpec {
     val ev = Tables.load(spark, sf, "events")
       .select($"event_id", $"user_id", unix_timestamp($"ts").as("tsec"))
     val mm = ev.agg(min($"user_id"), max($"user_id"),
-      min($"tsec"), max($"tsec")).head
+      min($"tsec"), max($"tsec")).head()
     val grid = ev.select($"event_id",
       Layout.gridBucket($"user_id", mm.getLong(0), mm.getLong(1)).as("ga"),
       Layout.gridBucket($"tsec", mm.getLong(2), mm.getLong(3)).as("gb"))
@@ -47,7 +47,7 @@ class LayoutSpec extends SparkSpec {
     def pruneCost(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val b = Layout.partitionBounds(df, "ga", "gb")
         .agg(sum($"a_max" - $"a_min").as("sa"), sum($"b_max" - $"b_min").as("sb"))
-        .head
+        .head()
       (b.getLong(0), b.getLong(1))
     }
 

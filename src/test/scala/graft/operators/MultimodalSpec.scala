@@ -20,7 +20,7 @@ class MultimodalSpec extends SparkSpec {
     val bad = out.filter(!$"meta.valid").count()
     assert(good == 50 && bad == 1)
     val m = out.filter($"id" === 0).select($"meta.width", $"meta.height",
-      $"meta.channels", $"meta.kind", $"meta.payload_len").head
+      $"meta.channels", $"meta.kind", $"meta.payload_len").head()
     assert((m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3), m.getInt(4))
       == (28, 28, 1, 0, 10))
   }
@@ -35,7 +35,7 @@ class MultimodalSpec extends SparkSpec {
     def hashOf(px: Array[Byte]): Option[Long] = {
       val r = Multimodal.imageAHash(
         Seq((1L, blobOf(px))).toDF("id", "blob"), "blob")
-        .select($"ahash").head
+        .select($"ahash").head()
       if (r.isNullAt(0)) None else Some(r.getLong(0))
     }
     val expected = (0 until 64)
@@ -49,7 +49,7 @@ class MultimodalSpec extends SparkSpec {
     val bad = Multimodal.imageAHash(
       Seq((2L, Multimodal.pack(3, 1, 1, 0, Array[Byte](9, 9, 9))))
         .toDF("id", "blob"), "blob")
-      .select($"ahash").head
+      .select($"ahash").head()
     assert(bad.isNullAt(0))
     // RGB raster: brightness = channel sum at the sampled pixel
     val rgb = Array.tabulate[Byte](16 * 16 * 3)(i =>
@@ -57,7 +57,7 @@ class MultimodalSpec extends SparkSpec {
     val rgbBlob = Multimodal.pack(16, 16, 3, 0,
       "P6\n16 16\n255\n".getBytes("ASCII") ++ rgb)
     val rh = Multimodal.imageAHash(
-      Seq((3L, rgbBlob)).toDF("id", "blob"), "blob").select($"ahash").head
+      Seq((3L, rgbBlob)).toDF("id", "blob"), "blob").select($"ahash").head()
     assert(!rh.isNullAt(0) && rh.getLong(0) == expected)
   }
 
@@ -71,13 +71,13 @@ class MultimodalSpec extends SparkSpec {
     val avi = Multimodal.pack(16, 16, 3, 2,
       graft.functions.GrftCodec.aviEncode(16, 16, 40000, Array(flat, half)))
     val vh = Multimodal.videoHash(Seq((1L, avi)).toDF("id", "blob"), "blob")
-      .select($"vhash").head.getLong(0)
+      .select($"vhash").head().getLong(0)
     val expected = (0 until 64).filter(j => j % 8 >= 4).map(j => 1L << j).sum
     assert(vh == expected)
     // undecodable payload → null
     val bad = Multimodal.videoHash(
       Seq((2L, Multimodal.pack(3, 1, 3, 2, Array[Byte](9, 9, 9))))
-        .toDF("id", "blob"), "blob").select($"vhash").head
+        .toDF("id", "blob"), "blob").select($"vhash").head()
     assert(bad.isNullAt(0))
   }
 
@@ -87,7 +87,7 @@ class MultimodalSpec extends SparkSpec {
         graft.functions.GrftCodec.wavEncode(8000, channels, samples))
     def fpOf(blob: Array[Byte]): Option[Long] = {
       val r = Multimodal.audioFingerprint(
-        Seq((1L, blob)).toDF("id", "blob"), "blob").select($"afp").head
+        Seq((1L, blob)).toDF("id", "blob"), "blob").select($"afp").head()
       if (r.isNullAt(0)) None else Some(r.getLong(0))
     }
     // strictly rising ramp → every derivative sign set
@@ -108,13 +108,13 @@ class MultimodalSpec extends SparkSpec {
     val pixels = Array.tabulate[Byte](8)(i => (i * 10).toByte)
     val pgm = graft.functions.GrftCodec.pnmEncode(4, 2, 1, pixels)
     val df = Seq((1L, Multimodal.pack(4, 2, 1, 0, pgm))).toDF("id", "blob")
-    val img = Multimodal.decodeImage(df, "blob").select($"image.*").head
+    val img = Multimodal.decodeImage(df, "blob").select($"image.*").head()
     assert((img.getInt(0), img.getInt(1), img.getInt(2)) == ((4, 2, 1)))
     assert(img.getLong(3) == 8 && img.getLong(4) == pixels.map(_ & 0xff).sum.toLong)
     // resize 4x2 → 2x1 samples the TRUE raster: pixels (0,0) and (0,2)
     val rimg = Multimodal.decodeImage(
       Multimodal.resize(df, "blob", 2, 1), "resized", "rimg")
-      .select($"rimg.*").head
+      .select($"rimg.*").head()
     assert((rimg.getInt(0), rimg.getInt(1)) == ((2, 1)))
     assert(rimg.getLong(4) == 0L + 20L)
     // P6 RGB with a comment in the header decodes too
@@ -122,25 +122,25 @@ class MultimodalSpec extends SparkSpec {
       Array[Byte](1, 2, 3, 4, 5, 6)
     val p = Multimodal.decodeImage(
       Seq((2L, Multimodal.pack(2, 1, 3, 0, ppm))).toDF("id", "blob"), "blob")
-      .select($"image.*").head
+      .select($"image.*").head()
     assert((p.getInt(0), p.getInt(1), p.getInt(2)) == ((2, 1, 3)))
     assert(p.getLong(4) == 21L)
     // a kind=0 container whose payload is NOT an image → null fields
     val j = Multimodal.decodeImage(
       Seq((3L, Multimodal.pack(3, 1, 1, 0, Array[Byte](9, 9, 9)))).toDF("id", "blob"),
-      "blob").select($"image.*").head
+      "blob").select($"image.*").head()
     assert(j.isNullAt(0) && j.isNullAt(4))
   }
 
   test("extractFeatures computes payload stats distributively") {
     val out = Multimodal.extractFeatures(mediaDf, "blob")
     assert(out.count() == 51)
-    val r = out.filter($"id" === 1).head
+    val r = out.filter($"id" === 1).head()
     val expected = Array.tabulate[Byte](1 * 7 % 97 + 10)(j => ((1 + j) % 251).toByte)
     assert(r.getAs[Long]("payload_bytes") == expected.length.toLong)
     assert(r.getAs[Long]("payload_checksum") == expected.map(_ & 0xff).sum.toLong)
     // corrupt container yields null stats, not garbage numbers
-    val bad = out.filter($"id" === 999).head
+    val bad = out.filter($"id" === 999).head()
     assert(bad.isNullAt(out.schema.fieldIndex("payload_bytes")) &&
       bad.isNullAt(out.schema.fieldIndex("payload_checksum")) &&
       bad.isNullAt(out.schema.fieldIndex("mean_byte")))
@@ -170,14 +170,14 @@ class MultimodalSpec extends SparkSpec {
     val px = Array.tabulate[Byte](16)(_.toByte)
     val df = Seq((1L, Multimodal.pack(4, 4, 1, 0, px)), (2L, Array[Byte](9, 9))).toDF("id", "blob")
     val out = Multimodal.resize(df, "blob", outWidth = 2, outHeight = 2)
-    val ok = out.filter($"id" === 1).select($"resized").head.getAs[Array[Byte]](0)
+    val ok = out.filter($"id" === 1).select($"resized").head().getAs[Array[Byte]](0)
     // nearest-neighbour with sy = y*4/2: picks rows 0,2 and cols 0,2
     val meta = Multimodal.decodeHeader(
-      Seq((1L, ok)).toDF("id", "blob"), "blob").select($"meta.*").head
+      Seq((1L, ok)).toDF("id", "blob"), "blob").select($"meta.*").head()
     assert((meta.getInt(0), meta.getInt(1), meta.getBoolean(5)) == (2, 2, true))
     assert(ok.drop(Multimodal.HeaderLen).toSeq == Seq[Byte](0, 2, 8, 10))
     // corrupt input resizes to null instead of throwing
-    assert(out.filter($"id" === 2).select($"resized").head.isNullAt(0))
+    assert(out.filter($"id" === 2).select($"resized").head().isNullAt(0))
   }
 
   test("resize treats header dims exceeding the payload as invalid, not a crash") {
@@ -185,9 +185,9 @@ class MultimodalSpec extends SparkSpec {
     // raster 50x50x3 needs 7500 bytes but the payload has 16
     val lying = Multimodal.pack(50, 50, 3, 0, Array.tabulate[Byte](16)(_.toByte))
     val df = Seq((1L, lying)).toDF("id", "blob")
-    assert(Multimodal.decodeHeader(df, "blob").select($"meta.valid").head.getBoolean(0))
+    assert(Multimodal.decodeHeader(df, "blob").select($"meta.valid").head().getBoolean(0))
     val out = Multimodal.resize(df, "blob", outWidth = 2, outHeight = 2)
-    assert(out.select($"resized").head.isNullAt(0))
+    assert(out.select($"resized").head().isNullAt(0))
   }
 
   test("real BMP codec: roundtrip with row padding, bottom-up and top-down") {
@@ -228,12 +228,12 @@ class MultimodalSpec extends SparkSpec {
     val resized = Multimodal.resize(packed, "blob", 2, 1)
     val out = Multimodal.decodeImage(resized, "resized")
       .select($"image.width", $"image.height", $"image.channels",
-        $"image.n_pixels", $"image.pix_checksum").head
+        $"image.n_pixels", $"image.pix_checksum").head()
     // nearest-neighbour picks source pixels 0 and 2 → 10 and 70, ×3 channels
     assert((out.getInt(0), out.getInt(1), out.getInt(2), out.getLong(3),
       out.getLong(4)) == (2, 1, 3, 6L, 3L * (10 + 70)))
     // and the re-encoded payload is itself a decodable BMP
-    val blob = resized.select($"resized").head.getAs[Array[Byte]](0)
+    val blob = resized.select($"resized").head().getAs[Array[Byte]](0)
     val inner = GrftCodec.bmpDecode(blob, GrftCodec.HeaderLen)
     assert(inner != null && inner.width == 2 && inner.height == 1)
   }
@@ -283,12 +283,12 @@ class MultimodalSpec extends SparkSpec {
     val resized = Multimodal.resize(packed, "blob", 2, 1)
     val out = Multimodal.decodeImage(resized, "resized")
       .select($"image.width", $"image.height", $"image.channels",
-        $"image.n_pixels", $"image.pix_checksum").head
+        $"image.n_pixels", $"image.pix_checksum").head()
     // nearest-neighbour picks source pixels 0 and 2 → 10 and 70
     assert((out.getInt(0), out.getInt(1), out.getInt(2), out.getLong(3),
       out.getLong(4)) == (2, 1, 1, 2L, 80L))
     // and the re-encoded payload is itself a decodable PNG
-    val blob = resized.select($"resized").head.getAs[Array[Byte]](0)
+    val blob = resized.select($"resized").head().getAs[Array[Byte]](0)
     val inner = GrftCodec.pngDecode(blob, GrftCodec.HeaderLen)
     assert(inner != null && inner.width == 2 && inner.height == 1)
     assert(inner.data.toSeq == Seq[Byte](10, 70))
@@ -415,10 +415,10 @@ class MultimodalSpec extends SparkSpec {
     val resized = Multimodal.resize(packed, "blob", 2, 1)
     val out = Multimodal.decodeImage(resized, "resized")
       .select($"image.width", $"image.height", $"image.channels",
-        $"image.n_pixels", $"image.pix_checksum").head
+        $"image.n_pixels", $"image.pix_checksum").head()
     assert((out.getInt(0), out.getInt(1), out.getInt(2), out.getLong(3),
       out.getLong(4)) == (2, 1, 1, 2L, 250L))
-    val blob = resized.select($"resized").head.getAs[Array[Byte]](0)
+    val blob = resized.select($"resized").head().getAs[Array[Byte]](0)
     val inner = GrftCodec.pngDecode(blob, GrftCodec.HeaderLen)
     assert(inner != null && inner.data.toSeq == Seq[Byte](25, 225.toByte))
   }
@@ -458,23 +458,23 @@ class MultimodalSpec extends SparkSpec {
     val resampled = Multimodal.resize(packed, "blob", 2, 1)
     val out = Multimodal.decodeAudio(resampled, "resized")
       .select($"audio.sample_rate", $"audio.channels", $"audio.n_frames",
-        $"audio.sample_checksum", $"audio.peak").head
+        $"audio.sample_checksum", $"audio.peak").head()
     // nearest-neighbour picks source frames 0 and 2 → 1000 and 3000
     assert((out.getInt(0), out.getInt(1), out.getLong(2), out.getLong(3),
       out.getInt(4)) == (8000, 1, 2L, 4000L, 3000))
     // the re-encoded payload is itself a decodable WAV at the same rate
-    val blob = resampled.select($"resized").head.getAs[Array[Byte]](0)
+    val blob = resampled.select($"resized").head().getAs[Array[Byte]](0)
     val inner = GrftCodec.wavDecode(blob, GrftCodec.HeaderLen)
     assert(inner != null && inner.sampleRate == 8000 && inner.nFrames == 2)
     // audio has no second raster axis: outHeight != 1 is undecodable
     assert(Multimodal.resize(packed, "blob", 2, 2)
-      .select($"resized").head.isNullAt(0))
+      .select($"resized").head().isNullAt(0))
     // a kind=0 container with the same payload is NOT audio
     val asImage = Seq((1L, Multimodal.pack(4, 1, 1, 0,
         GrftCodec.wavEncode(8000, 1, samples))))
       .toDF("id", "blob")
     assert(Multimodal.decodeAudio(asImage, "blob")
-      .select($"audio.sample_rate").head.isNullAt(0))
+      .select($"audio.sample_rate").head().isNullAt(0))
   }
 
   test("real AVI codec: roundtrip, chunk walk, and unsupported configs") {
@@ -565,13 +565,13 @@ class MultimodalSpec extends SparkSpec {
     val resized = Multimodal.resize(packed, "blob", 2, 1)
     val out = Multimodal.decodeVideo(resized, "resized")
       .select($"video.width", $"video.height", $"video.channels",
-        $"video.n_frames", $"video.pix_checksum").head
+        $"video.n_frames", $"video.pix_checksum").head()
     // nearest-neighbour picks source pixels 0 and 2 of EACH frame
     // → (10+70) + (20+80), ×3 channels
     assert((out.getInt(0), out.getInt(1), out.getInt(2), out.getLong(3),
       out.getLong(4)) == (2, 1, 3, 2L, 3L * (10 + 70 + 20 + 80)))
     // the re-encoded payload is itself a decodable AVI with both frames
-    val blob = resized.select($"resized").head.getAs[Array[Byte]](0)
+    val blob = resized.select($"resized").head().getAs[Array[Byte]](0)
     val inner = GrftCodec.aviDecode(blob, GrftCodec.HeaderLen)
     assert(inner != null && inner.width == 2 && inner.nFrames == 2 &&
       inner.usPerFrame == 40000)
@@ -589,7 +589,7 @@ class MultimodalSpec extends SparkSpec {
         GrftCodec.aviEncode(4, 1, 40000, Array(f0)))))
       .toDF("id", "blob")
     assert(Multimodal.decodeVideo(asImage, "blob")
-      .select($"video.width").head.isNullAt(0))
+      .select($"video.width").head().isNullAt(0))
   }
 
   test("binary payloads survive the Arrow pipe round-trip") {

@@ -24,7 +24,7 @@ class ProtocolStressSpec extends SparkSpec {
     val vals = out.select(explode(split($"response", "\n")).as("l"))
       .select($"l".cast("double").as("v"))
     assert(vals.count() == 800000L)
-    assert(vals.agg(sum($"v")).head.getDouble(0) == 800000.0 * 800001.0 / 2)
+    assert(vals.agg(sum($"v")).head().getDouble(0) == 800000.0 * 800001.0 / 2)
     // 8 partitions x 1 chunk each (100k rows per chunk)
     assert(out.count() == 8)
   }
@@ -47,9 +47,9 @@ class ProtocolStressSpec extends SparkSpec {
       assert(out.count() == 200000L)
       assert(out.filter($"i".isNull).count() == 200L)
       assert(out.filter($"s".isNull).count() == 201L) // 0 hits both moduli
-      assert(out.agg(sum($"i".cast("long"))).head.getLong(0) ==
+      assert(out.agg(sum($"i".cast("long"))).head().getLong(0) ==
         (0L until 200000L).filter(_ % 1000 != 0).sum)
-      assert(out.agg(sum($"d")).head.getDouble(0) ==
+      assert(out.agg(sum($"d")).head().getDouble(0) ==
         (0L until 200000L).map(_ * 0.25).sum)
       // 4 partitions x 2 chunks each at chunkSize 25000
       assert(out.select($"instance_id", $"chunk_no").distinct().count() == 8)

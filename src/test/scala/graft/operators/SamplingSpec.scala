@@ -61,7 +61,7 @@ class SamplingSpec extends SparkSpec {
     val out = Sampling.packByTokenBudget(t, "n_tokens", 100L, "source", "doc_id",
       binCol = "pack_bin")
     assert(out.columns.contains("pack_bin") &&
-      out.select($"bin").head.getString(0) == "mine")
+      out.select($"bin").head().getString(0) == "mine")
   }
 
   test("assignSplit covers every row, respects rough proportions, and is stable") {
@@ -207,7 +207,7 @@ class SamplingSpec extends SparkSpec {
     // the extra repeat goes to the md5-smallest doc of the source
     val aFirst = t.filter(col("source") === "a")
       .orderBy(md5(col("doc_id").cast("string").cast("binary")).asc)
-      .select(col("doc_id")).head.getLong(0)
+      .select(col("doc_id")).head().getLong(0)
     assert(out.find(r => r._2 == "a" && r._4 == 2L).get._1 == aFirst)
     // scheduled tokens land within one boundary doc of each target
     val sched = out.groupBy(_._2).map { case (s, rs) =>

@@ -194,7 +194,7 @@ class SketchesSpec extends SparkSpec {
       .toDF("k")
       .select(md5($"k".cast("string").cast("binary")).as("h"))
     val got = df.agg(Sketches.hllSketch($"h").as("hll"))
-      .select($"hll.registers", $"hll.zint", $"hll.est").head
+      .select($"hll.registers", $"hll.zint", $"hll.est").head()
     val (regs, zint) = refState(keys)
     assert(got.getSeq[Int](0) == regs)
     assert(got.getLong(1) == zint)

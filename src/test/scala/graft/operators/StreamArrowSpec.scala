@@ -47,7 +47,7 @@ class StreamArrowSpec extends SparkSpec {
       StructField("id", LongType), StructField("d", DoubleType)))
     val out = Stream.arrow(df, echoCmd, declared, chunkSize = 64)
     assert(out.count() == 500)
-    assert(out.agg(sum($"id")).head.getLong(0) == (0L until 500L).sum)
+    assert(out.agg(sum($"id")).head().getLong(0) == (0L until 500L).sum)
     assert(out.select($"instance_id").distinct().count() == 4)
     // chunk_no increments per message within a partition
     assert(out.groupBy($"instance_id", $"chunk_no").count().count() >= 4)
@@ -263,8 +263,8 @@ class StreamArrowSpec extends SparkSpec {
     val out = Stream.arrow(df, pythonChild("map_loop(lambda df: df)\n"),
       declared, chunkSize = 64)
     assert(out.count() == 200)
-    assert(out.agg(sum($"id")).head.getLong(0) == (0L until 200L).sum)
-    assert(out.agg(sum($"d")).head.getDouble(0) == (0L until 200L).map(_ % 5).sum.toDouble)
+    assert(out.agg(sum($"id")).head().getLong(0) == (0L until 200L).sum)
+    assert(out.agg(sum($"d")).head().getDouble(0) == (0L until 200L).map(_ % 5).sum.toDouble)
   }
 
   test("reference python client empty-map + finalize (ML pattern) works") {

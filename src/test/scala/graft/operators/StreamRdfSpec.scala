@@ -42,9 +42,9 @@ class StreamRdfSpec extends SparkSpec {
       val got = out.select($"i", $"d", $"s").collect()
         .map(r => (Option(r.get(0)), r.getDouble(1), Option(r.get(2)))).toSet
       assert(got == in)
-      assert(out.select($"instance_id").distinct.count() == 4)
+      assert(out.select($"instance_id").distinct().count() == 4)
       // several chunks per partition at chunkSize=16
-      assert(out.select($"instance_id", $"chunk_no").distinct.count() >= 8)
+      assert(out.select($"instance_id", $"chunk_no").distinct().count() >= 8)
     } finally out.unpersist()
   }
 
@@ -169,8 +169,8 @@ class StreamRdfSpec extends SparkSpec {
         chunkSize = 32)
       assert(out.count() == 100)
       // the child added 1.0 to every double — proves real R decoded us
-      assert(out.agg(sum($"d")).head.getDouble(0) ==
-        inputDf.agg(sum($"d" + 1)).head.getDouble(0))
+      assert(out.agg(sum($"d")).head().getDouble(0) ==
+        inputDf.agg(sum($"d" + 1)).head().getDouble(0))
     } finally Files.deleteIfExists(f)
   }
 }

@@ -26,9 +26,9 @@ class StreamTsvSpec extends SparkSpec {
     val lines = out.select(explode(split($"response", "\n")).as("l"))
       .select(split($"l", "\t").getItem(1).cast("long").as("v"))
     assert(lines.count() == 1000)
-    assert(lines.agg(sum($"v")).head.getLong(0) == (0L until 1000L).sum)
+    assert(lines.agg(sum($"v")).head().getLong(0) == (0L until 1000L).sum)
     // 4 partitions x (1000/4 rows / 100 chunk) = 10+ chunks, several instances
-    assert(out.select($"instance_id").distinct.count() == 4)
+    assert(out.select($"instance_id").distinct().count() == 4)
   }
 
   test("nulls and escapes follow the reference encoding") {
@@ -42,7 +42,7 @@ class StreamTsvSpec extends SparkSpec {
       """awk -W interactive 'BEGIN{n=-1}
         |{ if (n<0) { n=$0+0; if (n==0) { print 0; fflush(); exit }; print n }
         |  else     { print $0; if (--n==0) { fflush(); n=-1 } } }'""".stripMargin.replace("\n", " ")
-    val resp = Stream.tsv(df, catEcho).select($"response").head.getString(0)
+    val resp = Stream.tsv(df, catEcho).select($"response").head().getString(0)
     val lines = resp.split("\n").toSeq
     assert(lines == Seq(
       "1\tplain",
@@ -61,7 +61,7 @@ class StreamTsvSpec extends SparkSpec {
     val df = spark.range(1, 51).repartition(4).select($"id")
     val out = Stream.tsv(df, awkSum, chunkSize = 7)
     val total = out.select($"response".cast("long").as("s"))
-      .agg(sum($"s")).head.getLong(0)
+      .agg(sum($"s")).head().getLong(0)
     assert(total == 1275) // reference tests/test.expected:36-37 (sum 1..50)
   }
 

@@ -212,7 +212,7 @@ class TextDedupSpec extends SparkSpec {
     val keyed = TextDedup.simhash64(many).selectExpr(
       "shiftrightunsigned(simhash, 0) & 65535 as k0",
       "shiftrightunsigned(simhash, 16) & 65535 as k1")
-    val distinct = keyed.selectExpr("count(distinct k0) as d0", "count(distinct k1) as d1").head
+    val distinct = keyed.selectExpr("count(distinct k0) as d0", "count(distinct k1) as d1").head()
     assert(distinct.getLong(0) > 90 && distinct.getLong(1) > 90, distinct.toString)
   }
 
@@ -618,7 +618,7 @@ class TextDedupSpec extends SparkSpec {
     out.foreach { case (id, nWords, clean, nKept) =>
       assert(keptWords(id) == nKept)
       assert(nKept < nWords, "nothing deduped — vacuous fixture")
-      val ws = docs.filter($"doc_id" === id).head.getString(1).split(" ")
+      val ws = docs.filter($"doc_id" === id).head().getString(1).split(" ")
       val expect = manifest.filter(_._1 == id).sortBy(_._2)
         .flatMap { case (_, fw, tw, _) =>
           ws.slice(fw.toInt, tw.toInt + 1) }.mkString(" ")

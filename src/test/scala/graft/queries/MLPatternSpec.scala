@@ -21,7 +21,7 @@ class MLPatternSpec extends SparkSpec {
     val s = events.agg(
       count(lit(1)).cast("double").as("n"),
       sum($"x").as("sx"), sum($"y").as("sy"),
-      sum($"x" * $"y").as("sxy"), sum($"x" * $"x").as("sxx")).head
+      sum($"x" * $"y").as("sxy"), sum($"x" * $"x").as("sxx")).head()
     val (n, sx, sy, sxy, sxx) =
       (s.getDouble(0), s.getDouble(1), s.getDouble(2), s.getDouble(3), s.getDouble(4))
 
@@ -33,10 +33,10 @@ class MLPatternSpec extends SparkSpec {
     // broadcast model (captured constants), distributed predict + RMSE
     val withPred = events.withColumn("pred", lit(intercept) + lit(slope) * $"x")
     val rmse = math.sqrt(
-      withPred.agg(avg(pow($"y" - $"pred", 2))).head.getDouble(0))
+      withPred.agg(avg(pow($"y" - $"pred", 2))).head().getDouble(0))
     // model must beat the trivial mean predictor (or at worst tie)
     val meanOnly = math.sqrt(
-      events.agg(avg(pow($"y" - lit(sy / n), 2))).head.getDouble(0))
+      events.agg(avg(pow($"y" - lit(sy / n), 2))).head().getDouble(0))
     assert(rmse <= meanOnly + 1e-9, s"rmse $rmse vs mean-only $meanOnly")
     events.unpersist()
   }

@@ -416,7 +416,7 @@ class PlanQualitySpec extends SparkSpec {
     val total = piped
       .select(explode(split($"response", "\n")).as("l"))
       .select($"l".cast("long").as("v"))
-      .agg(sum($"v")).head.getLong(0)
+      .agg(sum($"v")).head().getLong(0)
     assert(total == (0L until 8L).sum)
   }
   test("q114 winnowing: the kernel runs next to the scan, joins only on fingerprints") {

@@ -13,10 +13,10 @@ class GraftSqlSpec extends SparkSpec {
   test("graft_dot and graft_cosine work from SQL") {
     GraftExtensions.register(spark)
     val d = spark.sql(
-      "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head.getDouble(0)
+      "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head().getDouble(0)
     assert(d == 11.0)
     val c = spark.sql(
-      "SELECT graft_cosine(array(2.0D, 0.0D), array(5.0D, 0.0D)) AS c").head.getDouble(0)
+      "SELECT graft_cosine(array(2.0D, 0.0D), array(5.0D, 0.0D)) AS c").head().getDouble(0)
     assert(math.abs(c - 1.0) < 1e-12)
   }
 
@@ -25,27 +25,27 @@ class GraftSqlSpec extends SparkSpec {
     // argmax over a 2-row literal matrix: (2,0) is exactly bench 10
     val am = spark.sql(
       "SELECT graft_argmax_cos(array(2.0D, 0.0D), array(10L, 20L), " +
-        "array(1.0D, 0.0D, 0.0D, 1.0D)) AS m").select("m.bench_id", "m.cos").head
+        "array(1.0D, 0.0D, 0.0D, 1.0D)) AS m").select("m.bench_id", "m.cos").head()
     assert(am.getLong(0) == 10L && am.getDouble(1) == 1.0)
     val qz = spark.sql(
       "SELECT graft_quantize8(array(0.0D, 127.0D)) AS m")
-      .select("m.scale", "m.q").head
+      .select("m.scale", "m.q").head()
     assert(qz.getDouble(0) == 1.0 &&
       qz.getAs[Array[Byte]](1).toSeq == Seq[Byte](0, 127))
     val d8 = spark.sql(
       "SELECT graft_dot8(graft_quantize8(array(0.0D, 127.0D)).q, " +
-        "graft_quantize8(array(0.0D, 127.0D)).q) AS d").head.getLong(0)
+        "graft_quantize8(array(0.0D, 127.0D)).q) AS d").head().getLong(0)
     assert(d8 == 127L * 127)
   }
 
   test("graft_grams multiset k-grams work from SQL") {
     GraftExtensions.register(spark)
     val g = spark.sql(
-      "SELECT graft_grams('a b a b c', 2) AS g").head.getSeq[String](0)
+      "SELECT graft_grams('a b a b c', 2) AS g").head().getSeq[String](0)
     // multiset: "a b" appears twice (positions 0 and 2)
     assert(g.sorted == Seq("a b", "a b", "b a", "b c"))
     val uni = spark.sql(
-      "SELECT graft_grams('x y', 1) AS g").head.getSeq[String](0)
+      "SELECT graft_grams('x y', 1) AS g").head().getSeq[String](0)
     assert(uni == Seq("x", "y"))
   }
 
@@ -54,16 +54,16 @@ class GraftSqlSpec extends SparkSpec {
     // winnow: k=1, w=2 over "b a c" — gram hashes are md5 prefixes of
     // the words; each 2-window's min is selected
     val fps = spark.sql(
-      "SELECT graft_winnow('b a c', 1, 2) AS f").head
+      "SELECT graft_winnow('b a c', 1, 2) AS f").head()
       .getSeq[org.apache.spark.sql.Row](0)
     assert(fps.nonEmpty && fps.forall(_.getString(1).length == 12))
     assert(fps.map(_.getInt(0)) == fps.map(_.getInt(0)).sorted)
     // short text: null
-    assert(spark.sql("SELECT graft_winnow('a', 4, 5) AS f").head.isNullAt(0))
+    assert(spark.sql("SELECT graft_winnow('a', 4, 5) AS f").head().isNullAt(0))
     // AC counts: overlapping occurrences, pattern order preserved
     val ac = spark.sql(
       "SELECT graft_ac_count('a a a', concat('a a', char(1), 'b')) AS c")
-      .head.getSeq[Long](0)
+      .head().getSeq[Long](0)
     assert(ac == Seq(2L, 0L))
   }
 
@@ -75,7 +75,7 @@ class GraftSqlSpec extends SparkSpec {
     val m = spark.sql(
       "SELECT graft_meta(b).width w, graft_meta(b).valid v, " +
         "graft_stats(b).payload_bytes n, graft_resize(b, 2, 1) r, " +
-        "size(graft_frames(b, 2, 1)) nf FROM media").head
+        "size(graft_frames(b, 2, 1)) nf FROM media").head()
     assert(m.getInt(0) == 4 && m.getBoolean(1))
     assert(m.getLong(2) == 8L)
     assert(m.getAs[Array[Byte]](3) != null)
@@ -165,8 +165,8 @@ class GraftSqlSpec extends SparkSpec {
     // really happened (first partition's z-range disjoint from last's)
     val base = Tables.load(spark, sf, "part")
     assert(api.count() == base.count())
-    assert(api.select(sum($"p_partkey")).head.getLong(0) ==
-      base.select(sum($"p_partkey")).head.getLong(0))
+    assert(api.select(sum($"p_partkey")).head().getLong(0) ==
+      base.select(sum($"p_partkey")).head().getLong(0))
     val z = graft.operators.Layout.zvalue(api("p_size"), api("p_partkey"))
     val parts = api.select(spark_partition_id().as("p"), z.as("z"))
       .groupBy($"p").agg(min($"z").as("lo"), max($"z").as("hi"))
@@ -542,7 +542,7 @@ class GraftSqlSpec extends SparkSpec {
     assert(out.columns.toSeq ==
       Seq("id", "v", "instance_id", "chunk_no", "value_no"))
     assert(out.count() == 12)
-    assert(out.agg(sum($"id")).head.getLong(0) == (0L until 12L).sum)
+    assert(out.agg(sum($"id")).head().getLong(0) == (0L until 12L).sum)
   }
 
   test("graft_stream_df table function speaks the R data-frame wire format") {
@@ -557,7 +557,7 @@ class GraftSqlSpec extends SparkSpec {
     assert(out.columns.toSeq ==
       Seq("i", "d", "instance_id", "chunk_no", "value_no"))
     assert(out.count() == 10)
-    assert(out.agg(sum($"i".cast("long"))).head.getLong(0) == (0L until 10L).sum)
+    assert(out.agg(sum($"i".cast("long"))).head().getLong(0) == (0L until 10L).sum)
     val bad = intercept[Exception] {
       spark.sql("SELECT * FROM graft_stream_df('tvf_df_in', 'cat', 'int64', 'x')")
         .collect()
@@ -619,7 +619,7 @@ class GraftSqlSpec extends SparkSpec {
     }
     val r = fresh.sql(
       "SELECT graft_cdc('a b c d', 2, 1) AS cuts, graft_char_windows('abcd', 2) AS w, " +
-        "graft_quantize8_arr(array(0.0D, 127.0D)) AS q").head
+        "graft_quantize8_arr(array(0.0D, 127.0D)) AS q").head()
     assert(r.getSeq[Int](0) == Seq(1, 2, 3))
     assert(r.getSeq[String](1) == Seq("ab", "bc", "cd"))
     assert(r.getSeq[Double](2) == Seq(0.0, 127.0))

@@ -114,7 +114,7 @@ class StreamingOpsSpec extends SparkSpec {
       mem.addData(Seq(StreamingOps.drainSentinel(base + 100).copy(user_id = 7L)))
       q.processAllAvailable(); q.stop()
       spark.table(name).filter($"user_id" === 7L)
-        .agg(sum($"n_events")).head.getLong(0)
+        .agg(sum($"n_events")).head().getLong(0)
     }
     // 0s watermark: the straggler is below it and silently dropped
     assert(run("0 seconds", "late_strict") == 2L)
