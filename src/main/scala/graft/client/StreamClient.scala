@@ -1,8 +1,8 @@
 package graft.client
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
+import java.io.{FileDescriptor, FileInputStream, FileOutputStream, InputStream, OutputStream}
 
-import graft.operators.TsvProtocol
+import graft.operators.{PipeIn, PipeOut, TsvProtocol}
 
 /** Child-side client library for writing stream children on the JVM —
   * the Scala analog of the reference's Python `scidbstrm` package
@@ -34,8 +34,8 @@ object StreamClient {
     * keep their column slot).
     */
   final class Channel(in: InputStream, out: OutputStream) {
-    private val bin = new BufferedInputStream(in, 1 << 20)
-    private val bout = new BufferedOutputStream(out, 1 << 20)
+    private val bin = new PipeIn(in)
+    private val bout = new PipeOut(out)
 
     /** Read one message; None when the parent signals end-of-data. */
     def read(): Option[Seq[TsvRow]] =
@@ -47,7 +47,9 @@ object StreamClient {
       TsvProtocol.writeChunk(bout, rows.iterator.map(_.mkString("\t")), rows.size)
   }
 
-  def channel(): Channel = new Channel(System.in, System.out)
+  /** The channel over this process's raw stdin/stdout descriptors. */
+  def channel(): Channel =
+    new Channel(new FileInputStream(FileDescriptor.in), new FileOutputStream(FileDescriptor.out))
 
   /** Per-message map loop with optional finalize — the analog of
     * `scidbstrm.map(map_fun, finalize_fun)` (`__init__.py:117-139`).

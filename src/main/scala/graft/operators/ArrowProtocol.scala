@@ -1,8 +1,8 @@
 package graft.operators
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException, InputStream, OutputStream}
+import java.io.{ByteArrayInputStream, IOException, InputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.channels.Channels
+import java.nio.channels.WritableByteChannel
 
 import scala.jdk.CollectionConverters._
 
@@ -108,6 +108,7 @@ object ArrowProtocol {
     */
   final class ColumnarFrameBuffer(schema: StructType, allocator: BufferAllocator) {
     private var root = VectorSchemaRoot.create(arrowSchema(schema), allocator)
+    private val frame = new ByteSink(1 << 16)
     root.allocateNew()
     private var n = 0
 
@@ -164,7 +165,7 @@ object ArrowProtocol {
     /** Frame the buffered rows as one message and reset for the next. */
     def writeAndReset(out: OutputStream): Unit = {
       root.setRowCount(n)
-      try writeRoot(out, root)
+      try writeRoot(out, root, frame)
       finally {
         root.close()
         root = VectorSchemaRoot.create(arrowSchema(schema), allocator)
@@ -176,25 +177,27 @@ object ArrowProtocol {
     def close(): Unit = root.close()
   }
 
-  /** Frame one filled root as a length-prefixed single-batch IPC stream. */
-  private[operators] def writeRoot(out: OutputStream, root: VectorSchemaRoot): Unit = {
-    val baos = new ByteArrayOutputStream(1 << 12)
-    val writer = new ArrowStreamWriter(root, null, Channels.newChannel(baos))
+  /** Frame one filled root as a length-prefixed single-batch IPC stream:
+    * serialized into `frame` (reusable; its contents are replaced) after
+    * an 8-byte gap, the length filled into the gap, and the whole frame
+    * written once.
+    */
+  private[operators] def writeRoot(out: OutputStream, root: VectorSchemaRoot,
+                                   frame: ByteSink = new ByteSink(1 << 12)): Unit = {
+    frame.reset()
+    frame.write(NoLength, 0, 8)
+    val writer = new ArrowStreamWriter(root, null, frame: WritableByteChannel)
     writer.start(); writer.writeBatch(); writer.end(); writer.close()
-    val payload = baos.toByteArray
-    writeLen(out, payload.length.toLong)
-    out.write(payload)
+    ByteBuffer.wrap(frame.array, 0, 8).order(ByteOrder.LITTLE_ENDIAN)
+      .putLong(frame.length - 8L)
+    frame.writeTo(out)
     out.flush()
   }
 
   /** End-of-data: a bare zero length (reference `writeFinalFeather`). */
-  def writeEof(out: OutputStream): Unit = { writeLen(out, 0L); out.flush() }
+  def writeEof(out: OutputStream): Unit = { out.write(NoLength); out.flush() }
 
-  private def writeLen(out: OutputStream, n: Long): Unit = {
-    val b = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
-    b.putLong(n)
-    out.write(b.array())
-  }
+  private val NoLength = new Array[Byte](8)
 
   /** Read one length-prefixed frame: its payload bytes, or None for a
     * zero-length frame. The length is an unsigned 64-bit value, so one

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, IOException, InputStream}
+import java.io.{EOFException, IOException, InputStream}
 import java.util.concurrent.TimeUnit
 import java.util.concurrent.atomic.AtomicBoolean
 
@@ -19,7 +19,10 @@ import org.apache.spark.TaskContext
   *  - termination escalation: close pipes, SIGTERM, bounded wait, SIGKILL
   *    (`src/ChildProcess.cpp:104-128`) → destroy(), timed waitFor,
   *    destroyForcibly()
-  *  - 1 MB buffered reads, flushed writes (`src/ChildProcess.h:47,78-116`)
+  *  - 1 MiB buffered pipe ends, flushed once per message
+  *    (`src/ChildProcess.h:47,78-116`) → [[PipeOut]] / [[PipeIn]], which
+  *    take no lock per byte; `terminate` closes them, so a read blocked
+  *    or refilling after it fails with an `IOException`
   */
 final class ChildProcess(cmd: String, ctx: Option[TaskContext]) {
   private val proc = {
@@ -27,8 +30,8 @@ final class ChildProcess(cmd: String, ctx: Option[TaskContext]) {
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
     pb.start()
   }
-  val stdin = new BufferedOutputStream(proc.getOutputStream, 1 << 20)
-  val stdout = new BufferedInputStream(proc.getInputStream, 1 << 20)
+  val stdin = new PipeOut(proc.getOutputStream)
+  val stdout = new PipeIn(proc.getInputStream)
 
   private val closed = new AtomicBoolean(false)
 
@@ -155,7 +158,7 @@ object ChildProcess {
     buf
   }
 
-  /** One byte of a child's stdout (TSV's line scanner), or fail at its end. */
+  /** One byte of a child's stdout (the TSV header, R-DF's int32s), or fail at its end. */
   private[operators] def readByte(in: InputStream, child: ChildProcess,
                                   lastMessage: Boolean): Int = {
     val b = in.read()
@@ -169,7 +172,7 @@ object ChildProcess {
     * final message must still be complete. With no child — an in-memory
     * decode — the EOF is the whole story.
     */
-  private def closed(child: ChildProcess, lastMessage: Boolean, where: String): Nothing = {
+  private[operators] def closed(child: ChildProcess, lastMessage: Boolean, where: String): Nothing = {
     if (!lastMessage && child != null) child.throwIfDeadAfter(2000)
     throw new EOFException(s"child stdout closed $where")
   }

@@ -191,11 +191,20 @@ object IndexLayout {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       val bucketRe = """bucket=(\d+)""".r
+      // bucket directories sit at the root or under one partition
+      // level (`band=j/bucket=i`, `eval_set_id=s/bucket=i`)
+      def buckets(dir: org.apache.hadoop.fs.Path, depth: Int): Iterator[Int] =
+        fs.listStatus(dir).iterator.flatMap { s =>
+          val name = s.getPath.getName
+          bucketRe.findFirstMatchIn(name).map(_.group(1).toInt) match {
+            case Some(b) => Iterator.single(b)
+            case None if depth > 0 && s.isDirectory && name.contains("=") =>
+              buckets(s.getPath, depth - 1)
+            case None => Iterator.empty
+          }
+        }
       val maxBucket =
-        if (!fs.exists(root)) -1
-        else fs.listStatus(root).iterator.flatMap(s =>
-          bucketRe.findFirstMatchIn(s.getPath.getName).map(_.group(1).toInt))
-          .foldLeft(-1)(math.max)
+        if (!fs.exists(root)) -1 else buckets(root, 1).foldLeft(-1)(math.max)
       if (maxBucket >= NumBuckets)
         throw new IllegalStateException(
           s"index tree $path has bucket directories up to bucket=$maxBucket " +

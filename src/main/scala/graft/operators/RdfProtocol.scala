@@ -47,7 +47,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * refuses, `src/StreamSettings.h` allows types=double,string,int32).
   */
 object RdfProtocol {
-  import ChildProcess.readFully
+  import ChildProcess.{readByte, readFully}
 
   /** `"B\n"` + version 2 + R 3.2.0 writer + R 2.3.0 min reader, the
     * exact bytes of `serialize(..., xdr=FALSE, version=2)` output and
@@ -116,10 +116,10 @@ object RdfProtocol {
     out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
   }
 
-  private def writeCharsxp(out: OutputStream, bytes: Array[Byte]): Unit = {
+  private def writeCharsxp(out: OutputStream, s: UTF8String): Unit = {
     writeInt(out, CharsxpFlags)
-    writeInt(out, bytes.length)
-    out.write(bytes)
+    writeInt(out, s.numBytes)
+    s.writeTo(out)
   }
 
   // ---- encode (parent → child), reference writeDF:181-275 ----
@@ -147,7 +147,7 @@ object RdfProtocol {
           var j = 0
           while (j < n) {
             if (rows(j).isNullAt(c)) { writeInt(out, CharsxpFlags); writeInt(out, -1) }
-            else writeCharsxp(out, rows(j).getUTF8String(c).getBytes)
+            else writeCharsxp(out, rows(j).getUTF8String(c))
             j += 1
           }
         case DoubleType =>
@@ -205,10 +205,10 @@ object RdfProtocol {
   private def writeNames(out: OutputStream, names: Array[String]): Unit = {
     writeInt(out, LISTSXP | HasTagBit)
     writeInt(out, SYMSXP)
-    writeCharsxp(out, "names".getBytes(StandardCharsets.UTF_8))
+    writeCharsxp(out, UTF8String.fromString("names"))
     writeInt(out, STRSXP)
     writeInt(out, names.length)
-    names.foreach(n => writeCharsxp(out, n.getBytes(StandardCharsets.UTF_8)))
+    names.foreach(n => writeCharsxp(out, UTF8String.fromString(n)))
     writeInt(out, NILVALUE)
   }
 
@@ -386,9 +386,11 @@ object RdfProtocol {
     if (len == -1) null else readFully(in, new Array[Byte](len), child, lastMessage)
   }
 
+  /** One little-endian int32, byte by byte: no array per value. */
   private def readInt(in: InputStream, child: ChildProcess,
                       lastMessage: Boolean): Int =
-    readIntAt(readFully(in, new Array[Byte](4), child, lastMessage), 0)
+    readByte(in, child, lastMessage) | (readByte(in, child, lastMessage) << 8) |
+      (readByte(in, child, lastMessage) << 16) | (readByte(in, child, lastMessage) << 24)
 
   private def readIntAt(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |

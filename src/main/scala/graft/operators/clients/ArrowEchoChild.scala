@@ -1,10 +1,10 @@
 package graft.operators.clients
 
-import java.io.{BufferedInputStream, BufferedOutputStream, PushbackInputStream}
+import java.io.{FileDescriptor, FileInputStream, FileOutputStream}
 
 import org.apache.arrow.memory.RootAllocator
 
-import graft.operators.ArrowProtocol
+import graft.operators.{ArrowProtocol, ByteSink, PipeIn, PipeOut}
 
 /** Child-side Arrow protocol client: echoes every batch back verbatim.
   *
@@ -21,19 +21,22 @@ import graft.operators.ArrowProtocol
   * when the parent closes the pipe. EOF *between* streams is therefore
   * the one clean exit; EOF mid-frame is still a protocol error (inside
   * `readFrame`), told apart by peeking the frame's first byte.
+  *
+  * The pipe ends are the parent's lock-free [[PipeIn]] / [[PipeOut]]
+  * over the raw stdin/stdout descriptors: this JVM runs C1-only, which
+  * never elides a per-call monitor.
   */
 object ArrowEchoChild {
   def main(args: Array[String]): Unit = {
-    val in = new PushbackInputStream(new BufferedInputStream(System.in, 1 << 20), 1)
-    val out = new BufferedOutputStream(System.out, 1 << 20)
+    val in = new PipeIn(new FileInputStream(FileDescriptor.in))
+    val out = new PipeOut(new FileOutputStream(FileDescriptor.out))
     val allocator = new RootAllocator(Long.MaxValue)
+    val frame = new ByteSink(1 << 16)
     var done = false
     while (!done) {
-      val first = in.read()
-      if (first < 0) {
+      if (in.peek() < 0) {
         done = true // pool shutdown: pipe closed between streams
       } else {
-        in.unread(first)
         ArrowProtocol.readFrame(in, null, lastMessage = true) match {
           case None =>
             ArrowProtocol.writeEof(out) // final message: no data; await next stream
@@ -41,7 +44,7 @@ object ArrowEchoChild {
             // Decode and re-encode (rather than byte-copy) so the test also
             // proves the frames are valid single-batch IPC streams.
             val reader = ArrowProtocol.loadBatch(payload, allocator)
-            try ArrowProtocol.writeRoot(out, reader.getVectorSchemaRoot)
+            try ArrowProtocol.writeRoot(out, reader.getVectorSchemaRoot, frame)
             finally reader.close()
         }
       }

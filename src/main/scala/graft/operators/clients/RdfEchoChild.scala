@@ -1,11 +1,11 @@
 package graft.operators.clients
 
-import java.io.{BufferedInputStream, BufferedOutputStream}
+import java.io.{FileDescriptor, FileInputStream, FileOutputStream}
 
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
-import graft.operators.RdfProtocol
+import graft.operators.{PipeIn, PipeOut, RdfProtocol}
 
 /** Child-side R-DF protocol client: the JVM analog of the reference R
   * client loop (`r_pkg/R/exported.R:84-107` — `unserialize(stdin)` /
@@ -29,21 +29,18 @@ object RdfEchoChild {
     // LOOP-STYLE (child pooling): after the end-of-data handshake the
     // client resets its per-stream state and waits for the next
     // stream's first message — the reference R client's `map(f)` loop
-    // shape, which only ends when the parent closes the pipe. The
-    // PushbackInputStream lets the loop distinguish the clean
-    // between-streams EOF (first byte of a message) from EOF
-    // mid-message (still an error inside readDynamic).
-    val in = new java.io.PushbackInputStream(
-      new BufferedInputStream(System.in, 1 << 20), 1)
-    val out = new BufferedOutputStream(System.out, 1 << 20)
+    // shape, which only ends when the parent closes the pipe. Peeking
+    // lets the loop distinguish the clean between-streams EOF (first
+    // byte of a message) from EOF mid-message (still an error inside
+    // readDynamic). The lock-free pipe ends sit on the raw descriptors.
+    val in = new PipeIn(new FileInputStream(FileDescriptor.in))
+    val out = new PipeOut(new FileOutputStream(FileDescriptor.out))
     var rows = 0L
     var done = false
     while (!done) {
-      val first = in.read()
-      if (first < 0) {
+      if (in.peek() < 0) {
         done = true // pool shutdown: pipe closed between streams
       } else {
-        in.unread(first)
         RdfProtocol.readDynamic(in) match {
           case null =>
             if (mode == "rowcount") {

@@ -78,7 +78,9 @@ case class StreamExec(
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-    "numChildren" -> SQLMetrics.createMetric(sparkContext, "child processes forked"))
+    "numChildren" -> SQLMetrics.createMetric(sparkContext, "child processes forked"),
+    "bytesToChild" -> SQLMetrics.createSizeMetric(sparkContext, "bytes written to children"),
+    "bytesFromChild" -> SQLMetrics.createSizeMetric(sparkContext, "bytes read from children"))
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[SparkPlan]): StreamExec =
@@ -98,9 +100,13 @@ case class StreamExec(
     * task thread runs `read`, whose result is returned. Failure handling
     * mirrors the reference's liveness loop: a writer failure is surfaced
     * as the root cause, and a dead child gets the clearer
-    * premature-exit diagnostic.
+    * premature-exit diagnostic. The bytes each way are counted once per
+    * exchange, from the pipe ends' running totals.
     */
-  private def exchange[R](child: ChildProcess)(write: => Unit)(read: => R): R = {
+  private def exchange[R](t: Task)(write: => Unit)(read: => R): R = {
+    val child = t.child
+    val sent0 = child.stdin.written
+    val got0 = child.stdout.consumed
     @volatile var werr: Throwable = null
     val writer = new Thread(() =>
       try write catch { case t: Throwable =>
@@ -126,6 +132,8 @@ case class StreamExec(
       sys.error(s"stream writer stuck >60s feeding child stdin ($cmd); child terminated")
     }
     if (werr != null) { child.throwIfDead(); throw werr }
+    t.bytesToChild += child.stdin.written - sent0
+    t.bytesFromChild += child.stdout.consumed - got0
     resp
   }
 
@@ -153,10 +161,12 @@ case class StreamExec(
     else input.execute()
 
   /** One task's share of the stream: its context (null outside a task),
-    * partition id, child process and the side rows that child sees first.
+    * partition id, child process, the side rows that child sees first and
+    * the byte counters its exchanges add to.
     */
   private case class Task(ctx: TaskContext, pid: Long, child: ChildProcess,
-                          sideRows: IndexedSeq[InternalRow]) {
+                          sideRows: IndexedSeq[InternalRow],
+                          bytesToChild: SQLMetric, bytesFromChild: SQLMetric) {
     /** Run `f` when the task ends, however it ends; cleanup never fails it. */
     def onEnd(f: => Unit): Unit =
       if (ctx != null) ctx.addTaskCompletionListener[Unit] { _ =>
@@ -175,13 +185,15 @@ case class StreamExec(
   private def perPartition[T: ClassTag, O: ClassTag](in: RDD[T])(
       body: (Iterator[T], Task) => Iterator[O]): RDD[O] = {
     val kids = longMetric("numChildren")
+    val toChild = longMetric("bytesToChild")
+    val fromChild = longMetric("bytesFromChild")
     val sideBc = if (sideLocal) None else side.map(sideBroadcast)
     def run(it: Iterator[T], sideRows: IndexedSeq[InternalRow]): Iterator[O] = {
       val ctx = TaskContext.get()
       val (child, forked) = ChildProcessPool.acquire(cmd, Option(ctx), reuseChildren)
       if (forked) kids += 1
       val pid = if (ctx == null) 0L else ctx.partitionId().toLong
-      body(it, Task(ctx, pid, child, sideRows))
+      body(it, Task(ctx, pid, child, sideRows, toChild, fromChild))
     }
     if (sideLocal && side.isDefined)
       in.zipPartitions(side.get.execute())((it, sit) => run(it, sit.map(_.copy()).toIndexedSeq))
@@ -214,7 +226,7 @@ case class StreamExec(
     val writes = Iterator.single(t.sideRows).filter(_.nonEmpty).map(sideFrame) ++ frames
     (writes.map((_, false)) ++ Iterator.single((eof, true))).flatMap { case (write, last) =>
       retire()
-      exchange(t.child)(write())(read(last)).map { r => chunkNo += 1; decode(r, chunkNo) }
+      exchange(t)(write())(read(last)).map { r => chunkNo += 1; decode(r, chunkNo) }
     } ++ {
       retire()
       ChildProcessPool.release(cmd, t.child, reuseChildren)
@@ -336,21 +348,29 @@ case class StreamExec(
         // each response message becomes one string row
         perPartition(inputRows()) { (in, t) =>
           val stdin = t.child.stdin
-          def frame(lines: Seq[String]): () => Unit =
-            () => TsvProtocol.writeChunk(stdin, lines.iterator, lines.size)
-          // format before grouping: the input iterator may reuse row
-          // objects, but formatted strings are immutable
-          protocol[String, Iterator[InternalRow]](t,
-            side => frame(side.map(TsvProtocol.formatInternalRow(_, sideSchema))),
-            in.map(TsvProtocol.formatInternalRow(_, inSchema)).grouped(chunk).map(frame),
+          // one frame buffer per task: rows are formatted into it as they
+          // are pulled (the input iterator may reuse row objects), on the
+          // task thread and only between exchanges — the loop pulls the
+          // next frame after joining the previous frame's writer
+          val frame = new TsvProtocol.Frame
+          val send: () => Unit = () => frame.writeTo(stdin)
+          protocol[UTF8String, Iterator[InternalRow]](t,
+            side => {
+              frame.clear()
+              side.foreach(frame.appendRow(_, sideSchema))
+              send
+            },
+            Iterator.continually {
+              frame.clear()
+              while (frame.rows < chunk && in.hasNext) frame.appendRow(in.next(), inSchema)
+            }.takeWhile(_ => frame.rows > 0).map(_ => send), // O16
             () => TsvProtocol.writeEof(stdin),
-            // null = the protocol's "no data right now"; an empty string
+            // null = the protocol's "no data right now"; an empty body
             // is a real one-empty-line response and keeps its row
-            last => Option(TsvProtocol.readMessage(t.child.stdout, t.child, lastMessage = last)),
+            last => Option(TsvProtocol.readBody(t.child.stdout, t.child, lastMessage = last)),
             (resp, chunkNo) => {
               outRows += 1
-              Iterator.single(new GenericInternalRow(
-                Array[Any](t.pid, chunkNo, UTF8String.fromString(resp))))
+              Iterator.single(new GenericInternalRow(Array[Any](t.pid, chunkNo, resp)))
             }).flatten
         }
 

@@ -148,6 +148,21 @@ class IndexLayoutSpec extends SparkSpec {
     assert(IndexLayout.indexNumBuckets(spark, dir16) == IndexLayout.NumBuckets)
   }
 
+  test("missing meta: the guard sees bucket directories under a partition level") {
+    // TextDedup's hash index is band=j/bucket=i: a B=64 tree with its
+    // meta lost must fail like a flat one, not read as B=16
+    val dir = tempDir("graft_idxlayout_meta_banded")
+    spark.conf.set(IndexLayout.NumBucketsKey, "64")
+    try TextDedup.writeHashIndex(
+      (0L until 3000L).map(i => (i, i * 0x9E3779B97F4A7C15L)).toDF("doc_id", "simhash"), dir)
+    finally spark.conf.unset(IndexLayout.NumBucketsKey)
+    assert(IndexLayout.indexNumBuckets(spark, dir) == 64)
+    assert(new java.io.File(dir, "_graft_index_meta.json").delete())
+    assert(!new java.io.File(dir).list().exists(_.startsWith("bucket=")))
+    val e = intercept[IllegalStateException](IndexLayout.indexNumBuckets(spark, dir))
+    assert(e.getMessage.contains("Rebuild"), e.getMessage)
+  }
+
   test("semi-join tier is byte-bounded: oversized key bytes fall back to bucket-only") {
     // SemiJoinMaxKeys bounds ROWS; wide string keys could still build
     // a driver-hostile broadcast (r17 advice). Over the byte bound the

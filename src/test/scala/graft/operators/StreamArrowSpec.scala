@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.SparkSpec
 
 /** Arrow IPC pipe protocol tests: round-trip through a real child JVM
@@ -341,5 +343,28 @@ class StreamArrowSpec extends SparkSpec {
         .map { case (c, rs) => c -> rs.length }
       assert(perChunk == Map(0L -> 120, 1L -> 120, 2L -> 60), perChunk.toString)
     } finally spark.conf.unset("spark.sql.parquet.columnarReaderBatchSize")
+  }
+
+  test("bytesToChild and bytesFromChild count the wire bytes of each exchange") {
+    val schema = StructType(Seq(StructField("i", LongType), StructField("s", StringType)))
+    val rows = Seq(Row(1L, "one"), Row(null, "two\tlines\n"), Row(3L, null))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    val out = Stream.arrow(df, echoCmd, schema)
+    assert(out.collect().length == 3)
+    val stream = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectFirst(out.queryExecution.executedPlan) { case s: graft.plans.StreamExec => s }.get
+    // the wire: one length-prefixed IPC frame of the three rows, then the
+    // zero-length end-of-data; the echo child answers the same frame and
+    // a zero-length final message
+    val wire = new java.io.ByteArrayOutputStream
+    val allocator = new org.apache.arrow.memory.RootAllocator(Long.MaxValue)
+    try ArrowProtocol.writeBatchInternal(wire, allocator, schema, Seq(
+      InternalRow(1L, UTF8String.fromString("one")),
+      InternalRow(null, UTF8String.fromString("two\tlines\n")),
+      InternalRow(3L, null)))
+    finally allocator.close()
+    ArrowProtocol.writeEof(wire)
+    assert(stream.metrics("bytesToChild").value == wire.size)
+    assert(stream.metrics("bytesFromChild").value == wire.size)
   }
 }

@@ -202,4 +202,25 @@ class StreamTsvSpec extends SparkSpec {
     val totals = out.map(_.getString(2).stripPrefix("TOTAL\t").toLong)
     assert(totals.sum == (0L until 100L).sum)
   }
+
+  test("bytesToChild and bytesFromChild count the wire bytes of each exchange") {
+    val df = Seq(
+      (Some(1L), Some("plain")),
+      (None: Option[Long], Some("tab\there")),
+      (Some(3L), None: Option[String])
+    ).toDF("a", "b").coalesce(1)
+    // cat-like child: answers each chunk with its body verbatim
+    val catEcho =
+      """awk -W interactive 'BEGIN{n=-1}
+        |{ if (n<0) { n=$0+0; if (n==0) { print 0; fflush(); exit }; print n }
+        |  else     { print $0; if (--n==0) { fflush(); n=-1 } } }'""".stripMargin.replace("\n", " ")
+    val out = Stream.tsv(df, catEcho)
+    assert(out.collect().length == 1)
+    val stream = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectFirst(out.queryExecution.executedPlan) { case s: graft.plans.StreamExec => s }.get
+    // one data frame, then end-of-data; the echo answers the same bytes
+    val wire = "3\n1\tplain\n\\N\ttab\\there\n3\t\\N\n" + "0\n"
+    assert(stream.metrics("bytesToChild").value == wire.length)
+    assert(stream.metrics("bytesFromChild").value == wire.length)
+  }
 }
