@@ -6,12 +6,15 @@ import java.nio.channels.WritableByteChannel
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.arrow.memory.BufferAllocator
+import org.apache.arrow.memory.{BufferAllocator, RootAllocator}
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.FloatingPointPrecision
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Arrow IPC wire protocol of the reference stream operator.
   *
@@ -56,125 +59,71 @@ object ArrowProtocol {
   def arrowSchema(schema: StructType): Schema =
     new Schema(schema.fields.map(f => arrowField(f.name, f.dataType)).toList.asJava)
 
-  /** Encode one batch of `InternalRow`s (the [[graft.plans.StreamExec]]
-    * hot path: strings leave as their UTF-8 bytes directly, no
-    * `String` materialization).
+  /** The allocator root of every `stream()` task and of schema
+    * inference, whose own allocators are its children: memory one of
+    * them leaks stays counted here even after its close fails.
+    */
+  lazy val rootAllocator: RootAllocator = new RootAllocator(Long.MaxValue)
+
+  /** Encode one batch of `InternalRow`s as one message, through a
+    * [[ColumnarFrameBuffer]].
     */
   def writeBatchInternal(out: OutputStream, allocator: BufferAllocator,
-                         schema: StructType,
-                         rows: scala.collection.Seq[org.apache.spark.sql.catalyst.InternalRow]): Unit = {
-    val root = VectorSchemaRoot.create(arrowSchema(schema), allocator)
-    try {
-      root.allocateNew()
-      var col = 0
-      while (col < schema.length) {
-        val vec = root.getVector(col)
-        var i = 0
-        rows.foreach { row =>
-          if (row.isNullAt(col)) vec match {
-            case v: BigIntVector    => v.setNull(i)
-            case v: IntVector       => v.setNull(i)
-            case v: Float8Vector    => v.setNull(i)
-            case v: VarCharVector   => v.setNull(i)
-            case v: VarBinaryVector => v.setNull(i)
-            case v => throw new IllegalStateException(s"unexpected vector $v")
-          } else vec match {
-            case v: BigIntVector    => v.setSafe(i, row.getLong(col))
-            case v: IntVector       => v.setSafe(i, row.getInt(col))
-            case v: Float8Vector    => v.setSafe(i, row.getDouble(col))
-            case v: VarCharVector   => v.setSafe(i, row.getUTF8String(col).getBytes)
-            case v: VarBinaryVector => v.setSafe(i, row.getBinary(col))
-            case v => throw new IllegalStateException(s"unexpected vector $v")
-          }
-          i += 1
-        }
-        col += 1
-      }
-      root.setRowCount(rows.length)
-      writeRoot(out, root)
-    } finally root.close()
+                         schema: StructType, rows: scala.collection.Seq[InternalRow]): Unit = {
+    val buf = new ColumnarFrameBuffer(schema, allocator)
+    try { rows.foreach(buf.appendRow); buf.writeTo(out) }
+    finally buf.close()
   }
 
-  /** Accumulating encoder for the columnar INPUT path: when the
-    * operator's child is itself columnar (vectorized parquet scan,
-    * another Arrow pipe), values move column-at-a-time from the child
-    * vectors into the Arrow builders with no `InternalRow`
-    * materialization, no per-row `copy()`, and no per-value virtual
-    * dispatch on the schema (one type match per column, then a tight
-    * primitive loop). `append` copies, so the source batch may be
-    * recycled by the scan after the call — which is what lets one
-    * protocol frame span several scan batches and honor the operator's
-    * `chunkSize` exactly, like the row path does.
+  /** The Arrow frame: one `VectorSchemaRoot` for the buffer's life,
+    * filled a row at a time — strings and binaries go in as their
+    * bytes, with no `String` — and reset after each frame it writes,
+    * keeping the capacity its vectors grew to. Values are copied in,
+    * so a columnar source may recycle its batch once a row is appended.
     */
-  final class ColumnarFrameBuffer(schema: StructType, allocator: BufferAllocator) {
-    private var root = VectorSchemaRoot.create(arrowSchema(schema), allocator)
-    private val frame = new ByteSink(1 << 16)
+  final class ColumnarFrameBuffer(schema: StructType, allocator: BufferAllocator)
+      extends WireFrame {
+    private val root = VectorSchemaRoot.create(arrowSchema(schema), allocator)
     root.allocateNew()
+    private val vectors = root.getFieldVectors.asScala.toArray
+    private val frame = new ByteSink(1 << 16)
     private var n = 0
 
-    def rowCount: Int = n
-
-    def append(batch: org.apache.spark.sql.vectorized.ColumnarBatch,
-               start: Int, len: Int): Unit = {
-      var col = 0
-      while (col < schema.length) {
-        val cv = batch.column(col)
-        root.getVector(col) match {
-          case v: BigIntVector =>
-            var i = 0
-            while (i < len) {
-              if (cv.isNullAt(start + i)) v.setNull(n + i)
-              else v.setSafe(n + i, cv.getLong(start + i))
-              i += 1
-            }
-          case v: IntVector =>
-            var i = 0
-            while (i < len) {
-              if (cv.isNullAt(start + i)) v.setNull(n + i)
-              else v.setSafe(n + i, cv.getInt(start + i))
-              i += 1
-            }
-          case v: Float8Vector =>
-            var i = 0
-            while (i < len) {
-              if (cv.isNullAt(start + i)) v.setNull(n + i)
-              else v.setSafe(n + i, cv.getDouble(start + i))
-              i += 1
-            }
-          case v: VarCharVector =>
-            var i = 0
-            while (i < len) {
-              if (cv.isNullAt(start + i)) v.setNull(n + i)
-              else v.setSafe(n + i, cv.getUTF8String(start + i).getBytes)
-              i += 1
-            }
-          case v: VarBinaryVector =>
-            var i = 0
-            while (i < len) {
-              if (cv.isNullAt(start + i)) v.setNull(n + i)
-              else v.setSafe(n + i, cv.getBinary(start + i))
-              i += 1
-            }
-          case v => throw new IllegalStateException(s"unexpected vector $v")
-        }
-        col += 1
-      }
-      n += len
+    /** Per column, how a non-null cell of row `row` goes into slot `i`. */
+    private val setters = vectors.zipWithIndex.map[(InternalRow, Int) => Unit] {
+      case (v: BigIntVector, c)    => (row, i) => v.setSafe(i, row.getLong(c))
+      case (v: IntVector, c)       => (row, i) => v.setSafe(i, row.getInt(c))
+      case (v: Float8Vector, c)    => (row, i) => v.setSafe(i, row.getDouble(c))
+      case (v: VarCharVector, c)   => (row, i) => setUtf8(v, i, row.getUTF8String(c))
+      case (v: VarBinaryVector, c) => (row, i) => v.setSafe(i, row.getBinary(c))
+      case (v, _) => throw new IllegalStateException(s"unexpected vector $v")
     }
 
-    /** Frame the buffered rows as one message and reset for the next. */
-    def writeAndReset(out: OutputStream): Unit = {
+    def rows: Int = n
+
+    def appendRow(row: InternalRow): Unit = {
+      var c = 0
+      while (c < vectors.length) {
+        if (row.isNullAt(c)) vectors(c).setNull(n) else setters(c)(row, n)
+        c += 1
+      }
+      n += 1
+    }
+
+    /** Frame the buffered rows as one message, then reset the vectors. */
+    def writeTo(out: OutputStream): Unit = {
       root.setRowCount(n)
       try writeRoot(out, root, frame)
-      finally {
-        root.close()
-        root = VectorSchemaRoot.create(arrowSchema(schema), allocator)
-        root.allocateNew()
-        n = 0
-      }
+      finally { vectors.foreach(_.reset()); n = 0 }
     }
 
     def close(): Unit = root.close()
+  }
+
+  private def setUtf8(v: VarCharVector, i: Int, s: UTF8String): Unit = s.getBaseObject match {
+    case a: Array[Byte] =>
+      v.setSafe(i, a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+    case _ => v.setSafe(i, s.getBytes)
   }
 
   /** Frame one filled root as a length-prefixed single-batch IPC stream:
@@ -183,7 +132,7 @@ object ArrowProtocol {
     * written once.
     */
   private[operators] def writeRoot(out: OutputStream, root: VectorSchemaRoot,
-                                   frame: ByteSink = new ByteSink(1 << 12)): Unit = {
+                                   frame: ByteSink): Unit = {
     frame.reset()
     frame.write(NoLength, 0, 8)
     val writer = new ArrowStreamWriter(root, null, frame: WritableByteChannel)

@@ -1,10 +1,11 @@
 package graft.operators
 
-import java.io.{EOFException, IOException, InputStream}
-import java.util.concurrent.TimeUnit
-import java.util.concurrent.atomic.AtomicBoolean
+import java.io.{EOFException, IOException, InputStream, OutputStream}
+import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Lifecycle manager for one external child process per Spark task.
   *
@@ -17,12 +18,15 @@ import org.apache.spark.TaskContext
   *    → a daemon watchdog thread that checks Spark task interruption every
   *    100 ms and destroys the child, unblocking any pipe read
   *  - termination escalation: close pipes, SIGTERM, bounded wait, SIGKILL
-  *    (`src/ChildProcess.cpp:104-128`) → destroy(), timed waitFor,
-  *    destroyForcibly()
+  *    (`src/ChildProcess.cpp:104-128`) → [[terminate]], which closes
+  *    stdin only after the child is gone
   *  - 1 MiB buffered pipe ends, flushed once per message
   *    (`src/ChildProcess.h:47,78-116`) → [[PipeOut]] / [[PipeIn]], which
   *    take no lock per byte; `terminate` closes them, so a read blocked
   *    or refilling after it fails with an `IOException`
+  *  - the poll loop that feeds a chunk while it reads the answer
+  *    (`src/ChildProcess.cpp:130-225`) → [[exchange]], whose write runs
+  *    on a pooled writer thread while the caller reads
   */
 final class ChildProcess(cmd: String, ctx: Option[TaskContext]) {
   private val proc = {
@@ -47,7 +51,7 @@ final class ChildProcess(cmd: String, ctx: Option[TaskContext]) {
   // makes each task's completion listener a no-op once the child has
   // moved on — listeners accumulate on the TaskContext, not here.
   @volatile private var bound: TaskContext = null
-  private val bindGen = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val bindGen = new AtomicLong(0L)
 
   // The reference re-validates the query every 100 ms while blocked on
   // child I/O and kills the child on cancellation. JVM pipe reads are not
@@ -119,26 +123,94 @@ final class ChildProcess(cmd: String, ctx: Option[TaskContext]) {
     throwIfDead()
   }
 
-  /** Close pipes, SIGTERM, wait ≤500 ms, then SIGKILL. Idempotent. */
+  /** One half-duplex exchange: `write` runs on a pooled writer thread
+    * while the calling thread runs `read`, whose result is returned.
+    * Both at once is load-bearing: a child that answers before it has
+    * consumed the whole message fills its stdout pipe, and a write on
+    * the reading thread would then deadlock both sides.
+    *
+    * Failures follow the reference's liveness loop. A writer failure
+    * terminates the child, which unblocks the read. A non-IO writer
+    * error is the root cause; an IO writer error gets the premature-exit
+    * diagnosis when the child has died. A writer still busy 60 s after
+    * the read kills the child and fails: the next exchange would run
+    * two writers on one pipe.
+    */
+  def exchange[R](write: => Unit)(read: => R): R = {
+    @volatile var werr: Throwable = null
+    val task: Runnable = () =>
+      try write catch { case t: Throwable => werr = t; terminate() }
+    val writer = ChildProcess.writers.submit(task)
+    def joined(): Boolean =
+      try { writer.get(60, TimeUnit.SECONDS); true }
+      catch { case _: TimeoutException => false }
+    val resp =
+      try read
+      catch { case re: Throwable =>
+        joined()
+        if (werr != null && !werr.isInstanceOf[IOException]) throw werr
+        if (werr != null) { throwIfDead(); throw werr }
+        throw re
+      }
+    if (!joined()) {
+      terminate()
+      sys.error(s"stream writer stuck >60s feeding child stdin ($cmd); child terminated")
+    }
+    if (werr != null) { throwIfDead(); throw werr }
+    resp
+  }
+
+  /** Close stdout, SIGTERM, wait ≤500 ms, SIGKILL, then close stdin.
+    * Idempotent. Stdin closes last: a write blocked on a child that does
+    * not read holds the JDK pipe stream's lock, which closing it would
+    * wait for; once the child is gone, that write fails and lets go.
+    */
   def terminate(): Unit = {
     if (!closed.compareAndSet(false, true)) return
-    try stdin.close() catch { case _: IOException => () }
     try stdout.close() catch { case _: IOException => () }
-    proc.destroy()
+    val handle = proc.toHandle
+    handle.destroy()
     if (!proc.waitFor(500, TimeUnit.MILLISECONDS)) {
-      proc.destroyForcibly()
+      handle.destroyForcibly()
       proc.waitFor(5, TimeUnit.SECONDS)
     }
+    try stdin.close() catch { case _: IOException => () }
     if (watchdog != null) watchdog.interrupt()
     try Runtime.getRuntime.removeShutdownHook(shutdownHook)
     catch { case _: IllegalStateException => () }
   }
 }
 
+/** One outgoing message of a wire format, filled on the task thread
+  * between exchanges and reused: rows are appended one at a time, and
+  * `writeTo` sends them as one flushed message and clears the frame.
+  */
+trait WireFrame {
+  def appendRow(row: InternalRow): Unit
+  def rows: Int
+  def writeTo(out: OutputStream): Unit
+}
+
 /** What every wire format's decoder shares: the message size cap and
-  * the end-of-stream rule.
+  * the end-of-stream rule; and the writer threads of every exchange.
   */
 object ChildProcess {
+
+  /** Name prefix of the exchange writer threads. */
+  val WriterThreadPrefix = "graft-child-writer-"
+
+  /** Daemon writer threads shared by every child's exchanges: an idle
+    * one serves the next exchange of any task or child, and one idle
+    * for 60 s ends.
+    */
+  private val writers = {
+    val n = new AtomicLong()
+    Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, WriterThreadPrefix + n.incrementAndGet())
+      t.setDaemon(true)
+      t
+    }
+  }
 
   /** Largest message any wire format accepts from a child, 1 GiB
     * (reference `src/TSVInterface.h:102`).

@@ -18,7 +18,7 @@ import org.apache.spark.TaskContext
   * concurrency high-water mark, exactly like Spark's own Python worker
   * reuse (`spark.python.worker.reuse`, on by default).
   *
-  * Reuse is OPT-IN per stream call (`Stream.tsv/arrow/df(reuse = true)`)
+  * Reuse is OPT-IN per stream call (`Stream.tsv/arrow/df(reuseChildren = true)`)
   * because it needs a LOOP-STYLE child: one that answers the final
   * message and then waits for the next stream's first message instead
   * of exiting (the reference R/Python clients are loop-shaped the same

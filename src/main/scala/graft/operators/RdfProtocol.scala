@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The R-data-frame wire format (`format=df`): each message is a valid
@@ -124,79 +125,90 @@ object RdfProtocol {
 
   // ---- encode (parent → child), reference writeDF:181-275 ----
 
-  /** Write one data message: the rows as a named list of typed columns
-    * (column-major, like the reference's per-attribute chunk loop).
-    * `rows` must be materialized (it is traversed once per column).
-    * Numeric columns are staged in one little-endian byte array and
-    * written in a single call — per-value write(byte) calls through
-    * the stream dominated the encode cost at chunk sizes in the
-    * thousands (4 calls per int, 8 per double).
+  /** One outgoing data message, built in place and reused. Each cell
+    * goes into its column's little-endian bytes as its row arrives, so
+    * no row is copied or held; `writeTo` emits the reference layout
+    * column-major, like the reference's per-attribute chunk loop:
+    * header, list flags, per column its SEXP tag, length and values,
+    * then the `names` pairlist (built once).
+    */
+  final class Frame(schema: StructType) extends WireFrame {
+    private val types = schema.fields.map(_.dataType)
+    private val tags = types.map {
+      case StringType => STRSXP
+      case DoubleType => REALSXP
+      case IntegerType | ShortType => INTSXP
+      case other => throw new IllegalArgumentException(
+        s"type $other is not supported over the R df stream format")
+    }
+    private val cols = Array.fill(types.length)(new ByteSink(1 << 12))
+    private val names = { val b = new ByteSink(64); writeNames(b, schema.fieldNames); b }
+    private var n = 0
+
+    def rows: Int = n
+
+    def appendRow(row: InternalRow): Unit = {
+      var c = 0
+      while (c < types.length) {
+        val col = cols(c)
+        val na = row.isNullAt(c)
+        types(c) match {
+          case StringType =>
+            putLe(col, CharsxpFlags, 4)
+            if (na) putLe(col, -1, 4)
+            else {
+              val s = row.getUTF8String(c)
+              putLe(col, s.numBytes, 4)
+              col.ensure(s.numBytes)
+              s.writeToMemory(col.array, Platform.BYTE_ARRAY_OFFSET + col.length)
+              col.advance(s.numBytes)
+            }
+          case DoubleType => putLe(col,
+            if (na) NaRealBits else java.lang.Double.doubleToRawLongBits(row.getDouble(c)), 8)
+          case ShortType => putLe(col, if (na) NaInt else row.getShort(c).toInt, 4)
+          case _ => putLe(col, if (na) NaInt else row.getInt(c), 4)
+        }
+        c += 1
+      }
+      n += 1
+    }
+
+    def writeTo(out: OutputStream): Unit = {
+      out.write(Header)
+      writeInt(out, VECSXP | HasAttrBit)
+      writeInt(out, cols.length)
+      var c = 0
+      while (c < cols.length) {
+        writeInt(out, tags(c))
+        writeInt(out, n)
+        cols(c).writeTo(out)
+        cols(c).reset()
+        c += 1
+      }
+      names.writeTo(out)
+      out.flush()
+      n = 0
+    }
+  }
+
+  /** Write one data message: the rows as a named list of typed columns,
+    * through a [[Frame]].
     */
   def writeChunk(out: OutputStream, rows: IndexedSeq[InternalRow],
                  schema: StructType): Unit = {
-    out.write(Header)
-    writeInt(out, VECSXP | HasAttrBit)
-    writeInt(out, schema.length)
-    val n = rows.length
-    var c = 0
-    while (c < schema.length) {
-      schema.fields(c).dataType match {
-        case StringType =>
-          writeInt(out, STRSXP)
-          writeInt(out, n)
-          var j = 0
-          while (j < n) {
-            if (rows(j).isNullAt(c)) { writeInt(out, CharsxpFlags); writeInt(out, -1) }
-            else writeCharsxp(out, rows(j).getUTF8String(c))
-            j += 1
-          }
-        case DoubleType =>
-          writeInt(out, REALSXP)
-          writeInt(out, n)
-          val buf = new Array[Byte](8 * n)
-          var j = 0
-          while (j < n) {
-            val bits =
-              if (rows(j).isNullAt(c)) NaRealBits
-              else java.lang.Double.doubleToRawLongBits(rows(j).getDouble(c))
-            putLongLe(buf, 8 * j, bits)
-            j += 1
-          }
-          out.write(buf)
-        case it @ (IntegerType | ShortType) =>
-          writeInt(out, INTSXP)
-          writeInt(out, n)
-          val buf = new Array[Byte](4 * n)
-          var j = 0
-          while (j < n) {
-            val v =
-              if (rows(j).isNullAt(c)) NaInt
-              else if (it == ShortType) rows(j).getShort(c).toInt
-              else rows(j).getInt(c)
-            putIntLe(buf, 4 * j, v)
-            j += 1
-          }
-          out.write(buf)
-        case other =>
-          throw new IllegalArgumentException(
-            s"type $other is not supported over the R df stream format")
-      }
-      c += 1
-    }
-    writeNames(out, schema.fieldNames)
-    out.flush()
+    val f = new Frame(schema)
+    rows.foreach(f.appendRow)
+    f.writeTo(out)
   }
 
-  private def putIntLe(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = v.toByte
-    b(off + 1) = (v >>> 8).toByte
-    b(off + 2) = (v >>> 16).toByte
-    b(off + 3) = (v >>> 24).toByte
-  }
-
-  private def putLongLe(b: Array[Byte], off: Int, v: Long): Unit = {
+  /** The low `bytes` bytes of `v`, little-endian, onto `sink`. */
+  private def putLe(sink: ByteSink, v: Long, bytes: Int): Unit = {
+    sink.ensure(bytes)
+    val a = sink.array
+    val off = sink.length
     var i = 0
-    while (i < 8) { b(off + i) = (v >>> (8 * i)).toByte; i += 1 }
+    while (i < bytes) { a(off + i) = (v >>> (8 * i)).toByte; i += 1 }
+    sink.advance(bytes)
   }
 
   /** The `names` attribute pairlist (reference `R_TAIL_HDR` +

@@ -63,10 +63,11 @@ object Stream {
     checkAllowed(spark, cmd)
     val sample = df.limit(sampleRows).queryExecution.toRdd.map(_.copy()).collect()
     val child = new ChildProcess(cmd, None)
-    val allocator = new org.apache.arrow.memory.RootAllocator(Long.MaxValue)
+    val allocator = ArrowProtocol.rootAllocator.newChildAllocator("inferSchema", 0, Long.MaxValue)
     try {
-      ArrowProtocol.writeBatchInternal(child.stdin, allocator, df.schema, sample)
-      val payload = ArrowProtocol.readFrame(child.stdout, child, lastMessage = false)
+      val payload = child.exchange(
+        ArrowProtocol.writeBatchInternal(child.stdin, allocator, df.schema, sample))(
+        ArrowProtocol.readFrame(child.stdout, child, lastMessage = false))
         .getOrElse(sys.error("child returned no data for schema inference"))
       val reader = ArrowProtocol.loadBatch(payload, allocator)
       try StructType(reader.getVectorSchemaRoot.getFieldVectors.asScala.toSeq.map { v =>

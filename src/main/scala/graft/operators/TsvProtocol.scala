@@ -143,9 +143,9 @@ object TsvProtocol {
     * Numbers, `\N` and `nan` keep `Long/Double/Float.toString`'s text,
     * built without a `String`; decimals, dates and timestamps keep
     * their `toString`. Binary is rejected, as in the reference's TSV
-    * path.
+    * path. `schema` is what the one-argument `appendRow` formats by.
     */
-  final class Frame(initial: Int = 1 << 16) {
+  final class Frame(initial: Int = 1 << 16, schema: StructType = null) extends WireFrame {
     private[TsvProtocol] val body = new ByteSink(initial)
     private val header = new ByteSink(24)
     private val number = new java.lang.StringBuilder(32)
@@ -155,6 +155,8 @@ object TsvProtocol {
 
     def clear(): Unit = { body.reset(); lines = 0 }
 
+    def appendRow(row: InternalRow): Unit = appendRow(row, schema)
+
     /** One row and its newline. */
     def appendRow(row: InternalRow, schema: StructType): Unit = {
       appendCells(row, schema)
@@ -162,8 +164,8 @@ object TsvProtocol {
       lines += 1
     }
 
-    /** `"<rows>\n"`, then the rows in one write, then flush. */
-    def writeTo(out: OutputStream): Unit = writeTo(out, lines)
+    /** `"<rows>\n"`, then the rows in one write, then flush and clear. */
+    def writeTo(out: OutputStream): Unit = { writeTo(out, lines); clear() }
 
     private[TsvProtocol] def writeTo(out: OutputStream, n: Int): Unit = {
       header.reset()

@@ -1,9 +1,10 @@
 package graft.plans
 
+import java.io.OutputStream
+
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
-import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.{IntVector, ValueVector}
 import org.apache.arrow.vector.ipc.ArrowStreamReader
 import org.apache.spark.TaskContext
@@ -19,7 +20,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.{ArrowProtocol, ChildProcess, ChildProcessPool, RdfProtocol, TsvProtocol}
+import graft.operators.{ArrowProtocol, ChildProcess, ChildProcessPool, RdfProtocol, TsvProtocol, WireFrame}
 
 /** Physical `stream()` operator (reference `PhysicalStream`,
   * `src/PhysicalStream.cpp:59-176`): per partition, fork one child
@@ -41,15 +42,13 @@ import graft.operators.{ArrowProtocol, ChildProcess, ChildProcessPool, RdfProtoc
   *    round trip through `df.rdd` / `createDataFrame`.
   *
   * Every wire format (TSV, R-DF, Arrow) runs through the same protocol
-  * loop, as in the reference: a format supplies only its frame writers,
-  * its end-of-data writer, its response reader and how one response
-  * becomes rows or a `ColumnarBatch`.
-  *
-  * The concurrent-writer discipline per exchange is load-bearing: a
-  * child that starts answering before consuming the whole chunk would
-  * fill its 64 KB stdout pipe and deadlock both sides (the reference
-  * uses a poll() loop, `src/ChildProcess.cpp:130-225`; JVM pipes have
-  * none, so a helper thread writes while the task thread drains).
+  * loop and the same exchange, as in the reference: a format supplies
+  * only its frame (a [[WireFrame]] the task thread fills between
+  * exchanges), its end-of-data writer, its response reader and how one
+  * response becomes rows or a `ColumnarBatch`. Each exchange is
+  * [[ChildProcess.exchange]]: a pooled writer thread writes the frame
+  * while the task thread reads the answer, so a child that answers
+  * before it has read the whole frame cannot deadlock the pipe.
   */
 case class StreamExec(
     input: SparkPlan,
@@ -96,47 +95,6 @@ case class StreamExec(
   override def supportsColumnar: Boolean =
     format.isInstanceOf[StreamFormat.Arrow]
 
-  /** One half-duplex exchange: `write` runs on a helper thread while the
-    * task thread runs `read`, whose result is returned. Failure handling
-    * mirrors the reference's liveness loop: a writer failure is surfaced
-    * as the root cause, and a dead child gets the clearer
-    * premature-exit diagnostic. The bytes each way are counted once per
-    * exchange, from the pipe ends' running totals.
-    */
-  private def exchange[R](t: Task)(write: => Unit)(read: => R): R = {
-    val child = t.child
-    val sent0 = child.stdin.written
-    val got0 = child.stdout.consumed
-    @volatile var werr: Throwable = null
-    val writer = new Thread(() =>
-      try write catch { case t: Throwable =>
-        werr = t
-        child.terminate() // unblock the reader; the exchange is dead
-      })
-    writer.setDaemon(true)
-    writer.start()
-    val resp =
-      try read
-      catch { case re: Throwable =>
-        writer.join(60000)
-        if (werr != null && !werr.isInstanceOf[java.io.IOException]) throw werr
-        if (werr != null) { child.throwIfDead(); throw werr }
-        throw re
-      }
-    writer.join(60000)
-    if (writer.isAlive) {
-      // writer still blocked on the child's stdin: starting the next
-      // exchange would run two writers on one stream and interleave
-      // bytes — kill the child and fail the task instead
-      child.terminate()
-      sys.error(s"stream writer stuck >60s feeding child stdin ($cmd); child terminated")
-    }
-    if (werr != null) { child.throwIfDead(); throw werr }
-    t.bytesToChild += child.stdin.written - sent0
-    t.bytesFromChild += child.stdout.consumed - got0
-    resp
-  }
-
   /** Broadcast of the side input. When this operator is columnar, the
     * planner's transition rule wraps EVERY child — including the
     * BroadcastExchangeExec the side distribution produced — in
@@ -149,51 +107,62 @@ case class StreamExec(
       case other => other.executeBroadcast[Array[InternalRow]]()
     }
 
-  /** Input rows for the row formats (TSV, R-DF), whatever the child's
-    * chosen format: a child that also runs columnar (a cached table's
-    * scan) is consumed via executeColumnar and its batches
-    * row-iterated. Rows are only valid until the next batch — callers
-    * copy (R-DF) or format immediately (TSV), as with any row input.
+  /** Input rows for every format. A columnar child (a vectorized scan,
+    * a cached table, an upstream Arrow pipe) is read through its
+    * batches' row views. Under the columnar transition rule a row child
+    * arrives wrapped in RowToColumnarExec, whose doExecute hands back
+    * the child's rows with no columnar detour. A row is valid only until
+    * the next is pulled, so every frame copies a row's values as it
+    * appends it.
     */
-  private def inputRows(): RDD[InternalRow] =
-    if (input.supportsColumnar)
-      input.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala))
-    else input.execute()
+  private def inputRows(): RDD[InternalRow] = input match {
+    case c if c.supportsColumnar && !c.isInstanceOf[RowToColumnarExec] =>
+      c.executeColumnar().mapPartitions(_.flatMap(_.rowIterator().asScala))
+    case rows => rows.execute()
+  }
 
   /** One task's share of the stream: its context (null outside a task),
-    * partition id, child process, the side rows that child sees first and
-    * the byte counters its exchanges add to.
+    * partition id, child process, the input and side schemas, the side
+    * rows that child sees first and the byte counters its exchanges add
+    * to.
     */
   private case class Task(ctx: TaskContext, pid: Long, child: ChildProcess,
+                          inSchema: StructType, sideSchema: StructType,
                           sideRows: IndexedSeq[InternalRow],
                           bytesToChild: SQLMetric, bytesFromChild: SQLMetric) {
-    /** Run `f` when the task ends, however it ends; cleanup never fails it. */
+    /** Run `f` when the task ends, however it ends; cleanup never fails
+      * it, and what cleanup throws is logged.
+      */
     def onEnd(f: => Unit): Unit =
       if (ctx != null) ctx.addTaskCompletionListener[Unit] { _ =>
-        try f catch { case _: Throwable => () }
+        try f catch { case e: Throwable => logWarning(s"stream task cleanup failed ($cmd)", e) }
       }
   }
 
-  /** Per-task set-up every format shares: the task's child (pooled or
-    * freshly forked — only forks count in `numChildren`) and its side
-    * rows — the whole broadcast table, or in local mode side partition i
-    * zipped to input partition i. The caller aligns the partitionings;
-    * zipPartitions rejects unequal partition counts with a clear error.
-    * The local side plan row-executes even under the columnar transition
-    * rule: RowToColumnarExec.doExecute delegates to its child's rows.
+  /** Per-task set-up every format shares: the task's input rows, its
+    * child (pooled or freshly forked — only forks count in
+    * `numChildren`) and its side rows — the whole broadcast table, or in
+    * local mode side partition i zipped to input partition i. The caller
+    * aligns the partitionings; zipPartitions rejects unequal partition
+    * counts with a clear error. The local side plan row-executes even
+    * under the columnar transition rule: RowToColumnarExec.doExecute
+    * delegates to its child's rows.
     */
-  private def perPartition[T: ClassTag, O: ClassTag](in: RDD[T])(
-      body: (Iterator[T], Task) => Iterator[O]): RDD[O] = {
+  private def perPartition[O: ClassTag](
+      body: (Iterator[InternalRow], Task) => Iterator[O]): RDD[O] = {
+    val in = inputRows()
     val kids = longMetric("numChildren")
     val toChild = longMetric("bytesToChild")
     val fromChild = longMetric("bytesFromChild")
     val sideBc = if (sideLocal) None else side.map(sideBroadcast)
-    def run(it: Iterator[T], sideRows: IndexedSeq[InternalRow]): Iterator[O] = {
+    val inSchema = input.schema
+    val sideSchema = side.map(_.schema).orNull
+    def run(it: Iterator[InternalRow], sideRows: IndexedSeq[InternalRow]): Iterator[O] = {
       val ctx = TaskContext.get()
       val (child, forked) = ChildProcessPool.acquire(cmd, Option(ctx), reuseChildren)
       if (forked) kids += 1
       val pid = if (ctx == null) 0L else ctx.partitionId().toLong
-      body(it, Task(ctx, pid, child, sideRows, toChild, fromChild))
+      body(it, Task(ctx, pid, child, inSchema, sideSchema, sideRows, toChild, fromChild))
     }
     if (sideLocal && side.isDefined)
       in.zipPartitions(side.get.execute())((it, sit) => run(it, sit.map(_.copy()).toIndexedSeq))
@@ -207,39 +176,60 @@ case class StreamExec(
     * streams through bounded memory (one response message at a time;
     * the 1 GB per-message cap is the protocol's own bound).
     *
-    * Exchanges run in order: the side chunk (only when there are side
-    * rows — O16: no frame is ever empty), one per data frame, then
-    * end-of-data; after that the child goes back to [[ChildProcessPool]].
-    * `read(last)` returns None for the "no data right now" reply;
-    * `decode(response, chunkNo)` turns a data-bearing response into
-    * output, and `chunkNo` counts only those responses. `retire` runs on
-    * the task thread before each exchange starts its writer and before
-    * release. Child teardown on failure or downstream early exit (limit)
-    * is owned by the `TaskContext` completion listener registered in
+    * Exchanges run in order: the side frame (only when there are side
+    * rows — O16: no frame is ever empty), one per data frame of
+    * `chunkSize` rows, then end-of-data; after that the child goes back
+    * to [[ChildProcessPool]]. `frameOf` builds the format's frame for a
+    * schema; the task thread fills it from `in` only between exchanges,
+    * after the previous frame's write has finished. `read(last)`
+    * returns None for the "no data right now" reply; `decode(response,
+    * chunkNo)` turns a data-bearing response into output, and `chunkNo`
+    * counts only those responses. `retire` runs on the task thread
+    * before each exchange and before release. The bytes each way are
+    * counted once per exchange, from the pipe ends' running totals.
+    * Child teardown on failure or downstream early exit (limit) is owned
+    * by the `TaskContext` completion listener registered in
     * `ChildProcess`.
     */
-  private def protocol[R, O](t: Task, sideFrame: IndexedSeq[InternalRow] => () => Unit,
-                             frames: Iterator[() => Unit], eof: () => Unit,
+  private def protocol[R, O](t: Task, in: Iterator[InternalRow],
+                             frameOf: StructType => WireFrame, eof: OutputStream => Unit,
                              read: Boolean => Option[R], decode: (R, Long) => O,
                              retire: () => Unit = () => ()): Iterator[O] = {
+    val stdin = t.child.stdin
+    val stdout = t.child.stdout
     var chunkNo = -1L
-    val writes = Iterator.single(t.sideRows).filter(_.nonEmpty).map(sideFrame) ++ frames
-    (writes.map((_, false)) ++ Iterator.single((eof, true))).flatMap { case (write, last) =>
+    def send(write: => Unit, last: Boolean): Iterator[O] = {
       retire()
-      exchange(t)(write())(read(last)).map { r => chunkNo += 1; decode(r, chunkNo) }
-    } ++ {
-      retire()
-      ChildProcessPool.release(cmd, t.child, reuseChildren)
-      Iterator.empty
+      val sent0 = stdin.written
+      val got0 = stdout.consumed
+      val resp = t.child.exchange(write)(read(last))
+      t.bytesToChild += stdin.written - sent0
+      t.bytesFromChild += stdout.consumed - got0
+      // decoded now, not when pulled: a response the consumer never
+      // pulls (limit) must still reach `retire`
+      resp.map { r => chunkNo += 1; decode(r, chunkNo) }.iterator
     }
+    val sideFrames = Iterator.single(t.sideRows).filter(_.nonEmpty).map { rows =>
+      val f = frameOf(t.sideSchema)
+      rows.foreach(f.appendRow)
+      f
+    }
+    val frame = frameOf(t.inSchema)
+    val dataFrames = Iterator.continually {
+      while (frame.rows < chunkSize && in.hasNext) frame.appendRow(in.next())
+      frame
+    }.takeWhile(_.rows > 0) // O16
+    (sideFrames ++ dataFrames).flatMap(f => send(f.writeTo(stdin), last = false)) ++
+      send(eof(stdin), last = true) ++ {
+        retire()
+        ChildProcessPool.release(cmd, t.child, reuseChildren)
+        Iterator.empty
+      }
   }
 
   protected override def doExecuteColumnar(): RDD[ColumnarBatch] = {
     val StreamFormat.Arrow(declared) = format: @unchecked
     val outRows = longMetric("numOutputRows")
-    val inSchema = input.schema
-    val sideSchema = side.map(_.schema).orNull
-    val chunk = chunkSize
 
     /** One response as a batch: the child's vectors wrapped zero-copy,
       * plus the three lineage columns.
@@ -274,13 +264,9 @@ case class StreamExec(
       new ColumnarBatch((dataCols ++ lineage).toArray, n)
     }
 
-    // The input is always columnar: the planner's transition rule wraps
-    // a row child in RowToColumnarExec, and columnar children (a
-    // vectorized parquet scan, a cached table, an upstream Arrow pipe)
-    // encode column-at-a-time straight from their vectors — no
-    // InternalRow materialization, no per-row copy.
-    perPartition(input.executeColumnar()) { (batches, t) =>
-      val allocator = new RootAllocator(Long.MaxValue)
+    perPartition { (in, t) =>
+      val allocator = ArrowProtocol.rootAllocator.newChildAllocator(
+        s"stream-task-${t.pid}", 0, Long.MaxValue)
       var pendingBatch: ColumnarBatch = null
       var pendingReader: ArrowStreamReader = null
       // A handed-out batch stays valid until the consumer pulls the next
@@ -300,32 +286,14 @@ case class StreamExec(
         }
       }
       t.onEnd { try retire() finally allocator.close() }
-      val buf = new ArrowProtocol.ColumnarFrameBuffer(inSchema, allocator)
-      // registered after the allocator-close listener: completion
-      // listeners run LIFO, so the buffer's root closes before the
-      // allocator it was allocated from
-      t.onEnd(buf.close())
-      // one frame = exactly `chunk` rows (the declared chunk_size),
-      // accumulated across scan batches — `append` copies into the
-      // Arrow builders, so pulling the next (buffer-recycling) scan
-      // batch mid-frame is safe. Filling only happens between
-      // exchanges: the loop pulls the next frame only after the
-      // previous frame's writer thread has been joined.
-      var cur: ColumnarBatch = null
-      var off = 0
-      def fill(): Unit =
-        while (buf.rowCount < chunk && (cur != null || batches.hasNext)) {
-          if (cur == null) { cur = batches.next(); off = 0 }
-          val take = math.min(chunk - buf.rowCount, cur.numRows - off)
-          if (take > 0) { buf.append(cur, off, take); off += take }
-          if (off >= cur.numRows) cur = null
-        }
-      val stdin = t.child.stdin
-      protocol[ArrowStreamReader, ColumnarBatch](t,
-        rows => () => ArrowProtocol.writeBatchInternal(stdin, allocator, sideSchema, rows),
-        Iterator.continually(fill()).takeWhile(_ => buf.rowCount > 0) // O16
-          .map(_ => () => buf.writeAndReset(stdin)),
-        () => ArrowProtocol.writeEof(stdin),
+      // each buffer's close is registered after the allocator's:
+      // completion listeners run LIFO, so its root closes first
+      def frameOf(schema: StructType): WireFrame = {
+        val buf = new ArrowProtocol.ColumnarFrameBuffer(schema, allocator)
+        t.onEnd(buf.close())
+        buf
+      }
+      protocol[ArrowStreamReader, ColumnarBatch](t, in, frameOf, ArrowProtocol.writeEof,
         last => ArrowProtocol.readMessageReader(t.child.stdout, t.child, allocator,
           declared, lastMessage = last),
         (reader, chunkNo) => {
@@ -339,61 +307,41 @@ case class StreamExec(
 
   protected override def doExecute(): RDD[InternalRow] = {
     val outRows = longMetric("numOutputRows")
-    val inSchema = input.schema
-    val sideSchema = side.map(_.schema).orNull
     val outSchema = StructType(output.map(a => StructField(a.name, a.dataType, a.nullable)))
-    val chunk = chunkSize
+
+    /** TSV and R-DF share one row path; only the frame, the end-of-data
+      * message and the response decoder differ.
+      */
+    def rowFormat[R](frameOf: StructType => WireFrame, eof: OutputStream => Unit,
+                     read: (ChildProcess, Boolean) => Option[R],
+                     decode: (R, Long, Long) => Iterator[InternalRow]): RDD[InternalRow] =
+      perPartition { (in, t) =>
+        protocol[R, Iterator[InternalRow]](t, in, frameOf, eof, read(t.child, _),
+          decode(_, t.pid, _)).flatten
+      }
+
     val rows: RDD[InternalRow] = format match {
       case StreamFormat.Tsv =>
-        // each response message becomes one string row
-        perPartition(inputRows()) { (in, t) =>
-          val stdin = t.child.stdin
-          // one frame buffer per task: rows are formatted into it as they
-          // are pulled (the input iterator may reuse row objects), on the
-          // task thread and only between exchanges — the loop pulls the
-          // next frame after joining the previous frame's writer
-          val frame = new TsvProtocol.Frame
-          val send: () => Unit = () => frame.writeTo(stdin)
-          protocol[UTF8String, Iterator[InternalRow]](t,
-            side => {
-              frame.clear()
-              side.foreach(frame.appendRow(_, sideSchema))
-              send
-            },
-            Iterator.continually {
-              frame.clear()
-              while (frame.rows < chunk && in.hasNext) frame.appendRow(in.next(), inSchema)
-            }.takeWhile(_ => frame.rows > 0).map(_ => send), // O16
-            () => TsvProtocol.writeEof(stdin),
-            // null = the protocol's "no data right now"; an empty body
-            // is a real one-empty-line response and keeps its row
-            last => Option(TsvProtocol.readBody(t.child.stdout, t.child, lastMessage = last)),
-            (resp, chunkNo) => {
-              outRows += 1
-              Iterator.single(new GenericInternalRow(Array[Any](t.pid, chunkNo, resp)))
-            }).flatten
-        }
+        // each response message becomes one string row; null is the
+        // protocol's "no data right now", while an empty body is a real
+        // one-empty-line response and keeps its row
+        rowFormat[UTF8String](schema => new TsvProtocol.Frame(schema = schema),
+          TsvProtocol.writeEof,
+          (child, last) => Option(TsvProtocol.readBody(child.stdout, child, lastMessage = last)),
+          (resp, pid, chunkNo) => {
+            outRows += 1
+            Iterator.single(new GenericInternalRow(Array[Any](pid, chunkNo, resp)))
+          })
 
       case StreamFormat.Rdf(declared) =>
         // a response is a typed column set: decoded rows + lineage
-        perPartition(inputRows()) { (in, t) =>
-          val stdin = t.child.stdin
-          // copy before grouping: the input iterator may reuse row
-          // objects, and the column-major encoder traverses each chunk
-          // once per column
-          protocol[Array[InternalRow], Iterator[InternalRow]](t,
-            side => () => RdfProtocol.writeChunk(stdin, side, sideSchema),
-            in.map(_.copy()).grouped(chunk).map { c =>
-              () => RdfProtocol.writeChunk(stdin, c.toIndexedSeq, inSchema)
-            },
-            () => RdfProtocol.writeEof(stdin),
-            last => Option(RdfProtocol.readMessage(t.child.stdout, t.child, declared,
-              lastMessage = last)),
-            (resp, chunkNo) => Iterator.tabulate(resp.length) { j =>
-              outRows += 1
-              new JoinedRow(resp(j), new GenericInternalRow(Array[Any](t.pid, chunkNo, j.toLong)))
-            }).flatten
-        }
+        rowFormat[Array[InternalRow]](new RdfProtocol.Frame(_), RdfProtocol.writeEof,
+          (child, last) => Option(RdfProtocol.readMessage(child.stdout, child, declared,
+            lastMessage = last)),
+          (resp, pid, chunkNo) => Iterator.tabulate(resp.length) { j =>
+            outRows += 1
+            new JoinedRow(resp(j), new GenericInternalRow(Array[Any](pid, chunkNo, j.toLong)))
+          })
 
       case StreamFormat.Arrow(_) =>
         // the planner never row-executes a columnar-only operator

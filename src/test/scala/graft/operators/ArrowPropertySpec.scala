@@ -18,7 +18,7 @@ import graft.operators.clients.JvmChild
   * and string length — what a frame buffer reused across chunks must
   * not leak from one chunk into the next.
   */
-class ArrowPropertySpec extends SparkSpec {
+class ArrowPropertySpec extends SparkSpec with StreamLeakFixture {
   import WireGen._
 
   private val types = Seq(LongType, IntegerType, DoubleType, StringType, BinaryType)
@@ -40,6 +40,23 @@ class ArrowPropertySpec extends SparkSpec {
           assert(got == chunk.map(_.map(norm)), s"schema ${c.schema.simpleString}")
         } finally reader.close()
       }
+    } finally allocator.close()
+  }
+
+  test("a frame buffer reused across chunks writes the bytes of a fresh one for each") {
+    val allocator = new RootAllocator(Long.MaxValue)
+    try samples(cases(types, 40), 100).foreach { c =>
+      val buf = new ArrowProtocol.ColumnarFrameBuffer(c.schema, allocator)
+      try c.rows.grouped(c.chunk).foreach { chunk =>
+        val rows = chunk.map(internalRow)
+        val reused = new ByteArrayOutputStream
+        rows.foreach(buf.appendRow)
+        buf.writeTo(reused)
+        val fresh = new ByteArrayOutputStream
+        ArrowProtocol.writeBatchInternal(fresh, allocator, c.schema, rows)
+        assert(reused.toByteArray.toSeq == fresh.toByteArray.toSeq,
+          s"schema ${c.schema.simpleString}")
+      } finally buf.close()
     } finally allocator.close()
   }
 

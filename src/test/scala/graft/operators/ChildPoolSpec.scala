@@ -16,7 +16,7 @@ import graft.operators.clients.JvmChild
   * are a deliberate cross-query state, but CancellationSpec counts live
   * awk processes and must not see ours.
   */
-class ChildPoolSpec extends SparkSpec {
+class ChildPoolSpec extends SparkSpec with StreamLeakFixture {
   import spark.implicits._
 
   /** Loop-style echo: finalize resets state instead of exiting (the

@@ -9,7 +9,7 @@ import graft.SparkSpec
   *  - the 10k-strings-with-one-null single Arrow batch
   *    (ARROW-1676 regression, `tests/test_low.py:140-161`)
   */
-class ProtocolStressSpec extends SparkSpec {
+class ProtocolStressSpec extends SparkSpec with StreamLeakFixture {
   import spark.implicits._
 
   test("800k doubles echo through TSV in 8 chunks of 100k") {

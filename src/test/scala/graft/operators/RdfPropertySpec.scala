@@ -16,7 +16,7 @@ import graft.operators.clients.JvmChild
   * across chunks must not leak from one chunk into the next. R reserves
   * `Int.MinValue` for `NA_integer_`, so int columns never generate it.
   */
-class RdfPropertySpec extends SparkSpec {
+class RdfPropertySpec extends SparkSpec with StreamLeakFixture {
   import WireGen._
 
   private val types = Seq(IntegerType, DoubleType, StringType)
@@ -36,6 +36,22 @@ class RdfPropertySpec extends SparkSpec {
         val got = RdfProtocol.readMessage(
           new ByteArrayInputStream(wire.toByteArray), null, c.schema)
         assert(decoded(got, c.schema) == chunk.map(_.map(norm)),
+          s"schema ${c.schema.simpleString}")
+      }
+    }
+  }
+
+  test("a frame reused across chunks writes the bytes writeChunk writes for each") {
+    samples(cases(types, 40, rNa = true), 100).foreach { c =>
+      val frame = new RdfProtocol.Frame(c.schema)
+      c.rows.grouped(c.chunk).foreach { chunk =>
+        val rows = chunk.map(internalRow)
+        val reused = new ByteArrayOutputStream
+        rows.foreach(frame.appendRow)
+        frame.writeTo(reused)
+        val fresh = new ByteArrayOutputStream
+        RdfProtocol.writeChunk(fresh, rows, c.schema)
+        assert(reused.toByteArray.toSeq == fresh.toByteArray.toSeq,
           s"schema ${c.schema.simpleString}")
       }
     }

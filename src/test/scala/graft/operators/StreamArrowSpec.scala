@@ -11,7 +11,7 @@ import graft.SparkSpec
   * speaking the reference framing (length-prefixed single-batch IPC
   * streams), mirroring the reference's `tests/test_low.py` type matrix.
   */
-class StreamArrowSpec extends SparkSpec {
+class StreamArrowSpec extends SparkSpec with StreamLeakFixture {
   import spark.implicits._
 
   /** Launch the in-repo echo client as a real OS child process. */

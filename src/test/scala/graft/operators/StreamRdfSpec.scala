@@ -14,7 +14,7 @@ import graft.operators.clients.JvmChild
   * reference R client loop itself re-typed from
   * `r_pkg/R/exported.R:84-107` and run under `Rscript`.
   */
-class StreamRdfSpec extends SparkSpec {
+class StreamRdfSpec extends SparkSpec with StreamLeakFixture {
   import spark.implicits._
 
   private val declared = StructType(Seq(

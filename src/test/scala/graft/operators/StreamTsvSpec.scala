@@ -8,7 +8,7 @@ import graft.SparkSpec
   * (`tests/test.sh`): echo round-trip, nulls/escapes, per-partition
   * aggregate with finalize, side input, child-crash handling.
   */
-class StreamTsvSpec extends SparkSpec {
+class StreamTsvSpec extends SparkSpec with StreamLeakFixture {
   import spark.implicits._
 
   /** awk echo client: replies to each chunk with one line per input line,

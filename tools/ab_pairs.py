@@ -4,7 +4,8 @@
 Runs ``perfbench/run.py`` in the parent and the change checkout, pair by
 pair: pair i uses seed ``--seed0 + i`` on both sides, and the side that
 runs first alternates (parent first on odd pairs). Every result line is
-kept, one file per run, under ``--out``; then one markdown table per
+kept, one file per run, under ``--out`` (a run that printed none keeps
+its exit code and the tail of its stderr instead); then one markdown table per
 workload is printed, ready to paste into CHANGES.md. Per metric it
 shows both medians, both min/max ranges, the median delta, the parent's
 ``metrics.quartile_spread`` and how many pairs the change won (the
@@ -47,18 +48,31 @@ def result_path(out, workload, trace, side, i):
     return os.path.join(out, f"{workload}-trace{trace}-{side}-{i:02d}.json")
 
 
+STDERR_TAIL = 40
+
+
 def run_one(checkout, workload, seed, seconds, trace):
-    """The run's last stdout line as a dict, or None when it printed none."""
+    """The run's last stdout line as a dict; for a run that printed none,
+    its exit code and the last STDERR_TAIL lines of its stderr."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
-    proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, text=True)
+    proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                          stderr=subprocess.PIPE, text=True, errors="replace")
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
-    if not lines:
-        return None
     try:
-        return json.loads(lines[-1])
+        res = json.loads(lines[-1]) if lines else None
     except json.JSONDecodeError:
-        return None
+        res = None
+    if isinstance(res, dict) and "metrics" in res:
+        return res
+    return {"no_result": True, "exit_code": proc.returncode,
+            "stderr_tail": proc.stderr.splitlines()[-STDERR_TAIL:]}
+
+
+def has_result(run):
+    """False for a run with no result line: stored as its exit code and
+    stderr tail, or as null by older versions of this tool."""
+    return isinstance(run, dict) and "metrics" in run
 
 
 def run_pairs(args, workload):
@@ -69,12 +83,12 @@ def run_pairs(args, workload):
             res = run_one(dirs[side], workload, args.seed0 + i, args.seconds, args.trace)
             with open(result_path(args.out, workload, args.trace, side, i), "w") as f:
                 json.dump(res, f)
-            print(f"[ab] {workload} pair {i} {side}: "
-                  f"{'no result line' if res is None else 'ok'}", file=sys.stderr)
+            status = "ok" if has_result(res) else f"no result line (exit {res['exit_code']})"
+            print(f"[ab] {workload} pair {i} {side}: {status}", file=sys.stderr)
 
 
 def load(args, workload):
-    """{side: [result or None per pair]} for the pairs found in --out."""
+    """{side: [run record per pair]} for the pairs found in --out."""
     runs = {s: [] for s in SIDES}
     i = 1
     while all(os.path.exists(result_path(args.out, workload, args.trace, s, i)) for s in SIDES):
@@ -93,11 +107,14 @@ def directions(checkout):
 
 def table(metrics, workload, runs, better):
     pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"])
-             if p is not None and c is not None]
-    lost = sum(r is None for s in SIDES for r in runs[s])
-    failed = {s: sum(r.get("failed", 0) for r in runs[s] if r) for s in SIDES}
-    out = [f"**{workload}**: {len(pairs)} pairs, {lost} runs without a result line, "
-           f"failed operations parent {failed['parent']} / change {failed['change']}",
+             if has_result(p) and has_result(c)]
+    lost = {s: [r for r in runs[s] if not has_result(r)] for s in SIDES}
+    codes = [str(r["exit_code"]) for s in SIDES for r in lost[s] if r]
+    failed = {s: sum(r.get("failed", 0) for r in runs[s] if has_result(r)) for s in SIDES}
+    out = [f"**{workload}**: {len(pairs)} pairs, runs without a result line "
+           f"parent {len(lost['parent'])} / change {len(lost['change'])}"
+           + (f" (exit codes {', '.join(codes)})" if codes else "")
+           + f", failed operations parent {failed['parent']} / change {failed['change']}",
            "",
            "| metric | parent median | change median | delta | parent spread "
            "| parent min–max | change min–max | change wins |",
