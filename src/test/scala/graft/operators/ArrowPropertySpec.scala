@@ -71,10 +71,10 @@ class ArrowPropertySpec extends SparkSpec with StreamLeakFixture {
   }
 
   test("Stream.arrow echo returns random streams exactly, empty partitions included") {
-    try samples(cases(types, 60), 6).foreach { c =>
+    samples(cases(types, 60), 6).foreach { c =>
       assert(echo(c.schema, c.rows, c.chunk, c.parts) == c.rows.map(_.map(norm)),
         s"schema ${c.schema.simpleString}, chunk ${c.chunk}, parts ${c.parts}")
-    } finally ChildProcessPool.drain()
+    }
   }
 
   test("consecutive chunks with different null patterns and string lengths come back exactly") {
@@ -92,23 +92,20 @@ class ArrowPropertySpec extends SparkSpec with StreamLeakFixture {
           else Seq(null, -i.toLong, null, Double.NaN)
       }
     }
-    try {
-      assert(echo(schema, rows, 5, 1) == rows.map(_.map(norm)))
-      assert(echo(schema, rows.reverse, 7, 1) == rows.reverse.map(_.map(norm)))
-    } finally ChildProcessPool.drain()
+    assert(echo(schema, rows, 5, 1) == rows.map(_.map(norm)))
+    assert(echo(schema, rows.reverse, 7, 1) == rows.reverse.map(_.map(norm)))
   }
 
   test("chunk sizes from 1 to rows + 1 all echo the same rows") {
     val gen = cases(Seq(LongType, StringType), 12).suchThat(_.rows.nonEmpty)
     val c = samples(gen, 1).head
-    try (1 to c.rows.size + 1).foreach { chunk =>
+    (1 to c.rows.size + 1).foreach { chunk =>
       assert(echo(c.schema, c.rows, chunk, 1) == c.rows.map(_.map(norm)), s"chunk $chunk")
-    } finally ChildProcessPool.drain()
+    }
   }
 
   test("an empty input completes the handshake with no rows") {
     val schema = StructType(Seq(StructField("l", LongType)))
-    try assert(echo(schema, Nil, 3, 3).isEmpty)
-    finally ChildProcessPool.drain()
+    assert(echo(schema, Nil, 3, 3).isEmpty)
   }
 }

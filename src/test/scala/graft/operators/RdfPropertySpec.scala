@@ -68,10 +68,10 @@ class RdfPropertySpec extends SparkSpec with StreamLeakFixture {
   }
 
   test("Stream.df echo returns random streams exactly, empty partitions included") {
-    try samples(cases(types, 60, rNa = true), 6).foreach { c =>
+    samples(cases(types, 60, rNa = true), 6).foreach { c =>
       assert(echo(c.schema, c.rows, c.chunk, c.parts) == c.rows.map(_.map(norm)),
         s"schema ${c.schema.simpleString}, chunk ${c.chunk}, parts ${c.parts}")
-    } finally ChildProcessPool.drain()
+    }
   }
 
   test("consecutive chunks with different NA patterns and string lengths come back exactly") {
@@ -84,17 +84,15 @@ class RdfPropertySpec extends SparkSpec with StreamLeakFixture {
         case _ => if (i % 2 == 0) Seq("", null, Double.NaN) else Seq(null, -i, null)
       }
     }
-    try {
-      assert(echo(schema, rows, 5, 1) == rows.map(_.map(norm)))
-      assert(echo(schema, rows.reverse, 7, 1) == rows.reverse.map(_.map(norm)))
-    } finally ChildProcessPool.drain()
+    assert(echo(schema, rows, 5, 1) == rows.map(_.map(norm)))
+    assert(echo(schema, rows.reverse, 7, 1) == rows.reverse.map(_.map(norm)))
   }
 
   test("chunk sizes from 1 to rows + 1 all echo the same rows") {
     val gen = cases(Seq(IntegerType, StringType), 12, rNa = true).suchThat(_.rows.nonEmpty)
     val c = samples(gen, 1).head
-    try (1 to c.rows.size + 1).foreach { chunk =>
+    (1 to c.rows.size + 1).foreach { chunk =>
       assert(echo(c.schema, c.rows, chunk, 1) == c.rows.map(_.map(norm)), s"chunk $chunk")
-    } finally ChildProcessPool.drain()
+    }
   }
 }
